@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Plan dumper: `runMain graft.Explain [query ...|all]` prints
   * `explain("formatted")` for each named catalog query under the SAME
@@ -10,11 +10,10 @@ import org.apache.spark.sql.SparkSession
   */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val dir = sys.env.getOrElse("GRAFT_EXPLAIN_DIR", "/root/testdata/sf0.01")
     // the dumped plans must be the plans the timed runs execute: the
     // size-derived AQE posture keys on the SAME dir the queries run on
-    val spark = Sessions.serviceBuilder(cpus, "graft-explain", Some(dir)).getOrCreate()
+    val spark = Sessions.serviceBuilder(Sessions.cpus(), "graft-explain", Some(dir)).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val names =
       if (args.sameElements(Array("all"))) Queries.catalog.keys.toSeq.sorted
@@ -23,7 +22,7 @@ object Explain {
     names.foreach { n =>
       println(s"\n=============== $n ===============")
       try Queries.catalog(n)(spark, dir).explain("formatted")
-      catch { case e: Throwable => println(s"explain failed: ${e.getMessage}") }
+      catch { case NonFatal(e) => println(s"explain failed: ${e.getMessage}") }
     }
     spark.stop()
   }

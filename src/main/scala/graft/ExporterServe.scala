@@ -47,8 +47,8 @@ object ExporterServe {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val port = sys.env.getOrElse("SPARK_GRAFT_GRPC_PORT", "8090").toInt
     val periodMs = sys.env.getOrElse("SPARK_GRAFT_PULSE_PERIOD_MS", "10000").toLong
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Sessions.serviceBuilder(cpus, "graft-exporter-api", Some(sfDir)).getOrCreate()
+    val spark = Sessions.serviceBuilder(Sessions.cpus(), "graft-exporter-api", Some(sfDir))
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val handle = bootstrap(spark, sfDir, port, periodMs)
     println(s"""{"metric":"exporter_serving","port":${handle.port},"sf":"$sfDir"}""")

@@ -106,10 +106,10 @@ object Ingest {
     * [lo, hi]: the smallest power-of-ten multiple of `base` that keeps
     * the partition-directory count at or under `maxBuckets`.
     *
-    * Why a store-size-dependent span is the DEFAULT (r15's ServeScale
-    * A/B, now wired in rather than left as the `GRAFT_SERVE_SPAN` env
-    * knob): the pulses dimension grows one row per 10 s pulse forever,
-    * and at 5M pulses the fixed base span leaves 500 partition dirs
+    * Why a store-size-dependent span is the DEFAULT (r15's serving
+    * scale A/B, SCALE.md, wired in rather than left as an env knob):
+    * the pulses dimension grows one row per 10 s pulse forever, and at
+    * 5M pulses the fixed base span leaves 500 partition dirs
     * whose plan width is what the `GET /pulses` fast path pays — 10×
     * coarser buckets measured fast-warm 283 → 209 ms on the same store.
     * Coarser buckets cost nothing the other way at these sizes: a
@@ -286,7 +286,7 @@ object Ingest {
       // of the CURRENT bucket dirs (manifest partitions when manifested,
       // else one listing), once per start. Past cfg.maxPulseBuckets the
       // store re-buckets at the extent-sized span via the staged full
-      // rewrite below — the measured ServeScale remedy (500 dirs → 50 at
+      // rewrite below — the measured serving-scale remedy (500 dirs → 50 at
       // 5M pulses, fast-warm 283 → 209 ms) as write-side default, no env
       // knob. Growth between restarts is bounded by cadence (outgrowing
       // 64 base-span buckets takes ~74 days of 10 s pulses), so
@@ -1150,8 +1150,7 @@ object Ingest {
     val base = sys.env.getOrElse("SPARK_GRAFT_BASE_PATH", "/tmp/graft-ingest")
     val from = sys.env.getOrElse("SPARK_GRAFT_FROM_PULSE",
       (Canonicalize.MinTimePulse + 10L).toString).toLong
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Sessions.serviceBuilder(cpus, "graft-ingest", Some(base)).getOrCreate()
+    val spark = Sessions.serviceBuilder(Sessions.cpus(), "graft-ingest", Some(base)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val handle = bootstrap(spark, base, host, port, from)
     // the reference binds its ops mux unconditionally on :8000

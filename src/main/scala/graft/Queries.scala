@@ -480,10 +480,9 @@ object Queries {
     f"k$ShingleK-df$NgramMaxDf-t${(JaccardThreshold * 100).round}%03d"
 
   /** Canonical standing-artifact paths for the near-dup pair graph and
-    * its component map. Harnesses that wipe-and-rebuild (ScaleProbe's
-    * build-vs-probe rows) must target exactly what the catalog builds —
-    * reconstructing these names elsewhere breaks silently on a tag
-    * change.
+    * its component map. Anything that wipes and rebuilds them must target
+    * exactly what the catalog builds — reconstructing these names
+    * elsewhere breaks silently on a tag change.
     */
   def ngramPairsPath(dir: String): String =
     graft.vector.AnnIndex.indexRoot(dir) + s"/ngram-pairs-$ngramParamsTag"
@@ -519,9 +518,9 @@ object Queries {
   private val ngramAdvisedDirs =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
-  /** Measure-and-log form of the advisory — also the ScaleProbe/spec
-    * entry point (public: a pipeline owner deciding between the exact
-    * and MinHash paths for a new corpus can call it directly). Returns
+  /** Measure-and-log form of the advisory — also the spec entry point
+    * (public: a pipeline owner deciding between the exact and MinHash
+    * paths for a new corpus can call it directly). Returns
     * the stats when the advisory FIRED (corpus at or above `minDocs`
     * and measured candidate pairs above `pairsPerDoc × nDocs`), None
     * when silent.
@@ -547,10 +546,9 @@ object Queries {
     }
   }
 
-  /** The capped per-doc shingle-hash stream `dd_ngram_jaccard` (and the
-    * advisory, and ScaleProbe's pairs/doc measurement) all run on — ONE
-    * constructor so the measured collision mass is the mass the query
-    * actually joins on.
+  /** The capped per-doc shingle-hash stream `dd_ngram_jaccard` and the
+    * advisory both run on — ONE constructor so the measured collision
+    * mass is the mass the query actually joins on.
     *
     * Shingles come pre-hashed to 64-bit keys from the native one-pass
     * kernel ([[graft.text.Dedup.shingleHashRows]]): every shuffle and
@@ -634,7 +632,7 @@ object Queries {
     // Single-shingle candidate pairs are the corpus-quadratic term: once
     // the corpus is large against its shingle space, RANDOM one-shingle
     // collisions grow ∝ n²/|space|, and the size join-backs shuffle every
-    // one of them (ScaleProbe measured the 500k→5M-doc step going 47×
+    // one of them (the scale probe measured the 500k→5M-doc step going 47×
     // on exactly these). Yet an i=1 pair can clear
     // jaccard = i/(na+nb−i) ≥ τ only when na+nb ≤ (1+τ)/τ — i.e. BOTH
     // docs have ≤ ⌊1/τ⌋ capped shingles — so dropping i=1 pairs whose
@@ -895,12 +893,12 @@ object Queries {
     * partition. The previous shape — explode to (doc_id, token) rows,
     * then `distinct()` — shuffled the full exploded stream (~100 rows
     * per document) and hit an agg-spill cliff on realistic corpora:
-    * ScaleProbe measured it 25.5× for the 10× 50k→500k step (22.1 s at
+    * the scale probe measured it 25.5× for the 10× 50k→500k step (22.1 s at
     * 500k), vs ~2.6× (2.2 s) for this shape on the same corpus.
     * Result-identical: distinct pairs per doc = distinct tokens per doc
     * — PROVIDED each documents row is one document, which holds here by
     * table contract (doc_id is the documents table's primary key in the
-    * testdata, the ScaleProbe corpora, and any store this engine writes;
+    * testdata, the generated scale corpora, and any store this engine writes;
     * the old global `distinct()` would additionally have collapsed
     * duplicated doc_id ROWS, so a caller feeding a non-keyed frame — say
     * an un-deduplicated union — must pre-dedup on doc_id or df
@@ -994,8 +992,8 @@ object Queries {
   // 0.95 measures 12/14 with the kernel's fixed plane seed, 0.97 holds
   // 13/14 deterministically.
   val EmbLshTargetRecall = 0.97
-  // aliases the index layer's constant so the catalog, the pre-build
-  // (AnnIndex.ensureAll), and the hash-replay oracle can never drift
+  // aliases the index layer's constant so the catalog, the index layer
+  // and the hash-replay oracle can never drift
   val AnnLshBits: Int = graft.vector.AnnIndex.ServedLshBits
   val AnnLshK = 10
   val AnnLshMaxProbes = 16
@@ -1419,7 +1417,7 @@ object Queries {
     // ALWAYS recomputed: the seeded sample + 2 Lloyd scans ARE the work
     // the clustering rows claim to measure, so every construction pays
     // them in full. r17 let the capture registry double as a per-dir
-    // memo (populated untimed via Bench.ensureIndexes), which moved the
+    // memo (populated untimed by an index pre-build), which moved the
     // clustering out of emb_kmeans/dd_semdedup*'s timed region — the
     // r17 verdict flagged that as bench accounting, not optimization
     // (action_rev 3 reverts it). The registry below is WRITE-only from
@@ -1494,14 +1492,11 @@ object Queries {
     * replay (captured centroid literals) feeds the same recursive-CTE
     * reachability the dd_clusters oracle uses.
     */
-  /** The semdedup components artifact — ONE builder for the serving query
-    * and [[ensureSemdedupArtifacts]], so the parameters and the artifact
-    * path can never diverge between the bench pre-build and the first
-    * serving touch (two near-identical artifacts accumulating under the
-    * index root, with cold timings measuring the wrong one). Pair
-    * construction (incl. the centroid-seeding driver jobs inside
-    * capturedCentroids) is deferred into ensureComponents' by-name param —
-    * the warm path reads the artifact without running a single seeding job.
+  /** The semdedup components artifact, built by the first query that
+    * touches it. Pair construction (incl. the centroid-seeding driver
+    * jobs inside capturedCentroids) is deferred into ensureComponents'
+    * by-name param — the warm path reads the artifact without running a
+    * single seeding job.
     */
   private def semdedupComponents(s: SparkSession, dir: String): DataFrame = {
     val emb = Domain.embeddings(s, dir)
@@ -1523,17 +1518,6 @@ object Queries {
         when(col("comp").isNull || col("comp") === col("vec_id"), lit(1L))
           .otherwise(lit(0L)).as("keep"))
       .orderBy(col("vec_id"))
-  }
-
-  /** Pre-build the semdedup standing artifact (the components parquet
-    * `dd_semdedup_verdicts` serves from) — write-path cost, invoked by
-    * `Bench.ensureIndexes` alongside the spine/ANN builds so cold query
-    * timings measure the read path, not a first-touch artifact build.
-    * No-op when the artifact already matches the corpus fingerprint.
-    */
-  def ensureSemdedupArtifacts(s: SparkSession, dir: String): Unit = {
-    semdedupComponents(s, dir)
-    ()
   }
 
   val SimhashRadius = 3
@@ -1643,9 +1627,9 @@ object Queries {
         bit_xor(xxhash64(df.columns.map(col): _*)).as("h"))
       .head().getLong(0)
 
-  /** The ONE timing action every harness (Bench, ScaleProbe, QTime,
-    * load attacks) uses for catalog rows: plain `count()` where that
-    * already executes the full query, [[forceAll]] where it would not.
+  /** The ONE timing action every harness uses for catalog rows: plain
+    * `count()` where that already executes the full query, [[forceAll]]
+    * where it would not.
     */
   def timingAction(name: String, df: DataFrame): Long =
     if (ForcedActionRows(name)) forceAll(df) else df.count()

@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 
 /** The session configs every graft entry point must share, in ONE place.
@@ -20,10 +22,19 @@ import org.apache.spark.sql.SparkSession
   * works only because all entry points happen to route through it before
   * the scan resolves. The accessors now ASSERT instead (fail loudly at
   * the first read) and construction happens here, where every main —
-  * Bench, LoadProbe, Verify, Smoke, ScaleProbe, QTime, Explain — and the
-  * test harness build their sessions.
+  * Serve, ExporterServe, Ingest, Verify, Smoke, Explain — and the test
+  * harness build their sessions.
   */
 object Sessions {
+
+  /** The core count every main runs at: `SPARK_GRAFT_CPUS` when set,
+    * otherwise the processors this JVM sees, so by default a local
+    * session starts no more task threads (and no more than 8× as many
+    * AQE partitions) than the host has cores.
+    */
+  def cpus(env: Map[String, String] = sys.env): String =
+    env.get("SPARK_GRAFT_CPUS").map(_.trim).filter(_.nonEmpty)
+      .getOrElse(Runtime.getRuntime.availableProcessors.toString)
 
   /** (key, required value) pairs — order matters only for error messages. */
   val DriftConfs: Seq[(String, String)] = Seq(
@@ -34,8 +45,7 @@ object Sessions {
   def withDriftDefaults(b: SparkSession.Builder): SparkSession.Builder =
     DriftConfs.foldLeft(b) { case (acc, (k, v)) => acc.config(k, v) }
 
-  /** The long-lived-service configs the bench measured as load-bearing
-    * (`Bench.newSession` was where they first proved out):
+  /** The long-lived-service configs the bench measured as load-bearing:
     *
     *  - AQE + skew-join: runtime re-plan and skew splitting at the bench SF.
     *  - `codegen.cache.maxEntries=3000`: the catalog has ~67 queries x
@@ -47,9 +57,9 @@ object Sessions {
     *    the pool instead of FIFO-starving point lookups behind one heavy
     *    page.
     *
-    * Every serving entry point (Serve, Bench, LoadProbe) builds through
-    * [[serviceBuilder]] so the production binary runs the exact
-    * configuration the bench proved; ServiceConfsSpec pins the set.
+    * Every entry point builds through [[serviceBuilder]] so the
+    * production binary runs the exact configuration the bench measures;
+    * SessionsSpec pins the set.
     */
   val ServiceConfs: Seq[(String, String)] = Seq(
     "spark.sql.adaptive.enabled" -> "true",
@@ -121,12 +131,12 @@ object Sessions {
           while (sum < stopAt && it.hasNext) {
             val p = it.next()
             if (java.nio.file.Files.isRegularFile(p))
-              sum += (try java.nio.file.Files.size(p) catch { case _: Throwable => 0L })
+              sum += (try java.nio.file.Files.size(p) catch { case NonFatal(_) => 0L })
           }
           sum
         } finally s.close()
       }
-    } catch { case scala.util.control.NonFatal(_) => -1L }
+    } catch { case NonFatal(_) => -1L }
 
   /** The byte sum at which [[initialPartitionsSized]] reaches its
     * 8×cores ceiling — the walk above never needs to count past it.
@@ -156,8 +166,7 @@ object Sessions {
     // run-to-run spread (lz4 35.7-52.5 vs zstd 44.1-45.3). Below the
     // threshold everything fits in page cache and lz4's cheaper CPU is
     // the right default (Spark's own), so the codec flips exactly where
-    // the posture saturates — data-derived, never a local-mode constant;
-    // SPARK_GRAFT_CONF overrides either way.
+    // the posture saturates — data-derived, never a local-mode constant.
     (if (sizedBytes.exists(_ >= posturesSaturatedAt(cpus)))
       Seq("spark.io.compression.codec" -> "zstd")
     else Seq.empty)
@@ -170,35 +179,14 @@ object Sessions {
     * else here is local-mode-specific). `dataDir` (the dir the entry
     * point serves) sizes the AQE initial partition count to the input —
     * see [[initialPartitionsSized]]; entry points with no single data
-    * dir (scale probes over generated decades) pass None and keep the
+    * dir pass None and keep the
     * flat scale posture.
     */
   def serviceBuilder(cpus: String, appName: String,
-      dataDir: Option[String] = None): SparkSession.Builder = {
-    val base = serviceConfPairs(cpus, dataDir).foldLeft(
+      dataDir: Option[String] = None): SparkSession.Builder =
+    serviceConfPairs(cpus, dataDir).foldLeft(
       SparkSession.builder().master(s"local[$cpus]").appName(appName)
     ) { case (acc, (k, v)) => acc.config(k, v) }
-    // SPARK_GRAFT_CONF="k=v;k=v" overlays the benched defaults — the
-    // no-recompile A/B switch QTime has had since r15, now uniform
-    // across entry points (r17: used to isolate initialPartitionNum's
-    // small-SF cost with everything else identical). Production runs
-    // leave it unset; the pinned defaults stand.
-    overlayConfs(base)
-  }
-
-  /** Apply the `SPARK_GRAFT_CONF="k=v;k=v"` overlay to any builder —
-    * shared by the serving builder and the probes so context-level A/B
-    * knobs (shuffle codec, file buffers) land before the SparkContext
-    * exists; SQLConf-level keys work the same way.
-    */
-  def overlayConfs(base: SparkSession.Builder): SparkSession.Builder =
-    sys.env.get("SPARK_GRAFT_CONF").toSeq
-      .flatMap(_.split(';')).foldLeft(base) { (acc, kv) =>
-        kv.split("=", 2) match {
-          case Array(k, v) if k.trim.nonEmpty => acc.config(k.trim, v.trim)
-          case _ => acc
-        }
-      }
 
   /** Assert (never set) the drift-defense configs on a live session —
     * called by the [[graft.model.Domain]] accessors before the events
@@ -256,7 +244,7 @@ object Sessions {
       val child = parent.newSession()
       parent.conf.getAll.foreach { case (k, v) =>
         try child.conf.set(k, v)
-        catch { case scala.util.control.NonFatal(_) => () }
+        catch { case NonFatal(_) => () }
       }
       overrides.foreach { case (k, v) => child.conf.set(k, v) }
       child

@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.functions._
 
 /** End-to-end smoke drive of the library's public surface on the real
@@ -11,11 +12,7 @@ import org.apache.spark.sql.functions._
 object Smoke {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = Sessions.withDriftDefaults(SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-smoke")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false"))
+    val spark = Sessions.serviceBuilder(Sessions.cpus(), "graft-smoke", Some(sfDir))
       .getOrCreate()
     import spark.implicits._
     spark.sparkContext.setLogLevel("WARN")
@@ -23,7 +20,7 @@ object Smoke {
     var failed = 0
     def check(name: String)(body: => Any): Unit = {
       val r = try body.toString catch {
-        case e: Throwable => failed += 1; s"FAIL ${e.getMessage}"
+        case NonFatal(e) => failed += 1; s"FAIL ${e.getMessage}"
       }
       println(f"[smoke] $name%-28s $r")
     }

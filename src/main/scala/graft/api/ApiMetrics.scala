@@ -11,8 +11,6 @@ import java.util.concurrent.atomic.{AtomicLong, LongAdder}
   * Hand-rolled because the engine takes no dependencies beyond Spark:
   * a LongAdder counter per (route, status) and a fixed ring of recent
   * latencies per route for the reference's {0.5, 0.9, 0.99} quantiles.
-  * The catalog-side analog is [[graft.QueryMetrics]] (task-level
-  * attribution); this is the HTTP boundary's view.
   *
   * One INSTANCE per listener ([[HttpApi.start]] creates it, the Handle
   * exposes it): a process-global registry would mix every server's

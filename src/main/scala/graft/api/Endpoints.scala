@@ -47,8 +47,8 @@ object Endpoints {
     * so the request costs one tight `pulse_number BETWEEN` row fetch —
     * O(page) via row-group stats — instead of a full scan-sort-count of
     * the dimension, which grows with pulse HISTORY (one row per 10 s ≈
-    * 3 M rows/year; measured by `graft.ServeScale`: the scan path
-    * doubles from 50k → 500k pulses while this path is flat). The fast
+    * 3 M rows/year; the serving scale curve in SCALE.md measured the
+    * scan path doubling from 50k → 500k pulses while this path is flat). The fast
     * path is accepted only when the fetched rows' pulse numbers equal
     * the index slice BY VALUE (a racing commit between the two
     * resolutions — including a same-cardinality replace — falls back to

@@ -34,7 +34,7 @@ import graft.functions.Codecs
   * Concurrency: a fixed pool sized like the reference's load suite's
   * attacker count; each request submits independent Spark jobs, so FAIR
   * scheduling in the session keeps one heavy page from starving point
-  * lookups (the exact shape LoadProbe measures).
+  * lookups.
   *
   * Serialization is driver-side string building over the ≤1000-row page
   * (validation bounds it) — the API boundary, not a distributed op. The

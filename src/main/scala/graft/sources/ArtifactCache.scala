@@ -8,9 +8,9 @@ package graft.sources
   * write-once contract a positive check is permanently valid, so it is
   * cached here and the steady-state cost becomes a set lookup. Negative
   * results are never cached — an absent artifact must stay re-checkable
-  * until its build commits. Harnesses that wipe artifacts to re-time
-  * builds (ScaleProbe's build-vs-probe rows) must [[forget]] the wiped
-  * roots or later ensures would serve a deleted path.
+  * until its build commits. Anything that wipes artifacts (to rebuild
+  * or re-time them) must [[forget]] the wiped roots or later ensures
+  * would serve a deleted path.
   */
 object ArtifactCache {
 

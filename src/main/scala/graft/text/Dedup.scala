@@ -300,7 +300,7 @@ object Dedup {
     * the embedding dedup retired in r15), band buckets hash into a 2^64
     * domain, so there is NO structural saturation with corpus size: cost
     * is signature work (n·k) plus candidates admitted by the S-curve,
-    * and ScaleProbe measures 1.2× for a 10× step at the 50k→500k-doc
+    * and the scale probe measured 1.2× for a 10× step at the 50k→500k-doc
     * decade with a realistic vocabulary. The ceiling is the corpus's
     * MODERATE-similarity mass: r=2 admits s=0.3 pairs with p≈0.53, so a
     * boilerplate-dense corpus with super-linear near-threshold mass

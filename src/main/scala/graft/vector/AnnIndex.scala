@@ -312,11 +312,10 @@ object AnnIndex {
     root
   }
 
-  /** The signature width every served/prebuilt LSH index uses — ONE
-    * constant shared by the catalog query (`Queries.AnnLshBits` aliases
-    * it, including its hash-replay oracle) and [[ensureAll]]'s pre-build,
-    * so the two can never drift: a drifted pre-build would leave the
-    * timed query paying a full corpus-scan index build on its cold pass.
+  /** The signature width every served LSH index uses — ONE constant
+    * shared by the catalog query (`Queries.AnnLshBits` aliases it,
+    * including its hash-replay oracle) and the index layer, so the two
+    * can never drift.
     */
   val ServedLshBits = 6
 
@@ -331,18 +330,4 @@ object AnnIndex {
     indexRoot(dir) + s"/ivf-c$nCells"
   def lshPath(dir: String, bits: Int, dim: Int, seed: Long = 42L): String =
     indexRoot(dir) + s"/lsh-b$bits-d$dim-s$seed"
-
-  /** Ensure both ANN indexes for a testdata dir exist (called by Bench
-    * before timing so query numbers measure the read path, mirroring a
-    * standing index in production). `dim` is the testdata corpus's
-    * embedding width; a corpus with a different width misses this
-    * pre-build and cold-builds its own correctly-dimensioned index at
-    * its own path (the dim-tagged [[lshPath]] makes a mismatch a miss,
-    * never a silent wrong-planes probe).
-    */
-  def ensureAll(spark: SparkSession, dir: String, dim: Int = 64): Unit = {
-    val emb = graft.model.Domain.embeddings(spark, dir)
-    ensureIvf(emb, ivfPath(dir))
-    ensureLsh(emb, lshPath(dir, ServedLshBits, dim), dim, bits = ServedLshBits)
-  }
 }

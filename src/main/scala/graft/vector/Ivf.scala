@@ -46,7 +46,7 @@ object Ivf {
     * structure this tightens cells around the clusters; NOTE measured on
     * the near-uniform synthetic testdata it etches cells too evenly and
     * LOWERS recall at a fixed probe budget (0.8 → 0.7 at nProbe=6/16
-    * cells — ProbeTune), so [[AnnIndex.ensureIvf]] stays on sample
+    * cells), so [[AnnIndex.ensureIvf]] stays on sample
     * centroids by default and callers opt in for clustered data.
     */
   def refineCentroids(

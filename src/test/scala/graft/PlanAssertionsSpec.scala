@@ -362,7 +362,7 @@ class PlanAssertionsSpec extends SparkSpec {
       s"gap detection must not touch the fact table:\n$p")
   }
 
-  // ---- HTTP endpoint plans (the serving paths LoadProbe attacks) -------
+  // ---- HTTP endpoint plans (the serving paths) --------------------------
 
   test("endpoint by-jet-id page: served as a materialized local page; page query pruned") {
     // the linked page is assembled driver-side over the ≤1000 collected

@@ -119,7 +119,7 @@ class RecallInvariantsSpec extends SparkSpec {
   test("ann_ivf recall >= 0.8 and ann_lsh recall >= 0.5 against brute-force top-10") {
     // The query vector's true top-10 sit at cosine 0.28-0.37 on this data —
     // barely above the 64-dim random background (σ≈0.125) — so pruning and
-    // recall trade off steeply. Measured curves (ProbeTune): IVF reaches
+    // recall trade off steeply. Measured probe curves: IVF reaches
     // 0.8 reading ~34% (nProbe=6/16 cells); single-table hyperplane LSH
     // tops out near 0.7 even reading half the corpus, so its catalog
     // config keeps honest 4× pruning and is bounded at 0.5 here instead —

@@ -2,15 +2,13 @@ package graft
 
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
-import java.util.concurrent.atomic.AtomicLong
 
 /** The production server's startup path (`Serve.bootstrap` — what
-  * `Serve.main` runs short of blocking) and the HTTP attack probe that
-  * grades it. HttpApiSpec proves the routes; this proves the BINARY's
-  * boot sequence: spines ensured, plans plateau-warmed, listener bound,
-  * HTTP stack warmed — and that a bootstrapped server actually serves
-  * every probe shape. The reduced warm budget drives the identical code
-  * path at spec speed.
+  * `Serve.main` runs short of blocking). HttpApiSpec proves the routes;
+  * this proves the BINARY's boot sequence: spines ensured, plans
+  * plateau-warmed, listener bound, HTTP stack warmed — and that a
+  * bootstrapped server actually serves every probe shape. The reduced
+  * warm budget drives the identical code path at spec speed.
   */
 class ServeSpec extends SparkSpec {
 
@@ -30,8 +28,8 @@ class ServeSpec extends SparkSpec {
       assert(scrape0.statusCode() == 200)
       assert(!scrape0.body().contains("gbe_api_requests_total{"),
         s"warmup bursts must not be counted as requests: ${scrape0.body().take(300)}")
-      // every probe shape the load suite attacks serves 200 with a body
-      LoadProbe.httpShapes(spark, dir).foreach { case (name, path) =>
+      // every shape the HTTP warm-up drives serves 200 with a body
+      Serve.httpShapes(spark, dir).foreach { case (name, path) =>
         val resp = client.send(
           HttpRequest.newBuilder(
             URI.create(s"http://localhost:${handle.port}$path")).GET().build(),
@@ -61,31 +59,5 @@ class ServeSpec extends SparkSpec {
     val second = rebind()
     try assert(second.port == port)
     finally second.stop()
-  }
-
-  test("LoadProbe.attackHttp measures a live URL with zero errors") {
-    val handle = Serve.bootstrap(spark, dir, port = 0, warmBudgetMsPerShape = 60L)
-    try {
-      val errors = new AtomicLong()
-      val stats = LoadProbe.attackHttp(
-        s"http://localhost:${handle.port}/api/v1/pulses?limit=5",
-        attackers = 2, millis = 500L, errors)
-      assert(errors.get() == 0)
-      assert(stats.n > 0)
-      assert(stats.qps > 0.0)
-      assert(stats.p50Ms > 0.0 && stats.p95Ms >= stats.p50Ms)
-    } finally handle.stop()
-  }
-
-  test("LoadProbe.attackHttp counts non-200 responses as errors, not latencies") {
-    val handle = Serve.bootstrap(spark, dir, port = 0, warmBudgetMsPerShape = 60L)
-    try {
-      val errors = new AtomicLong()
-      val stats = LoadProbe.attackHttp(
-        s"http://localhost:${handle.port}/api/v1/pulses?limit=0", // 400: out of range
-        attackers = 2, millis = 300L, errors)
-      assert(errors.get() > 0)
-      assert(stats.n == 0)
-    } finally handle.stop()
   }
 }

@@ -1,7 +1,7 @@
 package graft
 
-/** Pins the shared session configuration every serving entry point
-  * (Serve, Bench, LoadProbe) builds through [[Sessions.serviceBuilder]].
+/** Pins the shared session configuration every entry point builds
+  * through [[Sessions.serviceBuilder]].
   * The set exists because each config was measured as load-bearing; a
   * drive-by edit that drops one must fail here, not in a bench round.
   */
@@ -86,6 +86,14 @@ class SessionsSpec extends org.scalatest.funsuite.AnyFunSuite {
       java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(tiny, "y.parquet"))
       java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(tiny))
     }
+  }
+
+  test("the core count defaults to the host's processors; SPARK_GRAFT_CPUS overrides it") {
+    val host = Runtime.getRuntime.availableProcessors.toString
+    assert(Sessions.cpus(Map.empty) == host)
+    assert(Sessions.cpus(Map("SPARK_GRAFT_CPUS" -> " ")) == host,
+      "a blank setting must not become local[ ]")
+    assert(Sessions.cpus(Map("SPARK_GRAFT_CPUS" -> "3")) == "3")
   }
 
   test("serviceConfPairs (what serviceBuilder applies) covers drift + service + parallelism") {

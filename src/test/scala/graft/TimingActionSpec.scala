@@ -58,7 +58,7 @@ class TimingActionSpec extends SparkSpec {
 
   test("action_rev 3: emb_kmeans recomputes its centroids on EVERY " +
       "construction — the capture registry is write-only, never a memo") {
-    // r17 let Bench.ensureIndexes pre-populate the centroid registry
+    // r17 let an untimed index pre-build populate the centroid registry
     // untimed, after which the timed row measured a map lookup (the r17
     // verdict's gaming flag). Two constructions must register two
     // DISTINCT array instances: reference inequality proves the seeded

@@ -615,11 +615,11 @@ class HttpApiSpec extends SparkSpec {
 
   // ---- frame -----------------------------------------------------------
 
-  test("LoadProbe.httpShapes: every probe URL serves 200 on this corpus") {
-    // the bench's HTTP load gate attacks these exact paths; a shape that
-    // 404s or 400s would silently zero the gate (attackHttp counts
-    // non-200 as error) — pin them against the live server here
-    graft.LoadProbe.httpShapes(spark, dir).foreach { case (name, path) =>
+  test("Serve.httpShapes: every probe URL serves 200 on this corpus") {
+    // Serve.bootstrap warms the HTTP stack through these exact paths; a
+    // shape that 404s or 400s would warm nothing (warm-up drops failed
+    // calls) — pin them against the live server here
+    graft.Serve.httpShapes(spark, dir).foreach { case (name, path) =>
       val (status, body) = get(path.stripPrefix("/api/v1"))
       assert(status == 200, s"$name -> $path returned $status: ${body.take(120)}")
       assert(body.nonEmpty)

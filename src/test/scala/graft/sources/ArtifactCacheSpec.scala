@@ -54,7 +54,7 @@ class ArtifactCacheSpec extends SparkSpec {
       (1 to 5).toDF("n")
     }
     served().count()
-    // wipe the artifact the way ScaleProbe's build-vs-probe rows do
+    // wipe the artifact the way a rebuild-and-retime run does
     val hp = new org.apache.hadoop.fs.Path(path)
     hp.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(hp, true)
     RelationCache.invalidate(path)
