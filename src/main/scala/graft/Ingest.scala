@@ -1,6 +1,7 @@
 package graft
 
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -28,8 +29,8 @@ import graft.ingest.{Canonicalize, GrpcTransport, PulseWriter, Resilience, Table
   *    `etl/extractor/platform_impl.go:151-222`): fetch the pulse at the
   *    cursor through [[Transport.fetchPulse]] (portioned stream, resume
   *    cursor, end-of-pulse marker), commit it through the shared
-  *    [[PulseWriter.commitPulse]] (distributed spine + idempotent
-  *    partition overwrite), then advance by the exporter's iterate-from
+  *    [[PulseWriter.commitPulse]] (driver-side spine + manifested
+  *    partition append), then advance by the exporter's iterate-from
   *    hint. `NOT_FOUND` means the head is reached — sleep half a pulse
   *    and re-ask (the reference's
   *    `ContinuousPulseRetrievingHalfPulseSeconds`). A transport failure
@@ -76,8 +77,8 @@ import graft.ingest.{Canonicalize, GrpcTransport, PulseWriter, Resilience, Table
   *
   * 100 TB shape: the per-pulse record set is bounded by the pulse
   * cadence (the reference holds it in one goroutine's memory the same
-  * way), the spine is the only distributed stage, the commit is a
-  * pruned single-partition overwrite. Driver memory holds one
+  * way), so the spine chain-sorts it in the driver and the commit is
+  * one single-file manifested append per table. Driver memory holds one
   * [[PulseEntry]] per pulse seeded or ingested THIS run (~tens of
   * bytes each — bounded by the open frontier plus the run's own feed,
   * never by a decade of persisted history), and per-tick scanning and
@@ -197,6 +198,10 @@ object Ingest {
     def sequentialPulse: Long = seqPulse
     def snapshot: Map[Long, PulseEntry] = lock.synchronized(entries.toMap)
     def ingestedCount: Int = lock.synchronized(entries.size)
+    private val commits = new java.util.concurrent.atomic.AtomicLong
+    private val commitMs = new java.util.concurrent.atomic.AtomicLong
+    /** `(pulse commits, their summed wall milliseconds)` since start. */
+    def commitStats: (Long, Long) = (commits.get, commitMs.get)
 
     /** One atomic sample of the register's bounded-frontier invariant
       * (the reference deletes completed pulses from its `jetDropRegister`,
@@ -538,11 +543,14 @@ object Ingest {
       * stays linked through out-of-order arrival.
       */
     private def commit(pulse: Long, rows: Seq[Row]): Unit = {
+      val t0 = System.nanoTime()
       val dropRows = writeLock.synchronized {
         PulseWriter.commitPulse(
           spark.createDataFrame(rows.asJava, graft.model.Schemas.wireRecords), basePath,
           pulses = Some(Seq(pulse)))
       }
+      commitMs.addAndGet((System.nanoTime() - t0) / 1000000L)
+      commits.incrementAndGet()
       lock.synchronized {
         val jets = dropRows.map(_.getAs[String]("jet_id")).toSet
         val amount = dropRows.map(_.getAs[Int]("record_amount").toLong).sum
@@ -725,7 +733,7 @@ object Ingest {
           }
         } catch {
           case _: InterruptedException => return
-          case e: Throwable =>
+          case NonFatal(e) =>
             // exporter down past the reopen budget, or a commit failure:
             // hold the cursor and retry after a pause — the extractor
             // retries forever under its controller's cancellation (the
@@ -757,7 +765,7 @@ object Ingest {
               try { fetchAndCommit(p); missed.addIfNew(p, p); () }
               catch { case _: InterruptedException => throw new InterruptedException
                       // NonFatal: VM errors propagate (HTTP-handler policy)
-                      case scala.util.control.NonFatal(_) => () }
+                      case NonFatal(_) => () }
             }
           }
         }
@@ -801,7 +809,7 @@ object Ingest {
       while (running) {
         try { nap(cfg.pulsePeriodMs); if (running) maintainOnce() }
         catch { case _: InterruptedException => return
-                case e: Throwable => traceLoopFailure("maintainer", e) }
+                case NonFatal(e) => traceLoopFailure("maintainer", e) }
       }
 
     // ---- sequencer (pulseSequence analog) -------------------------------
@@ -842,7 +850,7 @@ object Ingest {
                   missed.addIfNew(from, to)
                   ()
                 } catch { case _: InterruptedException => throw new InterruptedException
-                          case scala.util.control.NonFatal(_) => () }
+                          case NonFatal(_) => () }
               }
             }
         }
@@ -853,7 +861,7 @@ object Ingest {
       while (running) {
         try { nap(cfg.sequentialPeriodMs); if (running) sequenceOnce() }
         catch { case _: InterruptedException => return
-                case e: Throwable => traceLoopFailure("sequencer", e) }
+                case NonFatal(e) => traceLoopFailure("sequencer", e) }
       }
 
     // ---- pulses dimension -----------------------------------------------
@@ -985,13 +993,14 @@ object Ingest {
             writeFrontier(spark, target, frontier._1, frontier._2)
             summarized = Some(frontier)
           } catch {
-            case e: Throwable =>
+            case NonFatal(e) =>
               System.err.println(s"[ingest] frontier summary write failed " +
                 s"(seed falls back to a wider read): $e")
           }
         } catch {
-          case e: Throwable =>
-            // failed write: nothing persisted — re-mark for the next tick
+          case e @ (_: InterruptedException | NonFatal(_)) =>
+            // failed or interrupted write: nothing persisted — re-mark
+            // for the next tick
             lock.synchronized { dirty ++= flushed }
             throw e
         }
@@ -1047,7 +1056,7 @@ object Ingest {
             Some((seq.toLong, bucket.toLong, Option(span).map(_.toLong)))
           case _ => None
         }
-      } catch { case _: Throwable => None }
+      } catch { case NonFatal(_) => None }
     }
 
     // ---- lifecycle ------------------------------------------------------
@@ -1078,7 +1087,7 @@ object Ingest {
       // store) but must not be INVISIBLE: without the log line a
       // shutdown-time store failure leaves operators nothing to act on.
       try { maintainOnce(); sequenceOnce(); flush() } catch {
-        case e: Throwable =>
+        case NonFatal(e) =>
           System.err.println(
             s"[ingest] shutdown flush failed (flags re-derive on next start): $e")
       }
@@ -1102,8 +1111,8 @@ object Ingest {
     * `cmd/block-explorer/main.go` itself (`main.go:60`, `main.go:157-171`
     * with the controller/extractor/transformer gauge collectors), so a
     * deploy probes the INGEST binary directly, not just the API service.
-    * Gauges come straight from the daemon's register (driver-held,
-    * lock-scoped reads — zero Spark jobs per scrape). Exact-path
+    * Gauges and the commit counters come straight from the daemon
+    * (driver-held reads — zero Spark jobs per scrape). Exact-path
     * /healthcheck like the service listener's; any method answers
     * (ServeMux parity). Caller owns `stop(0)`.
     */
@@ -1113,14 +1122,18 @@ object Ingest {
     graft.api.OpsRoutes.healthcheck(server)
     graft.api.OpsRoutes.metrics(server) { () =>
       val (open, incomplete, dirty) = daemon.frontierStats
+      val (commits, commitMs) = daemon.commitStats
       Seq(
-        "gbe_ingest_cursor" -> daemon.cursor,
-        "gbe_ingest_sequential_pulse" -> daemon.sequentialPulse,
-        "gbe_ingest_known_pulses" -> daemon.ingestedCount.toLong,
-        "gbe_ingest_open_frontier" -> open.toLong,
-        "gbe_ingest_incomplete_pulses" -> incomplete.toLong,
-        "gbe_ingest_dirty_pulses" -> dirty.toLong
-      ).map { case (n, v) => s"# TYPE $n gauge\n$n $v" }.mkString("", "\n", "\n")
+        ("gbe_ingest_cursor", "gauge", daemon.cursor),
+        ("gbe_ingest_sequential_pulse", "gauge", daemon.sequentialPulse),
+        ("gbe_ingest_known_pulses", "gauge", daemon.ingestedCount.toLong),
+        ("gbe_ingest_open_frontier", "gauge", open.toLong),
+        ("gbe_ingest_incomplete_pulses", "gauge", incomplete.toLong),
+        ("gbe_ingest_dirty_pulses", "gauge", dirty.toLong),
+        // mean commit latency = commit_ms_sum / commits_total
+        ("gbe_ingest_commits_total", "counter", commits),
+        ("gbe_ingest_commit_ms_sum", "counter", commitMs)
+      ).map { case (n, t, v) => s"# TYPE $n $t\n$n $v" }.mkString("", "\n", "\n")
     }
     server.start()
     server

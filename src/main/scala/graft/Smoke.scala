@@ -43,19 +43,8 @@ object Smoke {
     val canon = ingest.Canonicalize(wire)
     check("canonicalize rows (drops 1/5)")(canon.count())
 
-    val nodes = canon.select(
-      hex(col("reference")).as("key"),
-      concat_ws("|", col("pulse_number"), col("jet_id"), hex(coalesce(col("object_reference"), lit(Array.emptyByteArray)))).as("group_key"),
-      hex(coalesce(col("prev_record_reference"), lit(Array.emptyByteArray))).as("prev_key"),
-      (col("type") === "state").as("chained"),
-      col("order_hint").cast("long").as("order_hint"))
-    val sorted = operators.ChainSort.sortDf(nodes)
-    check("chain-sorted rows")(sorted.count())
-
-    val withOrder = ingest.PulseWriter.assignOrder(
-      canon.join(sorted.withColumnRenamed("key", "ref_hex"),
-        hex(col("reference")) === col("ref_hex"), "left")
-        .withColumn("chain_pos", coalesce(col("chain_pos"), lit(Int.MaxValue))))
+    val withOrder = ingest.Spine(wire)
+    check("chain-sorted rows")(withOrder.count())
     check("order assigned, max order")(withOrder.agg(max("order")).first().get(0))
 
     // ---- status ops ----

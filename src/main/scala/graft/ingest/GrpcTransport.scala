@@ -2,6 +2,8 @@ package graft.ingest
 
 import java.util.concurrent.TimeUnit
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.sparkproject.connect.grpc.{CallOptions, Channel, ManagedChannel, ServerServiceDefinition, Status, StatusRuntimeException}
@@ -81,12 +83,12 @@ object GrpcTransport {
         try ClientCalls.blockingServerStreamingCall(
           channel, GrpcWire.ExportMethod, CallOptions.DEFAULT,
           GrpcWire.GetRecords(pulse, recordNumber, count))
-        catch { case e: Throwable => translate(pulse, e) }
+        catch translate(pulse)
       new Iterator[Transport.Frame] {
         override def hasNext: Boolean =
-          try it.hasNext catch { case e: Throwable => translate(pulse, e) }
+          try it.hasNext catch translate(pulse)
         override def next(): Transport.Frame = {
-          val f = try it.next() catch { case e: Throwable => translate(pulse, e) }
+          val f = try it.next() catch translate(pulse)
           Transport.Frame(f.pulseNumber, rowOf(f),
             if (f.shouldIterateFrom != 0L) Some(f.shouldIterateFrom) else None)
         }
@@ -136,17 +138,19 @@ object GrpcTransport {
           }))
       .build()
 
-  private def translate(pulse: Long, e: Throwable): Nothing = e match {
+  /** Maps a failure of an Export call (at open or mid-stream) onto the
+    * transport exceptions; VM-fatal errors are not caught.
+    */
+  private def translate(pulse: Long): PartialFunction[Throwable, Nothing] = {
     case s: StatusRuntimeException => s.getStatus.getCode match {
       case Status.Code.NOT_FOUND => throw new Transport.PulseNotFound(pulse)
       case Status.Code.RESOURCE_EXHAUSTED => throw new Transport.RateLimited(s.getStatus.toString)
       case _ => throw new Transport.StreamDropped(s.getStatus.toString)
     }
-    // an interrupt (pool shutdown) and VM-fatal errors must NOT become a
-    // retryable drop — fetchPulse would sleep and reopen with the
-    // interrupt flag cleared instead of exiting promptly
+    // an interrupt (pool shutdown) must NOT become a retryable drop —
+    // fetchPulse would sleep and reopen with the interrupt flag cleared
+    // instead of exiting promptly
     case ie: InterruptedException => Thread.currentThread().interrupt(); throw ie
-    case fatal: VirtualMachineError => throw fatal
-    case other => throw new Transport.StreamDropped(String.valueOf(other.getMessage))
+    case NonFatal(other) => throw new Transport.StreamDropped(String.valueOf(other.getMessage))
   }
 }

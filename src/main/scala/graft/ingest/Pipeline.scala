@@ -37,8 +37,7 @@ final class Pipeline(
   private def commit(wire: DataFrame, pulse: Long): Unit = {
     // the pulse number is driver-held: passing it spares the writer a
     // partition-discovery job over the spine per commit
-    PulseWriter.commitPulse(wire, basePath, collectDrops = false,
-      pulses = Some(Seq(pulse)))
+    PulseWriter.commitPulse(wire, basePath, pulses = Some(Seq(pulse)))
     ()
   }
 

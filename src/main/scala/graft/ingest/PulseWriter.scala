@@ -1,19 +1,24 @@
 package graft.ingest
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SaveMode}
+import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
 /** S3/S4/ST4/W7 — idempotent per-pulse commit.
   *
   * The reference upserts rows transactionally into Postgres
   * (`etl/storage/storage.go:28-94`); at-least-once delivery plus
   * ON CONFLICT gives effective exactly-once. On an immutable columnar store
-  * the same guarantee comes from DETERMINISTIC PARTITION OVERWRITE: a pulse
-  * is the commit unit, `pulse_number=N` is a directory, and rewriting it is
-  * atomic-enough (dynamic partition overwrite) and idempotent — a retried or
-  * re-delivered pulse produces byte-identical partitions because `order`
-  * assignment (W7) sorts before numbering.
+  * the same guarantee comes from a MANIFESTED APPEND per pulse: a pulse is
+  * the commit unit, `pulse_number=N` is a directory, and each commit
+  * appends new files there and publishes a [[TableManifest]] version that
+  * replaces the partition's file list — idempotent, because a retried or
+  * re-delivered pulse produces the same rows, `order` included (W7 numbers
+  * along a deterministic sort).
   *
   * At 100 TB this is also the right physical layout: pulse-range predicates
   * prune partitions; within a partition files are sorted by
@@ -21,16 +26,6 @@ import org.apache.spark.sql.functions._
   * predicates skip row groups.
   */
 object PulseWriter {
-
-  /** W7 — deterministic order assignment: position of each record within
-    * its (pulse, jet) drop, numbered along the chain-sorted position.
-    * Sorting before `row_number` makes retries idempotent (ST4).
-    */
-  def assignOrder(records: DataFrame, posCol: String = "chain_pos"): DataFrame = {
-    val w = Window.partitionBy(col("pulse_number"), col("jet_id"))
-      .orderBy(col(posCol), col("reference"))
-    records.withColumn("order", row_number().over(w))
-  }
 
   /** Write one pulse's records/jet_drops as a MANIFESTED replacement of
     * exactly the `pulse_number=N` partitions present in `df`, sorted for
@@ -77,24 +72,33 @@ object PulseWriter {
   /** The shared two-table pulse commit — ONE implementation for the
     * batch [[Pipeline]] and the [[graft.Ingest]] daemon, so the spine →
     * records → jet_drops contract cannot diverge between the two entry
-    * points. Returns the pulse's drop rows (jets-sized — one row per
-    * (pulse, jet)) so daemon-side registers come for free from the
-    * commit itself, like the reference's processor populating the
-    * controller's `jetDropRegister`.
+    * points. The [[Spine]] runs in the driver, and each drop's
+    * `record_amount` and minimum `timestamp` come from its rows there, so
+    * a driver-built wire frame costs two Spark jobs: one single-file
+    * write per table. Returns the pulse's drop rows (one per (pulse,
+    * jet)) so daemon-side registers come for free from the commit
+    * itself, like the reference's processor populating the controller's
+    * `jetDropRegister`.
     */
   def commitPulse(wire: DataFrame, basePath: String,
-      collectDrops: Boolean = true,
-      pulses: Option[Seq[Long]] = None): Array[org.apache.spark.sql.Row] = {
-    val records = Spine(wire).cache()
-    try {
-      writePulsePartition(records, "records", basePath, pulses)
-      val drops = records.groupBy(col("pulse_number"), col("jet_id"))
-        .agg(count(lit(1)).cast("int").as("record_amount"),
-          min(col("timestamp")).as("timestamp"))
-      writePulsePartition(drops, "jet_drops", basePath, pulses)
-      // callers without a register (the batch Pipeline) skip the collect
-      if (collectDrops) drops.collect() else Array.empty
-    } finally { records.unpersist(); () }
+      pulses: Option[Seq[Long]] = None): Seq[Row] = {
+    val spark = wire.sparkSession
+    val (schema, records) = Spine.rows(wire)
+    val Seq(pulse, jet, ts) = Seq("pulse_number", "jet_id", "timestamp").map(schema.fieldIndex)
+    val dropSchema = StructType(Seq(schema(pulse), schema(jet),
+      StructField("record_amount", IntegerType, nullable = false),
+      StructField("timestamp", LongType)))
+    val drops = records.groupBy(r => (r.getLong(pulse), r.getString(jet)))
+      .map { case ((p, j), rs) =>
+        new GenericRowWithSchema(Array(p, j, rs.size, rs.map(_.getLong(ts)).min), dropSchema): Row
+      }.toSeq
+    // a pulse list known up front spares the writer a discovery job
+    val parts = Some(pulses.getOrElse(records.map(_.getLong(pulse)).distinct))
+    def local(rows: Seq[Row], s: StructType) =
+      spark.createDataFrame(rows.asJava, s).coalesce(1)
+    writePulsePartition(local(records, schema), "records", basePath, parts)
+    writePulsePartition(local(drops, dropSchema), "jet_drops", basePath, parts)
+    drops
   }
 
   /** S4 — pulse-row upsert as last-write-wins dedup: keep the newest row

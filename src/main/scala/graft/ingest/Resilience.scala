@@ -1,11 +1,13 @@
 package graft.ingest
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.DataFrame
 
 /** Extractor resilience semantics (reference:
   * `etl/extractor/platform_impl.go:111-222` retry/rate-limit loop and
   * `etl/controller/misseddata.go:60-95` reload-request TTL dedup). Both
-  * are driver-side control logic — the cluster work stays in [[Spine]];
+  * are control logic around the ingest commit ([[PulseWriter.commitPulse]]);
   * these wrap the SOURCE so a flaky feed or a re-request storm cannot
   * multiply load.
   */
@@ -35,7 +37,7 @@ object Resilience {
         // backoff ladder (and GrpcTransport.translate specifically
         // preserves interrupts so they exit promptly)
         case e: InterruptedException => throw e
-        case e: Throwable if attempt < maxRetries =>
+        case NonFatal(_) if attempt < maxRetries =>
           sleep(backoffMs << attempt)
           attempt += 1
       }

@@ -1,34 +1,68 @@
 package graft.ingest
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
-import graft.operators.ChainSort
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
+import graft.operators.{ChainNode, ChainSort}
 
 /** The full write-path spine (SURVEY §3.1): wire records → canonical rows
-  * → per-object chain sort → deterministic order assignment. One shuffle
-  * on the chain-group key, one window over (pulse, jet); everything else
-  * is codegen'd projection.
+  * → per-object chain sort → deterministic order assignment.
+  *
+  * A pulse is bounded by the pulse cadence, so the spine runs where the
+  * pulse already is, like the reference's transformer
+  * (`etl/transformer/transformer.go:59-159`): the canonical rows are
+  * collected — over the daemon's driver-built frame the optimizer folds
+  * the [[Canonicalize]] projection into the local relation, so no Spark
+  * job runs — and sorted and numbered in the driver.
   */
 object Spine {
 
-  /** Transform a frame of wire records (Schemas.wireRecords shape) into
-    * storage-ready records with the causal `order` column. Broken chain
-    * groups are dropped whole (reference semantics,
-    * `etl/transformer/transformer.go:59-63`).
+  /** Canonical rows of `wire` with the causal `order` column, and their
+    * schema ([[Canonicalize]]'s columns plus `order`). Each state chain
+    * of one object inside one jet drop is chain-sorted
+    * ([[ChainSort.sortGroup]]); a broken chain group is dropped whole
+    * (reference semantics, `etl/transformer/transformer.go:59-63`). W7:
+    * each (pulse, jet) drop is numbered 1..n by (chain position,
+    * `reference` in unsigned byte order), so a retried pulse numbers
+    * identically (ST4). Rows come out sorted by (pulse, jet, order).
     */
-  def apply(wire: DataFrame): DataFrame = {
+  def rows(wire: DataFrame): (StructType, Seq[Row]) = {
     val canon = Canonicalize(wire)
-    val nodes = canon.select(
-      hex(col("reference")).as("key"),
-      concat_ws("|", col("pulse_number"), col("jet_id"),
-        hex(coalesce(col("object_reference"), lit(Array.emptyByteArray)))).as("group_key"),
-      hex(coalesce(col("prev_record_reference"), lit(Array.emptyByteArray))).as("prev_key"),
-      (col("type") === "state").as("chained"),
-      col("order_hint").cast("long").as("order_hint"))
-    val sorted = ChainSort.sortDf(nodes).withColumnRenamed("key", "ref_hex")
-    val withPos = canon
-      .join(sorted, hex(col("reference")) === col("ref_hex"))
-      .drop("ref_hex", "group_key")
-    PulseWriter.assignOrder(withPos).drop("chain_pos")
+    val schema = canon.schema.add(StructField("order", IntegerType, nullable = false))
+    (schema, number(canon.collect().toSeq, schema))
+  }
+
+  /** [[rows]] as a frame over the driver-held rows. */
+  def apply(wire: DataFrame): DataFrame = {
+    val (schema, out) = rows(wire)
+    wire.sparkSession.createDataFrame(out.asJava, schema)
+  }
+
+  private def hex(b: Array[Byte]): String =
+    if (b == null) null else java.util.HexFormat.of().withUpperCase().formatHex(b)
+
+  private def number(canon: Seq[Row], schema: StructType): Seq[Row] = {
+    val Seq(ref, tpe, obj, prev, hint, jet, pulse) = Seq("reference", "type",
+      "object_reference", "prev_record_reference", "order_hint", "jet_id",
+      "pulse_number").map(schema.fieldIndex)
+    def drop(r: Row) = (r.getAs[Long](pulse), Option(r.getString(jet)))
+    // chain position of every row whose chain group sorted
+    val pos = new java.util.IdentityHashMap[Row, Integer]()
+    canon.groupBy(r => (drop(r), hex(r.getAs[Array[Byte]](obj)))).valuesIterator.foreach { g =>
+      val nodes = g.map(r => ChainNode(hex(r.getAs[Array[Byte]](ref)), null,
+        hex(r.getAs[Array[Byte]](prev)), r.getString(tpe) == "state",
+        r.getAs[Number](hint).longValue))
+      val rowOf = new java.util.IdentityHashMap[ChainNode, Row]()
+      nodes.lazyZip(g).foreach(rowOf.put)
+      ChainSort.sortGroup(nodes).foreach(_.iterator.zipWithIndex
+        .foreach { case (n, i) => pos.put(rowOf.get(n), i + 1) })
+    }
+    val byRef: Ordering[Array[Byte]] = (a, b) => java.util.Arrays.compareUnsigned(a, b)
+    canon.filter(pos.containsKey).groupBy(drop).toSeq.sortBy(_._1).flatMap { case (_, rs) =>
+      rs.sortBy(r => (pos.get(r).intValue, r.getAs[Array[Byte]](ref)))(
+          Ordering.Tuple2(Ordering.Int, byRef))
+        .zipWithIndex.map { case (r, i) => Row.fromSeq(r.toSeq :+ (i + 1)) }
+    }
   }
 }

@@ -1,5 +1,7 @@
 package graft.ingest
 
+import scala.util.control.NonFatal
+
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -227,7 +229,7 @@ object TableManifest {
     fs.listStatus(mdir).foreach { st =>
       st.getPath.getName match {
         case VersionRe(v) if v.toLong < prev.version =>
-          try { fs.delete(st.getPath, false); () } catch { case _: Throwable => () }
+          try { fs.delete(st.getPath, false); () } catch { case NonFatal(_) => () }
         case _ => ()
       }
     }
@@ -408,5 +410,5 @@ object TableManifest {
           m.group(1) -> strRe.findAllMatchIn(m.group(2)).map(_.group(1)).toSeq
         }.toMap,
         strRe.findAllMatchIn(tbody).map(_.group(1)).toSeq)
-    } catch { case _: Throwable => None }
+    } catch { case NonFatal(_) => None }
 }

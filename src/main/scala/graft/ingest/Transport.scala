@@ -133,7 +133,7 @@ object Transport {
     * iterate-from hint: `pulse → Option[(wire frame, iterate-from)]`. The
     * per-pulse row set is driver-held exactly like the reference
     * extractor's `pulseData.Records` (one pulse's records, bounded by
-    * the pulse cadence), then handed to the distributed [[Spine]].
+    * the pulse cadence), then handed to the driver-side [[Spine]].
     */
   def followingSource(
       spark: SparkSession,

@@ -77,18 +77,6 @@ object Schemas {
   ))
 }
 
-/** Typed row for the chain-sort stage (reference:
-  * `etl/types/types.go:19-81`). Kept minimal: only the fields the
-  * per-object topological sort needs, so the shuffled payload stays small.
-  */
-final case class ChainRecord(
-    ref: Array[Byte],
-    objectRef: Array[Byte],
-    prevRef: Array[Byte],
-    recType: String,
-    orderHint: Long
-)
-
 /** Canonical record produced by ingest canonicalization (P1). */
 final case class CanonicalRecord(
     reference: Array[Byte],

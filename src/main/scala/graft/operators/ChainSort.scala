@@ -1,8 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
-
 /** A node in a per-group linked chain. `prevKey == null` (or pointing
   * outside the group) marks the head. `chained=false` rows (the reference's
   * non-state records) pass through after the chain, ordered by `orderHint`.
@@ -14,8 +11,6 @@ final case class ChainNode(
     chained: Boolean,
     orderHint: Long
 )
-
-final case class ChainedOut(key: String, groupKey: String, chainPos: Int)
 
 /** J6 — per-object topological chain sort.
   *
@@ -29,13 +24,12 @@ final case class ChainedOut(key: String, groupKey: String, chainPos: Int)
   * head, a cycle/broken link, or a length mismatch is DROPPED whole (the
   * reference logs and skips the jet drop).
   *
-  * Not expressible as SQL (arbitrary-depth pointer chasing), so this is the
-  * one genuinely imperative operator: `groupByKey.flatMapGroups` over a
-  * typed Dataset. Scale: groups are the records of ONE object in ONE ~10s
-  * pulse — tiny by construction — while the number of groups is huge, which
-  * is exactly the shape `flatMapGroups` distributes well (one shuffle on the
-  * group key, then embarrassingly parallel per-group work; no skew risk
-  * because group size is bounded by the pulse window).
+  * Not expressible as SQL (arbitrary-depth pointer chasing), so this is
+  * plain driver code. Scale: groups are the records of ONE object in ONE
+  * ~10s pulse — tiny by construction — and a pulse's record set is bounded
+  * by the pulse cadence, so [[graft.ingest.Spine]] sorts a whole pulse's
+  * groups where the pulse already is, as the reference's transformer does
+  * in one process's memory.
   */
 object ChainSort {
 
@@ -62,38 +56,5 @@ object ChainSort {
     }
     if (out.size != states.size) None // cycle or unreachable tail
     else Some(out.toSeq ++ sortedOthers)
-  }
-
-  /** Distributed chain sort: emits (key, groupKey, 1-based causal position).
-    * Broken groups are dropped (reference semantics).
-    */
-  def apply(ds: Dataset[ChainNode]): Dataset[ChainedOut] = {
-    import ds.sparkSession.implicits._
-    ds.groupByKey(_.groupKey)
-      .flatMapGroups { (g, it) =>
-        sortGroup(it.toSeq) match {
-          case Some(sorted) =>
-            sorted.iterator.zipWithIndex.map { case (n, i) => ChainedOut(n.key, g, i + 1) }
-          case None => Iterator.empty
-        }
-      }
-  }
-
-  /** DataFrame adapter: `df` must expose string columns (key, group_key,
-    * prev_key) and numeric order_hint; `chained` defaults to true.
-    */
-  def sortDf(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val withChained =
-      if (df.columns.contains("chained")) df else df.withColumn("chained", lit(true))
-    val ds = withChained.select(
-      col("key").cast("string"),
-      col("group_key").cast("string").as("groupKey"),
-      col("prev_key").cast("string").as("prevKey"),
-      col("chained").cast("boolean"),
-      col("order_hint").cast("long").as("orderHint")
-    ).as[ChainNode]
-    apply(ds).toDF("key", "group_key", "chain_pos")
   }
 }

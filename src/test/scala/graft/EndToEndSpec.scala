@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.gen.Fixtures
-import graft.ingest.{Canonicalize, PulseWriter}
-import graft.operators.{ChainSort, Completeness, JetLinkage}
+import graft.ingest.{PulseWriter, Spine}
+import graft.operators.{Completeness, JetLinkage}
 
 /** The reference's heavy-mock layer re-expressed: generated scenarios run
   * through the full ingest spine and are asserted against by-construction
@@ -13,25 +13,11 @@ class EndToEndSpec extends SparkSpec {
 
   test("lifeline scenario: ingest spine recovers causal order end-to-end") {
     val wire = Fixtures.lifelineWire(spark, "e2e", nPulses = 4, amendsPerPulse = 2)
-    val canon = Canonicalize(wire)
-
-    val nodes = canon.select(
-      hex(col("reference")).as("key"),
-      concat_ws("|", col("pulse_number"), col("jet_id"),
-        hex(coalesce(col("object_reference"), lit(Array.emptyByteArray)))).as("group_key"),
-      hex(coalesce(col("prev_record_reference"), lit(Array.emptyByteArray))).as("prev_key"),
-      (col("type") === "state").as("chained"),
-      col("order_hint").cast("long").as("order_hint"))
-    val sorted = ChainSort.sortDf(nodes)
-    val withOrder = PulseWriter.assignOrder(
-      canon.join(sorted.withColumnRenamed("key", "ref_hex"),
-        hex(col("reference")) === col("ref_hex"))
-        .withColumn("chain_pos", col("chain_pos")))
+    val withOrder = Spine(wire)
 
     // persist as the real layout and read back (S3 partition commit)
     val tmp = java.nio.file.Files.createTempDirectory("graft-e2e").toString
-    PulseWriter.writePulsePartition(
-      withOrder.drop("ref_hex", "group_key", "chain_pos"), "records", tmp)
+    PulseWriter.writePulsePartition(withOrder, "records", tmp)
     val records = spark.read.parquet(s"$tmp/records")
 
     // the lifeline read (P4 + W1): state records of the object, ascending
@@ -81,9 +67,7 @@ class EndToEndSpec extends SparkSpec {
 
   test("multi-pulse batches: pagination invariants over bulk ingest") {
     val wire = Fixtures.multiPulseBatches(spark, nPulses = 3, recordsPerPulse = 10)
-    val canon = Canonicalize(wire)
-    val withOrder = PulseWriter.assignOrder(
-      canon.withColumn("chain_pos", col("order_hint")))
+    val withOrder = Spine(wire)
     // order is dense 1..N within each (pulse, jet)
     val dense = withOrder.groupBy("pulse_number", "jet_id")
       .agg(count(lit(1)).as("n"), max("order").as("mx"), min("order").as("mn"))

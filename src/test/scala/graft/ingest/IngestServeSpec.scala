@@ -640,6 +640,8 @@ class IngestServeSpec extends SparkSpec {
       assert(body.contains(s"gbe_ingest_sequential_pulse ${start + delta}"), body)
       assert(body.contains(s"gbe_ingest_known_pulses $nPulses"), body)
       assert(body.contains("gbe_ingest_open_frontier"), body)
+      assert(body.contains(s"gbe_ingest_commits_total $nPulses"), body)
+      assert(body.contains("# TYPE gbe_ingest_commit_ms_sum counter"), body)
     } finally {
       ops.stop(0)
       handle.stop()

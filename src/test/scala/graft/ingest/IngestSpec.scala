@@ -1,5 +1,7 @@
 package graft.ingest
 
+import scala.jdk.CollectionConverters._
+
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
@@ -43,18 +45,29 @@ class IngestSpec extends SparkSpec {
     assert(genesis.isNullAt(genesis.fieldIndex("payload")))
   }
 
-  test("assignOrder is deterministic and dense per (pulse, jet)") {
-    import spark.implicits._
+  test("Spine numbers each (pulse, jet) drop densely by chain position, then reference") {
+    def b(xs: Int*) = xs.map(_.toByte).toArray
+    // drop (70000, "0"): object A chains 0x7f -> 0x01, object B is the one
+    // state 0x80; positions tie at 1 and unsigned bytes put 0x7f first
     val recs = Seq(
-      ("a", 1L, "0", 2L), ("b", 1L, "0", 1L), ("c", 1L, "1", 1L), ("d", 2L, "0", 1L))
-      .toDF("ref", "pulse_number", "jet_id", "chain_pos")
-      .select(encode(col("ref"), "UTF-8").as("reference"),
-        col("pulse_number"), col("jet_id"), col("chain_pos"))
-    val out = PulseWriter.assignOrder(recs)
-      .select(decode(col("reference"), "UTF-8").as("r"), col("pulse_number"),
-        col("jet_id"), col("order"))
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getString(2), r.getInt(3))).toSet
-    assert(out == Set(("b", 1L, "0", 1), ("a", 1L, "0", 2), ("c", 1L, "1", 1), ("d", 2L, "0", 1)))
+      (b(0x01), b(0x0a), "0", "amend", b(0x7f), 70000L),
+      (b(0x80), b(0x0b), "0", "activate", null, 70000L),
+      (b(0x7f), b(0x0a), "0", "activate", null, 70000L),
+      (b(0x02), b(0x0c), "1", "activate", null, 70000L),
+      (b(0x03), b(0x0c), "0", "activate", null, 70010L))
+    def numbered(rs: Seq[(Array[Byte], Array[Byte], String, String, Array[Byte], Long)]) =
+      Spine(spark.createDataFrame(rs.zipWithIndex.map {
+        case ((id, obj, jet, tpe, prev, pulse), i) =>
+          org.apache.spark.sql.Row(i.toLong, id, obj, jet, tpe, null, null, prev, null, pulse)
+      }.asJava, graft.model.Schemas.wireRecords))
+        .select(col("reference"), col("pulse_number"), col("jet_id"), col("order"))
+        .collect().map(r => (r.getAs[Array[Byte]](0).head & 0xff, r.getLong(1),
+          r.getString(2), r.getInt(3))).toSet
+    val out = numbered(recs)
+    assert(out == Set((0x7f, 70000L, "0", 1), (0x80, 70000L, "0", 2), (0x01, 70000L, "0", 3),
+      (0x02, 70000L, "1", 1), (0x03, 70010L, "0", 1)))
+    // arrival order does not matter: a re-delivered pulse numbers the same
+    assert(numbered(recs.reverse) == out)
   }
 
   test("writePulsePartition is idempotent: rewrite produces identical data") {

@@ -53,18 +53,4 @@ class ChainSortSpec extends SparkSpec {
       assert(sorted.get.map(_.key) == keys, s"seed=$seed")
     }
   }
-
-  test("distributed: per-group sort over a Dataset, broken group dropped") {
-    import spark.implicits._
-    val good = Seq(
-      ChainNode("a", "g1", null, chained = true, 0),
-      ChainNode("b", "g1", "a", chained = true, 0),
-      ChainNode("c", "g1", "b", chained = true, 0))
-    val broken = Seq(
-      ChainNode("x", "g2", "y", chained = true, 0),
-      ChainNode("y", "g2", "x", chained = true, 0))
-    val out = ChainSort(spark.createDataset(good ++ broken)).collect()
-    assert(out.map(_.groupKey).toSet == Set("g1"))
-    assert(out.sortBy(_.chainPos).map(_.key).toSeq == Seq("a", "b", "c"))
-  }
 }
