@@ -546,8 +546,7 @@ object Ingest {
       val t0 = System.nanoTime()
       val dropRows = writeLock.synchronized {
         PulseWriter.commitPulse(
-          spark.createDataFrame(rows.asJava, graft.model.Schemas.wireRecords), basePath,
-          pulses = Some(Seq(pulse)))
+          spark.createDataFrame(rows.asJava, graft.model.Schemas.wireRecords), basePath)
       }
       commitMs.addAndGet((System.nanoTime() - t0) / 1000000L)
       commits.incrementAndGet()

@@ -34,10 +34,8 @@ final class Pipeline(
     * (the shared [[PulseWriter.commitPulse]] — one implementation for
     * this batch loop and the [[graft.Ingest]] daemon).
     */
-  private def commit(wire: DataFrame, pulse: Long): Unit = {
-    // the pulse number is driver-held: passing it spares the writer a
-    // partition-discovery job over the spine per commit
-    PulseWriter.commitPulse(wire, basePath, pulses = Some(Seq(pulse)))
+  private def commit(wire: DataFrame): Unit = {
+    PulseWriter.commitPulse(wire, basePath)
     ()
   }
 
@@ -46,7 +44,7 @@ final class Pipeline(
     */
   def ingestPulse(pulse: Long): Boolean =
     source(pulse) match {
-      case Some(wire) => commit(wire, pulse); true
+      case Some(wire) => commit(wire); true
       case None => false
     }
 
@@ -136,7 +134,7 @@ final class Pipeline(
         case scala.util.control.NonFatal(_) => None
       }) match {
         case Some((wire, hint)) =>
-          val ok = try { commit(wire, p); true } catch {
+          val ok = try { commit(wire); true } catch {
             case e: InterruptedException => throw e
             case scala.util.control.NonFatal(_) => false
           }
@@ -151,7 +149,7 @@ final class Pipeline(
       if (missedData.covered(q, q)) false
       else
         try {
-          val ok = rich(q).exists { case (wire, _) => commit(wire, q); true }
+          val ok = rich(q).exists { case (wire, _) => commit(wire); true }
           missedData.addIfNew(q, q)
           ok
         } catch {

@@ -80,8 +80,7 @@ object PulseWriter {
     * itself, like the reference's processor populating the controller's
     * `jetDropRegister`.
     */
-  def commitPulse(wire: DataFrame, basePath: String,
-      pulses: Option[Seq[Long]] = None): Seq[Row] = {
+  def commitPulse(wire: DataFrame, basePath: String): Seq[Row] = {
     val spark = wire.sparkSession
     val (schema, records) = Spine.rows(wire)
     val Seq(pulse, jet, ts) = Seq("pulse_number", "jet_id", "timestamp").map(schema.fieldIndex)
@@ -92,8 +91,8 @@ object PulseWriter {
       .map { case ((p, j), rs) =>
         new GenericRowWithSchema(Array(p, j, rs.size, rs.map(_.getLong(ts)).min), dropSchema): Row
       }.toSeq
-    // a pulse list known up front spares the writer a discovery job
-    val parts = Some(pulses.getOrElse(records.map(_.getLong(pulse)).distinct))
+    // the pulses the rows hold, so the writer runs no discovery job
+    val parts = Some(records.map(_.getLong(pulse)).distinct)
     def local(rows: Seq[Row], s: StructType) =
       spark.createDataFrame(rows.asJava, s).coalesce(1)
     writePulsePartition(local(records, schema), "records", basePath, parts)

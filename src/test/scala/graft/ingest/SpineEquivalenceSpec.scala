@@ -207,7 +207,7 @@ class SpineEquivalenceSpec extends SparkSpec {
       jets = Seq("00", "01", "1"), startPulse = P).collect().toSeq
     val wire = spark.createDataFrame(rows.asJava, Schemas.wireRecords)
     var drops = Seq.empty[Row]
-    assert(jobsDuring { drops = PulseWriter.commitPulse(wire, base, Some(Seq(P))) } == 2)
+    assert(jobsDuring { drops = PulseWriter.commitPulse(wire, base) } == 2)
     assert(drops.map(r => r.getAs[String]("jet_id") -> r.getAs[Int]("record_amount")).toMap ==
       Map("00" -> 14, "01" -> 13, "1" -> 13))
     Seq("records", "jet_drops").foreach { t =>
