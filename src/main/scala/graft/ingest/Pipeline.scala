@@ -30,21 +30,14 @@ final class Pipeline(
     */
   private val missedData = new Resilience.MissedDataManager(reloadTtlMillis)
 
-  /** Spine + idempotent partition commit for one pulse's wire frame
-    * (the shared [[PulseWriter.commitPulse]] — one implementation for
-    * this batch loop and the [[graft.Ingest]] daemon).
-    */
-  private def commit(wire: DataFrame): Unit = {
-    PulseWriter.commitPulse(wire, basePath)
-    ()
-  }
-
-  /** Ingest one pulse: spine + idempotent partition commit. Returns true
-    * when the source had data for the pulse.
+  /** Ingest one pulse: spine + idempotent partition commit (the shared
+    * [[PulseWriter.commitPulse]] — one implementation for this batch loop
+    * and the [[graft.Ingest]] daemon). Returns true when the source had
+    * data for the pulse.
     */
   def ingestPulse(pulse: Long): Boolean =
     source(pulse) match {
-      case Some(wire) => commit(wire); true
+      case Some(wire) => PulseWriter.commitPulse(wire, basePath); true
       case None => false
     }
 
@@ -134,7 +127,7 @@ final class Pipeline(
         case scala.util.control.NonFatal(_) => None
       }) match {
         case Some((wire, hint)) =>
-          val ok = try { commit(wire); true } catch {
+          val ok = try { PulseWriter.commitPulse(wire, basePath); true } catch {
             case e: InterruptedException => throw e
             case scala.util.control.NonFatal(_) => false
           }
@@ -149,7 +142,7 @@ final class Pipeline(
       if (missedData.covered(q, q)) false
       else
         try {
-          val ok = rich(q).exists { case (wire, _) => commit(wire); true }
+          val ok = rich(q).exists { case (wire, _) => PulseWriter.commitPulse(wire, basePath); true }
           missedData.addIfNew(q, q)
           ok
         } catch {
