@@ -97,14 +97,14 @@ object HttpApi {
 
   // ---- routing ---------------------------------------------------------
 
-  /** True when `e` is a scan that raced a LEGACY (pre-manifest) store's
-    * partition rewrite: the listed file is gone by read time. Manifested
-    * stores cannot produce this class — reads plan over a committed
-    * snapshot whose superseded generation survives a full commit cycle
-    * ([[graft.ingest.TableManifest]]) — so the HTTP handler no longer
-    * retries on it; the classifier remains for the exporter's poll loop,
-    * whose next poll re-resolves a fresh listing by design and must not
-    * kill every subscriber over a legacy store's transient window.
+  /** True when `e` is a scan whose planned file is gone by read time: a
+    * LEGACY (pre-manifest) store's partition rewrite, or a manifested
+    * read that outlived TWO commits of the same table (a superseded
+    * generation survives one full commit cycle,
+    * [[graft.ingest.TableManifest]]). Either way a fresh resolution
+    * serves a committed page: the HTTP handler re-runs the request
+    * ([[routeFresh]]) and the exporter's next poll re-resolves by design,
+    * so neither kills a request or a subscriber over the window.
     */
   private[graft] def isScanRace(e: Throwable): Boolean = {
     var t = e
@@ -134,15 +134,11 @@ object HttpApi {
     val t0 = System.nanoTime()
     import scala.util.control.NonFatal
     val (status, body) =
-      try route(spark, dir, ex)
+      try routeFresh(spark, dir, ex)
       catch {
         // fatal VM errors (OutOfMemoryError & co) PROPAGATE: converting
         // them to a routine 500 would keep serving on a heap in
-        // undefined state. No scan-race retry lives here anymore: store
-        // reads resolve through commit manifests, so a racing rewrite
-        // serves the committed page instead of losing files (the class
-        // the deleted retry papered over; a LEGACY pre-manifest store
-        // keeps its historical — rare — raw 500 in that window)
+        // undefined state
         case e if NonFatal(e) =>
           System.err.println(s"[http] ${ex.getRequestURI} failed: ${e.getMessage}")
           (500, "{}")
@@ -171,6 +167,26 @@ object HttpApi {
       case "search" :: Nil                      => "/api/v1/search"
       case _                                    => "unmatched"
     }
+  }
+
+  /** Attempts [[routeFresh]] makes before a lost-file scan answers 500. */
+  private val ScanRaceAttempts = 3
+
+  /** [[route]], re-run when its scan lost a planned file to racing
+    * commits ([[isScanRace]]). Each run re-resolves the newest manifest,
+    * so the answer is always a page some committed version defines; a
+    * request keeps losing only while it keeps outliving two commits, and
+    * after [[ScanRaceAttempts]] runs the loss propagates as a 500.
+    */
+  private def routeFresh(spark: SparkSession, dir: String, ex: HttpExchange): (Int, String) = {
+    var attempt = 1
+    while (true) {
+      try return route(spark, dir, ex)
+      catch {
+        case e: Exception if attempt < ScanRaceAttempts && isScanRace(e) => attempt += 1
+      }
+    }
+    (500, "{}") // unreachable
   }
 
   private def route(spark: SparkSession, dir: String, ex: HttpExchange): (Int, String) = {

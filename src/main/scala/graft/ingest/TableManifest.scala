@@ -31,8 +31,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    of grace — so a reader planned against v-1 survives v entirely.
   *    The residual window (a reader pinned across TWO commits of the
   *    same table while mid-scan) is micro-vs-seconds at any realistic
-  *    flush cadence, and disk overhead is bounded at one superseded
-  *    generation per hot partition.
+  *    flush cadence, but back-to-back commits on a loaded host do hit
+  *    it, so the HTTP layer re-runs a request that lost a file
+  *    ([[graft.api.HttpApi.isScanRace]]); disk overhead is bounded at
+  *    one superseded generation per hot partition.
   *
   * Contract: ONE writer per table (the daemon serializes commits and
   * flushes under its write lock; the reference likewise has a single

@@ -45,7 +45,9 @@ class IngestSpec extends SparkSpec {
     assert(genesis.isNullAt(genesis.fieldIndex("payload")))
   }
 
-  test("Spine numbers each (pulse, jet) drop densely by chain position, then reference") {
+  test("assignOrder is deterministic and dense per (pulse, jet)") {
+    // W7's order is assigned by Spine: each (pulse, jet) drop is numbered
+    // densely by chain position, then reference in unsigned byte order
     def b(xs: Int*) = xs.map(_.toByte).toArray
     // drop (70000, "0"): object A chains 0x7f -> 0x01, object B is the one
     // state 0x80; positions tie at 1 and unsigned bytes put 0x7f first
