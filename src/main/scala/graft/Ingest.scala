@@ -626,6 +626,19 @@ object Ingest {
 
     // ---- follower -------------------------------------------------------
 
+    /** Commit the pulse fetched at `p` and move the cursor to the
+      * exporter's iterate-from hint, or one δ on when the hint does not
+      * advance. A redirect is the exporter's answer for the pulses it
+      * skips, so it registers them as reload-requested: the sequencer's
+      * gap reload does not ask for them again within the TTL.
+      */
+    private def commitAndAdvance(p: Long, fp: Transport.FetchedPulse): Unit = {
+      commit(p, fp.rows)
+      if (fp.iterateFrom > p + cfg.pulseDelta)
+        missed.addIfNew(p + cfg.pulseDelta, fp.iterateFrom - cfg.pulseDelta)
+      cursorNow = if (fp.iterateFrom > p) fp.iterateFrom else p + cfg.pulseDelta
+    }
+
     /** Cooperative pause: sleeps in ≤100 ms slices so `stop()` can end a
       * loop WITHOUT interrupting it — an interrupt landing inside a Spark
       * write aborts the job asynchronously and its `_temporary` cleanup
@@ -670,8 +683,7 @@ object Ingest {
         Transport.fetchPulse(stream, p, cfg.batchSize,
           backoffMs = cfg.fetchBackoffMs) match {
           case Some(fp) =>
-            commit(p, fp.rows)
-            cursorNow = if (fp.iterateFrom > p) fp.iterateFrom else p + cfg.pulseDelta
+            commitAndAdvance(p, fp)
             return true
           case None => i += 1
         }
@@ -691,9 +703,7 @@ object Ingest {
             case Some(fp) =>
               notFound = 0
               probeHit()
-              val p = cursorNow
-              commit(p, fp.rows)
-              cursorNow = if (fp.iterateFrom > p) fp.iterateFrom else p + cfg.pulseDelta
+              commitAndAdvance(cursorNow, fp)
             case None =>
               // head reached (NOT_FOUND): half-pulse pause, same cursor —
               // unless the streak says this may be a historical hole
@@ -760,7 +770,8 @@ object Ingest {
               }
             } else if (!missed.covered(p, p)) {
               // incomplete → TTL-deduped re-request; register the attempt
-              // only once it ran without throwing (like Pipeline.run)
+              // only once it ran without throwing, so a transient failure
+              // retries next tick instead of waiting out the TTL
               try { fetchAndCommit(p); missed.addIfNew(p, p); () }
               catch { case _: InterruptedException => throw new InterruptedException
                       // NonFatal: VM errors propagate (HTTP-handler policy)

@@ -2,6 +2,8 @@ package graft.api
 
 import java.nio.charset.StandardCharsets.UTF_8
 
+import scala.util.control.NonFatal
+
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
 /** The ops-mux routes every graft listener exposes — one implementation
@@ -16,8 +18,8 @@ object OpsRoutes {
   /** Write a full response and close the exchange, swallowing I/O errors
     * (a probe or scraper disconnecting mid-body is routine and must not
     * surface; the exchange must close either way or aborted requests
-    * accumulate leaked connections). Only I/O failures are SILENT:
-    * anything else on this path (a bug in response assembly) would
+    * accumulate leaked connections). Only I/O failures are SILENT: any
+    * other non-fatal failure (a bug in response assembly) would
     * otherwise be invisible forever, so it leaves one stderr line —
     * same style as the ingest daemon's shutdown-flush trace — before
     * being contained.
@@ -30,7 +32,7 @@ object OpsRoutes {
       ex.getResponseBody.write(bytes)
     } catch {
       case _: java.io.IOException => () // routine client disconnect
-      case e: Throwable =>
+      case NonFatal(e) =>
         System.err.println(s"[ops] response write for ${ex.getRequestURI} failed: $e")
     }
     finally ex.close()
@@ -59,7 +61,7 @@ object OpsRoutes {
     */
   def metrics(server: HttpServer)(render: () => String): Unit = {
     server.createContext("/metrics", (ex: HttpExchange) =>
-      (try Right(render()) catch { case e: Throwable => Left(e) }) match {
+      (try Right(render()) catch { case NonFatal(e) => Left(e) }) match {
         case Right(body) => answer(ex, 200, "text/plain; version=0.0.4", body)
         case Left(e) =>
           System.err.println(s"[ops] metrics render failed: $e")

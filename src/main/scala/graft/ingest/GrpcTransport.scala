@@ -14,16 +14,16 @@ import graft.model.Schemas
 
 /** S1/S2 over the real wire: a gRPC client for
   * `exporter.RecordExporter/Export` implementing
-  * [[Transport.RecordStream]], so [[Transport.fetchPulse]] /
-  * [[Pipeline]] drive a live exporter exactly as they drive the replay
-  * harness — the extractor's `client.Export(GetRecords{PulseNumber,
-  * RecordNumber, Count})` portion loop (`etl/extractor/
+  * [[Transport.RecordStream]], so [[Transport.fetchPulse]] and the
+  * [[graft.Ingest]] daemon drive a live exporter exactly as they drive
+  * the replay harness — the extractor's `client.Export(GetRecords{
+  * PulseNumber, RecordNumber, Count})` portion loop (`etl/extractor/
   * platform_impl.go:255-322`) with the same status mapping:
   *
   *  - `NOT_FOUND` → [[Transport.PulseNotFound]] (the pulse is not on the
   *    exporter; the reference sleeps and re-asks its chain head,
-  *    `platform_impl.go:171-177` — [[Pipeline]] records the gap for the
-  *    ST3 reload path)
+  *    `platform_impl.go:171-177` — the daemon's follower pauses at the
+  *    head, and its maintainer and sequencer re-request gaps, ST3)
   *  - `RESOURCE_EXHAUSTED` → [[Transport.RateLimited]] (the reference's
   *    `isRateLimitError`, half-pulse pause then reopen at the cursor)
   *  - any other stream failure → [[Transport.StreamDropped]] (reopen at

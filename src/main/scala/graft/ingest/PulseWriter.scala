@@ -4,7 +4,6 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row, SaveMode}
 import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
@@ -49,7 +48,7 @@ object PulseWriter {
     val spark = df.sparkSession
     val tablePath = s"$basePath/$table"
     // the affected partitions: the caller's pulse list when it knows it
-    // (the daemon/pipeline commit exactly one pulse and hold its number
+    // (the daemon commits exactly one pulse and holds its number
     // driver-side — an extra distinct() job per commit would re-run the
     // spine), derived from the DATA otherwise. Same contract as the
     // dynamic overwrite this replaces: a partition with NO rows in the
@@ -69,16 +68,15 @@ object PulseWriter {
     }
   }
 
-  /** The shared two-table pulse commit — ONE implementation for the
-    * batch [[Pipeline]] and the [[graft.Ingest]] daemon, so the spine →
-    * records → jet_drops contract cannot diverge between the two entry
-    * points. The [[Spine]] runs in the driver, and each drop's
-    * `record_amount` and minimum `timestamp` come from its rows there, so
-    * a driver-built wire frame costs two Spark jobs: one single-file
-    * write per table. Returns the pulse's drop rows (one per (pulse,
-    * jet)) so daemon-side registers come for free from the commit
-    * itself, like the reference's processor populating the controller's
-    * `jetDropRegister`.
+  /** The two-table pulse commit behind every [[graft.Ingest]] daemon
+    * write (follower, maintainer reload and sequencer gap reload): the
+    * spine → records → jet_drops contract in one place. The [[Spine]]
+    * runs in the driver, and each drop's `record_amount` and minimum
+    * `timestamp` come from its rows there, so a driver-built wire frame
+    * costs two Spark jobs: one single-file write per table. Returns the
+    * pulse's drop rows (one per (pulse, jet)) so daemon-side registers
+    * come for free from the commit itself, like the reference's
+    * processor populating the controller's `jetDropRegister`.
     */
   def commitPulse(wire: DataFrame, basePath: String): Seq[Row] = {
     val spark = wire.sparkSession
@@ -98,14 +96,5 @@ object PulseWriter {
     writePulsePartition(local(records, schema), "records", basePath, parts)
     writePulsePartition(local(drops, dropSchema), "jet_drops", basePath, parts)
     drops
-  }
-
-  /** S4 — pulse-row upsert as last-write-wins dedup: keep the newest row
-    * per pulse_number by `ingest_ts`.
-    */
-  def upsertPulses(existing: DataFrame, incoming: DataFrame): DataFrame = {
-    val all = existing.unionByName(incoming, allowMissingColumns = true)
-    val w = Window.partitionBy(col("pulse_number")).orderBy(col("ingest_ts").desc)
-    all.withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1).drop("_rn")
   }
 }

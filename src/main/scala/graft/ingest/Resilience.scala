@@ -1,49 +1,13 @@
 package graft.ingest
 
-import scala.util.control.NonFatal
-
-import org.apache.spark.sql.DataFrame
-
-/** Extractor resilience semantics (reference:
-  * `etl/extractor/platform_impl.go:111-222` retry/rate-limit loop and
-  * `etl/controller/misseddata.go:60-95` reload-request TTL dedup). Both
-  * are control logic around the ingest commit ([[PulseWriter.commitPulse]]);
-  * these wrap the SOURCE so a flaky feed or a re-request storm cannot
-  * multiply load.
+/** The controller's reload-request TTL dedup (reference:
+  * `etl/controller/misseddata.go:60-95`). The [[graft.Ingest]] daemon's
+  * maintainer and sequencer register every re-request here, so a pulse
+  * or gap that stays missing is re-requested once per TTL window, not
+  * once per tick. Transport-level retries live in
+  * [[Transport.fetchPulse]].
   */
 object Resilience {
-
-  /** Wrap a pulse source with bounded exponential-backoff retries: a
-    * throwing fetch is retried up to `maxRetries` times with doubling
-    * sleeps (the reference retries its gRPC stream with a rate limiter);
-    * the final failure propagates so the pipeline records the pulse as
-    * missing and the gap-reload loop (ST3) picks it up later.
-    * `sleep` is injectable for tests.
-    */
-  def retryingSource(
-      inner: Long => Option[DataFrame],
-      maxRetries: Int = 3,
-      backoffMs: Long = 100,
-      sleep: Long => Unit = Thread.sleep
-  ): Long => Option[DataFrame] = { pulse =>
-    var attempt = 0
-    var out: Option[DataFrame] = None
-    var done = false
-    while (!done) {
-      try { out = inner(pulse); done = true }
-      catch {
-        // an interrupt is a shutdown signal, never a retryable fault —
-        // retrying it would hold a stopping thread through the whole
-        // backoff ladder (and GrpcTransport.translate specifically
-        // preserves interrupts so they exit promptly)
-        case e: InterruptedException => throw e
-        case NonFatal(_) if attempt < maxRetries =>
-          sleep(backoffMs << attempt)
-          attempt += 1
-      }
-    }
-    out
-  }
 
   /** Reload-request registry with TTL dedup by CONTAINMENT, mirroring
     * `misseddata.go:60-95`: a new (from, to) request is dropped when a

@@ -243,7 +243,7 @@ object TableManifest {
   }
 
   /** THE writer-side protocol, shared by every manifested append site
-    * (pulse commits, compaction, the daemon's pulses-dimension flush):
+    * (pulse commits and the daemon's pulses-dimension flush):
     * list the named partitions, run the caller's APPEND-mode write
     * (uniquely-named files only — Spark part files carry the write job's
     * UUID), diff the listings to find what the write added, and publish
@@ -254,7 +254,7 @@ object TableManifest {
     * received nothing anywhere publishes nothing.
     *
     * Centralized because the list→append→diff→commit dance IS the
-    * snapshot-isolation guarantee — three hand-rolled copies of it can
+    * snapshot-isolation guarantee — a hand-rolled copy per writer could
     * drift (e.g. one forgetting the nonEmpty filter would tombstone and
     * eventually DELETE a live partition's files).
     */

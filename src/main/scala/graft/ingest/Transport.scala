@@ -1,24 +1,24 @@
 package graft.ingest
 
 import scala.collection.mutable.ArrayBuffer
-import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.Row
 
-/** The gRPC-transport-shaped boundary of the record exporter (S1/S2).
+/** The transport boundary of the record exporter (S1/S2).
   *
-  * The sandbox cannot host a gRPC server, but every TRANSPORT-LEVEL
-  * semantic of the reference extractor is a plain control-flow contract
-  * that can be expressed — and contract-tested — without the wire:
-  * portioned streams with resume-from-record-number, the next-pulse
-  * record as the end-of-pulse marker, `ShouldIterateFrom` redirects, and
-  * reconnect-without-loss after a mid-portion drop (reference:
+  * Every TRANSPORT-LEVEL semantic of the reference extractor is a plain
+  * control-flow contract over [[RecordStream]], so it is contract-tested
+  * the same way with or without the wire: portioned streams with
+  * resume-from-record-number, the next-pulse record as the end-of-pulse
+  * marker, `ShouldIterateFrom` redirects, and reconnect-without-loss
+  * after a mid-portion drop (reference:
   * `etl/extractor/platform_impl.go:255-322`; tests replay it the way
   * heavymock replays the real exporter,
   * `test/heavymock/exporter_impl.go:28-50`).
   *
-  * A real deployment implements [[RecordStream]] over its wire client;
-  * [[Pipeline]] consumes the result through [[pulseSource]] unchanged.
+  * [[GrpcTransport]] implements [[RecordStream]] over the live gRPC
+  * wire; the [[graft.Ingest]] daemon drives any implementation through
+  * [[fetchPulse]].
   */
 object Transport {
 
@@ -69,8 +69,8 @@ object Transport {
     * that advanced the cursor resets the budget, so an intermittently
     * dropping stream that still makes forward progress ingests a pulse
     * of any length (the reference retries forever under its controller's
-    * cancellation; here a genuine stall surfaces as a throw, which
-    * [[Pipeline]] records as missing for the gap-reload path, ST3).
+    * cancellation; here a genuine stall surfaces as a throw, and the
+    * daemon's follower holds its cursor and retries after a pause).
     */
   def fetchPulse(
       stream: RecordStream,
@@ -127,41 +127,5 @@ object Transport {
       }
     }
     sys.error("unreachable")
-  }
-
-  /** [[Pipeline.follow]]-shaped adapter keeping the exporter's
-    * iterate-from hint: `pulse → Option[(wire frame, iterate-from)]`. The
-    * per-pulse row set is driver-held exactly like the reference
-    * extractor's `pulseData.Records` (one pulse's records, bounded by
-    * the pulse cadence), then handed to the driver-side [[Spine]].
-    */
-  def followingSource(
-      spark: SparkSession,
-      stream: RecordStream,
-      batchSize: Int = 100,
-      maxReopens: Int = 8,
-      backoffMs: Long = 10,
-      sleep: Long => Unit = Thread.sleep): Long => Option[(DataFrame, Long)] = { pulse =>
-    fetchPulse(stream, pulse, batchSize, maxReopens, backoffMs, sleep).map { fp =>
-      (spark.createDataFrame(fp.rows.asJava, graft.model.Schemas.wireRecords),
-        fp.iterateFrom)
-    }
-  }
-
-  /** [[Pipeline]]-constructor-shaped adapter: `pulse → Option[wire
-    * frame]`, for fixed-cadence drive loops ([[Pipeline.run]]) that step
-    * arithmetically. Chain-following drives should use
-    * [[followingSource]] + [[Pipeline.follow]] so `ShouldIterateFrom`
-    * redirects steer the loop instead of dying at this boundary.
-    */
-  def pulseSource(
-      spark: SparkSession,
-      stream: RecordStream,
-      batchSize: Int = 100,
-      maxReopens: Int = 8,
-      backoffMs: Long = 10,
-      sleep: Long => Unit = Thread.sleep): Long => Option[DataFrame] = {
-    val rich = followingSource(spark, stream, batchSize, maxReopens, backoffMs, sleep)
-    pulse => rich(pulse).map(_._1)
   }
 }

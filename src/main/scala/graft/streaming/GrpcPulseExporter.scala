@@ -2,6 +2,8 @@ package graft.streaming
 
 import java.util.concurrent.{Executors, TimeUnit}
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.DataFrame
 import org.sparkproject.connect.grpc.{Server, ServerServiceDefinition, Status}
 import org.sparkproject.connect.grpc.netty.NettyServerBuilder
@@ -117,7 +119,7 @@ object GrpcPulseExporter {
             // subscriber with INTERNAL: the next poll re-resolves a
             // fresh listing and self-heals — the same classification
             // the HTTP layer retries on
-            case e: Throwable if graft.api.HttpApi.isScanRace(e) => None
+            case NonFatal(e) if graft.api.HttpApi.isScanRace(e) => None
           }
         step match {
           case Some(resp) =>
@@ -129,14 +131,14 @@ object GrpcPulseExporter {
       }
     } catch {
       case _: InterruptedException => () // pool shutdown
-      case e: Throwable =>
+      case NonFatal(e) =>
         // surface a real serve failure to the client (the reference
         // returns the send error up the handler, pulse_exporter_server.go:
         // 42-47); a post-cancel race is just the stream ending
         if (!sco.isCancelled)
           try obs.onError(Status.INTERNAL.withDescription(
             String.valueOf(e.getMessage)).asRuntimeException())
-          catch { case _: Throwable => () }
+          catch { case NonFatal(_) => () }
     }
   }
 

@@ -321,23 +321,4 @@ class GrpcTransportSpec extends SparkSpec {
       } finally { second.shutdownNow(); second.awaitTermination(5, TimeUnit.SECONDS) }
     } finally GrpcTransport.close(ch)
   }
-
-  test("Pipeline ingests pulses through the gRPC transport end to end") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-grpc-e2e").toString
-    val wire = Fixtures.multiPulseBatches(spark, nPulses = 3, recordsPerPulse = 4,
-      startPulse = start)
-    val report = overWire(new ReplayExporter(wire)) { grpc =>
-      val source = Transport.pulseSource(spark, grpc, batchSize = 2, sleep = noSleep)
-      new Pipeline(spark, dir, source, pulseDelta = Fixtures.PulseDelta)
-        .run(start, start + 2 * Fixtures.PulseDelta)
-    }
-    assert(report.ingested.length == 3 && report.missing.isEmpty)
-    val stored = spark.read.parquet(s"$dir/records")
-    assert(stored.count() == 12)
-    // the partition column reads back with the narrowest inferred type —
-    // cast before comparing
-    assert(stored.selectExpr("CAST(pulse_number AS BIGINT) AS pn").distinct().collect()
-      .map(_.getLong(0)).sorted.toSeq ==
-      Seq(start, start + Fixtures.PulseDelta, start + 2 * Fixtures.PulseDelta))
-  }
 }

@@ -215,8 +215,10 @@ class IngestServeSpec extends SparkSpec {
       startPulse = start)
       .union(Fixtures.multiPulseBatches(spark, nPulses = 1, recordsPerPulse = 10,
         startPulse = start + delta5))
+    // The first pulse's hint points at itself: a hint that does not
+    // advance must fall back to δ stepping, not re-fetch the pulse forever.
     val inner = new ReplayExporter(wire,
-      iterateFromOverride = Map((start + 2 * delta) -> (start + delta5)))
+      iterateFromOverride = Map(start -> start, (start + 2 * delta) -> (start + delta5)))
     // seeded chaos on every portion open: rate-limit or drop the stream
     // mid-portion; fetchPulse's reopen budget resets on progress, so an
     // arbitrarily flaky feed that still trickles forward must converge
@@ -251,6 +253,8 @@ class IngestServeSpec extends SparkSpec {
     assert(pulses.forall(_.getAs[Boolean]("is_sequential")))
     assert(pulses.last.getAs[Long]("prev_pulse_number") == start + 2 * delta,
       "the redirect hole must chain prev(5) -> 2, not to a nonexistent pulse")
+    assert(!inner.probedPulses.exists(p => p == start + 3 * delta || p == start + 4 * delta),
+      s"redirected-past pulses must never be requested, probed: ${inner.probedPulses.distinct.sorted}")
   }
 
   test("a flat pre-bucketing pulses layout migrates to bucketed form on seed, intact") {
@@ -685,6 +689,66 @@ class IngestServeSpec extends SparkSpec {
     val pulses = storeTable(base, "pulses").orderBy("pulse_number").collect()
     assert(pulses.forall(_.getAs[Boolean]("is_complete")))
     assert(pulses.forall(_.getAs[Boolean]("is_sequential")))
+    // every commit writes a partition as ONE file and its manifest
+    // version replaces the partition's file list, so even after the
+    // re-commit and the pulses flushes each partition has one live file
+    val fs = new org.apache.hadoop.fs.Path(base)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Seq("records", "jet_drops", "pulses").foreach { table =>
+      val snap = TableManifest.latest(fs, s"$base/$table")
+        .getOrElse(fail(s"$table has no manifest"))
+      assert(snap.partitions.nonEmpty && snap.partitions.values.forall(_.size == 1),
+        s"$table must list exactly one file per partition: ${snap.partitions}")
+    }
+  }
+
+  test("an incomplete pulse whose jet cover never fills is re-requested once " +
+      "per reload TTL, not once per maintainer tick (ST3)") {
+    val base = java.nio.file.Files.createTempDirectory("graft-daemon-reload-ttl").toString
+    // jet "1" never arrives: {"0"} is not a full binary-tree cover
+    val inner = new ReplayExporter(Fixtures.multiPulseBatches(spark, nPulses = 1,
+      recordsPerPulse = 8, startPulse = start).filter(col("jet_id") === "0"))
+    // a fetch opens its first portion at record 0; later portions resume
+    // at the cursor, so this counts fetches of the pulse, not portions
+    val fetches = new java.util.concurrent.atomic.AtomicInteger
+    val counting = new Transport.RecordStream {
+      def export(pulse: Long, recordNumber: Int, count: Int): Iterator[Transport.Frame] = {
+        if (pulse == start && recordNumber == 0) fetches.incrementAndGet()
+        inner.export(pulse, recordNumber, count)
+      }
+    }
+    val cfg = fastCfg.copy(pulsePeriodMs = 50L, reloadTtlMs = 3600000L)
+    val daemon = new Ingest.Daemon(spark, base, counting, start, cfg).start()
+    try {
+      // the follower's fetch, then the maintainer's first re-request
+      assert(await()(fetches.get == 2), s"the incomplete pulse was never re-requested: $fetches")
+      // 40 maintainer periods: a tick that found nothing to commit does
+      // no Spark work, so the window holds well over 10 ticks
+      Thread.sleep(40 * cfg.pulsePeriodMs)
+      assert(fetches.get == 2,
+        s"the TTL must dedup the re-request across ticks, fetched ${fetches.get} times")
+      assert(daemon.snapshot.get(start).exists(!_.complete))
+    } finally daemon.stop()
+  }
+
+  test("a pulse whose records committed but whose jet_drops commit was lost is " +
+      "re-committed by a daemon started at it, and both tables then hold it") {
+    val base = java.nio.file.Files.createTempDirectory("graft-daemon-drophole").toString
+    val wire = Fixtures.multiPulseBatches(spark, nPulses = 1, recordsPerPulse = 6,
+      startPulse = start)
+    // the crash window between commitPulse's two commits: the records
+    // commit published the pulse, the process died before jet_drops
+    PulseWriter.writePulsePartition(Spine(wire), "records", base, pulses = Some(Seq(start)))
+    assert(TableManifest.readTable(spark, s"$base/jet_drops").isEmpty)
+    val daemon = new Ingest.Daemon(spark, base, new ReplayExporter(wire), start, fastCfg).start()
+    try assert(await()(daemon.sequentialPulse == start),
+      s"the half-committed pulse never healed: ${daemon.snapshot}")
+    finally daemon.stop()
+    assert(storeTable(base, "records").filter(col("pulse_number") === start).count() == 6L,
+      "the re-commit replaces the records partition, never duplicates it")
+    val drops = storeTable(base, "jet_drops").filter(col("pulse_number") === start)
+    assert(drops.count() == 2L) // 2 jets
+    assert(drops.agg(sum("record_amount")).head().getLong(0) == 6L)
   }
 
   test("a feed that resumes BEHIND the crept-ahead far probe window is still " +

@@ -3,6 +3,7 @@ package graft.ingest
 import scala.jdk.CollectionConverters._
 
 import graft.SparkSpec
+import graft.gen.Fixtures
 import org.apache.spark.sql.functions._
 
 class IngestSpec extends SparkSpec {
@@ -87,13 +88,21 @@ class IngestSpec extends SparkSpec {
     assert(first.length == 3)
   }
 
-  test("upsertPulses keeps the newest row per pulse") {
-    import spark.implicits._
-    val existing = Seq((1L, 100L, "old"), (2L, 100L, "keep"))
-      .toDF("pulse_number", "ingest_ts", "tag")
-    val incoming = Seq((1L, 200L, "new")).toDF("pulse_number", "ingest_ts", "tag")
-    val out = PulseWriter.upsertPulses(existing, incoming)
-      .orderBy("pulse_number").collect().map(_.getAs[String]("tag"))
-    assert(out.toSeq == Seq("new", "keep"))
+  test("the stored record hash is the 32-byte sha256 DIGEST of raw_data, " +
+      "not the hex string's bytes") {
+    val base = java.nio.file.Files.createTempDirectory("graft-pipe-hash").toString
+    val start = Fixtures.GenesisPulse + Fixtures.PulseDelta
+    val wire = Fixtures.multiPulseBatches(spark, 1, recordsPerPulse = 4, startPulse = start)
+    PulseWriter.commitPulse(wire, base)
+    val rows = storeTable(base, "records")
+      .select("hash", "raw_data").collect()
+    assert(rows.nonEmpty)
+    rows.foreach { r =>
+      val h = r.getAs[Array[Byte]]("hash")
+      assert(h.length == 32, s"sha256 digest must be 32 bytes, got ${h.length}")
+      val expected = java.security.MessageDigest.getInstance("SHA-256")
+        .digest(Option(r.getAs[Array[Byte]]("raw_data")).getOrElse(Array.emptyByteArray))
+      assert(h.sameElements(expected), "hash must equal sha256(raw_data)")
+    }
   }
 }

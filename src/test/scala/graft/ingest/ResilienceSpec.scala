@@ -4,36 +4,6 @@ import org.scalatest.funsuite.AnyFunSuite
 
 class ResilienceSpec extends AnyFunSuite {
 
-  test("retryingSource retries with exponential backoff then succeeds") {
-    var calls = 0
-    val sleeps = scala.collection.mutable.ListBuffer.empty[Long]
-    val src = Resilience.retryingSource(
-      inner = { _ => calls += 1; if (calls < 3) throw new RuntimeException("flaky"); None },
-      maxRetries = 3, backoffMs = 100, sleep = sleeps += _)
-    assert(src(65546L).isEmpty)
-    assert(calls == 3)
-    assert(sleeps.toSeq == Seq(100L, 200L)) // doubling backoff
-  }
-
-  test("retryingSource propagates the final failure after maxRetries") {
-    var calls = 0
-    val src = Resilience.retryingSource(
-      inner = { _ => calls += 1; throw new RuntimeException(s"down $calls") },
-      maxRetries = 2, backoffMs = 1, sleep = _ => ())
-    val e = intercept[RuntimeException](src(65546L))
-    assert(e.getMessage == "down 3") // initial try + 2 retries
-  }
-
-  test("retryingSource rethrows an interrupt immediately instead of retrying it") {
-    var calls = 0
-    val src = Resilience.retryingSource(
-      inner = { _ => calls += 1; throw new InterruptedException("stop") },
-      maxRetries = 3, backoffMs = 1,
-      sleep = _ => fail("a shutdown signal must not enter the backoff ladder"))
-    intercept[InterruptedException](src(65546L))
-    assert(calls == 1, "no retry on interrupt")
-  }
-
   test("MissedDataManager dedups contained requests within the TTL") {
     var clock = 0L
     val m = new Resilience.MissedDataManager(ttlMillis = 1000, now = () => clock)
@@ -45,29 +15,5 @@ class ResilienceSpec extends AnyFunSuite {
     clock = 1500 // past the TTL — both expire
     assert(m.addIfNew(20, 30), "expired requests no longer dedup")
     assert(m.pendingCount == 1)
-  }
-
-  test("pipeline reload dedup: a persistent gap re-requests once per TTL window") {
-    val spark = graft.SparkSpec.session
-    import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft-resil").toString
-    var fetches = scala.collection.mutable.Map.empty[Long, Int].withDefaultValue(0)
-    val start = graft.gen.Fixtures.GenesisPulse + 10L
-    // pulse `start` delivers; `start+10` is permanently missing
-    val source: Long => Option[org.apache.spark.sql.DataFrame] = { p =>
-      fetches(p) += 1
-      if (p == start) Some(graft.gen.Fixtures.multiPulseBatches(spark, 1, 4, startPulse = p))
-      else None
-    }
-    val pipe = new Pipeline(spark, base, source, pulseDelta = 10L, reloadTtlMillis = 3600000L)
-    val r1 = pipe.run(start, start + 10)
-    assert(r1.ingested == Seq(start) && r1.missing == Seq(start + 10))
-    val gapFetches = fetches(start + 10)
-    val r2 = pipe.run(start, start + 10)
-    assert(r2.missing == Seq(start + 10))
-    // second round: the sweep retries the pulse, but the RELOAD is deduped
-    // (one extra sweep fetch, no extra reload fetch)
-    assert(fetches(start + 10) == gapFetches + 1,
-      s"reload must be TTL-deduped: ${fetches(start + 10)} vs ${gapFetches + 1}")
   }
 }

@@ -146,83 +146,4 @@ class TransportSpec extends SparkSpec {
       Transport.fetchPulse(alwaysDown, start, maxReopens = 2, sleep = noSleep)
     }
   }
-
-  test("Pipeline drives ingest through the transport trait, surviving a reconnect (S1/S2)") {
-    val base = java.nio.file.Files.createTempDirectory("graft-transport").toString
-    val wire = Fixtures.multiPulseBatches(spark, nPulses = 3, recordsPerPulse = 6,
-      startPulse = start)
-    // pulse start+10 drops its stream mid-second-portion on first attempt
-    val exporter = new ReplayExporter(wire, dropOnceAt = Map((start + 10) -> 3))
-    val pipe = new Pipeline(spark, base,
-      Transport.pulseSource(spark, exporter, batchSize = 2, sleep = noSleep))
-    val report = pipe.run(start, start + 20)
-    assert(report.ingested == Seq(start, start + 10, start + 20))
-    assert(report.missing.isEmpty)
-    val records = storeTable(base, "records")
-    assert(records.count() == 18, "reconnect must not lose or duplicate records")
-    assert(records.select("reference").distinct().count() == 18)
-  }
-
-  test("Pipeline.follow honors ShouldIterateFrom: redirected-past pulses are never probed") {
-    val base = java.nio.file.Files.createTempDirectory("graft-follow").toString
-    // the exporter's chain jumps start → start+30: the two middle pulses
-    // do not exist anywhere, and the redirect says so up front
-    val wire = Fixtures.multiPulseBatches(spark, nPulses = 4, recordsPerPulse = 3,
-        startPulse = start)
-      .filter(org.apache.spark.sql.functions.col("pulse_number").isin(start, start + 30))
-    val exporter = new ReplayExporter(wire,
-      iterateFromOverride = Map(start -> (start + 30)))
-    val pipe = new Pipeline(spark, base,
-      Transport.pulseSource(spark, exporter, sleep = noSleep))
-    val report = pipe.follow(
-      Transport.followingSource(spark, exporter, sleep = noSleep), start, start + 30)
-    assert(report.ingested == Seq(start, start + 30))
-    assert(report.missing.isEmpty,
-      "pulses the exporter redirected past are not gaps and must not enter the reload loop")
-    assert(!exporter.probedPulses.exists(p => p == start + 10 || p == start + 20),
-      s"redirected-past pulses must never be requested, probed: ${exporter.probedPulses}")
-    assert(storeTable(base, "records").count() == 6)
-  }
-
-  test("Pipeline.follow: a non-advancing hint falls back to delta stepping; a still-absent pulse stays missing") {
-    val base = java.nio.file.Files.createTempDirectory("graft-follow-fb").toString
-    // a hole with NO redirect (start+10 simply absent) and a hint on the
-    // first pulse that fails to advance (points at itself)
-    val wire = Fixtures.multiPulseBatches(spark, nPulses = 3, recordsPerPulse = 3,
-        startPulse = start)
-      .filter(org.apache.spark.sql.functions.col("pulse_number") =!= (start + 10))
-    val exporter = new ReplayExporter(wire, iterateFromOverride = Map(start -> start))
-    val pipe = new Pipeline(spark, base,
-      Transport.pulseSource(spark, exporter, sleep = noSleep))
-    val report = pipe.follow(
-      Transport.followingSource(spark, exporter, sleep = noSleep), start, start + 20)
-    assert(report.ingested == Seq(start, start + 20),
-      "a self-pointing hint must not stall the sweep")
-    assert(report.missing == Seq(start + 10), "an unredirected hole is a gap")
-    assert(report.reloaded.isEmpty, "a still-absent pulse cannot report as reloaded")
-    assert(storeTable(base, "records").count() == 6)
-  }
-
-  test("Pipeline.follow: the reload pass picks up a pulse that arrives late") {
-    val base = java.nio.file.Files.createTempDirectory("graft-follow-late").toString
-    val full = Fixtures.multiPulseBatches(spark, nPulses = 3, recordsPerPulse = 3,
-      startPulse = start)
-    val inner = new ReplayExporter(full)
-    @volatile var late = true
-    val gated = new Transport.RecordStream {
-      def export(pulse: Long, recordNumber: Int, count: Int): Iterator[Transport.Frame] = {
-        if (pulse == start + 10 && late) { late = false; throw new Transport.PulseNotFound(pulse) }
-        inner.export(pulse, recordNumber, count)
-      }
-    }
-    val pipe = new Pipeline(spark, base,
-      Transport.pulseSource(spark, gated, sleep = noSleep))
-    val report = pipe.follow(
-      Transport.followingSource(spark, gated, sleep = noSleep), start, start + 20)
-    assert(report.ingested == Seq(start, start + 20))
-    assert(report.missing == Seq(start + 10), "the first probe saw the pulse absent")
-    assert(report.reloaded == Seq(start + 10), "the reload pass must ingest the late pulse")
-    assert(storeTable(base, "records").count() == 9,
-      "all three pulses' records must land")
-  }
 }
