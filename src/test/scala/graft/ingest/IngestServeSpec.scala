@@ -215,10 +215,8 @@ class IngestServeSpec extends SparkSpec {
       startPulse = start)
       .union(Fixtures.multiPulseBatches(spark, nPulses = 1, recordsPerPulse = 10,
         startPulse = start + delta5))
-    // The first pulse's hint points at itself: a hint that does not
-    // advance must fall back to δ stepping, not re-fetch the pulse forever.
     val inner = new ReplayExporter(wire,
-      iterateFromOverride = Map(start -> start, (start + 2 * delta) -> (start + delta5)))
+      iterateFromOverride = Map((start + 2 * delta) -> (start + delta5)))
     // seeded chaos on every portion open: rate-limit or drop the stream
     // mid-portion; fetchPulse's reopen budget resets on progress, so an
     // arbitrarily flaky feed that still trickles forward must converge
@@ -253,8 +251,77 @@ class IngestServeSpec extends SparkSpec {
     assert(pulses.forall(_.getAs[Boolean]("is_sequential")))
     assert(pulses.last.getAs[Long]("prev_pulse_number") == start + 2 * delta,
       "the redirect hole must chain prev(5) -> 2, not to a nonexistent pulse")
-    assert(!inner.probedPulses.exists(p => p == start + 3 * delta || p == start + 4 * delta),
+  }
+
+  test("the daemon honors ShouldIterateFrom: redirected-past pulses are never " +
+      "requested, not even by the sequencer's gap reload") {
+    val base = java.nio.file.Files.createTempDirectory("graft-daemon-redirect").toString
+    // the exporter's chain jumps start → start+3δ: the two middle pulses
+    // do not exist anywhere, and the redirect says so up front
+    val wire = Fixtures.multiPulseBatches(spark, nPulses = 4, recordsPerPulse = 6,
+        startPulse = start)
+      .filter(col("pulse_number").isin(start, start + 3 * delta))
+    val inner = new ReplayExporter(wire,
+      iterateFromOverride = Map(start -> (start + 3 * delta)))
+    // start+3δ first serves half its jet cover, so the sequencer stalls
+    // at start with start+3δ open until the maintainer's re-request
+    // completes it — the window in which its gap reload looks at the
+    // skipped range
+    val halfOnce = new ReplayExporter(wire.filter(col("jet_id") === "0"))
+    val served = java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
+    val stream = new Transport.RecordStream {
+      def export(pulse: Long, recordNumber: Int, count: Int): Iterator[Transport.Frame] =
+        if (pulse == start + 3 * delta && served.add(pulse))
+          halfOnce.export(pulse, recordNumber, count)
+        else inner.export(pulse, recordNumber, count)
+    }
+    val daemon = new Ingest.Daemon(spark, base, stream, start, fastCfg).start()
+    try {
+      assert(await()(daemon.sequentialPulse == start + 3 * delta),
+        s"the daemon never crossed the redirect: ${daemon.snapshot}")
+      // further sequencer and maintainer ticks must not reach into the hole
+      Thread.sleep(10 * fastCfg.pulsePeriodMs)
+    } finally daemon.stop()
+    assert(!inner.probedPulses.exists(p => p == start + delta || p == start + 2 * delta),
       s"redirected-past pulses must never be requested, probed: ${inner.probedPulses.distinct.sorted}")
+    val pulses = storeTable(base, "pulses").orderBy("pulse_number").collect()
+    assert(pulses.map(_.getAs[Long]("pulse_number")).toSeq == Seq(start, start + 3 * delta))
+    assert(pulses.last.getAs[Long]("prev_pulse_number") == start,
+      "the redirect must chain prev(start+3δ) -> start")
+    assert(storeTable(base, "records").count() == 12L)
+  }
+
+  test("a non-advancing iterate-from hint falls back to delta stepping, and an " +
+      "unredirected hole is crossed without inventing a pulse for it") {
+    val base = java.nio.file.Files.createTempDirectory("graft-daemon-selfhint").toString
+    // a hole with NO redirect (start+δ simply absent) and a hint on the
+    // first pulse that fails to advance (points at itself)
+    val wire = Fixtures.multiPulseBatches(spark, nPulses = 3, recordsPerPulse = 6,
+        startPulse = start)
+      .filter(col("pulse_number") =!= (start + delta))
+    val inner = new ReplayExporter(wire, iterateFromOverride = Map(start -> start))
+    // a fetch opens its first portion at record 0; later portions resume
+    // at the cursor, so this counts fetches of the pulse, not portions
+    val fetches = new java.util.concurrent.atomic.AtomicInteger
+    val counting = new Transport.RecordStream {
+      def export(pulse: Long, recordNumber: Int, count: Int): Iterator[Transport.Frame] = {
+        if (pulse == start && recordNumber == 0) fetches.incrementAndGet()
+        inner.export(pulse, recordNumber, count)
+      }
+    }
+    val daemon = new Ingest.Daemon(spark, base, counting, start, fastCfg).start()
+    try {
+      assert(await()(daemon.sequentialPulse == start + 2 * delta),
+        s"a self-pointing hint must not stall the follower: ${daemon.snapshot}")
+      Thread.sleep(10 * fastCfg.pulsePeriodMs)
+      assert(fetches.get == 1,
+        s"the self-pointing pulse must be fetched once, fetched ${fetches.get} times")
+    } finally daemon.stop()
+    val pulses = storeTable(base, "pulses").orderBy("pulse_number").collect()
+    assert(pulses.map(_.getAs[Long]("pulse_number")).toSeq == Seq(start, start + 2 * delta),
+      "the absent pulse stays absent")
+    assert(pulses.forall(_.getAs[Boolean]("is_sequential")))
+    assert(storeTable(base, "records").count() == 12L)
   }
 
   test("a flat pre-bucketing pulses layout migrates to bucketed form on seed, intact") {
