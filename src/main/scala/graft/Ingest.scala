@@ -67,13 +67,15 @@ import graft.ingest.{Canonicalize, GrpcTransport, PulseWriter, Resilience, Table
   * cursor, and seeding collects only the frontier buckets (see
   * [[Daemon.seed]]; the reference's controller likewise registers only
   * incomplete pulses, `etl/controller/controller.go:124-132`). Writes
-  * go through bucket-partitioned dynamic overwrite (`pulse_bucket`
-  * spans [[Config.flushBucketSpan]] pulse numbers at first; the span is
-  * a STORE property persisted in `_frontier.json` and coarsened by a
-  * seed-time re-bucketing migration once history outgrows
-  * [[Config.maxPulseBuckets]] dirs — see [[spanForExtent]]): a flush
-  * rewrites only the buckets containing changed pulses — bounded
-  * forever, however long the daemon runs.
+  * are manifested append-commits of whole `pulse_bucket` partitions
+  * (a bucket spans [[Config.flushBucketSpan]] pulse numbers at first;
+  * the span is a STORE property persisted in `_frontier.json` and
+  * coarsened by a seed-time re-bucketing migration once history
+  * outgrows [[Config.maxPulseBuckets]] dirs — see [[spanForExtent]]): a
+  * flush replaces only the buckets containing changed pulses — bounded
+  * forever, however long the daemon runs. Every table the daemon
+  * writes is manifested ([[TableManifest]]); a store written before
+  * manifests is not read.
   *
   * 100 TB shape: the per-pulse record set is bounded by the pulse
   * cadence (the reference holds it in one goroutine's memory the same
@@ -161,10 +163,11 @@ object Ingest {
     @volatile private var cursorNow = fromPulse
     @volatile private var seqPulse = fromPulse - cfg.pulseDelta
     // `lock` guards the register bookkeeping (entries/open/dirty); the
-    // Spark writes serialize on `writeLock` separately — concurrent
-    // dynamic-partition overwrites into one table path would race in the
-    // commit protocol's staging directory (the reference funnels all
-    // writes through one storage transaction). The two are never nested.
+    // Spark writes serialize on `writeLock` separately — each table has
+    // ONE manifest writer, and concurrent appends into one table path
+    // would race in the commit protocol's staging directory (the
+    // reference funnels all writes through one storage transaction).
+    // The two are never nested.
     private val lock = new Object
     // sorted so the chain-neighbor probes (maxBefore/minAfter) and the
     // per-bucket flush range scans stay O(log n)/O(bucket) however long
@@ -188,8 +191,8 @@ object Ingest {
     // must address the same dirs the data lives in, so the span rides
     // `_frontier.json` and changes only through the staged full-rewrite
     // migration in [[seed]] (re-bucketing when history outgrows
-    // cfg.maxPulseBuckets). A store with no persisted span (legacy, or
-    // pre-r16) keeps the config base span it was written with.
+    // cfg.maxPulseBuckets). A store whose summary is lost recovers its
+    // span from the manifest's bucket dirs (see [[seed]]).
     @volatile private var bucketSpan: Long = cfg.flushBucketSpan
 
     // ---- observability (the spec's and main's read surface) ------------
@@ -245,8 +248,9 @@ object Ingest {
       * land a gap-backfilled pulse BELOW the recorded bucket lowers the
       * summary first (see [[flushTo]]) — so any crash leaves a summary
       * that at worst reads a superset, and the seed re-derives the true
-      * marks from the rows. No summary (legacy store, hand-built
-      * fixture, flat layout) falls back to the full read.
+      * marks from the rows. No summary (lost in [[writeFrontier]]'s
+      * crash window) falls back to the full read plus span recovery; a
+      * pulses table with no committed manifest seeds nothing.
       */
     private def seed(): Unit = {
       // existence through the same Hadoop filesystem the reads/writes
@@ -255,73 +259,56 @@ object Ingest {
       // persisted buckets from an empty register
       val pulsesPath = new org.apache.hadoop.fs.Path(s"$basePath/pulses")
       val fs = pulsesPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      // Recover an interrupted flat→bucketed migration FIRST (the swap at
-      // the bottom of this method): the migration stages the bucketed
+      // Recover an interrupted re-bucketing migration FIRST (the swap at
+      // the bottom of this method): the migration stages the re-bucketed
       // table to this sibling before touching the original, so a leftover
       // sibling pins which crash window we died in. The sibling's own
-      // _SUCCESS marker (written by the Spark job commit, i.e. only once
-      // the staged copy is COMPLETE) is the disambiguator — the original
-      // path's existence is NOT, because a crash mid recursive delete
-      // leaves a PARTIALLY-destroyed original behind, and re-migrating
-      // from that would lose rows for good:
+      // committed manifest (published only once the staged copy is
+      // COMPLETE) is the disambiguator — the original path's existence is
+      // NOT, because a crash mid recursive delete leaves a
+      // PARTIALLY-destroyed original behind, and re-migrating from that
+      // would lose rows for good:
       //   sibling committed → it is a complete copy of the register as
       //     staged; whatever state the original is in (intact, partially
       //     deleted, or gone), finish the swap from the sibling;
       //   sibling uncommitted → the write itself crashed, the original
       //     is untouched truth — drop the partial sibling and let the
-      //     flat check below redo the migration.
+      //     span check below redo the migration.
       val migrating = new org.apache.hadoop.fs.Path(s"$basePath/pulses_migrating")
       if (fs.exists(migrating)) {
-        val committed = fs.exists(
-          new org.apache.hadoop.fs.Path(migrating, "_SUCCESS"))
-        if (committed) {
-          if (fs.exists(pulsesPath)) fs.delete(pulsesPath, true)
-          if (!fs.rename(migrating, pulsesPath))
-            throw new java.io.IOException(
-              s"migration recovery rename failed: $migrating -> $pulsesPath")
-        } else fs.delete(migrating, true)
+        if (TableManifest.latest(fs, migrating.toString).isDefined)
+          swapIn(fs, migrating, pulsesPath)
+        else fs.delete(migrating, true)
       }
-      if (!fs.exists(pulsesPath)) return
-      val summary = readFrontier(fs, pulsesPath)
-      summarized = summary.map(s => (s._1, s._2))
-      // adopt the span the on-disk dirs were written with BEFORE any
-      // bucket arithmetic below (absent on pre-r16 stores → config base)
-      summary.flatMap(_._3).foreach(s => bucketSpan = s)
-      // has the dimension outgrown its span? One cheap driver-side count
-      // of the CURRENT bucket dirs (manifest partitions when manifested,
-      // else one listing), once per start. Past cfg.maxPulseBuckets the
-      // store re-buckets at the extent-sized span via the staged full
-      // rewrite below — the measured serving-scale remedy (500 dirs → 50 at
-      // 5M pulses, fast-warm 283 → 209 ms) as write-side default, no env
-      // knob. Growth between restarts is bounded by cadence (outgrowing
-      // 64 base-span buckets takes ~74 days of 10 s pulses), so
-      // seed-time is the right cadence for the rewrite.
-      val bucketDirVals: Set[Long] = TableManifest.latest(fs, s"$basePath/pulses")
-        .map(_.partitions.keysIterator.filter(_.startsWith("pulse_bucket="))
-          .flatMap(_.stripPrefix("pulse_bucket=").toLongOption).toSet)
-        .getOrElse(fs.listStatus(pulsesPath).iterator
-          .filter(st => st.isDirectory && st.getPath.getName.startsWith("pulse_bucket="))
-          .flatMap(_.getPath.getName.stripPrefix("pulse_bucket=").toLongOption).toSet)
-      val needCoarsen = bucketDirVals.size > cfg.maxPulseBuckets
-      // manifest-aware: a steady-state flush appends generations and the
-      // snapshot manifest says which files are current — a raw directory
-      // read here would double-count superseded buckets. Legacy stores
-      // (no manifest) keep the plain directory read; a dir with no
-      // committed data at all seeds nothing.
-      val pulsesDf = TableManifest.readTable(spark, s"$basePath/pulses") match {
+      // a table with no committed manifest has seeded nothing
+      val pulsesDf = TableManifest.readTable(spark, pulsesPath.toString) match {
         case Some(df) => df
         case None => return
       }
-      // a pre-result_amount store (or a flat one) must be read WHOLE and
-      // rewritten: a dynamic overwrite of one dirty bucket in the NEW
-      // schema would leave mixed footers across buckets, which parquet
-      // reads resolve from an arbitrary file — the migration below does
-      // one staged full rewrite instead (same machinery as flat->bucketed)
-      val legacySchema = !pulsesDf.schema.fieldNames.contains("result_amount")
+      val summary = readFrontier(fs, pulsesPath)
+      summarized = summary.map(s => (s._1, s._2))
+      // adopt the span the on-disk dirs were written with BEFORE any
+      // bucket arithmetic below
+      summary.foreach(s => bucketSpan = s._3)
+      // has the dimension outgrown its span? One cheap driver-side count
+      // of the CURRENT bucket dirs (the manifest's partitions), once per
+      // start. Past cfg.maxPulseBuckets the store re-buckets at the
+      // extent-sized span via the staged full rewrite below — the
+      // measured serving-scale remedy (500 dirs → 50 at 5M pulses,
+      // fast-warm 283 → 209 ms) as write-side default, no env knob.
+      // Growth between restarts is bounded by cadence (outgrowing 64
+      // base-span buckets takes ~74 days of 10 s pulses), so seed-time
+      // is the right cadence for the rewrite.
+      val bucketDirVals: Set[Long] = TableManifest.latest(fs, pulsesPath.toString)
+        .map(_.partitions.keysIterator
+          .flatMap(_.stripPrefix("pulse_bucket=").toLongOption).toSet)
+        .getOrElse(Set.empty)
+      val needCoarsen = bucketDirVals.size > cfg.maxPulseBuckets
+      // manifest-aware: a steady-state flush appends generations and the
+      // snapshot manifest says which files are current — a raw directory
+      // read here would double-count superseded buckets
       val bounded = summary match {
-        case Some((_, frontierBucket, _))
-            if !needCoarsen && !legacySchema &&
-              pulsesDf.schema.fieldNames.contains("pulse_bucket") =>
+        case Some((_, frontierBucket, _)) if !needCoarsen =>
           // frontier buckets only, partition-pruned; the bucket partition
           // column reads back as its directory-inferred type (IntegerType
           // when the values fit), so the probe literal must match it for
@@ -331,8 +318,8 @@ object Ingest {
                 org.apache.spark.sql.types.IntegerType) frontierBucket.toInt
             else frontierBucket
           pulsesDf.filter(col("pulse_bucket") >= lit(lit0))
-        // legacy/flat/hand-built store OR a re-bucketing migration
-        // (which must stage the WHOLE dimension): full read
+        // no summary OR a re-bucketing migration (which must stage the
+        // WHOLE dimension): full read
         case _ => pulsesDf
       }
       val rows = bounded.collect()
@@ -344,8 +331,7 @@ object Ingest {
             jets = Set.empty,
             jetDropAmount = r.getAs[Int]("jet_drop_amount"),
             recordAmount = r.getAs[Long]("record_amount"),
-            resultAmount =
-              if (legacySchema) 0L else r.getAs[Long]("result_amount"),
+            resultAmount = r.getAs[Long]("result_amount"),
             timestamp = r.getAs[Long]("timestamp"),
             complete = r.getAs[Boolean]("is_complete"),
             sequential = r.getAs[Boolean]("is_sequential"))
@@ -367,7 +353,7 @@ object Ingest {
       // finer candidate maps some pulse outside the dirs, a coarser one
       // leaves some dir value unreachable). No match (corrupt layout)
       // keeps the config span and says so — the pre-r16 behavior.
-      if (summary.isEmpty && bucketDirVals.nonEmpty) lock.synchronized {
+      if (summary.isEmpty) lock.synchronized {
         if (entries.nonEmpty) {
           def buckets(sp: Long): Set[Long] = entries.keysIterator.map(_ / sp).toSet
           var s = cfg.flushBucketSpan
@@ -386,10 +372,10 @@ object Ingest {
       val openSnap = lock.synchronized(open.toVector)
       // the drops read goes through the manifest-aware reader: None
       // covers BOTH the no-directory case and a store whose only
-      // committed pulses were empty (a jet_drops dir holding nothing but
-      // _SUCCESS — schema inference on it would throw, turning every
-      // restart into a crash loop), and a manifested store resolves its
-      // committed file set instead of a raw listing
+      // committed pulses were empty (a jet_drops dir with no manifest —
+      // schema inference on it would throw, turning every restart into
+      // a crash loop), and the committed file set is resolved instead
+      // of a raw listing
       val dropsRead =
         if (openSnap.isEmpty) None
         else TableManifest.readTable(spark, s"$basePath/jet_drops")
@@ -445,64 +431,28 @@ object Ingest {
         cursorNow = entries.keysIterator.maxOption
           .map(m => math.max(m + cfg.pulseDelta, fromPulse)).getOrElse(fromPulse)
       }
-      // migrate a pre-bucketing flat layout (root-level data files, no
-      // pulse_bucket= dirs): a bucketed dynamic overwrite on top would
-      // leave mixed structures Spark's partition discovery rejects.
-      // Everything is already in the register — drop the old directory
-      // and mark every pulse dirty so the next flush rewrites the full
-      // table in bucketed form.
-      val flat = fs.listStatus(pulsesPath).exists(st =>
-        st.isFile && st.getPath.getName.startsWith("part-"))
-      // a legacy pre-result_amount store migrates the same way a flat one
-      // does (one staged full rewrite in the new schema): mixed-schema
-      // buckets are never left behind, and the persisted result counters
-      // BACKFILL from the records table's own type column — the store
-      // holds the truth, so legacy closed history serves real counts, not
-      // zeros
-      if (legacySchema) {
-        TableManifest.readTable(spark, s"$basePath/records").foreach { recs =>
-          val counts = recs
-            .filter(col("type") === "result")
-            .groupBy(col("pulse_number").cast("long").as("pn"))
-            .count().collect()
-          lock.synchronized {
-            counts.foreach { r =>
-              entries.get(r.getAs[Long]("pn")).foreach(e =>
-                entries.update(r.getAs[Long]("pn"),
-                  e.copy(resultAmount = r.getAs[Long]("count"))))
-            }
-          }
-        }
-      }
-      if (flat || legacySchema || needCoarsen) {
-        if (needCoarsen)
-          System.err.println(s"[ingest] pulses dimension outgrew its bucket " +
-            s"span (> ${cfg.maxPulseBuckets} dirs) — re-bucketing at the " +
-            s"extent-sized span via the staged migration")
-        // every full rewrite adopts the extent-sized span: this IS the
-        // re-bucketing migration when needCoarsen, and a no-op for small
-        // flat/legacy stores (spanForExtent returns the base span until
-        // the extent genuinely needs coarser dirs)
+      if (needCoarsen) {
+        System.err.println(s"[ingest] pulses dimension outgrew its bucket " +
+          s"span (> ${cfg.maxPulseBuckets} dirs) — re-bucketing at the " +
+          s"extent-sized span via the staged migration")
         lock.synchronized {
           if (entries.nonEmpty)
             bucketSpan = spanForExtent(entries.firstKey, entries.lastKey,
               cfg.flushBucketSpan, cfg.maxPulseBuckets)
         }
         // Rewrite IMMEDIATELY (threads are not running yet) and CRASH-SAFE:
-        // stage the full bucketed table to the sibling path, then swap.
-        // A persisted copy of the dimension exists at every instant — the
-        // flat original is deleted only after the sibling write returned
+        // stage the full re-bucketed table to the sibling path through the
+        // same manifested flush the live table uses, then swap. A
+        // persisted copy of the dimension exists at every instant — the
+        // original is deleted only after the sibling's manifest published
         // (a delete-first rewrite would make the in-memory register the
-        // only copy for the whole bucketed write; a crash there would
-        // lose the chain/flag metadata for good once the exporter has
-        // pruned history). The recovery block at the top of this method
-        // closes both crash windows of the swap itself.
+        // only copy for the whole write; a crash there would lose the
+        // chain/flag metadata for good once the exporter has pruned
+        // history). The recovery block at the top of this method closes
+        // both crash windows of the swap itself.
         lock.synchronized { dirty ++= entries.keysIterator }
-        flushTo(migrating.toString, dynamicOverwrite = false)
-        fs.delete(pulsesPath, true)
-        if (!fs.rename(migrating, pulsesPath))
-          throw new java.io.IOException(
-            s"migration rename failed: $migrating -> $pulsesPath")
+        flushTo(migrating.toString)
+        swapIn(fs, migrating, pulsesPath)
         // `summarized` is already correct here: the staged flushTo's
         // post-commit raise wrote `_frontier.json` (in the NEW span
         // units — bucketSpan was updated before the call) into the
@@ -518,11 +468,7 @@ object Ingest {
       // entries forever). Evict entries strictly below the frontier
       // bucket — all closed by the prefix property, their rows safely on
       // disk, and no flush can touch their buckets (dirty ⊆ register).
-      // The flat/legacy migration paths keep their historical
-      // keep-everything behavior (small stores by construction —
-      // bucketDirVals is empty for a flat store, and a legacy store with
-      // an intact summary never takes either trigger).
-      if (needCoarsen || (summary.isEmpty && bucketDirVals.nonEmpty))
+      if (needCoarsen || summary.isEmpty)
         lock.synchronized {
           if (entries.nonEmpty) {
             val fb = open.headOption.getOrElse(entries.lastKey) / bucketSpan
@@ -530,6 +476,20 @@ object Ingest {
               .foreach(entries.remove)
           }
         }
+    }
+
+    /** Replace the live pulses table with a staged sibling whose manifest
+      * has committed: drop whatever is left of the original, rename the
+      * sibling into place, and drop every relation cached against the
+      * live path (the swapped-in table restarts its manifest numbering,
+      * so a version-keyed entry could otherwise match a dead file list).
+      */
+    private def swapIn(fs: org.apache.hadoop.fs.FileSystem,
+        staged: org.apache.hadoop.fs.Path, live: org.apache.hadoop.fs.Path): Unit = {
+      if (fs.exists(live)) fs.delete(live, true)
+      if (!fs.rename(staged, live))
+        throw new java.io.IOException(s"pulses migration rename failed: $staged -> $live")
+      graft.sources.RelationCache.invalidate(live.toString)
     }
 
     // ---- commit ---------------------------------------------------------
@@ -879,32 +839,17 @@ object Ingest {
     /** Persist changed pulses — the reference's pulses table with its
       * maintained flags (`CompletePulse` / `SequencePulse`,
       * `etl/storage/storage.go`). Incremental: only the `pulse_bucket`
-      * partitions containing dirty pulses are rewritten (dynamic
-      * partition overwrite), so flush cost is bounded by the change
-      * frontier, never by the table's accumulated history.
+      * partitions containing dirty pulses are replaced (one manifested
+      * append-commit), so flush cost is bounded by the change frontier,
+      * never by the table's accumulated history.
       */
     def flush(): Unit = flushTo(s"$basePath/pulses")
 
     /** [[flush]]'s body, parameterized on the target directory so the
-      * seed-time layout migration can stage the same bucketed form to a
-      * sibling path before swapping it in.
-      *
-      * `dynamicOverwrite` MUST be false for the migration staging write:
-      * the recovery block in [[seed]] trusts the sibling's `_SUCCESS`
-      * marker as proof the staged copy is COMPLETE, and only the static
-      * commit path honors that ordering. Under
-      * `partitionOverwriteMode=dynamic`, Spark's commit protocol writes
-      * `_SUCCESS` (in `committer.commitJob`) BEFORE moving the staged
-      * partition directories into place — a crash in that window leaves
-      * a sibling with `_SUCCESS` and zero partitions, and recovery would
-      * delete the intact original and install the hollow copy. The
-      * static committer promotes task output first and writes `_SUCCESS`
-      * last, so the marker genuinely means "complete". The steady-state
-      * flush keeps dynamic mode (it must rewrite only the dirty buckets
-      * in the LIVE table); the staging target is always a fresh sibling,
-      * so a full static overwrite is both safe and complete there.
+      * seed-time re-bucketing migration can stage the same manifested,
+      * bucketed form to a sibling path before swapping it in.
       */
-    private def flushTo(target: String, dynamicOverwrite: Boolean = true): Unit = {
+    private def flushTo(target: String): Unit = {
       // stage under the register lock, CLEARING dirty at stage time: an
       // entry that changes mid-write re-enters the (now empty) dirty set
       // and survives for the next flush instead of being lost to a
@@ -958,41 +903,25 @@ object Ingest {
           // common case — stays strictly post-data-commit. A pre-write
           // failure aborts the flush (dirty re-marks below), because
           // proceeding would open exactly the window the pre-write
-          // closes.
-          if (dynamicOverwrite)
-            summarized.filter(s => frontier._2 < s._2).foreach { s =>
-              val lowered = (math.min(s._1, frontier._1), frontier._2)
-              writeFrontier(spark, target, lowered._1, lowered._2)
-              summarized = Some(lowered)
-            }
-          val frame = spark.createDataFrame(rows.asJava, PulsesSchema).coalesce(1)
-          if (dynamicOverwrite) {
-            // steady-state flush: MANIFESTED append-replace of exactly
-            // the dirty buckets (TableManifest) — the same snapshot
-            // protocol the records/jet_drops commits use, so a serving
-            // read racing this flush always resolves a committed file
-            // set instead of the delete-then-rename window dynamic
-            // overwrite had. The bucket list is driver-held (staged from
-            // the register), so no partition-discovery job runs.
-            val buckets = rows.iterator.map(_.getLong(9)).toSet.toSeq.sorted
-              .map(b => s"pulse_bucket=$b")
-            TableManifest.appendCommit(spark, target, buckets) {
-              frame.write.mode(org.apache.spark.sql.SaveMode.Append)
-                .partitionBy("pulse_bucket").parquet(target)
-            }
-          } else {
-            // migration staging: a full STATIC overwrite of a fresh
-            // sibling, pinned (not omitted) as defense against ANY
-            // session-global partitionOverwriteMode=dynamic — the
-            // recovery block in seed() trusts the sibling's _SUCCESS as
-            // proof of completeness, and only the static committer
-            // writes it last. No manifest is staged: the swapped-in
-            // table is a fresh single-generation directory (legacy read
-            // mode), and the next steady-state flush bootstraps one.
-            frame.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-              .option("partitionOverwriteMode", "static")
-              .partitionBy("pulse_bucket")
-              .parquet(target)
+          // closes. On the migration's staging target the lowering writes
+          // only into the sibling.
+          summarized.filter(s => frontier._2 < s._2).foreach { s =>
+            val lowered = (math.min(s._1, frontier._1), frontier._2)
+            writeFrontier(spark, target, lowered._1, lowered._2)
+            summarized = Some(lowered)
+          }
+          // MANIFESTED append-replace of exactly the dirty buckets
+          // (TableManifest) — the same snapshot protocol the
+          // records/jet_drops commits use, so a serving read racing this
+          // flush always resolves a committed file set. The bucket list is
+          // driver-held (staged from the register), so no
+          // partition-discovery job runs.
+          val buckets = rows.iterator.map(_.getLong(9)).toSet.toSeq.sorted
+            .map(b => s"pulse_bucket=$b")
+          TableManifest.appendCommit(spark, target, buckets) {
+            spark.createDataFrame(rows.asJava, graft.model.Schemas.pulses).coalesce(1)
+              .write.mode(org.apache.spark.sql.SaveMode.Append)
+              .partitionBy("pulse_bucket").parquet(target)
           }
           // summary raise AFTER the data commit: a crash in between
           // leaves the previous (lower — see the pre-write above) summary,
@@ -1017,9 +946,8 @@ object Ingest {
       }
     }
 
-    /** Atomic-enough summary write (`_frontier.json`, ignored by parquet
-      * readers and by [[graft.model.Domain.storePulsesVersion]]'s change
-      * probe): stage to a dot-tmp sibling, then rename over. A crash in
+    /** Atomic-enough summary write (`_frontier.json`, never a data file
+      * of the manifest): stage to a dot-tmp sibling, then rename over. A crash in
       * the tiny delete+rename window leaves no summary at all — the seed
       * falls back to the full read, never to a torn summary (the JSON is
       * also length-checked by the shape of [[readFrontier]]'s regex).
@@ -1043,27 +971,21 @@ object Ingest {
         throw new java.io.IOException(s"frontier summary rename failed: $dst")
     }
 
-    /** Parse the flush-time frontier summary; any absence or damage reads
-      * as None (→ full-seed fallback). The span field is absent on
-      * pre-r16 stores (→ config base span).
+    /** Parse the flush-time frontier summary as (seq_pulse,
+      * frontier_bucket, span); any absence or damage, a missing `span`
+      * included, reads as None (→ full-seed fallback plus span recovery).
       */
     private def readFrontier(fs: org.apache.hadoop.fs.FileSystem,
-        pulsesPath: org.apache.hadoop.fs.Path): Option[(Long, Long, Option[Long])] = {
+        pulsesPath: org.apache.hadoop.fs.Path): Option[(Long, Long, Long)] = {
       val f = new org.apache.hadoop.fs.Path(pulsesPath, "_frontier.json")
       if (!fs.exists(f)) None
       else try {
         val in = fs.open(f)
-        val text = try {
-          val buf = new java.io.ByteArrayOutputStream()
-          val chunk = new Array[Byte](4096)
-          var n = in.read(chunk)
-          while (n > 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-          buf.toString("UTF-8")
-        } finally in.close()
-        val re = """\{"seq_pulse":(-?\d+),"frontier_bucket":(-?\d+)(?:,"span":(\d+))?\}""".r
+        val text = try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
+          finally in.close()
+        val re = """\{"seq_pulse":(-?\d+),"frontier_bucket":(-?\d+),"span":(\d+)\}""".r
         text.trim match {
-          case re(seq, bucket, span) =>
-            Some((seq.toLong, bucket.toLong, Option(span).map(_.toLong)))
+          case re(seq, bucket, span) => Some((seq.toLong, bucket.toLong, span.toLong))
           case _ => None
         }
       } catch { case NonFatal(_) => None }
@@ -1103,18 +1025,6 @@ object Ingest {
       }
     }
   }
-
-  private val PulsesSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("pulse_number", org.apache.spark.sql.types.LongType, nullable = false),
-    org.apache.spark.sql.types.StructField("prev_pulse_number", org.apache.spark.sql.types.LongType, nullable = false),
-    org.apache.spark.sql.types.StructField("next_pulse_number", org.apache.spark.sql.types.LongType, nullable = false),
-    org.apache.spark.sql.types.StructField("is_complete", org.apache.spark.sql.types.BooleanType, nullable = false),
-    org.apache.spark.sql.types.StructField("is_sequential", org.apache.spark.sql.types.BooleanType, nullable = false),
-    org.apache.spark.sql.types.StructField("jet_drop_amount", org.apache.spark.sql.types.IntegerType, nullable = false),
-    org.apache.spark.sql.types.StructField("record_amount", org.apache.spark.sql.types.LongType, nullable = false),
-    org.apache.spark.sql.types.StructField("result_amount", org.apache.spark.sql.types.LongType, nullable = false),
-    org.apache.spark.sql.types.StructField("timestamp", org.apache.spark.sql.types.LongType, nullable = false),
-    org.apache.spark.sql.types.StructField("pulse_bucket", org.apache.spark.sql.types.LongType, nullable = false)))
 
   /** The ETL binary's own ops mux — the reference starts the
     * /healthcheck router and a metrics HTTP server inside

@@ -59,9 +59,13 @@ object Endpoints {
       fromPulse: Option[Long] = None, toPulse: Option[Long] = None,
       fromTimestamp: Option[Long] = None, toTimestamp: Option[Long] = None,
       asc: Boolean = false): DataFrame = {
-    val p = pulsesView(spark, dir)
     if (fromTimestamp.isEmpty && toTimestamp.isEmpty) {
+      // the index BEFORE the view: a rebuild is a Spark job of its own,
+      // and a view resolved ahead of it would have to outlive that job as
+      // well before its fetch runs — on a live store, two commits inside
+      // that span retire the files the view planned
       val chain = Domain.pulseChainIndex(spark, dir)
+      val p = pulsesView(spark, dir)
       val total = chain.countInRange(fromPulse, toPulse)
       val slice = chain.pageSlice(fromPulse, toPulse, asc, page.offset, page.limit)
       // the slow path's post-join shape: page columns nullable (the
@@ -107,6 +111,7 @@ object Endpoints {
       // fall through: the index slice and the fetch disagreed (a commit
       // landed in between) — the scan path below resolves one snapshot
     }
+    val p = pulsesView(spark, dir)
     val filtered = p
       .filter(Predicates.range(col("pulse_number"), gte = fromPulse, lte = toPulse))
       .filter(Predicates.range(col("timestamp"), gte = fromTimestamp, lte = toTimestamp))

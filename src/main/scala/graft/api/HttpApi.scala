@@ -98,11 +98,10 @@ object HttpApi {
   // ---- routing ---------------------------------------------------------
 
   /** True when `e` is a scan whose planned file is gone by read time: a
-    * LEGACY (pre-manifest) store's partition rewrite, or a manifested
-    * read that outlived TWO commits of the same table (a superseded
-    * generation survives one full commit cycle,
-    * [[graft.ingest.TableManifest]]). Either way a fresh resolution
-    * serves a committed page: the HTTP handler re-runs the request
+    * manifested read that outlived TWO commits of the same table (a
+    * superseded generation survives one full commit cycle,
+    * [[graft.ingest.TableManifest]]). A fresh resolution serves a
+    * committed page: the HTTP handler re-runs the request
     * ([[routeFresh]]) and the exporter's next poll re-resolves by design,
     * so neither kills a request or a subscriber over the window.
     */

@@ -48,13 +48,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * already indirected through [[readTable]], so that change lands here,
   * not in the serving layer.
   *
-  * Legacy stores (written before manifests) have no `_manifests/`
-  * directory: [[readTable]] falls back to the plain directory-listing
-  * read, and the first manifested commit BOOTSTRAPS a snapshot from one
-  * full listing. A table either has manifests (every commit goes through
-  * [[commit]]) or has none — mixing manifested commits with raw
-  * overwrite writers on one table is unsupported, like any other second
-  * writer.
+  * Every store table is manifested: a table with no committed manifest
+  * holds no committed data, whatever files its directory holds (a first
+  * commit that died before its publish leaves exactly that). A store
+  * written before manifests existed is not read.
   */
 object TableManifest {
 
@@ -75,10 +72,6 @@ object TableManifest {
     new Path(manifestsDir(table), f"v$v%019d.json")
   private val VersionRe = "v(\\d{19})\\.json".r
 
-  /** True when `tablePath` is manifest-addressed (has committed manifests). */
-  def isManifested(fs: FileSystem, tablePath: String): Boolean =
-    latestVersion(fs, new Path(tablePath)).isDefined
-
   private def latestVersion(fs: FileSystem, table: Path): Option[Long] =
     latestVersionStatus(fs, table).map(_._1)
 
@@ -98,11 +91,11 @@ object TableManifest {
     }.maxByOption(_._1)
   }
 
-  /** The newest committed snapshot. Absence (no `_manifests/`) means a
-    * legacy table; a PRESENT but unreadable newest manifest throws — the
-    * write protocol makes that state impossible without external damage,
-    * and silently falling back to a directory listing would serve
-    * superseded generations as duplicates.
+  /** The newest committed snapshot. Absence (no `_manifests/`) means
+    * nothing is committed; a PRESENT but unreadable newest manifest
+    * throws — the write protocol makes that state impossible without
+    * external damage, and silently falling back to a directory listing
+    * would serve superseded generations as duplicates.
     *
     * One narrow race is retried instead of thrown: [[commit]]'s step-4
     * prune deletes manifests older than the previous version, so a
@@ -187,8 +180,10 @@ object TableManifest {
     * pre-write listing — previous generation plus any crash orphans).
     * Steps, in crash-safe order:
     *
-    *  1. resolve the previous snapshot (or bootstrap one from a full
-    *     listing, for a table's first manifested commit);
+    *  1. resolve the previous snapshot (an empty one for a table's
+    *     first commit — files a crashed earlier first commit left in
+    *     OTHER partitions stay invisible, and those in the partitions
+    *     this commit touches are tombstoned through `superseded`);
     *  2. physically delete the PREVIOUS version's tombstones — they have
     *     now been superseded for one full commit cycle;
     *  3. write version v+1 (tmp + rename) with the merged partition map
@@ -205,8 +200,7 @@ object TableManifest {
       superseded: Map[String, Seq[String]]): Snapshot = {
     val table = new Path(tablePath)
     val fs = table.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val prev = latest(fs, tablePath).getOrElse(
-      Snapshot(0L, bootstrapPartitions(fs, table) ++ superseded, Seq.empty))
+    val prev = latest(fs, tablePath).getOrElse(Snapshot(0L, Map.empty, Seq.empty))
     prev.tombstones.foreach { rel =>
       try { fs.delete(new Path(table, rel), false); () }
       catch { case _: java.io.FileNotFoundException => () }
@@ -235,9 +229,9 @@ object TableManifest {
         case _ => ()
       }
     }
-    // any relation cached against this path (legacy mode, standing
-    // indexes rooted under it) must re-resolve; the version-keyed read
-    // cache replaces its entry on the version bump by itself
+    // any relation cached against this path (standing indexes rooted
+    // under it) must re-resolve; the version-keyed read cache replaces
+    // its entry on the version bump by itself
     graft.sources.RelationCache.invalidate(tablePath)
     next
   }
@@ -290,69 +284,35 @@ object TableManifest {
   private def isDataFile(name: String): Boolean =
     !name.startsWith("_") && !name.startsWith(".") && name.endsWith(".parquet")
 
-  /** Bootstrap a partition map for a legacy table from one full listing
-    * (partition dirs only — a root-level flat layout is migrated by the
-    * daemon's seed before any manifested commit can happen).
-    */
-  private def bootstrapPartitions(fs: FileSystem, table: Path): Map[String, Seq[String]] =
-    if (!fs.exists(table)) Map.empty
-    else fs.listStatus(table).iterator.collect {
-      case st if st.isDirectory && st.getPath.getName.contains("=") =>
-        st.getPath.getName ->
-          listPartitionFiles(fs, table.toString, st.getPath.getName).toSeq.sorted
-    }.filter(_._2.nonEmpty).toMap
-
   // ---- reads -------------------------------------------------------------
 
-  /** Manifest-aware table read — THE read path for store tables. Some(df)
-    * when the table holds committed data:
-    *
-    *  - manifested: the newest snapshot's explicit file list, planned
-    *    with `basePath` so partition columns and their pruning behave
-    *    exactly like a directory read; the resolved relation is cached
-    *    per (session, path, version) so an unchanged store pays ZERO
-    *    listings after its first request — and staleness is structurally
-    *    impossible, the version moves with every commit;
-    *  - legacy (no `_manifests/`): the plain directory read, uncached
-    *    (the pre-manifest live-store behavior);
-    *  - no data at all: None (callers serve their schema-stable empty).
+  /** Manifest-aware table read — THE read path for store tables: the
+    * newest snapshot's explicit file list, planned with `basePath` so
+    * partition columns and their pruning behave exactly like a directory
+    * read. The resolved relation is cached per (session, path, version),
+    * so an unchanged store pays ZERO listings after its first request —
+    * and staleness is structurally impossible, the version moves with
+    * every commit. None when no manifest is committed (callers serve
+    * their schema-stable empty): data files without a manifest are a
+    * first commit that never published, and are never served.
     */
   def readTable(spark: SparkSession, tablePath: String): Option[DataFrame] = {
-    val table = new Path(tablePath)
-    val fs = table.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    latest(fs, tablePath) match {
-      case Some(snap) =>
-        val files = snap.files(tablePath)
-        if (files.isEmpty) None
-        else Some(graft.sources.RelationCache.versionedParquet(
-          spark, tablePath, snap.version) {
-          spark.read.option("basePath", tablePath).parquet(files: _*)
-        })
-      case None =>
-        if (hasVisibleData(fs, table)) Some(spark.read.parquet(tablePath))
-        else None
+    val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    latest(fs, tablePath).filter(_.partitions.nonEmpty).map { snap =>
+      graft.sources.RelationCache.versionedParquet(spark, tablePath, snap.version) {
+        spark.read.option("basePath", tablePath).parquet(snap.files(tablePath): _*)
+      }
     }
   }
 
-  /** A change token for cache keys: the manifest version when manifested
-    * (one tiny-dir listing, no recursive walk), None for legacy tables
-    * (callers fall back to their own probes).
+  /** A change token for cache keys: the manifest version (one tiny-dir
+    * listing, no recursive walk), None for a table with no manifest.
     */
   def versionToken(spark: SparkSession, tablePath: String): Option[String] = {
     val table = new Path(tablePath)
     val fs = table.getFileSystem(spark.sparkContext.hadoopConfiguration)
     latestVersion(fs, table).map(v => s"m$v")
   }
-
-  /** True when the directory holds any non-hidden entry (the legacy
-    * "has committed data" probe — a dir holding only `_SUCCESS` from a
-    * zero-row commit reads as empty instead of failing schema inference).
-    */
-  def hasVisibleData(fs: FileSystem, table: Path): Boolean =
-    fs.exists(table) && fs.listStatus(table).exists { st =>
-      val n = st.getPath.getName
-      !n.startsWith("_") && !n.startsWith(".")
-    }
 
   // ---- wire format ---------------------------------------------------------
 

@@ -306,14 +306,14 @@ object Domain {
 
   def pulseChainIndex(spark: SparkSession, dir: String): PulseChainIndex =
     // an ingest store is LIVE (the daemon appends pulses between
-    // requests), so its chain index caches against a VERSION of the
-    // pulses directory (file paths + mtimes + sizes — every flush writes
-    // fresh part- file names, so any change moves the version) and
-    // rebuilds only when it moves: a plain cached copy would patch page
-    // links against a stale chain, while a rebuild per request is an
+    // requests), so its chain index caches against the pulses table's
+    // manifest VERSION (every flush publishes a new one) and rebuilds
+    // only when it moves: a plain cached copy would patch page links
+    // against a stale chain, while a rebuild per request is an
     // O(pulse-history) Spark collect per HTTP hit. The version probe is
-    // one driver-side listing of the tiny dimension — FS metadata only,
-    // no job. The fingerprinted testdata spine is immutable → cached.
+    // one driver-side listing of the table's `_manifests/` dir — FS
+    // metadata only, no job. The fingerprinted testdata spine is
+    // immutable → cached.
     if (StoreViews.isStore(spark, dir)) {
       val v = storePulsesVersion(spark, dir)
       val cached = storeChainCache.get(dir)
@@ -343,46 +343,13 @@ object Domain {
     else java.nio.ByteBuffer.wrap(ref.takeRight(8)).getLong
 
   /** Change token for the store's pulses dimension — the rebuild trigger
-    * for the live chain index above. A MANIFESTED store answers its
-    * commit-manifest version (one tiny-dir listing, no recursive walk,
-    * bumped by every flush — [[graft.ingest.TableManifest]]); a legacy
-    * store falls back to FNV-1a over (path, mtime, length) of every data
-    * file. Bounded by the dimension's file count either way, and never a
-    * Spark job.
+    * for the live chain index above: its commit-manifest version (one
+    * tiny-dir listing, bumped by every flush —
+    * [[graft.ingest.TableManifest]]), "absent" before the first flush.
+    * Never a Spark job.
     */
-  private def storePulsesVersion(spark: SparkSession, dir: String): String = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/pulses")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.ingest.TableManifest.versionToken(spark, s"$dir/pulses").getOrElse {
-    if (!fs.exists(p)) "absent"
-    else {
-      var h = 0xcbf29ce484222325L
-      def mix(x: Long): Unit = { h ^= x; h *= 0x100000001b3L }
-      try {
-        val it = fs.listFiles(p, true)
-        while (it.hasNext) {
-          val st = it.next()
-          val n = st.getPath.getName
-          if (!n.startsWith("_") && !n.startsWith(".")) {
-            mix(st.getPath.toString.hashCode.toLong)
-            mix(st.getModificationTime)
-            mix(st.getLen)
-          }
-        }
-        java.lang.Long.toHexString(h)
-      } catch {
-        // the recursive listing races concurrent flush/migration churn: a
-        // part- file deleted between listing and stat throws out of the
-        // RemoteIterator, and propagating would turn the HTTP request
-        // into a 500. The directory is by definition mid-change — answer
-        // a version that matches nothing so the caller falls through to
-        // a rebuild against whatever the dimension reads as right now.
-        case _: java.io.FileNotFoundException =>
-          s"changed-${System.nanoTime()}"
-      }
-    }
-    }
-  }
+  private def storePulsesVersion(spark: SparkSession, dir: String): String =
+    graft.ingest.TableManifest.versionToken(spark, s"$dir/pulses").getOrElse("absent")
 
   private def buildChainIndex(spark: SparkSession, dir: String): PulseChainIndex = {
     val pairs = servedPulses(spark, dir)

@@ -13,9 +13,12 @@ import org.apache.spark.sql.types._
   */
 object Schemas {
 
-  /** `pulses` — ~10s ledger time slots; a doubly-linked time series.
-    * reference: `etl/models/models.go:66-75`. Small dimension (1 row / 10s
-    * ≈ 3M rows/year) — always broadcast-joinable.
+  /** `pulses` — ~10s ledger time slots; a doubly-linked time series, as
+    * the ingest daemon writes it (reference: `etl/models/models.go:66-75`,
+    * plus the per-type `result_amount` counter). Small dimension (1 row /
+    * 10s ≈ 3M rows/year) — always broadcast-joinable. `pulse_bucket` =
+    * `pulse_number / span` is the partition column the daemon's flush
+    * replaces whole.
     */
   val pulses: StructType = StructType(Seq(
     StructField("pulse_number", LongType, nullable = false),
@@ -23,23 +26,11 @@ object Schemas {
     StructField("next_pulse_number", LongType, nullable = false),
     StructField("is_complete", BooleanType, nullable = false),
     StructField("is_sequential", BooleanType, nullable = false),
+    StructField("jet_drop_amount", IntegerType, nullable = false),
+    StructField("record_amount", LongType, nullable = false),
+    StructField("result_amount", LongType, nullable = false),
     StructField("timestamp", LongType, nullable = false),
-    StructField("jet_drop_amount", LongType, nullable = false),
-    StructField("record_amount", LongType, nullable = false)
-  ))
-
-  /** `jet_drops` — per-(pulse, jet) blocks; `jet_id` is a binary-tree bit
-    * prefix string (root = ""). reference: `etl/models/models.go:46-55`.
-    */
-  val jetDrops: StructType = StructType(Seq(
-    StructField("pulse_number", LongType, nullable = false),
-    StructField("jet_id", StringType, nullable = false),
-    StructField("first_prev_hash", BinaryType),
-    StructField("second_prev_hash", BinaryType),
-    StructField("hash", BinaryType),
-    StructField("raw_data", BinaryType),
-    StructField("timestamp", LongType, nullable = false),
-    StructField("record_amount", IntegerType, nullable = false)
+    StructField("pulse_bucket", LongType, nullable = false)
   ))
 
   /** `records` — the fact table. PK `reference`; `(pulse_number, order)` is

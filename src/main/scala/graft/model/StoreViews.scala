@@ -13,9 +13,9 @@ import org.apache.spark.sql.functions._
   * [[graft.model.Domain]] routes `served*` here whenever `dir` is a
   * store ([[isStore]]); the testdata corpus path (views derived from
   * `events.parquet`) is untouched. The adapter maps the storage schema
-  * ([[Schemas.records]]/[[Schemas.jetDrops]], plus the daemon's pulses
-  * dimension) onto the column contract the [[graft.api.Endpoints]]
-  * functions already serve:
+  * ([[Schemas.records]], the drop rows [[graft.ingest.PulseWriter]]
+  * commits, and [[Schemas.pulses]]) onto the column contract the
+  * [[graft.api.Endpoints]] functions already serve:
   *
   *  - '''identity references become 64-bit keys''' (xxhash64 of the
   *    stored bytes, nulls preserved): the serving layer keys objects and
@@ -48,10 +48,9 @@ import org.apache.spark.sql.functions._
   * small JSON read per table per request (the change signal; the
   * Postgres analog is snapshot acquisition) and zero DATA-directory
   * listings or schema probes, and staleness is structurally impossible
-  * because the version moves with every commit. A legacy store written
-  * before manifests falls back to the old per-request directory listing with
-  * its (historical) racing-rewrite 500 window — the first manifested
-  * commit upgrades it in place.
+  * because the version moves with every commit. A table with no
+  * committed manifest serves as empty; a store written before manifests
+  * is not read.
   */
 object StoreViews {
 
@@ -112,23 +111,6 @@ object StoreViews {
   private def refKey(c: Column): Column =
     when(c.isNull, lit(null).cast("long")).otherwise(xxhash64(c))
 
-  /** Record-hash FORMAT-BREAK normalization: builds before round 13
-    * stored `sha2(...)` hex-STRING bytes (64 ASCII chars) where the
-    * current writer stores the 32-byte digest. A store that appends new
-    * pulses onto old history therefore mixes the two encodings in one
-    * column; rewriting the history (100 TB of records for a 32-byte
-    * column) is the wrong fix, so the SERVE boundary normalizes instead:
-    * a 64-byte value that decodes as lowercase hex is unhexed to its
-    * digest, anything else passes through. Precise by construction —
-    * this writer has only ever produced the two encodings, and a real
-    * digest is always 32 bytes.
-    */
-  private def normalizedHash(c: Column): Column = {
-    val asStr = decode(c, "UTF-8")
-    when(length(c) === 64 && asStr.rlike("^[0-9a-f]{64}$"), unhex(asStr))
-      .otherwise(c)
-  }
-
   // Canonical serving schemas, for the EMPTY-TABLE branch below: a brand
   // new store serves `{total:0}` pages from a schema-stable empty frame
   // until the daemon's first commit/flush lands — the records table is
@@ -176,7 +158,7 @@ object StoreViews {
         refKey(col("prototype_reference")).as("prototype_reference"),
         refKey(col("prev_record_reference")).as("prev_record_reference"),
         col("payload"),
-        normalizedHash(col("hash")).as("hash"),
+        col("hash"),
         col("jet_id"),
         col("pulse_number").cast("long").as("pulse_number"),
         col("order"),
@@ -205,8 +187,7 @@ object StoreViews {
       }
 
   /** The daemon-maintained pulses dimension in the serving shape (the
-    * bucket partition column is a flush concern, never served; a legacy
-    * FLAT layout — no bucket column — serves identically).
+    * bucket partition column is a flush concern, never served).
     */
   def pulses(spark: SparkSession, dir: String): DataFrame =
     graft.ingest.TableManifest.readTable(spark, s"$dir/pulses")
@@ -221,12 +202,7 @@ object StoreViews {
         col("jet_drop_amount").cast("long").as("jet_drop_amount"),
         col("record_amount"),
         // the per-type counter the gap/status views consume — the corpus
-        // spine carries it too, so the SERVED schema is layout-stable.
-        // A hand-built legacy dimension without the column serves 0 (the
-        // daemon migrates its own legacy stores with a records-table
-        // backfill at seed time; a dimension nobody re-seeds has no
-        // better source at serve time)
-        (if (raw.columns.contains("result_amount")) col("result_amount")
-         else lit(0L)).as("result_amount"))
+        // spine carries it too, so the SERVED schema is layout-stable
+        col("result_amount"))
     }
 }

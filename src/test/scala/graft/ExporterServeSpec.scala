@@ -63,17 +63,12 @@ class ExporterServeSpec extends SparkSpec {
     // boot-time store: ONLY pulse 0 exists (complete+sequential)
     ingest.PulseWriter.commitPulse(
       wire.filter(col("pulse_number") === start), base)
-    import spark.implicits._
-    def pulseRow(i: Int, complete: Boolean) = {
+    def pulseRow(i: Int) = {
       val p = start + i * gen.Fixtures.PulseDelta
-      (p, p - gen.Fixtures.PulseDelta, p + gen.Fixtures.PulseDelta,
-        complete, complete, 2, 6L, p - ingest.Canonicalize.MinTimePulse)
+      StorePulse(p, p - gen.Fixtures.PulseDelta, p + gen.Fixtures.PulseDelta,
+        complete = true, sequential = true, 2, 6L)
     }
-    Seq(pulseRow(0, complete = true))
-      .toDF("pulse_number", "prev_pulse_number", "next_pulse_number",
-        "is_complete", "is_sequential", "jet_drop_amount", "record_amount",
-        "timestamp")
-      .coalesce(1).write.parquet(s"$base/pulses")
+    writeStorePulses(base, Seq(pulseRow(0)))
 
     val handle = ExporterServe.bootstrap(spark, base, port = 0, pulsePeriodMs = 50L)
     val ch = GrpcTransport.channel("localhost", handle.port)
@@ -93,11 +88,8 @@ class ExporterServeSpec extends SparkSpec {
       Thread.sleep(300) // several empty polls against the boot snapshot
       val p1 = start + gen.Fixtures.PulseDelta
       ingest.PulseWriter.commitPulse(wire.filter(col("pulse_number") === p1), base)
-      Seq(pulseRow(1, complete = true))
-        .toDF("pulse_number", "prev_pulse_number", "next_pulse_number",
-          "is_complete", "is_sequential", "jet_drop_amount", "record_amount",
-          "timestamp")
-        .coalesce(1).write.mode("append").parquet(s"$base/pulses")
+      // the flush replaces the whole bucket: both rows
+      writeStorePulses(base, Seq(pulseRow(0), pulseRow(1)))
       val resp = got.poll(30, java.util.concurrent.TimeUnit.SECONDS)
       assert(resp != null, "the stream never served the post-start pulse")
       assert(resp.pulseNumber == p1 && resp.prevPulseNumber == start)

@@ -66,15 +66,10 @@ class StoreServeSpec extends SparkSpec {
       PulseWriter.commitPulse(
         wire.filter(col("pulse_number") === start + i * delta), baseB)
     }
-    import spark.implicits._
-    (0 until nPulses).map { i =>
+    writeStorePulses(baseB, (0 until nPulses).map { i =>
       val p = start + i * delta
-      (p, p - delta, p + delta, true, true, 2, perPulse.toLong,
-        p - graft.ingest.Canonicalize.MinTimePulse)
-    }.toDF("pulse_number", "prev_pulse_number", "next_pulse_number",
-      "is_complete", "is_sequential", "jet_drop_amount", "record_amount", "timestamp")
-      .coalesce(1)
-      .write.parquet(s"$baseB/pulses")
+      StorePulse(p, p - delta, p + delta, true, true, 2, perPulse.toLong)
+    })
 
     assert(StoreViews.isStore(spark, baseA) && StoreViews.isStore(spark, baseB))
 
@@ -181,14 +176,10 @@ class StoreServeSpec extends SparkSpec {
       PulseWriter.commitPulse(
         wire.filter(col("pulse_number") === start + i * delta), base)
     }
-    import spark.implicits._
-    (0 until 2).map { i =>
+    writeStorePulses(base, (0 until 2).map { i =>
       val p = start + i * delta
-      (p, p - delta, p + delta, true, true, 2, perPulse.toLong,
-        p - graft.ingest.Canonicalize.MinTimePulse)
-    }.toDF("pulse_number", "prev_pulse_number", "next_pulse_number",
-      "is_complete", "is_sequential", "jet_drop_amount", "record_amount", "timestamp")
-      .coalesce(1).write.parquet(s"$base/pulses")
+      StorePulse(p, p - delta, p + delta, true, true, 2, perPulse.toLong)
+    })
 
     // raw STORED bytes (the storage schema keeps references binary)
     val raw = storeTable(base, "records")
@@ -234,35 +225,6 @@ class StoreServeSpec extends SparkSpec {
       pulses, records, start, Seq(Array[Byte](1, 2, 3))).collect().isEmpty)
   }
 
-  test("legacy hex-encoded record hashes normalize to the 32-byte digest " +
-      "at the serve boundary — a mixed-encoding store serves uniformly") {
-    // builds before the sha2-digest fix stored the 64-char HEX STRING's
-    // bytes; a store appending new pulses onto that history mixes the
-    // two encodings in one column. The serve boundary unhexes the legacy
-    // shape instead of rewriting history (ADVICE r13).
-    val base = java.nio.file.Files.createTempDirectory("graft-serve-hash").toString
-    val raw = "legacy payload".getBytes("UTF-8")
-    val digest = java.security.MessageDigest.getInstance("SHA-256").digest(raw)
-    val hexBytes = digest.map("%02x".format(_)).mkString.getBytes("UTF-8")
-    assert(hexBytes.length == 64)
-    import scala.jdk.CollectionConverters._
-    def recordRow(p: Long, hash: Array[Byte]) = org.apache.spark.sql.Row(
-      Array[Byte](1, 2, 3), "state", null, null, raw, null, hash, raw,
-      "0", p, 1, p - graft.ingest.Canonicalize.MinTimePulse)
-    // legacy pulse with hex-bytes hash; current pulse with the digest
-    spark.createDataFrame(
-      Seq(recordRow(start, hexBytes), recordRow(start + delta, digest)).asJava,
-      graft.model.Schemas.records)
-      .write.partitionBy("pulse_number").parquet(s"$base/records")
-    val served = graft.model.StoreViews.records(spark, base)
-      .select("pulse_number", "hash").collect()
-      .map(r => r.getLong(0) -> r.getAs[Array[Byte]](1)).toMap
-    assert(served(start).toSeq == digest.toSeq,
-      "legacy hex encoding must serve as the 32-byte digest")
-    assert(served(start + delta).toSeq == digest.toSeq,
-      "current digests pass through untouched")
-  }
-
   test("reads racing a reload's rewrite of the SAME pulse ALWAYS serve a " +
       "committed page — zero 500s, zero torn or empty pages") {
     // the manifest isolation contract (StoreViews.scala): every read
@@ -281,14 +243,10 @@ class StoreServeSpec extends SparkSpec {
       PulseWriter.commitPulse(
         wireA.filter(col("pulse_number") === start + i * delta), base)
     }
-    import spark.implicits._
-    (0 until 2).map { i =>
+    writeStorePulses(base, (0 until 2).map { i =>
       val p = start + i * delta
-      (p, p - delta, p + delta, true, true, 2, perPulse.toLong,
-        p - graft.ingest.Canonicalize.MinTimePulse)
-    }.toDF("pulse_number", "prev_pulse_number", "next_pulse_number",
-      "is_complete", "is_sequential", "jet_drop_amount", "record_amount", "timestamp")
-      .coalesce(1).write.parquet(s"$base/pulses")
+      StorePulse(p, p - delta, p + delta, true, true, 2, perPulse.toLong)
+    })
 
     val hot = start + delta
     val path = s"/jet-drops/0:$hot/records"
@@ -352,24 +310,11 @@ class StoreServeSpec extends SparkSpec {
     // a records/ dir makes it a store
     PulseWriter.commitPulse(
       Fixtures.multiPulseBatches(spark, 2, 4, startPulse = start), base)
-    import spark.implicits._
-    def dim(recordAmount: Long) = (0 until 2).map { i =>
-      val p = start + i * delta
-      (p, p - delta, p + delta, true, true, 2L, recordAmount,
-        p - graft.ingest.Canonicalize.MinTimePulse,
-        p / graft.Ingest.Config().flushBucketSpan)
-    }.toDF("pulse_number", "prev_pulse_number", "next_pulse_number",
-      "is_complete", "is_sequential", "jet_drop_amount", "record_amount",
-      "timestamp", "pulse_bucket")
-    def flush(recordAmount: Long): Unit = {
-      val d = dim(recordAmount)
-      val buckets = d.select(col("pulse_bucket")).distinct()
-        .collect().map(r => s"pulse_bucket=${r.getLong(0)}").toSeq
-      graft.ingest.TableManifest.appendCommit(spark, s"$base/pulses", buckets) {
-        d.coalesce(1).write.mode("append").partitionBy("pulse_bucket")
-          .parquet(s"$base/pulses")
-      }
-    }
+    def flush(recordAmount: Long): Unit =
+      writeStorePulses(base, (0 until 2).map { i =>
+        val p = start + i * delta
+        StorePulse(p, p - delta, p + delta, true, true, 2, recordAmount)
+      })
     flush(4L)
     val h = HttpApi.start(spark, base, port = 0, poolSize = 4)
     try {
@@ -410,30 +355,22 @@ class StoreServeSpec extends SparkSpec {
   test("the live chain index follows a pulses append: version-keyed cache " +
       "rebuilds on change and reuses the instance when nothing moved") {
     val base = java.nio.file.Files.createTempDirectory("graft-serve-chain").toString
-    import spark.implicits._
     def pulseRow(i: Int) = {
       val p = start + i * delta
-      (p, p - delta, p + delta, true, true, 2, 12L,
-        p - graft.ingest.Canonicalize.MinTimePulse)
+      StorePulse(p, p - delta, p + delta, true, true, 2, 12L)
     }
     // a records/ dir makes it a store; pulses starts with two rows
     PulseWriter.commitPulse(
       Fixtures.multiPulseBatches(spark, 1, 6, startPulse = start), base)
-    (0 until 2).map(pulseRow).toDF("pulse_number", "prev_pulse_number",
-      "next_pulse_number", "is_complete", "is_sequential", "jet_drop_amount",
-      "record_amount", "timestamp")
-      .coalesce(1).write.parquet(s"$base/pulses")
+    writeStorePulses(base, (0 until 2).map(pulseRow))
 
     val idx1 = Domain.pulseChainIndex(spark, base)
     assert(idx1.size == 2 && idx1.exists(start + delta))
     assert(Domain.pulseChainIndex(spark, base) eq idx1,
       "unchanged store must reuse the cached index (no rebuild per request)")
 
-    // a later flush appends a third pulse (new part- file → new version)
-    Seq(pulseRow(2)).toDF("pulse_number", "prev_pulse_number",
-      "next_pulse_number", "is_complete", "is_sequential", "jet_drop_amount",
-      "record_amount", "timestamp")
-      .coalesce(1).write.mode("append").parquet(s"$base/pulses")
+    // a later flush adds a third pulse (its bucket's rows → new version)
+    writeStorePulses(base, (0 until 3).map(pulseRow))
     val idx2 = Domain.pulseChainIndex(spark, base)
     assert(idx2.size == 3 && idx2.exists(start + 2 * delta),
       "chain index must rebuild when the pulses dimension moves")

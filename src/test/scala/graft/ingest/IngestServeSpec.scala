@@ -324,49 +324,6 @@ class IngestServeSpec extends SparkSpec {
     assert(storeTable(base, "records").count() == 12L)
   }
 
-  test("a flat pre-bucketing pulses layout migrates to bucketed form on seed, intact") {
-    val base = java.nio.file.Files.createTempDirectory("graft-daemon-migrate").toString
-    val nPulses = 2
-    val wire = Fixtures.multiPulseBatches(spark, nPulses, recordsPerPulse = 6,
-      startPulse = start)
-    // a legacy store: records/jet_drops in today's layout, but the pulses
-    // dimension written FLAT (root-level part files, no pulse_bucket=)
-    (0 until nPulses).foreach { i =>
-      val p = start + i * delta
-      PulseWriter.commitPulse(wire.filter(col("pulse_number") === p), base)
-    }
-    import spark.implicits._
-    Seq(
-      (start, start - delta, start + delta, true, true, 2, 6L, start - 65536L),
-      (start + delta, start, start + 2 * delta, true, true, 2, 6L, start + delta - 65536L))
-      .toDF("pulse_number", "prev_pulse_number", "next_pulse_number",
-        "is_complete", "is_sequential", "jet_drop_amount", "record_amount", "timestamp")
-      .coalesce(1)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(s"$base/pulses")
-    assert(new java.io.File(s"$base/pulses").listFiles()
-      .exists(f => f.isFile && f.getName.startsWith("part-")), "fixture must be flat")
-
-    // seeding (start) must rewrite it bucketed IMMEDIATELY — before any
-    // loop runs — with every row intact; the daemon then resumes the feed
-    val s = bindOn(0, new ReplayExporter(wire))
-    val h = Ingest.bootstrap(spark, base, "localhost", s.getPort, start, fastCfg)
-    try {
-      val dirs = new java.io.File(s"$base/pulses").listFiles()
-      assert(dirs.exists(f => f.isDirectory && f.getName.startsWith("pulse_bucket=")),
-        "migration must produce the bucketed layout")
-      assert(!dirs.exists(f => f.isFile && f.getName.startsWith("part-")),
-        "no flat-era files may survive next to bucket partitions")
-      val migrated = storeTable(base, "pulses").orderBy("pulse_number").collect()
-      assert(migrated.length == nPulses)
-      assert(migrated.forall(_.getAs[Boolean]("is_sequential")))
-      assert(migrated.map(_.getAs[Long]("record_amount")).toSeq == Seq(6L, 6L))
-      assert(migrated.map(_.getAs[Int]("jet_drop_amount")).toSeq == Seq(2, 2))
-    } finally {
-      h.stop()
-      s.shutdownNow(); s.awaitTermination(5, TimeUnit.SECONDS)
-    }
-  }
-
   test("a pulses dimension that outgrew its bucket span re-buckets at the " +
       "extent-sized span on seed — rows intact, flushes address the coarse " +
       "dirs, and the full-read migration does not stay resident") {
@@ -396,16 +353,23 @@ class IngestServeSpec extends SparkSpec {
     val s2 = bindOn(0, new ReplayExporter(wire))
     val h2 = Ingest.bootstrap(spark, base, "localhost", s2.getPort, start, cfg)
     try {
+      val expectedSpan = Ingest.spanForExtent(start, start + (nLife1 - 1) * delta,
+        cfg.flushBucketSpan, cfg.maxPulseBuckets)
+      val coarseDirs = (start / expectedSpan to
+        (start + (nTotal - 1) * delta) / expectedSpan).map(b => s"pulse_bucket=$b")
+      // the migration staged a MANIFESTED table: the swapped-in dimension
+      // is served from its own snapshot before any flush of this life
+      val migratedSnap = TableManifest.latest(
+        new org.apache.hadoop.fs.Path(s"$base/pulses")
+          .getFileSystem(spark.sparkContext.hadoopConfiguration), s"$base/pulses")
+      assert(migratedSnap.exists(_.partitions.keySet == coarseDirs.toSet),
+        s"the re-bucketed table must commit its coarse dirs: $migratedSnap")
       assert(await()(h2.daemon.sequentialPulse == start + (nTotal - 1) * delta),
         s"daemon never converged after re-bucketing: ${h2.daemon.snapshot.keySet}")
       val dirs = bucketDirs()
       assert(dirs.length <= cfg.maxPulseBuckets && dirs.length < nLife1,
         s"re-bucketing must coarsen the layout: ${dirs.toSeq}")
-      val expectedSpan = Ingest.spanForExtent(start, start + (nLife1 - 1) * delta,
-        cfg.flushBucketSpan, cfg.maxPulseBuckets)
-      assert(dirs.toSeq == (start / expectedSpan to
-        (start + (nTotal - 1) * delta) / expectedSpan)
-        .map(b => s"pulse_bucket=$b"),
+      assert(dirs.toSeq == coarseDirs,
         s"post-restart flushes must land in the SAME coarse dirs: ${dirs.toSeq}")
       // the persisted summary carries the new span (the next restart's
       // flushes must keep addressing these dirs)
@@ -472,36 +436,43 @@ class IngestServeSpec extends SparkSpec {
     assert(pulses3.map(_.getAs[Long]("pulse_number")).distinct.length == nTotal3)
   }
 
-  test("an interrupted flat→bucketed migration recovers from either crash window on the next start") {
+  test("an interrupted re-bucketing migration recovers from either crash window on the next start") {
     val wire = Fixtures.multiPulseBatches(spark, nPulses = 2, recordsPerPulse = 6,
       startPulse = start)
-    def ts(p: Long) = p - Canonicalize.MinTimePulse
-    import spark.implicits._
-    def pulseRows = Seq(
-      (start, start - delta, start + delta, true, true, 2, 6L, ts(start)),
-      (start + delta, start, start + 2 * delta, true, true, 2, 6L, ts(start + delta)))
+    // span 10 = one pulse per bucket; re-bucket past 1 dir, so the two
+    // pulses' fine layout (2 dirs) migrates to the coarse span (1 dir)
+    val cfg = fastCfg.copy(flushBucketSpan = 10L, maxPulseBuckets = 1)
+    val coarse = Ingest.spanForExtent(start, start + delta,
+      cfg.flushBucketSpan, cfg.maxPulseBuckets)
+    val pulseRows = Seq(
+      StorePulse(start, start - delta, start + delta, true, true, 2, 6L),
+      StorePulse(start + delta, start, start + 2 * delta, true, true, 2, 6L))
+    def manifestDirs(base: String) = TableManifest.latest(
+      new org.apache.hadoop.fs.Path(s"$base/pulses")
+        .getFileSystem(spark.sparkContext.hadoopConfiguration), s"$base/pulses")
+      .map(_.partitions.keySet)
 
-    // ---- window 2: flat layout already deleted, rename pending — the
-    // sibling holds the COMPLETE bucketed copy and seed must finish the
-    // swap (without this the dimension would read as absent and the next
-    // flush would seed from an empty register)
+    // ---- window 2: original already deleted, rename pending — the
+    // sibling holds a COMMITTED manifest of the complete re-bucketed copy
+    // and seed must finish the swap (without this the dimension would
+    // read as absent and the next flush would seed from an empty register)
     val base2 = java.nio.file.Files.createTempDirectory("graft-migrate-w2").toString
     (0 until 2).foreach { i =>
       PulseWriter.commitPulse(wire.filter(col("pulse_number") === start + i * delta), base2)
     }
-    pulseRows.map { case (p, pr, nx, c, s, jd, ra, t) => (p, pr, nx, c, s, jd, ra, t, p / 100000L) }
-      .toDF("pulse_number", "prev_pulse_number", "next_pulse_number",
-        "is_complete", "is_sequential", "jet_drop_amount", "record_amount",
-        "timestamp", "pulse_bucket")
-      .coalesce(1)
-      .write.partitionBy("pulse_bucket").parquet(s"$base2/pulses_migrating")
+    writeStorePulses(base2, pulseRows, span = coarse, table = "pulses_migrating")
+    java.nio.file.Files.write(
+      java.nio.file.Paths.get(s"$base2/pulses_migrating/_frontier.json"),
+      s"""{"seq_pulse":${start + delta},"frontier_bucket":${(start + delta) / coarse},"span":$coarse}"""
+        .getBytes("UTF-8"))
     // no $base2/pulses at all — the exact on-disk state of a crash
-    // between fs.delete(pulses) and fs.rename(migrating, pulses)
+    // between the original's delete and the sibling's rename
     val s2 = bindOn(0, new ReplayExporter(wire))
-    val h2 = Ingest.bootstrap(spark, base2, "localhost", s2.getPort, start, fastCfg)
+    val h2 = Ingest.bootstrap(spark, base2, "localhost", s2.getPort, start, cfg)
     try {
       assert(!new java.io.File(s"$base2/pulses_migrating").exists(),
         "recovery must consume the staged sibling")
+      assert(manifestDirs(base2).contains(Set(s"pulse_bucket=${start / coarse}")))
       val rec = storeTable(base2, "pulses").orderBy("pulse_number").collect()
       assert(rec.length == 2)
       assert(rec.forall(_.getAs[Boolean]("is_sequential")))
@@ -514,30 +485,26 @@ class IngestServeSpec extends SparkSpec {
       h2.stop(); s2.shutdownNow(); s2.awaitTermination(5, TimeUnit.SECONDS)
     }
 
-    // ---- window 1: crash DURING the sibling write — the flat original
-    // is still the truth; seed must drop the partial sibling and redo
-    // the migration from the flat copy
+    // ---- window 1: crash DURING the sibling write — data files but no
+    // manifest; the fine-span original is still the truth, so seed must
+    // drop the partial sibling and redo the migration from it
     val base1 = java.nio.file.Files.createTempDirectory("graft-migrate-w1").toString
     (0 until 2).foreach { i =>
       PulseWriter.commitPulse(wire.filter(col("pulse_number") === start + i * delta), base1)
     }
-    pulseRows
-      .toDF("pulse_number", "prev_pulse_number", "next_pulse_number",
-        "is_complete", "is_sequential", "jet_drop_amount", "record_amount", "timestamp")
-      .coalesce(1)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(s"$base1/pulses")
-    val partial = new java.io.File(s"$base1/pulses_migrating/pulse_bucket=0")
+    writeStorePulses(base1, pulseRows, span = cfg.flushBucketSpan)
+    assert(manifestDirs(base1).exists(_.size == 2), "fixture needs 2 fine dirs")
+    val partial = new java.io.File(s"$base1/pulses_migrating/pulse_bucket=${start / coarse}")
     assert(partial.mkdirs())
     java.nio.file.Files.write(partial.toPath.resolve("part-00000.parquet"),
       Array[Byte](0x50, 0x41, 0x52)) // truncated mid-write
     val s1 = bindOn(0, new ReplayExporter(wire))
-    val h1 = Ingest.bootstrap(spark, base1, "localhost", s1.getPort, start, fastCfg)
+    val h1 = Ingest.bootstrap(spark, base1, "localhost", s1.getPort, start, cfg)
     try {
       assert(!new java.io.File(s"$base1/pulses_migrating").exists(),
         "a partial sibling next to an intact original must be discarded")
-      val dirs = new java.io.File(s"$base1/pulses").listFiles()
-      assert(dirs.exists(f => f.isDirectory && f.getName.startsWith("pulse_bucket=")))
-      assert(!dirs.exists(f => f.isFile && f.getName.startsWith("part-")))
+      assert(manifestDirs(base1).contains(Set(s"pulse_bucket=${start / coarse}")),
+        s"the re-migration must commit the coarse layout: ${manifestDirs(base1)}")
       val rec = storeTable(base1, "pulses").orderBy("pulse_number").collect()
       assert(rec.length == 2)
       assert(rec.map(_.getAs[Long]("record_amount")).toSeq == Seq(6L, 6L))
@@ -904,19 +871,13 @@ class IngestServeSpec extends SparkSpec {
     val span = 100L // 10 pulses per bucket at delta=10
     val nClosed = 500
     val openIdx = 500 to 502
-    def ts(p: Long) = p - Canonicalize.MinTimePulse
-    import spark.implicits._
-    val rows = (0 until nClosed).map { i =>
+    writeStorePulses(base, (0 until nClosed).map { i =>
       val p = start + i * delta
-      (p, p - delta, p + delta, true, true, 2, 8L, 2L, ts(p), p / span)
+      StorePulse(p, p - delta, p + delta, true, true, 2, 8L, 2L)
     } ++ openIdx.map { i =>
       val p = start + i * delta
-      (p, p - delta, p + delta, false, false, 2, 8L, 2L, ts(p), p / span)
-    }
-    rows.toDF("pulse_number", "prev_pulse_number", "next_pulse_number",
-      "is_complete", "is_sequential", "jet_drop_amount", "record_amount",
-      "result_amount", "timestamp", "pulse_bucket")
-      .coalesce(1).write.partitionBy("pulse_bucket").parquet(s"$base/pulses")
+      StorePulse(p, p - delta, p + delta, false, false, 2, 8L, 2L)
+    }, span = span)
     // records/drops exist for the OPEN pulses (their covers reload from
     // the drops partitions); the closed prefix needs no fact partitions
     // for this test — nothing may read it
@@ -931,7 +892,7 @@ class IngestServeSpec extends SparkSpec {
     // and re-derive the true marks from the rows
     java.nio.file.Files.write(
       java.nio.file.Paths.get(s"$base/pulses/_frontier.json"),
-      s"""{"seq_pulse":${start + 497 * delta},"frontier_bucket":${(start + 498 * delta) / span}}"""
+      s"""{"seq_pulse":${start + 497 * delta},"frontier_bucket":${(start + 498 * delta) / span},"span":$span}"""
         .getBytes("UTF-8"))
 
     // count input rows of the SEED's OWN jobs only: the shared test
@@ -992,8 +953,7 @@ class IngestServeSpec extends SparkSpec {
     assert(summary.contains(s""""seq_pulse":${start + 502 * delta}"""), summary)
   }
 
-  test("the daemon persists per-pulse result counters, and a legacy store " +
-      "without the column migrates with a records-table backfill at seed") {
+  test("the daemon persists per-pulse result counters") {
     val base = java.nio.file.Files.createTempDirectory("graft-daemon-results").toString
     // every 3rd record is a "result" → 3 results per 9-record pulse
     val wire = Fixtures.multiPulseBatches(spark, nPulses = 2, recordsPerPulse = 9,
@@ -1007,31 +967,6 @@ class IngestServeSpec extends SparkSpec {
     val persisted = storeTable(base, "pulses").orderBy("pulse_number").collect()
     assert(persisted.map(_.getAs[Long]("result_amount")).toSeq == Seq(3L, 3L),
       s"per-type counter must persist: ${persisted.mkString(", ")}")
-
-    // legacy store: same data, pulses dimension rewritten WITHOUT the
-    // column (a pre-result_amount deployment); the seed must migrate the
-    // layout in one staged rewrite and BACKFILL the counters from the
-    // records table's own type column — real counts, not zeros
-    val legacyRows = storeTable(base, "pulses")
-      .drop("result_amount", "pulse_bucket").collect()
-    val legacySchema = storeTable(base, "pulses")
-      .drop("result_amount", "pulse_bucket").schema
-    import scala.jdk.CollectionConverters._
-    spark.createDataFrame(legacyRows.toSeq.asJava, legacySchema)
-      .coalesce(1).write.mode("overwrite").parquet(s"$base/pulses")
-    val noFeed = new Transport.RecordStream {
-      def export(pulse: Long, recordNumber: Int, count: Int): Iterator[Transport.Frame] =
-        throw new Transport.PulseNotFound(pulse)
-    }
-    val d2 = new Ingest.Daemon(spark, base, noFeed, start, fastCfg).start()
-    try {
-      assert(d2.snapshot.values.map(_.resultAmount).toSeq == Seq(3L, 3L),
-        s"legacy seed must backfill result counters: ${d2.snapshot}")
-    } finally d2.stop()
-    val migrated = storeTable(base, "pulses").orderBy("pulse_number").collect()
-    assert(migrated.map(_.getAs[Long]("result_amount")).toSeq == Seq(3L, 3L),
-      "the migration rewrite must persist the backfilled counters")
-    assert(migrated.map(_.getAs[Long]("record_amount")).toSeq == Seq(9L, 9L))
   }
 
   test("a zero-row reload of a previously POPULATED pulse reverts to incomplete " +
@@ -1284,13 +1219,8 @@ class IngestServeSpec extends SparkSpec {
     // cover reload must SKIP the unreadable drops table instead of
     // throwing schema inference out of every start() forever.
     val base2 = java.nio.file.Files.createTempDirectory("graft-daemon-opencrash").toString
-    import spark.implicits._
-    Seq((start, start - delta, start + delta, false, false, 0, 0L,
-      start - Canonicalize.MinTimePulse))
-      .toDF("pulse_number", "prev_pulse_number", "next_pulse_number",
-        "is_complete", "is_sequential", "jet_drop_amount", "record_amount",
-        "timestamp")
-      .coalesce(1).write.parquet(s"$base2/pulses")
+    writeStorePulses(base2,
+      Seq(StorePulse(start, start - delta, start + delta, false, false, 0, 0L)))
     val drops2 = new java.io.File(s"$base2/jet_drops")
     assert(drops2.mkdirs())
     assert(new java.io.File(drops2, "_SUCCESS").createNewFile())

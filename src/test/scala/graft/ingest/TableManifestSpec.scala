@@ -91,16 +91,27 @@ class TableManifestSpec extends SparkSpec {
       s"partition filters must prune the manifest-listed files:\n$plan")
   }
 
-  test("readTable falls back to a plain directory read for legacy tables " +
-      "and answers None when nothing is committed") {
+  test("readTable answers None for a table whose first commit never " +
+      "published a manifest, and the next commit does not adopt the orphan") {
     import spark.implicits._
     val base = tmp()
-    assert(TableManifest.readTable(spark, s"$base/records").isEmpty)
-    // a legacy table: written with dynamic overwrite, no manifest
-    Seq((65546L, "x")).toDF("pulse_number", "v")
-      .write.partitionBy("pulse_number").parquet(s"$base/records")
-    assert(!TableManifest.isManifested(fs(s"$base/records"), s"$base/records"))
-    assert(TableManifest.readTable(spark, s"$base/records").get.count() == 1)
+    val table = s"$base/records"
+    assert(TableManifest.readTable(spark, table).isEmpty)
+    // a first commit that died between its data write and its manifest
+    // publish: real parquet files in pulse P's partition, no manifest
+    val (p, q) = (65546L, 65556L)
+    Seq(("0", "orphan")).toDF("jet_id", "payload")
+      .write.parquet(s"$table/pulse_number=$p")
+    assert(TableManifest.readTable(spark, table).isEmpty,
+      "uncommitted files must never be served")
+    PulseWriter.writePulsePartition(
+      Seq((q, "0", "a"), (q, "1", "b")).toDF("pulse_number", "jet_id", "payload"),
+      "records", base, pulses = Some(Seq(q)))
+    val snap = TableManifest.latest(fs(table), table).get
+    assert(snap.partitions.keySet == Set(s"pulse_number=$q"),
+      s"the first commit starts from an empty snapshot: ${snap.partitions}")
+    val df = TableManifest.readTable(spark, table).get
+    assert(df.count() == 2 && df.filter(col("pulse_number") === p).count() == 0)
   }
 
   test("a zero-row frame creates the table layout but publishes nothing, " +
@@ -181,7 +192,7 @@ class TableManifestSpec extends SparkSpec {
   }
 
   test("versionToken answers the manifest version for manifested tables, " +
-      "None for legacy") {
+      "None for a table with no manifest") {
     import spark.implicits._
     val base = tmp()
     PulseWriter.writePulsePartition(
