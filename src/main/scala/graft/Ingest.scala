@@ -280,6 +280,12 @@ object Ingest {
           swapIn(fs, migrating, pulsesPath)
         else fs.delete(migrating, true)
       }
+      // files of a commit that died before its publish: no manifest names
+      // them, and nothing writes to the store until this method returns
+      Seq("records", "jet_drops", "pulses").foreach { t =>
+        val n = TableManifest.deleteOrphans(fs, s"$basePath/$t")
+        if (n > 0) System.err.println(s"[ingest] deleted $n uncommitted files from $t")
+      }
       // a table with no committed manifest has seeded nothing
       val pulsesDf = TableManifest.readTable(spark, pulsesPath.toString) match {
         case Some(df) => df

@@ -30,11 +30,18 @@ object Sessions {
   /** The core count every main runs at: `SPARK_GRAFT_CPUS` when set,
     * otherwise the processors this JVM sees, so by default a local
     * session starts no more task threads (and no more than 8× as many
-    * AQE partitions) than the host has cores.
+    * AQE partitions) than the host has cores. A set value that is not a
+    * positive integer is rejected here, naming the variable, rather
+    * than misread further down.
     */
   def cpus(env: Map[String, String] = sys.env): String =
-    env.get("SPARK_GRAFT_CPUS").map(_.trim).filter(_.nonEmpty)
-      .getOrElse(Runtime.getRuntime.availableProcessors.toString)
+    env.get("SPARK_GRAFT_CPUS").map(_.trim).filter(_.nonEmpty) match {
+      case Some(v) =>
+        require(v.toIntOption.exists(_ > 0),
+          s"SPARK_GRAFT_CPUS must be a positive integer, got '$v'")
+        v
+      case None => Runtime.getRuntime.availableProcessors.toString
+    }
 
   /** (key, required value) pairs — order matters only for error messages. */
   val DriftConfs: Seq[(String, String)] = Seq(
@@ -82,7 +89,7 @@ object Sessions {
     * cluster's posture scales the same way.
     */
   def initialPartitions(cpus: String): String =
-    (cpus.toIntOption.getOrElse(32) * 8).toString
+    (cpus.toInt * 8).toString
 
   /** The r17 flat `8 × cores` start taxed SMALL inputs: every exchange
     * of a 17 MB dataset opened 256 map-side buckets and paid extra AQE
@@ -103,7 +110,7 @@ object Sessions {
   private val AdvisoryBytes = 64L << 20
 
   def initialPartitionsSized(cpus: String, dataBytes: Long): String = {
-    val cores = cpus.toIntOption.getOrElse(32)
+    val cores = cpus.toInt
     if (dataBytes < 0) initialPartitions(cpus)
     else {
       val est = (dataBytes * ShuffleExpansion + AdvisoryBytes - 1) / AdvisoryBytes
@@ -141,10 +148,8 @@ object Sessions {
   /** The byte sum at which [[initialPartitionsSized]] reaches its
     * 8×cores ceiling — the walk above never needs to count past it.
     */
-  def posturesSaturatedAt(cpus: String): Long = {
-    val cores = cpus.toIntOption.getOrElse(32)
-    8L * cores * AdvisoryBytes / ShuffleExpansion + 1
-  }
+  def posturesSaturatedAt(cpus: String): Long =
+    8L * cpus.toInt * AdvisoryBytes / ShuffleExpansion + 1
 
   /** The COMPLETE conf set [[serviceBuilder]] applies — drift defenses,
     * service configs, and shuffle parallelism matched to the core count

@@ -62,8 +62,8 @@ object Endpoints {
     if (fromTimestamp.isEmpty && toTimestamp.isEmpty) {
       // the index BEFORE the view: a rebuild is a Spark job of its own,
       // and a view resolved ahead of it would have to outlive that job as
-      // well before its fetch runs — on a live store, two commits inside
-      // that span retire the files the view planned
+      // well before its fetch runs, eating into the retention window that
+      // keeps the files the view planned
       val chain = Domain.pulseChainIndex(spark, dir)
       val p = pulsesView(spark, dir)
       val total = chain.countInRange(fromPulse, toPulse)

@@ -97,43 +97,12 @@ object HttpApi {
 
   // ---- routing ---------------------------------------------------------
 
-  /** True when `e` is a scan whose planned file is gone by read time: a
-    * manifested read that outlived TWO commits of the same table (a
-    * superseded generation survives one full commit cycle,
-    * [[graft.ingest.TableManifest]]). A fresh resolution serves a
-    * committed page: the HTTP handler re-runs the request
-    * ([[routeFresh]]) and the exporter's next poll re-resolves by design,
-    * so neither kills a request or a subscriber over the window.
-    */
-  private[graft] def isScanRace(e: Throwable): Boolean = {
-    var t = e
-    var depth = 0
-    while (t != null && depth < 10) {
-      t match {
-        case _: java.io.FileNotFoundException => return true
-        // anchored on the FAILED_READ_FILE error class only — a generic
-        // "does not exist" substring would classify PERMANENT failures
-        // (a table directory deleted out from under the server) as
-        // transient and double every request's time-to-500 during an
-        // outage; genuine lost-file races also carry a
-        // FileNotFoundException cause, matched above
-        case s: org.apache.spark.SparkException
-            if s.getMessage != null &&
-              s.getMessage.contains("FAILED_READ_FILE") => return true
-        case _ =>
-      }
-      t = if (t.getCause eq t) null else t.getCause
-      depth += 1
-    }
-    false
-  }
-
   private def handle(spark: SparkSession, dir: String, metrics: ApiMetrics,
       ex: HttpExchange): Unit = {
     val t0 = System.nanoTime()
     import scala.util.control.NonFatal
     val (status, body) =
-      try routeFresh(spark, dir, ex)
+      try route(spark, dir, ex)
       catch {
         // fatal VM errors (OutOfMemoryError & co) PROPAGATE: converting
         // them to a routine 500 would keep serving on a heap in
@@ -166,26 +135,6 @@ object HttpApi {
       case "search" :: Nil                      => "/api/v1/search"
       case _                                    => "unmatched"
     }
-  }
-
-  /** Attempts [[routeFresh]] makes before a lost-file scan answers 500. */
-  private val ScanRaceAttempts = 3
-
-  /** [[route]], re-run when its scan lost a planned file to racing
-    * commits ([[isScanRace]]). Each run re-resolves the newest manifest,
-    * so the answer is always a page some committed version defines; a
-    * request keeps losing only while it keeps outliving two commits, and
-    * after [[ScanRaceAttempts]] runs the loss propagates as a 500.
-    */
-  private def routeFresh(spark: SparkSession, dir: String, ex: HttpExchange): (Int, String) = {
-    var attempt = 1
-    while (true) {
-      try return route(spark, dir, ex)
-      catch {
-        case e: Exception if attempt < ScanRaceAttempts && isScanRace(e) => attempt += 1
-      }
-    }
-    (500, "{}") // unreachable
   }
 
   private def route(spark: SparkSession, dir: String, ex: HttpExchange): (Int, String) = {

@@ -35,11 +35,11 @@ object PulseWriter {
     * new files — logically identical to the dynamic partition overwrite
     * this replaces (same rows per partition, same idempotent retry: a
     * re-delivered pulse re-replaces its partition with byte-identical
-    * content), but the PREVIOUS generation's files survive one more
-    * commit cycle, which is what lets concurrent readers finish against
-    * the snapshot they planned without ever seeing a lost file or a
-    * torn page (the retryable-500 class this deletes — see the manifest
-    * doc). An empty frame still creates the table directory (the
+    * content), but the PREVIOUS generation's files stay on disk for the
+    * manifest's retention window, which is what lets concurrent readers
+    * finish against the snapshot they planned without ever seeing a lost
+    * file or a torn page (see the manifest doc). An empty frame still
+    * creates the table directory (the
     * zero-row-commit layout the serving empties rely on) but publishes
     * nothing.
     */

@@ -2,6 +2,9 @@ package graft.ingest
 
 import scala.util.control.NonFatal
 
+import com.fasterxml.jackson.databind.{DeserializationFeature, ObjectMapper,
+  PropertyNamingStrategies, SerializationFeature}
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -11,56 +14,73 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * The problem it deletes: dynamic partition overwrite swaps a partition
   * directory by delete-then-rename, so a serving read that LISTED the
-  * directory before a hot-pulse rewrite could lose its files mid-scan —
-  * a retryable-500 class the HTTP layer used to paper over with a
-  * one-shot retry, plus a narrower silently-short-page window inside the
-  * two metadata ops. With manifests, a reader never lists a live
-  * directory at all:
+  * directory before a hot-pulse rewrite could lose its files mid-scan.
+  * With manifests, a reader never lists a live directory at all:
   *
   *  - every commit APPENDS uniquely-named files (Spark part files carry
   *    the write job's UUID) and then atomically publishes a new manifest
   *    version — `_manifests/v<n>.json`, written to a dot-tmp sibling and
   *    renamed — mapping each partition to exactly its current files;
-  *  - readers resolve the newest manifest (one tiny-dir listing + one
+  *  - readers resolve the newest manifest (one `_manifests/` listing + one
   *    small JSON read, never a recursive walk) and plan over that
   *    explicit file list, so a racing rewrite of the same pulse cannot
   *    change or tear the set mid-request: the page served is always the
   *    page some committed version defined;
-  *  - files superseded by commit v are recorded as v's `tombstones` and
-  *    physically deleted only when v+1 commits — one full commit cycle
-  *    of grace — so a reader planned against v-1 survives v entirely.
-  *    The residual window (a reader pinned across TWO commits of the
-  *    same table while mid-scan) is micro-vs-seconds at any realistic
-  *    flush cadence, but back-to-back commits on a loaded host do hit
-  *    it, so the HTTP layer re-runs a request that lost a file
-  *    ([[graft.api.HttpApi.isScanRace]]); disk overhead is bounded at
-  *    one superseded generation per hot partition.
+  *  - retention keeps that file list readable: no file named by a
+  *    manifest that was current within the last [[RetentionMs]] is
+  *    deleted. A commit records the files it supersedes — the replaced
+  *    partitions' previous generation and the previous manifest itself —
+  *    as tombstones stamped with the commit time, carries pending
+  *    tombstones forward, and physically deletes only those superseded
+  *    more than [[RetentionMs]] ago (the pattern of Delta Lake's VACUUM
+  *    and Iceberg's expire-snapshots). A read therefore loses a file only
+  *    if it stalls for longer than the retention window between
+  *    resolving a manifest and opening the files it names. Disk overhead
+  *    is bounded by what the writer supersedes in one window.
   *
   * Contract: ONE writer per table (the daemon serializes commits and
   * flushes under its write lock; the reference likewise has a single
   * ETL writer per store). Readers are unlimited and lock-free.
   *
-  * Scale shape: the manifest grows with live partitions, not history
-  * size (it lists file names, not stats), and replaces the per-query
-  * recursive directory listing — the layer that collapses first on an
-  * object store at 100 TB. A deployment outgrowing one JSON object per
-  * table shards the partition map by bucket range; the read path is
-  * already indirected through [[readTable]], so that change lands here,
-  * not in the serving layer.
+  * Scale shape: the manifest grows with live partitions and the files
+  * superseded within one retention window, not history size (it lists
+  * file names, not stats), and replaces the per-query recursive
+  * directory listing — the layer that collapses first on an object
+  * store at 100 TB. A deployment outgrowing one JSON object per table
+  * shards the partition map by bucket range; the read path is already
+  * indirected through [[readTable]], so that change lands here, not in
+  * the serving layer.
   *
   * Every store table is manifested: a table with no committed manifest
   * holds no committed data, whatever files its directory holds (a first
-  * commit that died before its publish leaves exactly that). A store
-  * written before manifests existed is not read.
+  * commit that died before its publish leaves exactly that;
+  * [[deleteOrphans]] removes such files). A store written before
+  * manifests existed is not read.
   */
 object TableManifest {
 
+  /** How long a superseded file stays on disk, in ms. A read resolves
+    * the newest manifest and then opens the files it names; the read is
+    * safe as long as that gap is under this bound, however many commits
+    * land meanwhile. 60 s is over 30× the median end-to-end latency of
+    * the ingest_serve benchmark (the daemon catching up while HTTP
+    * readers, a poller and an exporter subscriber read the same store,
+    * under 2 s on a 4-core host), so only a read stalled for far longer
+    * than any request takes can lose a file; it costs the disk the
+    * writer supersedes in one minute.
+    */
+  val RetentionMs: Long = 60000L
+
+  /** A file a commit superseded — a data file relative to the table
+    * root, or `_manifests/v<n>.json` — and the commit time (epoch ms).
+    */
+  final case class Tombstone(file: String, supersededMs: Long)
+
   /** One committed table version: partition dir name → data file names
-    * (relative), plus the files this commit superseded (deleted when the
-    * NEXT version commits).
+    * (relative), plus the superseded files still awaiting deletion.
     */
   final case class Snapshot(version: Long, partitions: Map[String, Seq[String]],
-      tombstones: Seq[String]) {
+      tombstones: Seq[Tombstone]) {
     def files(tablePath: String): Seq[String] =
       partitions.toSeq.sortBy(_._1).flatMap { case (part, fs) =>
         fs.sorted.map(f => s"$tablePath/$part/$f")
@@ -72,67 +92,54 @@ object TableManifest {
     new Path(manifestsDir(table), f"v$v%019d.json")
   private val VersionRe = "v(\\d{19})\\.json".r
 
-  private def latestVersion(fs: FileSystem, table: Path): Option[Long] =
-    latestVersionStatus(fs, table).map(_._1)
-
-  /** The newest committed manifest's (version, FileStatus) — ONE listing
-    * serving both the version probe and the snapshot read (two copies of
-    * the listing/regex/max dance would drift).
+  /** The committed manifests' (version, FileStatus), from ONE listing of
+    * `_manifests/` (empty when the table has none).
     */
-  private def latestVersionStatus(fs: FileSystem, table: Path)
-      : Option[(Long, org.apache.hadoop.fs.FileStatus)] = {
+  private def versionStatuses(fs: FileSystem, table: Path)
+      : Iterator[(Long, org.apache.hadoop.fs.FileStatus)] = {
     val dir = manifestsDir(table)
-    if (!fs.exists(dir)) None
+    if (!fs.exists(dir)) Iterator.empty
     else fs.listStatus(dir).iterator.flatMap { st =>
       st.getPath.getName match {
         case VersionRe(v) => Some((v.toLong, st))
         case _ => None
       }
-    }.maxByOption(_._1)
+    }
   }
 
   /** The newest committed snapshot. Absence (no `_manifests/`) means
     * nothing is committed; a PRESENT but unreadable newest manifest
     * throws — the write protocol makes that state impossible without
     * external damage, and silently falling back to a directory listing
-    * would serve superseded generations as duplicates.
-    *
-    * One narrow race is retried instead of thrown: [[commit]]'s step-4
-    * prune deletes manifests older than the previous version, so a
-    * reader that listed version v and then lost the CPU long enough for
-    * TWO commits (v+1 and v+2) to land finds v's file gone at open time.
-    * Re-resolving picks up whatever is newest now; each retry can in
-    * principle lose the same microseconds-vs-seconds race again under
-    * sustained commit churn. Three immediate re-resolutions proved NOT
-    * enough on a saturated box (r17: the StoreServeSpec churn race pin
-    * failed once under the full parallel suite — a multi-hundred-ms GC
-    * or scheduler stall straddled all three back-to-back attempts while
-    * the writer kept committing), so later attempts back off briefly:
-    * the loser of a timing race must stop re-entering it at the same
-    * cadence that lost. Six attempts with 10/20/40/80 ms pauses bounds
-    * the path at ~150 ms worst case — still request-scale — before
-    * propagating; a failure past that means external damage (the
-    * zero-500 serving contract rests on this path never throwing for
-    * protocol-internal reasons).
+    * would serve superseded generations as duplicates. The listed
+    * manifest is still there when it is opened: [[commit]] deletes a
+    * manifest only [[RetentionMs]] after its successor committed.
     */
   def latest(fs: FileSystem, tablePath: String): Option[Snapshot] = {
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      try return latestOnce(fs, tablePath)
-      catch {
-        case e: java.io.FileNotFoundException =>
-          if (attempt >= 6) throw e
-          if (attempt >= 2) Thread.sleep(10L << (attempt - 2))
+    val table = new Path(tablePath)
+    val key = (fs.getUri.toString, tablePath)
+    val newest = versionStatuses(fs, table).maxByOption(_._1)
+    if (newest.isEmpty) snapshotCache.remove(key)
+    newest.map { case (v, st) =>
+      val cached = snapshotCache.get(key)
+      if (cached != null && cached._1 == v && cached._2 == st.getModificationTime
+          && cached._3 == st.getLen) cached._4
+      else {
+        val in = fs.open(st.getPath)
+        val text = try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
+          finally in.close()
+        val snap = parse(text, st.getModificationTime)
+          .getOrElse(throw new java.io.IOException(s"damaged table manifest: ${st.getPath}"))
+        snapshotCache.put(key, (v, st.getModificationTime, st.getLen, snap))
+        snap
       }
     }
-    None // unreachable
   }
 
   /** Parsed snapshots memoized per (filesystem, table path), validated
     * against the manifest file's identity — (version, mtime, length),
     * all free from the listing we do anyway: the per-request freshness
-    * probe is then the tiny `_manifests/` listing ALONE, no re-open and
+    * probe is then the `_manifests/` listing ALONE, no re-open and
     * re-parse of a JSON the process already holds. One live entry per
     * table (replaced on version bump, EVICTED when the manifests dir
     * vanishes — transient per-run stores must not accumulate dead
@@ -144,74 +151,63 @@ object TableManifest {
     * filesystem (ms locally, seconds on some object stores) with a
     * byte-identical manifest LENGTH — and even then the stale partition
     * map names files the new store does not have, so the read fails
-    * loud (the zero-500 contract covers protocol-internal races, not
-    * external store replacement, same as the tombstone-grace section).
+    * loud (retention covers the writer's own commits, not external store
+    * replacement).
     */
   private val snapshotCache =
     new java.util.concurrent.ConcurrentHashMap[(String, String), (Long, Long, Long, Snapshot)]()
 
-  private def latestOnce(fs: FileSystem, tablePath: String): Option[Snapshot] = {
-    val table = new Path(tablePath)
-    val key = (fs.getUri.toString, tablePath)
-    val newest = latestVersionStatus(fs, table)
-    if (newest.isEmpty) snapshotCache.remove(key)
-    newest.map { case (v, st) =>
-      val cached = snapshotCache.get(key)
-      if (cached != null && cached._1 == v && cached._2 == st.getModificationTime
-          && cached._3 == st.getLen) cached._4
-      else {
-        val p = versionFile(table, v)
-        val bytes = {
-          val in = fs.open(p)
-          try in.readAllBytes() finally in.close()
-        }
-        val snap = parse(new String(bytes, java.nio.charset.StandardCharsets.UTF_8))
-          .getOrElse(throw new java.io.IOException(s"damaged table manifest: $p"))
-        snapshotCache.put(key, (v, st.getModificationTime, st.getLen, snap))
-        snap
-      }
-    }
-  }
-
-  /** Publish a new table version. `replaced` maps each rewritten
-    * partition dir to the files that now CONSTITUTE it (the files this
-    * commit just wrote); `superseded` maps the same keys to the files
-    * present in those directories BEFORE the write (the writer's own
-    * pre-write listing — previous generation plus any crash orphans).
-    * Steps, in crash-safe order:
+  /** Publish a new table version at time `now` (epoch ms). `replaced`
+    * maps each rewritten partition dir to the files that now CONSTITUTE
+    * it (the files this commit just wrote); `superseded` maps the same
+    * keys to the files present in those directories BEFORE the write
+    * (the writer's own pre-write listing — previous generation plus any
+    * crash orphans). Steps, in crash-safe order:
     *
     *  1. resolve the previous snapshot (an empty one for a table's
     *     first commit — files a crashed earlier first commit left in
-    *     OTHER partitions stay invisible, and those in the partitions
-    *     this commit touches are tombstoned through `superseded`);
-    *  2. physically delete the PREVIOUS version's tombstones — they have
-    *     now been superseded for one full commit cycle;
+    *     OTHER partitions stay invisible until [[deleteOrphans]], and
+    *     those in the partitions this commit touches are tombstoned
+    *     through `superseded`);
+    *  2. physically delete the previous snapshot's tombstones that were
+    *     superseded more than [[RetentionMs]] before `now`;
     *  3. write version v+1 (tmp + rename) with the merged partition map
-    *     and the newly superseded files as its tombstones;
-    *  4. prune manifest files older than v (keep v and v+1).
+    *     and, as its tombstones, the still-pending ones plus everything
+    *     superseded now: the replaced partitions' previous files and
+    *     every older manifest no tombstone names yet (version v itself;
+    *     in a store written before tombstones carried their time, also
+    *     the one older manifest it kept).
     *
     * A crash before 3 leaves version v fully intact (new files are
-    * invisible orphans, tombstoned again by the next commit of the same
-    * partitions); a crash after 3 leaves v+1 committed with step-4
-    * pruning re-done implicitly by the next commit.
+    * invisible orphans, tombstoned by the next commit of the same
+    * partitions); a crash after 2 only re-runs deletes the next commit
+    * tolerates.
     */
   def commit(spark: SparkSession, tablePath: String,
       replaced: Map[String, Seq[String]],
-      superseded: Map[String, Seq[String]]): Snapshot = {
+      superseded: Map[String, Seq[String]],
+      now: Long = System.currentTimeMillis()): Snapshot = {
     val table = new Path(tablePath)
     val fs = table.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val prev = latest(fs, tablePath).getOrElse(Snapshot(0L, Map.empty, Seq.empty))
-    prev.tombstones.foreach { rel =>
-      try { fs.delete(new Path(table, rel), false); () }
+    val (expired, pending) = prev.tombstones.partition(now - _.supersededMs > RetentionMs)
+    expired.foreach { t =>
+      try { fs.delete(new Path(table, t.file), false); () }
       catch { case _: java.io.FileNotFoundException => () }
     }
-    val tombs = replaced.keysIterator.flatMap { k =>
+    val named = prev.tombstones.iterator.map(_.file).toSet
+    val dataFiles = replaced.keysIterator.flatMap { k =>
       val keep = replaced(k).toSet
       (superseded.getOrElse(k, Seq.empty) ++ prev.partitions.getOrElse(k, Seq.empty))
-        .distinct.filterNot(keep).map(f => s"$k/$f")
-    }.toSeq.sorted
+        .filterNot(keep).map(f => s"$k/$f")
+    }
+    val manifests = versionStatuses(fs, table).collect {
+      case (v, st) if v <= prev.version => s"_manifests/${st.getPath.getName}"
+    }
+    val fresh = (dataFiles ++ manifests).filterNot(named).toSeq.distinct.sorted
+      .map(Tombstone(_, now))
     val parts = (prev.partitions ++ replaced).filter(_._2.nonEmpty)
-    val next = Snapshot(prev.version + 1, parts, tombs)
+    val next = Snapshot(prev.version + 1, parts, pending ++ fresh)
     val mdir = manifestsDir(table)
     fs.mkdirs(mdir)
     val tmp = new Path(mdir, s".v${next.version}.json.tmp")
@@ -221,14 +217,6 @@ object TableManifest {
     val dst = versionFile(table, next.version)
     if (!fs.rename(tmp, dst))
       throw new java.io.IOException(s"manifest publish rename failed: $dst")
-    // prune old manifests (keep prev + next); tolerate races/absence
-    fs.listStatus(mdir).foreach { st =>
-      st.getPath.getName match {
-        case VersionRe(v) if v.toLong < prev.version =>
-          try { fs.delete(st.getPath, false); () } catch { case NonFatal(_) => () }
-        case _ => ()
-      }
-    }
     // any relation cached against this path (standing indexes rooted
     // under it) must re-resolve; the version-keyed read cache replaces
     // its entry on the version bump by itself
@@ -241,31 +229,63 @@ object TableManifest {
     * list the named partitions, run the caller's APPEND-mode write
     * (uniquely-named files only — Spark part files carry the write job's
     * UUID), diff the listings to find what the write added, and publish
-    * one manifest version replacing exactly the partitions that received
-    * files, with their prior generation as the new version's tombstones.
-    * A partition in `parts` that received nothing keeps its manifest
-    * entry untouched (the zero-row-reload contract); a write that
-    * received nothing anywhere publishes nothing.
+    * one manifest version at `now` (read once the write is done)
+    * replacing exactly the partitions that received files, with their
+    * prior generation as the new version's tombstones. A partition in
+    * `parts` that received nothing keeps its manifest entry untouched
+    * (the zero-row-reload contract); a write that received nothing
+    * anywhere publishes nothing.
     *
     * Centralized because the list→append→diff→commit dance IS the
     * snapshot-isolation guarantee — a hand-rolled copy per writer could
     * drift (e.g. one forgetting the nonEmpty filter would tombstone and
     * eventually DELETE a live partition's files).
     */
-  def appendCommit(spark: SparkSession, tablePath: String, parts: Seq[String])(
-      append: => Unit): Unit = {
+  def appendCommit(spark: SparkSession, tablePath: String, parts: Seq[String],
+      now: => Long = System.currentTimeMillis())(append: => Unit): Unit = {
     val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val before = parts.map(p =>
       p -> listPartitionFiles(fs, tablePath, p).toSeq.sorted).toMap
     append
     val replaced = parts.map { p =>
-      val now = listPartitionFiles(fs, tablePath, p)
-      p -> (now -- before(p).toSet).toSeq.sorted
+      val after = listPartitionFiles(fs, tablePath, p)
+      p -> (after -- before(p).toSet).toSeq.sorted
     }.toMap.filter(_._2.nonEmpty)
     if (replaced.nonEmpty) {
       commit(spark, tablePath, replaced,
-        before.view.filterKeys(replaced.contains).toMap)
+        before.view.filterKeys(replaced.contains).toMap, now)
       ()
+    }
+  }
+
+  /** Delete the data files of `tablePath` that the newest manifest
+    * neither lists nor holds as a pending tombstone — what a commit that
+    * died between its append and its publish leaves behind, in
+    * partitions no later commit touched. Every file an older retained
+    * manifest names is one of the two, since tombstones carry forward
+    * until deleted. Needs no age check, but it must run while no write to
+    * the table is in flight (the daemon runs it at start, before its
+    * first commit): readers only open files a manifest names. Returns
+    * how many files it deleted.
+    */
+  def deleteOrphans(fs: FileSystem, tablePath: String): Int = {
+    val table = new Path(tablePath)
+    if (!fs.exists(table)) 0
+    else {
+      val snap = latest(fs, tablePath)
+      val named = snap.iterator.flatMap(s =>
+        s.partitions.iterator.flatMap { case (k, files) => files.map(f => s"$k/$f") } ++
+          s.tombstones.iterator.map(_.file)).toSet
+      val orphans = fs.listStatus(table).iterator
+        .filter(st => st.isDirectory && !st.getPath.getName.startsWith("_") &&
+          !st.getPath.getName.startsWith("."))
+        .flatMap { d =>
+          val k = d.getPath.getName
+          listPartitionFiles(fs, tablePath, k).iterator.map(f => s"$k/$f")
+        }
+        .filterNot(named).toSeq
+      orphans.foreach(rel => fs.delete(new Path(table, rel), false))
+      orphans.length
     }
   }
 
@@ -305,72 +325,45 @@ object TableManifest {
     }
   }
 
-  /** A change token for cache keys: the manifest version (one tiny-dir
+  /** A change token for cache keys: the manifest version (one `_manifests/`
     * listing, no recursive walk), None for a table with no manifest.
     */
   def versionToken(spark: SparkSession, tablePath: String): Option[String] = {
     val table = new Path(tablePath)
     val fs = table.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    latestVersion(fs, table).map(v => s"m$v")
+    versionStatuses(fs, table).map(_._1).maxOption.map(v => s"m$v")
   }
 
   // ---- wire format ---------------------------------------------------------
 
-  /** Compact JSON, hand-rendered: partition dir names and part-file
-    * names are path-safe by construction (validated here — a quote or
-    * backslash would mean something upstream is very wrong).
+  /** Snake-case JSON with sorted keys; a missing or null field fails the
+    * read instead of defaulting.
     */
-  private def render(s: Snapshot): String = {
-    def str(v: String): String = {
-      require(!v.exists(c => c == '"' || c == '\\' || c < ' '),
-        s"unencodable name in manifest: $v")
-      "\"" + v + "\""
-    }
-    val parts = s.partitions.toSeq.sortBy(_._1).map { case (k, fs) =>
-      str(k) + ":" + fs.sorted.map(str).mkString("[", ",", "]")
-    }.mkString("{", ",", "}")
-    val tombs = s.tombstones.sorted.map(str).mkString("[", ",", "]")
-    s"""{"version":${s.version},"partitions":$parts,"tombstones":$tombs}"""
-  }
+  private val json = new ObjectMapper()
+    .registerModule(DefaultScalaModule)
+    .setPropertyNamingStrategy(PropertyNamingStrategies.SNAKE_CASE)
+    .enable(SerializationFeature.ORDER_MAP_ENTRIES_BY_KEYS)
+    .enable(DeserializationFeature.FAIL_ON_MISSING_CREATOR_PROPERTIES)
+    .enable(DeserializationFeature.FAIL_ON_NULL_CREATOR_PROPERTIES)
 
-  /** Parse [[render]]'s output; any shape surprise reads None (and
-    * [[latest]] then fails loud).
+  /** The manifest shape before tombstones carried their commit time. */
+  private final case class BareTombstones(version: Long,
+      partitions: Map[String, Seq[String]], tombstones: Seq[String])
+
+  private[ingest] def render(s: Snapshot): String = json.writeValueAsString(s)
+
+  /** Parse [[render]]'s output, or the earlier bare-name shape, whose
+    * tombstones read as superseded at `bareMs` (the manifest file's
+    * mtime, so an existing store upgrades on its next commit). Any other
+    * shape reads None (and [[latest]] then fails loud).
     */
-  private[ingest] def parse(json: String): Option[Snapshot] =
-    try {
-      val vRe = "\"version\":(\\d+)".r
-      val version = vRe.findFirstMatchIn(json).map(_.group(1).toLong)
-      // find the span of `"name":<open>...<close>` with a depth counter
-      // (the partitions map nests arrays; names/files never contain the
-      // bracket characters — render() validates)
-      def section(name: String, open: Char, close: Char): Option[String] = {
-        val at = json.indexOf("\"" + name + "\":" + open)
-        if (at < 0) None
-        else {
-          val start = json.indexOf(open, at)
-          var i = start
-          var depth = 0
-          var end = -1
-          while (i < json.length && end < 0) {
-            val c = json.charAt(i)
-            if (c == open) depth += 1
-            else if (c == close) { depth -= 1; if (depth == 0) end = i }
-            i += 1
-          }
-          if (end < 0) None else Some(json.substring(start + 1, end))
-        }
-      }
-      val pairRe = "\"([^\"]+)\":\\[([^\\]]*)\\]".r
-      val strRe = "\"([^\"]+)\"".r
-      for {
-        v <- version
-        pbody <- section("partitions", '{', '}')
-        tbody <- section("tombstones", '[', ']')
-      } yield Snapshot(
-        v,
-        pairRe.findAllMatchIn(pbody).map { m =>
-          m.group(1) -> strRe.findAllMatchIn(m.group(2)).map(_.group(1)).toSeq
-        }.toMap,
-        strRe.findAllMatchIn(tbody).map(_.group(1)).toSeq)
-    } catch { case NonFatal(_) => None }
+  private[ingest] def parse(text: String, bareMs: Long): Option[Snapshot] =
+    try Some(json.readValue(text, classOf[Snapshot]))
+    catch {
+      case NonFatal(_) =>
+        try {
+          val b = json.readValue(text, classOf[BareTombstones])
+          Some(Snapshot(b.version, b.partitions, b.tombstones.map(Tombstone(_, bareMs))))
+        } catch { case NonFatal(_) => None }
+    }
 }

@@ -38,8 +38,8 @@ import org.apache.spark.sql.functions._
   * Isolation contract: reads resolve through the store's COMMIT
   * MANIFESTS ([[graft.ingest.TableManifest]]) — each request plans over
   * the explicit file set some committed version defined, superseded
-  * generations survive one full commit cycle, and a read racing a
-  * hot-pulse rewrite therefore always serves a committed page: no
+  * files stay on disk for the manifest's retention window, and a read
+  * racing a hot-pulse rewrite therefore always serves a committed page: no
   * lost-file 500s, no torn or silently-short pages (StoreServeSpec's
   * racing-rewrite test pins ZERO failures; the reference gets the same
   * guarantee from Postgres MVCC, `etl/dbconn/connection.go:13-22`).

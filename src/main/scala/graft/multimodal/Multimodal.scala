@@ -343,12 +343,20 @@ object Multimodal {
     found
   }
 
-  /** The JDK's WAV `AudioFileReader` providers, loaded ONCE through the
-    * public SPI. `AudioSystem.getAudioInputStream` re-runs the provider
-    * scan (JDK13Services — a synchronized static registry) on every
-    * call; like the PNG reader scan it serializes concurrent decode
-    * tasks. The reader instances themselves are stateless parsers. An
-    * empty list (exotic JVM) falls back to AudioSystem per call.
+  /** The JDK's `AudioFileReader` providers, loaded ONCE through the
+    * public SPI and walked in this one order for every payload.
+    * `AudioSystem.getAudioInputStream` re-runs the provider scan
+    * (JDK13Services — a synchronized static registry) on every call;
+    * like the PNG reader scan it serializes concurrent decode tasks. The
+    * reader instances themselves are stateless parsers. The readers that
+    * accept this module's own WAV encoding come first: on stock JDKs
+    * `SoftMidiAudioFileReader` precedes `WaveFileReader` in ServiceLoader
+    * order, and its reject path calls `MidiSystem.getSequence`, which
+    * re-scans the synchronized MIDI registry PER CALL (measured r18, in-task
+    * sampling: ~0.47 s/task blocked vs 0.027 s CPU with 32 decode
+    * threads). The order is fixed once per JVM, so a row's outcome
+    * depends on its payload alone, never on the rows decoded before it.
+    * An empty list (exotic JVM) falls back to AudioSystem per call.
     */
   private lazy val audioFileReaders: List[javax.sound.sampled.spi.AudioFileReader] = {
     val it = java.util.ServiceLoader.load(
@@ -357,43 +365,22 @@ object Multimodal {
     while (it.hasNext) {
       try buf += it.next() catch { case scala.util.control.NonFatal(_) => () }
     }
-    buf.toList
+    val wav = encodeWav(Array[Byte](0))
+    buf.toList.sortBy { r =>
+      try { r.getAudioInputStream(new java.io.ByteArrayInputStream(wav)).close(); 0 }
+      catch { case scala.util.control.NonFatal(_) => 1 }
+    }
   }
-
-  /** The provider that accepted the LAST payload, tried first on the
-    * next one. The preloaded [[audioFileReaders]] keep ServiceLoader
-    * order, and on stock JDKs `SoftMidiAudioFileReader` precedes
-    * `WaveFileReader` — its reject path calls `MidiSystem.getSequence`,
-    * which re-scans the synchronized JDK13Services MIDI registry PER
-    * CALL: with 32 decode threads that lock serialized the stage
-    * (measured r18, in-task sampling: ~0.47 s/task blocked vs 0.027 s
-    * CPU — every thread parked on the MIDI provider lock). A
-    * homogeneous corpus (any real media table) pays the full provider
-    * walk once per JVM and then goes straight to its codec; a mixed
-    * corpus falls back to the ordered walk exactly when the hot
-    * provider rejects.
-    */
-  private val hotAudioReader =
-    new java.util.concurrent.atomic.AtomicReference[javax.sound.sampled.spi.AudioFileReader](null)
 
   private def openAudio(bytes: Array[Byte]): javax.sound.sampled.AudioInputStream = {
     // fresh stream per provider attempt: a rejecting reader is REQUIRED
     // to leave the stream positioned where it found it, but a fresh
     // ByteArrayInputStream costs nothing and removes the dependency on
     // every provider honoring that contract
-    val hot = hotAudioReader.get()
-    if (hot != null) {
-      try return hot.getAudioInputStream(new java.io.ByteArrayInputStream(bytes))
-      catch { case _: javax.sound.sampled.UnsupportedAudioFileException => () }
-    }
     var readers = audioFileReaders
     while (readers.nonEmpty) {
-      try {
-        val s = readers.head.getAudioInputStream(
-          new java.io.ByteArrayInputStream(bytes))
-        hotAudioReader.set(readers.head)
-        return s
-      } catch {
+      try return readers.head.getAudioInputStream(new java.io.ByteArrayInputStream(bytes))
+      catch {
         case _: javax.sound.sampled.UnsupportedAudioFileException =>
           readers = readers.tail
       }

@@ -111,17 +111,7 @@ object GrpcPulseExporter {
     var current = req.pulseNumberFrom
     try {
       while (!sco.isCancelled) {
-        val step =
-          try pollStep(pulsesFn(), recordsFn(), current, req.prototypes)
-          catch {
-            // a poll racing the maintainer's rewrite of the same pulse
-            // (the StoreViews isolation window) must not kill every
-            // subscriber with INTERNAL: the next poll re-resolves a
-            // fresh listing and self-heals — the same classification
-            // the HTTP layer retries on
-            case NonFatal(e) if graft.api.HttpApi.isScanRace(e) => None
-          }
-        step match {
+        pollStep(pulsesFn(), recordsFn(), current, req.prototypes) match {
           case Some(resp) =>
             sco.onNext(resp)
             current = resp.pulseNumber

@@ -94,6 +94,8 @@ class SessionsSpec extends org.scalatest.funsuite.AnyFunSuite {
     assert(Sessions.cpus(Map("SPARK_GRAFT_CPUS" -> " ")) == host,
       "a blank setting must not become local[ ]")
     assert(Sessions.cpus(Map("SPARK_GRAFT_CPUS" -> "3")) == "3")
+    val bad = intercept[IllegalArgumentException](Sessions.cpus(Map("SPARK_GRAFT_CPUS" -> "four")))
+    assert(bad.getMessage.contains("SPARK_GRAFT_CPUS"), bad.getMessage)
   }
 
   test("serviceConfPairs (what serviceBuilder applies) covers drift + service + parallelism") {

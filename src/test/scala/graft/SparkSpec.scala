@@ -10,9 +10,10 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   /** Manifest-aware read of a STORE table (records/jet_drops/pulses).
     * Store writes are manifested commits: a raw `spark.read.parquet`
-    * over the directory would also read the superseded generation the
-    * manifest keeps as crash/reader grace, double-counting any
-    * re-committed pulse — assertions must see what a reader sees.
+    * over the directory would also read the superseded generations the
+    * manifest retains for readers still planned against them,
+    * double-counting any re-committed pulse — assertions must see what a
+    * reader sees.
     */
   def storeTable(base: String, table: String): org.apache.spark.sql.DataFrame =
     graft.ingest.TableManifest.readTable(spark, s"$base/$table").getOrElse(

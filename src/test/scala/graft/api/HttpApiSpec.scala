@@ -739,27 +739,6 @@ class HttpApiSpec extends SparkSpec {
     }
   }
 
-  test("isScanRace classifies racing-rewrite failures and nothing else") {
-    import org.apache.spark.SparkException
-    // the two real shapes: a task-level lost file, and Spark's wrapped form
-    assert(HttpApi.isScanRace(new java.io.FileNotFoundException("part-0001 gone")))
-    assert(HttpApi.isScanRace(new SparkException(
-      "[FAILED_READ_FILE.FILE_NOT_EXIST] Encountered error while reading file x")))
-    assert(HttpApi.isScanRace(new RuntimeException("wrapper",
-      new java.io.FileNotFoundException("nested"))))
-    // everything else must NOT be retried (it would double-log and delay 500s)
-    assert(!HttpApi.isScanRace(new IllegalArgumentException("bad request")))
-    assert(!HttpApi.isScanRace(new SparkException("[INTERNAL_ERROR] boom")))
-    // a cycle-proof walk: getCause() never returns `this` on a standard
-    // Throwable (initCause(this) throws), so the cycle can only be built
-    // via an override — which is exactly what the depth/self guard exists
-    // to survive
-    val cyclic: Throwable = new RuntimeException("self") {
-      override def getCause: Throwable = this
-    }
-    assert(!HttpApi.isScanRace(cyclic))
-  }
-
   test("unknown routes are 404, non-GET is 405") {
     assert(get("/nope")._1 == 404)
     assert(get("/pulses/1/extra/deep")._1 == 404)

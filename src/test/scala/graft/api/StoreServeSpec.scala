@@ -228,11 +228,10 @@ class StoreServeSpec extends SparkSpec {
   test("reads racing a reload's rewrite of the SAME pulse ALWAYS serve a " +
       "committed page — zero 500s, zero torn or empty pages") {
     // the manifest isolation contract (StoreViews.scala): every read
-    // plans over a committed snapshot's explicit file set and the
-    // superseded generation survives one full commit cycle, so a racing
-    // hot-pulse rewrite can produce neither a lost-file 500 nor a page
-    // MIXING the two versions — the retryable-500 outcome this test used
-    // to tolerate (and the HTTP retry that papered over it) are gone
+    // plans over a committed snapshot's explicit file set and a
+    // superseded file stays on disk for the retention window however
+    // many commits land, so a racing hot-pulse rewrite can produce
+    // neither a lost-file 500 nor a page MIXING the two versions
     val base = java.nio.file.Files.createTempDirectory("graft-serve-race").toString
     val wireA = Fixtures.multiPulseBatches(spark, 2, perPulse, startPulse = start)
     // version B: same rows, different payload bytes — so a page mixing
@@ -305,7 +304,7 @@ class StoreServeSpec extends SparkSpec {
 
   test("GET /pulses racing a manifested pulses-dimension reflush ALWAYS " +
       "serves a committed page — the index fast path under dim churn, " +
-      "zero 500s (exercises the manifest prune-race retry too)") {
+      "zero 500s, while superseded manifests and files are retained") {
     val base = java.nio.file.Files.createTempDirectory("graft-pulses-race").toString
     // a records/ dir makes it a store
     PulseWriter.commitPulse(
@@ -349,6 +348,9 @@ class StoreServeSpec extends SparkSpec {
       assert(writerFailure.get == null, s"writer died: ${writerFailure.get}")
       assert(torn.get == null, s"non-committed pulses page under dim churn: ${torn.get}")
       assert(served.get > 0, "the endpoint never served during the race")
+      val manifests = new java.io.File(s"$base/pulses/_manifests").list()
+        .count(_.matches("v\\d+\\.json"))
+      assert(manifests == 14, s"all 14 flushes are inside the retention window: $manifests")
     } finally h.stop()
   }
 

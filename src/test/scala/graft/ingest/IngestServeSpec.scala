@@ -785,6 +785,42 @@ class IngestServeSpec extends SparkSpec {
     assert(drops.agg(sum("record_amount")).head().getLong(0) == 6L)
   }
 
+  test("a daemon start deletes the files a crashed first commit left in a " +
+      "partition no later commit touched, and keeps every committed file") {
+    val base = java.nio.file.Files.createTempDirectory("graft-daemon-orphan").toString
+    val records = s"$base/records"
+    val (p, q) = (start, start + delta)
+    // the first records commit of pulse P died between its data write and
+    // its manifest publish
+    spark.createDataFrame(Seq(("0", "orphan"))).toDF("jet_id", "payload")
+      .write.parquet(s"$records/pulse_number=$p")
+    val fs = new org.apache.hadoop.fs.Path(base)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val orphans = TableManifest.listPartitionFiles(fs, records, s"pulse_number=$p")
+    assert(orphans.nonEmpty)
+    val wire = Fixtures.multiPulseBatches(spark, nPulses = 1, recordsPerPulse = 6,
+      startPulse = q)
+    (1 to 3).foreach(_ => PulseWriter.commitPulse(wire, base))
+    def committed(table: String) = {
+      val snap = TableManifest.latest(fs, s"$base/$table").get
+      snap.partitions.flatMap { case (k, files) => files.map(f => s"$k/$f") } ++
+        snap.tombstones.map(_.file).filterNot(_.startsWith("_manifests/"))
+    }
+    val kept = Seq("records", "jet_drops").map(t => t -> committed(t)).toMap
+    val idle = new Transport.RecordStream {
+      def export(pulse: Long, recordNumber: Int, count: Int): Iterator[Transport.Frame] =
+        Iterator.empty
+    }
+    new Ingest.Daemon(spark, base, idle, q + delta, fastCfg).start().stop()
+    assert(TableManifest.listPartitionFiles(fs, records, s"pulse_number=$p").isEmpty,
+      s"the crashed commit's files survived the daemon start: $orphans")
+    kept.foreach { case (t, files) =>
+      files.foreach(f => assert(fs.exists(new org.apache.hadoop.fs.Path(s"$base/$t/$f")),
+        s"a committed or retained file was deleted: $t/$f"))
+    }
+    assert(storeTable(base, "records").filter(col("pulse_number") === q).count() == 6L)
+  }
+
   test("a feed that resumes BEHIND the crept-ahead far probe window is still " +
       "found: the hole sweep restarts instead of advancing monotonically") {
     // A long NOT_FOUND stall lets the far window creep deep; the feed

@@ -84,7 +84,7 @@ class IngestSpec extends SparkSpec {
     val second = storeTable(tmp, "records").collect().map(_.toString).sorted
     assert(first.toSeq == second.toSeq,
       "a re-delivered pulse must replace its partition with identical data " +
-        "(manifested read — the superseded grace generation is invisible)")
+        "(manifested read — the retained superseded generation is invisible)")
     assert(first.length == 3)
   }
 

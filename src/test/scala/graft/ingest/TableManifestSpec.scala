@@ -12,62 +12,84 @@ class TableManifestSpec extends SparkSpec {
   private def tmp() =
     java.nio.file.Files.createTempDirectory("graft-manifest").toString
 
+  /** One manifested append of `tag` rows into `pulses`, committed at
+    * time `at` — the specs' substituted clock.
+    */
+  private def commitAt(table: String, pulses: Seq[Long], tag: String, at: Long): Unit = {
+    import spark.implicits._
+    TableManifest.appendCommit(spark, table, pulses.map(p => s"pulse_number=$p"), at) {
+      pulses.map(p => (p, "0", tag)).toDF("pulse_number", "jet_id", "payload")
+        .write.mode("append").partitionBy("pulse_number").parquet(table)
+    }
+  }
+
   test("render/parse round trip and damage handling") {
-    val snap = TableManifest.Snapshot(7L,
-      Map("pulse_number=65546" -> Seq("part-a.parquet", "part-b.parquet"),
-        "pulse_number=65556" -> Seq("part-c.parquet")),
-      Seq("pulse_number=65546/part-old.parquet"))
-    val rendered = {
-      // render is private; drive it through a real commit below — here
-      // just pin the parser against a hand-built equivalent string
+    import TableManifest.{Snapshot, Tombstone, parse, render}
+    val parts = Map("pulse_number=65546" -> Seq("part-a.parquet", "part-b.parquet"),
+      "pulse_number=65556" -> Seq("part-c.parquet"))
+    val snap = Snapshot(7L, parts, Seq(
+      Tombstone("_manifests/v0000000000000000006.json", 1700000000123L),
+      Tombstone("pulse_number=65546/part-old.parquet", 1700000000123L)))
+    assert(parse(render(snap), 0L).contains(snap))
+    // the shape before tombstones carried their time: bare names, read as
+    // superseded at the manifest file's mtime
+    val bare =
       """{"version":7,"partitions":{"pulse_number=65546":["part-a.parquet","part-b.parquet"],""" +
       """"pulse_number=65556":["part-c.parquet"]},""" +
       """"tombstones":["pulse_number=65546/part-old.parquet"]}"""
-    }
-    assert(TableManifest.parse(rendered).contains(snap))
-    assert(TableManifest.parse("""{"version":1""").isEmpty, "torn JSON reads None")
-    assert(TableManifest.parse("""{"partitions":{}}""").isEmpty)
+    assert(parse(bare, 42L).contains(Snapshot(7L, parts,
+      Seq(Tombstone("pulse_number=65546/part-old.parquet", 42L)))))
+    assert(parse("""{"version":1""", 0L).isEmpty, "torn JSON reads None")
+    assert(parse("""{"partitions":{}}""", 0L).isEmpty)
+    assert(parse("""{"version":1,"partitions":{},"tombstones":[{"file":"x"}]}""", 0L).isEmpty,
+      "a tombstone without its time reads None")
   }
 
-  test("commit lifecycle: replace bumps the version, the superseded " +
-      "generation survives exactly one further commit, manifests prune") {
-    import spark.implicits._
-    val base = tmp()
-    val table = s"$base/records"
-    def write(tag: String): Unit =
-      PulseWriter.writePulsePartition(
-        Seq((65546L, "0", tag), (65556L, "1", tag))
-          .toDF("pulse_number", "jet_id", "payload"),
-        "records", base, pulses = Some(Seq(65546L, 65556L)))
-    write("v1")
+  test("commit lifecycle under retention: a superseded file and an old " +
+      "manifest survive every commit inside RetentionMs, and the first " +
+      "commit past it deletes them") {
+    val table = s"${tmp()}/records"
     val f = fs(table)
+    val mdir = new org.apache.hadoop.fs.Path(s"$table/_manifests")
+    def manifests = f.listStatus(mdir).map(_.getPath.getName).sorted.toSeq
+    def onDisk = TableManifest.listPartitionFiles(f, table, "pulse_number=65546")
+    val t0 = 1700000000000L
+    commitAt(table, Seq(65546L, 65556L), "v1", t0)
     val s1 = TableManifest.latest(f, table).get
     assert(s1.version == 1 && s1.partitions.keySet ==
       Set("pulse_number=65546", "pulse_number=65556"))
     assert(s1.tombstones.isEmpty, "first commit supersedes nothing")
     val gen1 = s1.partitions("pulse_number=65546").toSet
+    val v1 = manifests.head
 
-    write("v2")
+    val superseded = t0 + 1000L
+    commitAt(table, Seq(65546L), "v2", superseded)
     val s2 = TableManifest.latest(f, table).get
     assert(s2.version == 2)
     assert((s2.partitions("pulse_number=65546").toSet intersect gen1).isEmpty,
       "replace: the manifest lists only the new generation")
-    assert(s2.tombstones.exists(_.contains("pulse_number=65546/")),
-      "the superseded generation is tombstoned")
-    // grace: gen1 files still on disk while s2 is current
-    val onDisk2 = TableManifest.listPartitionFiles(f, table, "pulse_number=65546")
-    assert(gen1.subsetOf(onDisk2), "superseded files survive one commit cycle")
+    assert(s2.tombstones.toSet == (gen1.map(g => s"pulse_number=65546/$g") + s"_manifests/$v1")
+      .map(TableManifest.Tombstone(_, superseded)), s"tombstones: ${s2.tombstones}")
 
-    write("v3")
-    val s3 = TableManifest.latest(f, table).get
-    val onDisk3 = TableManifest.listPartitionFiles(f, table, "pulse_number=65546")
-    assert((onDisk3 intersect gen1).isEmpty,
-      "gen1 is physically deleted when the THIRD generation commits")
-    // manifest pruning keeps the current and previous versions only
-    val mdir = new org.apache.hadoop.fs.Path(s"$table/_manifests")
-    val versions = f.listStatus(mdir).map(_.getPath.getName).sorted.toSeq
-    assert(versions.length == 2 && versions.last.contains("3"), s"kept: $versions")
-    assert(s3.version == 3)
+    // any number of commits inside the window deletes neither, and a
+    // tombstone keeps the time it was first superseded at
+    val inside = Seq(2000L, 30000L, 59999L, TableManifest.RetentionMs).map(superseded + _)
+    inside.zipWithIndex.foreach { case (at, i) =>
+      commitAt(table, Seq(65546L), s"in$i", at)
+      assert(gen1.subsetOf(onDisk), s"a superseded file was deleted inside the window at $at")
+      assert(manifests.contains(v1), s"the old manifest was deleted inside the window at $at")
+    }
+    assert(TableManifest.latest(f, table).get.tombstones
+      .filter(_.file.contains(gen1.head)).map(_.supersededMs) == Seq(superseded))
+
+    commitAt(table, Seq(65546L), "past", superseded + TableManifest.RetentionMs + 1L)
+    assert((onDisk intersect gen1).isEmpty, "the first commit past the window deletes gen1")
+    assert(!manifests.contains(v1), s"and the manifest it superseded: $manifests")
+    val last = TableManifest.latest(f, table).get
+    assert(last.version == 7 && manifests.length == 6, s"kept: $manifests")
+    assert(!last.tombstones.exists(t => t.supersededMs == superseded),
+      s"deleted files leave the tombstone list: ${last.tombstones}")
+    assert(TableManifest.readTable(spark, table).get.count() == 2)
   }
 
   test("readTable: manifested reads serve exactly the current snapshot " +
@@ -133,15 +155,11 @@ class TableManifestSpec extends SparkSpec {
 
   test("crash recovery: a file appended without a commit is an invisible " +
       "orphan — never served, tombstoned by the next commit of its " +
-      "partition, physically deleted one cycle later") {
+      "partition, deleted by the first commit past the retention window") {
     import spark.implicits._
-    val base = tmp()
-    val table = s"$base/records"
-    def write(tag: String): Unit =
-      PulseWriter.writePulsePartition(
-        Seq((65546L, "0", tag)).toDF("pulse_number", "jet_id", "payload"),
-        "records", base, pulses = Some(Seq(65546L)))
-    write("v1")
+    val table = s"${tmp()}/records"
+    val t0 = 1700000000000L
+    commitAt(table, Seq(65546L), "v1", t0)
     // simulate a crash between the physical append and the manifest
     // publish: a uniquely-named data file lands in the partition dir
     // with no commit (content is irrelevant — a manifested read must
@@ -153,15 +171,16 @@ class TableManifestSpec extends SparkSpec {
     out.write("not parquet at all".getBytes("UTF-8")); out.close()
     assert(TableManifest.readTable(spark, table).get.count() == 1,
       "the orphan is invisible to manifested reads")
-    write("v2")
+    commitAt(table, Seq(65546L), "v2", t0 + 1000L)
     val s2 = TableManifest.latest(f, table).get
-    assert(s2.tombstones.contains(s"pulse_number=65546/$orphan"),
+    assert(s2.tombstones.contains(
+      TableManifest.Tombstone(s"pulse_number=65546/$orphan", t0 + 1000L)),
       s"the re-commit tombstones the orphan: ${s2.tombstones}")
     assert(TableManifest.readTable(spark, table).get
       .select("payload").as[String].collect().toSeq == Seq("v2"))
-    write("v3")
+    commitAt(table, Seq(65546L), "v3", t0 + 1001L + TableManifest.RetentionMs)
     assert(!TableManifest.listPartitionFiles(f, table, "pulse_number=65546")
-      .contains(orphan), "the orphan is physically deleted one cycle later")
+      .contains(orphan), "the orphan is deleted once the window has passed")
   }
 
   test("snapshot memo: a store deleted and recreated at the same path " +

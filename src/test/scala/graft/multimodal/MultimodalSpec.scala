@@ -224,6 +224,31 @@ class MultimodalSpec extends SparkSpec {
     assert(Multimodal.decodeAudio(Multimodal.encodeWav(a))._1 == a.length.toLong)
   }
 
+  test("an audio payload decodes the same whichever rows were decoded " +
+      "before it: one fixed provider order for every row") {
+    def encode(bytes: Array[Byte], kind: javax.sound.sampled.AudioFileFormat.Type) = {
+      val fmt = new javax.sound.sampled.AudioFormat(8000f, 8, 1, true, false)
+      val out = new java.io.ByteArrayOutputStream()
+      javax.sound.sampled.AudioSystem.write(new javax.sound.sampled.AudioInputStream(
+        new java.io.ByteArrayInputStream(bytes), fmt, bytes.length.toLong), kind, out)
+      out.toByteArray
+    }
+    val wav = Multimodal.encodeWav(payload("a wav payload"))
+    val rows = Seq(
+      wav,
+      encode(payload("au audio"), javax.sound.sampled.AudioFileFormat.Type.AU),
+      wav.take(30), // a WAV header cut short
+      payload("not audio at all"),
+      encode(payload("aiff audio"), javax.sound.sampled.AudioFileFormat.Type.AIFF),
+      Array[Byte](9, 9))
+    def outcomes(order: Seq[Int]): Map[Int, Option[(Long, Long)]] =
+      order.map(i => i -> scala.util.Try(Multimodal.decodeAudio(rows(i))).toOption).toMap
+    val forward = outcomes(rows.indices)
+    assert(forward(0).isDefined && forward(3).isEmpty && forward(5).isEmpty, s"$forward")
+    assert(outcomes(rows.indices.reverse) == forward)
+    assert(outcomes(Seq(2, 3, 5, 0, 1, 4)) == forward)
+  }
+
   test("decodeImage falls back to format-sniffing ImageIO for non-PNG " +
       "images (ADVICE r17: the per-thread PNG reader must not narrow the " +
       "public decode contract) and reads band 0 of non-gray rasters " +
