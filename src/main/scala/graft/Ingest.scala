@@ -30,8 +30,8 @@ import graft.ingest.{Canonicalize, GrpcTransport, PulseWriter, Resilience, Table
   *    cursor through [[Transport.fetchPulse]] (portioned stream, resume
   *    cursor, end-of-pulse marker), commit it through the shared
   *    [[PulseWriter.commitPulse]] (driver-side spine + manifested
-  *    partition append), then advance by the exporter's iterate-from
-  *    hint. `NOT_FOUND` means the head is reached — sleep half a pulse
+  *    partition replace, no Spark job), then advance by the exporter's
+  *    iterate-from hint. `NOT_FOUND` means the head is reached — sleep half a pulse
   *    and re-ask (the reference's
   *    `ContinuousPulseRetrievingHalfPulseSeconds`). A transport failure
   *    that outlives the in-fetch reopen budget leaves the cursor where
@@ -67,7 +67,7 @@ import graft.ingest.{Canonicalize, GrpcTransport, PulseWriter, Resilience, Table
   * cursor, and seeding collects only the frontier buckets (see
   * [[Daemon.seed]]; the reference's controller likewise registers only
   * incomplete pulses, `etl/controller/controller.go:124-132`). Writes
-  * are manifested append-commits of whole `pulse_bucket` partitions
+  * are manifested replaces of whole `pulse_bucket` partitions
   * (a bucket spans [[Config.flushBucketSpan]] pulse numbers at first;
   * the span is a STORE property persisted in `_frontier.json` and
   * coarsened by a seed-time re-bucketing migration once history
@@ -80,7 +80,8 @@ import graft.ingest.{Canonicalize, GrpcTransport, PulseWriter, Resilience, Table
   * 100 TB shape: the per-pulse record set is bounded by the pulse
   * cadence (the reference holds it in one goroutine's memory the same
   * way), so the spine chain-sorts it in the driver and the commit is
-  * one single-file manifested append per table. Driver memory holds one
+  * one single-file manifested replace per table, written from the
+  * driver without a Spark job. Driver memory holds one
   * [[PulseEntry]] per pulse seeded or ingested THIS run (~tens of
   * bytes each — bounded by the open frontier plus the run's own feed,
   * never by a decade of persisted history), and per-tick scanning and
@@ -163,10 +164,10 @@ object Ingest {
     @volatile private var cursorNow = fromPulse
     @volatile private var seqPulse = fromPulse - cfg.pulseDelta
     // `lock` guards the register bookkeeping (entries/open/dirty); the
-    // Spark writes serialize on `writeLock` separately — each table has
-    // ONE manifest writer, and concurrent appends into one table path
-    // would race in the commit protocol's staging directory (the
-    // reference funnels all writes through one storage transaction).
+    // store writes serialize on `writeLock` separately — each table has
+    // ONE manifest writer, and two commits of one table racing would
+    // both publish version v+1 from the same predecessor (the reference
+    // funnels all writes through one storage transaction).
     // The two are never nested.
     private val lock = new Object
     // sorted so the chain-neighbor probes (maxBefore/minAfter) and the
@@ -205,6 +206,13 @@ object Ingest {
     private val commitMs = new java.util.concurrent.atomic.AtomicLong
     /** `(pulse commits, their summed wall milliseconds)` since start. */
     def commitStats: (Long, Long) = (commits.get, commitMs.get)
+    // table name → the manifest version this daemon last committed to it,
+    // as the commit returned it; replaced under `writeLock`
+    @volatile private var manifests = Map.empty[String, TableManifest.Snapshot]
+    /** The manifest version this daemon last committed per table
+      * (records, jet_drops, pulses) — held, not read back from the store.
+      */
+    def lastManifests: Map[String, TableManifest.Snapshot] = manifests
 
     /** One atomic sample of the register's bounded-frontier invariant
       * (the reference deletes completed pulses from its `jetDropRegister`,
@@ -511,8 +519,10 @@ object Ingest {
     private def commit(pulse: Long, rows: Seq[Row]): Unit = {
       val t0 = System.nanoTime()
       val dropRows = writeLock.synchronized {
-        PulseWriter.commitPulse(
+        val c = PulseWriter.commitPulse(
           spark.createDataFrame(rows.asJava, graft.model.Schemas.wireRecords), basePath)
+        manifests ++= c.manifests
+        c.drops
       }
       commitMs.addAndGet((System.nanoTime() - t0) / 1000000L)
       commits.incrementAndGet()
@@ -606,9 +616,10 @@ object Ingest {
     }
 
     /** Cooperative pause: sleeps in ≤100 ms slices so `stop()` can end a
-      * loop WITHOUT interrupting it — an interrupt landing inside a Spark
-      * write aborts the job asynchronously and its `_temporary` cleanup
-      * races the shutdown flush's own write.
+      * loop WITHOUT interrupting it — a loop stopped between commits
+      * leaves no commit half-written when the shutdown flush runs (an
+      * interrupt landing inside a commit's file writes fails that commit,
+      * which deletes what it wrote and publishes nothing).
       */
     private def nap(ms: Long): Unit = {
       val t0 = System.nanoTime()
@@ -846,8 +857,8 @@ object Ingest {
       * maintained flags (`CompletePulse` / `SequencePulse`,
       * `etl/storage/storage.go`). Incremental: only the `pulse_bucket`
       * partitions containing dirty pulses are replaced (one manifested
-      * append-commit), so flush cost is bounded by the change frontier,
-      * never by the table's accumulated history.
+      * commit, no Spark job), so flush cost is bounded by the change
+      * frontier, never by the table's accumulated history.
       */
     def flush(): Unit = flushTo(s"$basePath/pulses")
 
@@ -916,19 +927,13 @@ object Ingest {
             writeFrontier(spark, target, lowered._1, lowered._2)
             summarized = Some(lowered)
           }
-          // MANIFESTED append-replace of exactly the dirty buckets
-          // (TableManifest) — the same snapshot protocol the
-          // records/jet_drops commits use, so a serving read racing this
-          // flush always resolves a committed file set. The bucket list is
-          // driver-held (staged from the register), so no
-          // partition-discovery job runs.
-          val buckets = rows.iterator.map(_.getLong(9)).toSet.toSeq.sorted
-            .map(b => s"pulse_bucket=$b")
-          TableManifest.appendCommit(spark, target, buckets) {
-            spark.createDataFrame(rows.asJava, graft.model.Schemas.pulses).coalesce(1)
-              .write.mode(org.apache.spark.sql.SaveMode.Append)
-              .partitionBy("pulse_bucket").parquet(target)
-          }
+          // MANIFESTED replace of exactly the dirty buckets, written from
+          // the staged rows by the same writer the records/jet_drops
+          // commits use (TableManifest.writeRows: no Spark job), so a
+          // serving read racing this flush always resolves a committed
+          // file set
+          TableManifest.writeRows(spark, target, "pulse_bucket",
+            graft.model.Schemas.pulses, rows).foreach(s => manifests += ("pulses" -> s))
           // summary raise AFTER the data commit: a crash in between
           // leaves the previous (lower — see the pre-write above) summary,
           // never one tighter than the data. A raise failure is non-fatal:
@@ -1014,8 +1019,8 @@ object Ingest {
     def stop(): Unit = synchronized {
       running = false
       // cooperative first: the sliced sleeps notice the flag within
-      // ~100 ms and in-flight Spark writes complete cleanly; interrupt
-      // only a loop stuck past that (a hung wire read)
+      // ~100 ms and an in-flight commit completes; interrupt only a loop
+      // stuck past that (a hung wire read)
       threads.foreach(_.join(15000))
       threads.filter(_.isAlive).foreach { t => t.interrupt(); t.join(5000) }
       threads = Seq.empty
@@ -1049,17 +1054,28 @@ object Ingest {
     graft.api.OpsRoutes.metrics(server) { () =>
       val (open, incomplete, dirty) = daemon.frontierStats
       val (commits, commitMs) = daemon.commitStats
+      val tables = daemon.lastManifests.toSeq.sortBy(_._1)
+      def perTable(f: TableManifest.Snapshot => Long) =
+        tables.map { case (t, s) => s"""{table="$t"}""" -> f(s) }
       Seq(
-        ("gbe_ingest_cursor", "gauge", daemon.cursor),
-        ("gbe_ingest_sequential_pulse", "gauge", daemon.sequentialPulse),
-        ("gbe_ingest_known_pulses", "gauge", daemon.ingestedCount.toLong),
-        ("gbe_ingest_open_frontier", "gauge", open.toLong),
-        ("gbe_ingest_incomplete_pulses", "gauge", incomplete.toLong),
-        ("gbe_ingest_dirty_pulses", "gauge", dirty.toLong),
+        ("gbe_ingest_cursor", "gauge", Seq("" -> daemon.cursor)),
+        ("gbe_ingest_sequential_pulse", "gauge", Seq("" -> daemon.sequentialPulse)),
+        ("gbe_ingest_known_pulses", "gauge", Seq("" -> daemon.ingestedCount.toLong)),
+        ("gbe_ingest_open_frontier", "gauge", Seq("" -> open.toLong)),
+        ("gbe_ingest_incomplete_pulses", "gauge", Seq("" -> incomplete.toLong)),
+        ("gbe_ingest_dirty_pulses", "gauge", Seq("" -> dirty.toLong)),
         // mean commit latency = commit_ms_sum / commits_total
-        ("gbe_ingest_commits_total", "counter", commits),
-        ("gbe_ingest_commit_ms_sum", "counter", commitMs)
-      ).map { case (n, t, v) => s"# TYPE $n $t\n$n $v" }.mkString("", "\n", "\n")
+        ("gbe_ingest_commits_total", "counter", Seq("" -> commits)),
+        ("gbe_ingest_commit_ms_sum", "counter", Seq("" -> commitMs)),
+        // the last manifest this daemon committed per table: version,
+        // files it lists, and superseded files awaiting retention
+        ("gbe_ingest_manifest_version", "gauge", perTable(_.version)),
+        ("gbe_ingest_manifest_live_files", "gauge",
+          perTable(_.partitions.valuesIterator.map(_.size.toLong).sum)),
+        ("gbe_ingest_manifest_pending_tombstones", "gauge", perTable(_.tombstones.size.toLong))
+      ).map { case (n, t, vs) =>
+        (s"# TYPE $n $t" +: vs.map { case (labels, v) => s"$n$labels $v" }).mkString("\n")
+      }.mkString("", "\n", "\n")
     }
     server.start()
     server

@@ -1,12 +1,21 @@
 package graft.ingest
 
+import java.util.UUID
+
+import scala.collection.mutable
 import scala.util.control.NonFatal
 
 import com.fasterxml.jackson.databind.{DeserializationFeature, ObjectMapper,
   PropertyNamingStrategies, SerializationFeature}
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.{ExpressionEncoder, RowEncoder}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.types.StructType
 
 /** Per-commit snapshot manifests for the store's partitioned tables —
   * the snapshot-isolation layer the reference gets for free from
@@ -17,8 +26,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * directory before a hot-pulse rewrite could lose its files mid-scan.
   * With manifests, a reader never lists a live directory at all:
   *
-  *  - every commit APPENDS uniquely-named files (Spark part files carry
-  *    the write job's UUID) and then atomically publishes a new manifest
+  *  - every commit ([[writeRows]]) ADDS files whose names carry a fresh
+  *    UUID, so it never touches a file a reader may hold, and then
+  *    atomically publishes a new manifest
   *    version — `_manifests/v<n>.json`, written to a dot-tmp sibling and
   *    renamed — mapping each partition to exactly its current files;
   *  - readers resolve the newest manifest (one `_manifests/` listing + one
@@ -224,43 +234,75 @@ object TableManifest {
     next
   }
 
-  /** THE writer-side protocol, shared by every manifested append site
-    * (pulse commits and the daemon's pulses-dimension flush):
-    * list the named partitions, run the caller's APPEND-mode write
-    * (uniquely-named files only — Spark part files carry the write job's
-    * UUID), diff the listings to find what the write added, and publish
-    * one manifest version at `now` (read once the write is done)
-    * replacing exactly the partitions that received files, with their
-    * prior generation as the new version's tombstones. A partition in
-    * `parts` that received nothing keeps its manifest entry untouched
-    * (the zero-row-reload contract); a write that received nothing
-    * anywhere publishes nothing.
+  /** THE store writer, shared by every store table (pulse commits and
+    * the daemon's pulses-dimension flush): write `rows` — `schema` rows,
+    * `partCol` included — into the table at `tablePath` and publish one
+    * manifest version at `now` (read once the files are written) that
+    * replaces exactly the partitions the rows fall in, with each one's
+    * pre-write listing as the new version's tombstones. A partition with
+    * no rows keeps its manifest entry untouched (the zero-row-reload
+    * contract); no rows at all writes and publishes nothing (None).
     *
-    * Centralized because the list→append→diff→commit dance IS the
-    * snapshot-isolation guarantee — a hand-rolled copy per writer could
-    * drift (e.g. one forgetting the nonEmpty filter would tombstone and
-    * eventually DELETE a live partition's files).
+    * Each partition gets ONE file, `part-00000-<uuid>.c000<ext>`, holding
+    * its rows in the order given, written in the calling thread by
+    * Spark's own parquet writer (`ParquetFileFormat.prepareWrite` and its
+    * `OutputWriter`) with the codec, timestamp type and footer metadata
+    * a `DataFrameWriter` takes from the session conf, over the data
+    * schema it stores (`schema` minus the partition column, nullability
+    * kept). No Spark job runs and no output committer stages the
+    * files: the rows are already in the driver, the fresh UUID keeps the
+    * names unique, and the manifest alone decides visibility. A write
+    * that throws publishes nothing and deletes the files it wrote.
+    *
+    * Centralized because list → write → commit IS the snapshot-isolation
+    * guarantee — a hand-rolled copy per writer could drift (e.g. one
+    * tombstoning a partition it did not rewrite would eventually DELETE
+    * live files).
     */
-  def appendCommit(spark: SparkSession, tablePath: String, parts: Seq[String],
-      now: => Long = System.currentTimeMillis())(append: => Unit): Unit = {
-    val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val before = parts.map(p =>
-      p -> listPartitionFiles(fs, tablePath, p).toSeq.sorted).toMap
-    append
-    val replaced = parts.map { p =>
-      val after = listPartitionFiles(fs, tablePath, p)
-      p -> (after -- before(p).toSet).toSeq.sorted
-    }.toMap.filter(_._2.nonEmpty)
-    if (replaced.nonEmpty) {
-      commit(spark, tablePath, replaced,
-        before.view.filterKeys(replaced.contains).toMap, now)
-      ()
+  def writeRows(spark: SparkSession, tablePath: String, partCol: String,
+      schema: StructType, rows: Seq[Row],
+      now: => Long = System.currentTimeMillis()): Option[Snapshot] =
+    if (rows.isEmpty) None
+    else {
+      val p = schema.fieldIndex(partCol)
+      val keep = schema.indices.filterNot(_ == p)
+      val dataSchema = StructType(keep.map(schema(_)))
+      val groups = rows.groupBy { r =>
+        require(!r.isNullAt(p), s"null $partCol in a row for $tablePath")
+        s"$partCol=${r.get(p)}"
+      }
+      // the session conf over the context's Hadoop conf, as Spark's
+      // `SessionState.newHadoopConf` builds it for a DataFrameWriter
+      val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
+      spark.conf.getAll.foreach { case (k, v) => conf.set(k, v) }
+      val job = Job.getInstance(conf)
+      val factory = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, dataSchema)
+      val ctx = new TaskAttemptContextImpl(job.getConfiguration,
+        new TaskAttemptID(new TaskID(new JobID("graft", 0), TaskType.MAP, 0), 0))
+      val name = s"part-00000-${UUID.randomUUID()}.c000${factory.getFileExtension(ctx)}"
+      val toInternal = ExpressionEncoder(RowEncoder.encoderFor(dataSchema)).createSerializer()
+      val fs = new Path(tablePath).getFileSystem(conf)
+      val before = groups.keys.map(k => k -> listPartitionFiles(fs, tablePath, k).toSeq.sorted).toMap
+      val written = mutable.ArrayBuffer.empty[Path]
+      try groups.foreach { case (k, rs) =>
+        val file = new Path(s"$tablePath/$k/$name")
+        written += file
+        val out = factory.newInstance(file.toString, dataSchema, ctx)
+        try rs.foreach(r => out.write(toInternal(Row.fromSeq(keep.map(r.get)))))
+        finally out.close()
+      } catch {
+        case NonFatal(e) =>
+          written.foreach { f =>
+            try { fs.delete(f, false); () } catch { case NonFatal(_) => () }
+          }
+          throw e
+      }
+      Some(commit(spark, tablePath, groups.keys.map(_ -> Seq(name)).toMap, before, now))
     }
-  }
 
   /** Delete the data files of `tablePath` that the newest manifest
     * neither lists nor holds as a pending tombstone — what a commit that
-    * died between its append and its publish leaves behind, in
+    * died between its file writes and its publish leaves behind, in
     * partitions no later commit touched. Every file an older retained
     * manifest names is one of the two, since tombstones carry forward
     * until deleted. Needs no age check, but it must run while no write to
@@ -290,7 +332,7 @@ object TableManifest {
   }
 
   /** The data files currently in `tablePath/partition` — the writer's
-    * pre/post-write probes around an append.
+    * pre-write listing of a partition it replaces, and the orphan sweep's.
     */
   def listPartitionFiles(fs: FileSystem, tablePath: String,
       partition: String): Set[String] = {

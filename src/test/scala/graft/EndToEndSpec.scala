@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.gen.Fixtures
-import graft.ingest.{PulseWriter, Spine}
+import graft.ingest.Spine
 import graft.operators.{Completeness, JetLinkage}
 
 /** The reference's heavy-mock layer re-expressed: generated scenarios run
@@ -17,7 +17,7 @@ class EndToEndSpec extends SparkSpec {
 
     // persist as the real layout and read back (S3 partition commit)
     val tmp = java.nio.file.Files.createTempDirectory("graft-e2e").toString
-    PulseWriter.writePulsePartition(withOrder, "records", tmp)
+    commitFrame(withOrder, s"$tmp/records")
     val records = spark.read.parquet(s"$tmp/records")
 
     // the lifeline read (P4 + W1): state records of the object, ascending

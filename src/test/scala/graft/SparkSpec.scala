@@ -19,12 +19,57 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     graft.ingest.TableManifest.readTable(spark, s"$base/$table").getOrElse(
       throw new IllegalStateException(s"no committed data in $base/$table"))
 
+  /** Commit `df` to the store table at `tablePath`, partitioned by
+    * `partCol`, the way every store table is written: the frame is
+    * collected and its rows go, in their order, through
+    * [[graft.ingest.TableManifest.writeRows]] at time `now`.
+    */
+  def commitFrame(df: org.apache.spark.sql.DataFrame, tablePath: String,
+      partCol: String = "pulse_number", now: => Long = System.currentTimeMillis())
+      : Option[graft.ingest.TableManifest.Snapshot] =
+    graft.ingest.TableManifest.writeRows(spark, tablePath, partCol, df.schema,
+      df.collect().toSeq, now)
+
+  /** Count the Spark jobs `body` submits, including jobs from threads it
+    * starts (they inherit the job group). Jobs are tagged with a unique
+    * job group so concurrent work from other suites on the shared session
+    * never inflates the count, and the async-listener settle loop is
+    * deadline-bounded so a listener-bus stall can't hang the test.
+    */
+  def jobsDuring(body: => Unit): Int = {
+    val group = "jobs-" + java.util.UUID.randomUUID().toString
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (js.properties != null &&
+            group == js.properties.getProperty("spark.jobGroup.id"))
+          n.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      spark.sparkContext.setJobGroup(group, "job-count pin")
+      try body finally spark.sparkContext.clearJobGroup()
+      // listener delivery is async: poll until the count holds still,
+      // bounded by a 10 s deadline
+      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+      var prev = -1; var stable = 0
+      while (stable < 3 && System.nanoTime() < deadline) {
+        Thread.sleep(50)
+        val cur = n.get()
+        stable = if (cur == prev) stable + 1 else 0
+        prev = cur
+      }
+    } finally spark.sparkContext.removeSparkListener(l)
+    n.get()
+  }
+
   type StorePulse = SparkSpec.StorePulse
   val StorePulse = SparkSpec.StorePulse
 
   /** Commit pulses-dimension rows the way the daemon's flush does:
     * [[graft.model.Schemas.pulses]] rows bucketed by `span`, published
-    * by one [[graft.ingest.TableManifest.appendCommit]]. A bucket commit
+    * by one [[graft.ingest.TableManifest.writeRows]]. A bucket commit
     * REPLACES the bucket, so `rows` must hold every row of each bucket
     * it touches — a fixture that adds a pulse passes the bucket's
     * earlier rows again.
@@ -32,18 +77,14 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   def writeStorePulses(base: String, rows: Seq[StorePulse],
       span: Long = graft.Ingest.Config().flushBucketSpan,
       table: String = "pulses"): Unit = {
-    import scala.jdk.CollectionConverters._
-    val path = s"$base/$table"
     val data = rows.map { r =>
       org.apache.spark.sql.Row(r.pulse, r.prev, r.next, r.complete, r.sequential,
         r.jetDropAmount, r.recordAmount, r.resultAmount,
         r.pulse - graft.ingest.Canonicalize.MinTimePulse, r.pulse / span)
     }
-    val buckets = rows.map(r => s"pulse_bucket=${r.pulse / span}").distinct
-    graft.ingest.TableManifest.appendCommit(spark, path, buckets) {
-      spark.createDataFrame(data.asJava, graft.model.Schemas.pulses).coalesce(1)
-        .write.mode("append").partitionBy("pulse_bucket").parquet(path)
-    }
+    graft.ingest.TableManifest.writeRows(spark, s"$base/$table", "pulse_bucket",
+      graft.model.Schemas.pulses, data)
+    ()
   }
 }
 

@@ -172,39 +172,6 @@ class EndpointsSpec extends SparkSpec {
     }
   }
 
-  /** Count the Spark jobs `body` submits. Jobs are tagged with a unique
-    * job group so concurrent work from other suites on the shared session
-    * never inflates the count, and the async-listener settle loop is
-    * deadline-bounded so a listener-bus stall can't hang the test.
-    */
-  private def jobsDuring(body: => Unit): Int = {
-    val group = "jobs-" + java.util.UUID.randomUUID().toString
-    val n = new java.util.concurrent.atomic.AtomicInteger()
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (js.properties != null &&
-            group == js.properties.getProperty("spark.jobGroup.id"))
-          n.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      spark.sparkContext.setJobGroup(group, "job-count pin")
-      try body finally spark.sparkContext.clearJobGroup()
-      // listener delivery is async: poll until the count holds still,
-      // bounded by a 10 s deadline
-      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-      var prev = -1; var stable = 0
-      while (stable < 3 && System.nanoTime() < deadline) {
-        Thread.sleep(50)
-        val cur = n.get()
-        stable = if (cur == prev) stable + 1 else 0
-        prev = cur
-      }
-    } finally spark.sparkContext.removeSparkListener(l)
-    n.get()
-  }
-
   test("pulses index fast path: every page shape matches the scan path " +
       "row-for-row (a no-op timestamp bound forces the scan)") {
     // fromTimestamp = MinValue filters nothing but routes to the scan

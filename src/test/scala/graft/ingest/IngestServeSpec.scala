@@ -680,10 +680,72 @@ class IngestServeSpec extends SparkSpec {
       assert(body.contains("gbe_ingest_open_frontier"), body)
       assert(body.contains(s"gbe_ingest_commits_total $nPulses"), body)
       assert(body.contains("# TYPE gbe_ingest_commit_ms_sum counter"), body)
+      // the last manifest committed per table, as the commits returned it:
+      // one records and one jet_drops version per pulse, each listing its
+      // pulses' files and tombstoning the manifest it superseded
+      val fs = new org.apache.hadoop.fs.Path(base)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      Seq("records", "jet_drops").foreach { t =>
+        val snap = TableManifest.latest(fs, s"$base/$t").get
+        assert(snap.version == nPulses && snap.tombstones.length == nPulses - 1)
+        assert(body.contains(s"""gbe_ingest_manifest_version{table="$t"} $nPulses"""), body)
+        assert(body.contains(s"""gbe_ingest_manifest_live_files{table="$t"} $nPulses"""), body)
+        assert(body.contains(
+          s"""gbe_ingest_manifest_pending_tombstones{table="$t"} ${nPulses - 1}"""), body)
+      }
+      val pulsesVersion = """gbe_ingest_manifest_version\{table="pulses"\} (\d+)""".r
+        .findFirstMatchIn(body).map(_.group(1).toLong)
+      assert(pulsesVersion.exists(_ >= 1), body)
     } finally {
       ops.stop(0)
       handle.stop()
       server.shutdownNow(); server.awaitTermination(5, TimeUnit.SECONDS)
+    }
+  }
+
+  test("the daemon's pulse commits and maintainer flushes run 0 Spark jobs") {
+    val base = java.nio.file.Files.createTempDirectory("graft-daemon-jobs").toString
+    val nPulses = 3
+    val last = start + (nPulses - 1) * delta
+    val feed = new ReplayExporter(Fixtures.multiPulseBatches(spark, nPulses,
+      recordsPerPulse = 6, startPulse = start))
+    var daemon: Ingest.Daemon = null
+    // the daemon's threads start inside the count, so they inherit its job group
+    val jobs = jobsDuring {
+      daemon = new Ingest.Daemon(spark, base, feed, start, fastCfg).start()
+      // a maintainer tick flushed the last pulse's sequential flag
+      try assert(await()(daemon.sequentialPulse == last &&
+          daemon.frontierStats._3 == 0 && daemon.lastManifests.contains("pulses")),
+        s"the daemon never flushed: ${daemon.snapshot}")
+      finally daemon.stop()
+    }
+    assert(jobs == 0, s"$jobs Spark jobs")
+    assert(daemon.commitStats._1 == nPulses)
+    val pulses = storeTable(base, "pulses").orderBy("pulse_number").collect()
+    assert(pulses.map(_.getAs[Long]("pulse_number")).toSeq ==
+      (0 until nPulses).map(start + _ * delta))
+    assert(pulses.forall(r => r.getAs[Boolean]("is_complete") && r.getAs[Boolean]("is_sequential")))
+  }
+
+  test("a pulse commit whose file write fails publishes nothing, and the " +
+      "follower's retry commits the pulse") {
+    val local = java.nio.file.Files.createTempDirectory("graft-daemon-failwrite").toString
+    val feed = new ReplayExporter(Fixtures.multiPulseBatches(spark, nPulses = 2,
+      recordsPerPulse = 6, startPulse = start))
+    // the first pulse's records file is written, its jet_drops create throws
+    FailingFileSystem.armed(spark, 2) {
+      val daemon = new Ingest.Daemon(spark, FailingFileSystem.path(local), feed, start,
+        fastCfg).start()
+      try assert(await()(daemon.sequentialPulse == start + delta),
+        s"the failed pulse was never committed: ${daemon.snapshot}")
+      finally daemon.stop()
+    }
+    assert(FailingFileSystem.creates.get > 4, "the failure fired and later writes went on")
+    assert(feed.probedPulses.count(_ == start) >= 2, "the follower re-fetched the pulse")
+    Seq(start, start + delta).foreach { p =>
+      assert(storeTable(local, "records").filter(col("pulse_number") === p).count() == 6L)
+      assert(storeTable(local, "jet_drops").filter(col("pulse_number") === p)
+        .agg(sum("record_amount")).head().getLong(0) == 6L)
     }
   }
 
@@ -772,7 +834,7 @@ class IngestServeSpec extends SparkSpec {
       startPulse = start)
     // the crash window between commitPulse's two commits: the records
     // commit published the pulse, the process died before jet_drops
-    PulseWriter.writePulsePartition(Spine(wire), "records", base, pulses = Some(Seq(start)))
+    commitFrame(Spine(wire), s"$base/records")
     assert(TableManifest.readTable(spark, s"$base/jet_drops").isEmpty)
     val daemon = new Ingest.Daemon(spark, base, new ReplayExporter(wire), start, fastCfg).start()
     try assert(await()(daemon.sequentialPulse == start),

@@ -73,14 +73,14 @@ class IngestSpec extends SparkSpec {
     assert(numbered(recs.reverse) == out)
   }
 
-  test("writePulsePartition is idempotent: rewrite produces identical data") {
+  test("a pulse commit is idempotent: rewrite produces identical data") {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft-test").toString
     val df = Seq((1L, "0", "x"), (1L, "1", "y"), (2L, "0", "z"))
       .toDF("pulse_number", "jet_id", "payload")
-    PulseWriter.writePulsePartition(df, "records", tmp)
+    commitFrame(df, s"$tmp/records")
     val first = storeTable(tmp, "records").collect().map(_.toString).sorted
-    PulseWriter.writePulsePartition(df, "records", tmp) // retry / re-delivery
+    commitFrame(df, s"$tmp/records") // retry / re-delivery
     val second = storeTable(tmp, "records").collect().map(_.toString).sorted
     assert(first.toSeq == second.toSeq,
       "a re-delivered pulse must replace its partition with identical data " +

@@ -173,41 +173,14 @@ class SpineEquivalenceSpec extends SparkSpec {
     assert(DistributedSpine(wire).count() == 5)
   }
 
-  /** Spark jobs `body` submits under its own job group. */
-  private def jobsDuring(body: => Unit): Int = {
-    val group = "spine-jobs-" + java.util.UUID.randomUUID().toString
-    val n = new java.util.concurrent.atomic.AtomicInteger()
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (js.properties != null &&
-            group == js.properties.getProperty("spark.jobGroup.id"))
-          n.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      spark.sparkContext.setJobGroup(group, "job-count pin")
-      try body finally spark.sparkContext.clearJobGroup()
-      // listener delivery is async: wait until the count holds still
-      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-      var prev = -1; var stable = 0
-      while (stable < 3 && System.nanoTime() < deadline) {
-        Thread.sleep(50)
-        val cur = n.get()
-        stable = if (cur == prev) stable + 1 else 0
-        prev = cur
-      }
-    } finally spark.sparkContext.removeSparkListener(l)
-    n.get()
-  }
-
-  test("commitPulse on a driver-built pulse runs 2 Spark jobs and writes " +
+  test("commitPulse on a driver-built pulse runs 0 Spark jobs and writes " +
       "one file per table") {
     val base = java.nio.file.Files.createTempDirectory("graft-commit-cost").toString
     val rows = Fixtures.multiPulseBatches(spark, nPulses = 1, recordsPerPulse = 40,
       jets = Seq("00", "01", "1"), startPulse = P).collect().toSeq
     val wire = spark.createDataFrame(rows.asJava, Schemas.wireRecords)
     var drops = Seq.empty[Row]
-    assert(jobsDuring { drops = PulseWriter.commitPulse(wire, base) } == 2)
+    assert(jobsDuring { drops = PulseWriter.commitPulse(wire, base).drops } == 0)
     assert(drops.map(r => r.getAs[String]("jet_id") -> r.getAs[Int]("record_amount")).toMap ==
       Map("00" -> 14, "01" -> 13, "1" -> 13))
     Seq("records", "jet_drops").foreach { t =>

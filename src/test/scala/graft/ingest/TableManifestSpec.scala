@@ -12,15 +12,14 @@ class TableManifestSpec extends SparkSpec {
   private def tmp() =
     java.nio.file.Files.createTempDirectory("graft-manifest").toString
 
-  /** One manifested append of `tag` rows into `pulses`, committed at
+  /** One manifested commit of `tag` rows into `pulses`, committed at
     * time `at` — the specs' substituted clock.
     */
   private def commitAt(table: String, pulses: Seq[Long], tag: String, at: Long): Unit = {
     import spark.implicits._
-    TableManifest.appendCommit(spark, table, pulses.map(p => s"pulse_number=$p"), at) {
-      pulses.map(p => (p, "0", tag)).toDF("pulse_number", "jet_id", "payload")
-        .write.mode("append").partitionBy("pulse_number").parquet(table)
-    }
+    commitFrame(pulses.map(p => (p, "0", tag)).toDF("pulse_number", "jet_id", "payload"),
+      table, now = at)
+    ()
   }
 
   test("render/parse round trip and damage handling") {
@@ -96,12 +95,12 @@ class TableManifestSpec extends SparkSpec {
       "(no superseded duplicates) with partition pruning intact") {
     import spark.implicits._
     val base = tmp()
-    def write(rows: Seq[(Long, String, String)], pulses: Seq[Long]): Unit =
-      PulseWriter.writePulsePartition(
-        rows.toDF("pulse_number", "jet_id", "payload"),
-        "records", base, pulses = Some(pulses))
-    write(Seq((65546L, "0", "a"), (65556L, "1", "b")), Seq(65546L, 65556L))
-    write(Seq((65546L, "0", "a2")), Seq(65546L)) // hot-pulse reload
+    def write(rows: Seq[(Long, String, String)]): Unit = {
+      commitFrame(rows.toDF("pulse_number", "jet_id", "payload"), s"$base/records")
+      ()
+    }
+    write(Seq((65546L, "0", "a"), (65556L, "1", "b")))
+    write(Seq((65546L, "0", "a2"))) // hot-pulse reload
     val df = TableManifest.readTable(spark, s"$base/records").get
     assert(df.count() == 2, "one row per pulse — superseded generation invisible")
     assert(df.filter(col("pulse_number") === 65546L)
@@ -126,9 +125,8 @@ class TableManifestSpec extends SparkSpec {
       .write.parquet(s"$table/pulse_number=$p")
     assert(TableManifest.readTable(spark, table).isEmpty,
       "uncommitted files must never be served")
-    PulseWriter.writePulsePartition(
-      Seq((q, "0", "a"), (q, "1", "b")).toDF("pulse_number", "jet_id", "payload"),
-      "records", base, pulses = Some(Seq(q)))
+    commitFrame(Seq((q, "0", "a"), (q, "1", "b")).toDF("pulse_number", "jet_id", "payload"),
+      table)
     val snap = TableManifest.latest(fs(table), table).get
     assert(snap.partitions.keySet == Set(s"pulse_number=$q"),
       s"the first commit starts from an empty snapshot: ${snap.partitions}")
@@ -136,18 +134,16 @@ class TableManifestSpec extends SparkSpec {
     assert(df.count() == 2 && df.filter(col("pulse_number") === p).count() == 0)
   }
 
-  test("a zero-row frame creates the table layout but publishes nothing, " +
-      "and a pulse absent from the frame keeps its old rows (dynamic-" +
-      "overwrite parity)") {
+  test("a zero-row write publishes nothing, and a pulse absent from the " +
+      "rows keeps its old rows (dynamic-overwrite parity)") {
     import spark.implicits._
     val base = tmp()
-    PulseWriter.writePulsePartition(
-      Seq((65546L, "0", "keep")).toDF("pulse_number", "jet_id", "payload"),
-      "records", base, pulses = Some(Seq(65546L)))
+    commitFrame(Seq((65546L, "0", "keep")).toDF("pulse_number", "jet_id", "payload"),
+      s"$base/records")
     // an empty reload of a DIFFERENT pulse touches nothing
-    PulseWriter.writePulsePartition(
+    assert(commitFrame(
       Seq.empty[(Long, String, String)].toDF("pulse_number", "jet_id", "payload"),
-      "records", base, pulses = Some(Seq(65556L)))
+      s"$base/records").isEmpty)
     val snap = TableManifest.latest(fs(s"$base/records"), s"$base/records").get
     assert(snap.version == 1 && snap.partitions.keySet == Set("pulse_number=65546"))
     assert(TableManifest.readTable(spark, s"$base/records").get.count() == 1)
@@ -183,15 +179,44 @@ class TableManifestSpec extends SparkSpec {
       .contains(orphan), "the orphan is deleted once the window has passed")
   }
 
+  test("a write that throws part-way publishes no manifest and deletes the " +
+      "files it already wrote; the next commit of the partitions serves its rows") {
+    import spark.implicits._
+    val local = s"${tmp()}/records"
+    val table = FailingFileSystem.path(local)
+    val pulses = Seq(65546L, 65556L)
+    def commit(tag: String) =
+      commitFrame(pulses.map(p => (p, "0", tag)).toDF("pulse_number", "jet_id", "payload"), table)
+    def served = TableManifest.readTable(spark, local).get
+      .orderBy("pulse_number").select("payload").as[String].collect().toSeq
+    val f = fs(local)
+    def onDisk = pulses.flatMap(p =>
+      TableManifest.listPartitionFiles(f, local, s"pulse_number=$p")).toSet
+    FailingFileSystem.armed(spark, 0)(commit("v1"))
+    val v1 = TableManifest.latest(f, local).get
+    val gen1 = onDisk
+    // the second partition's file create fails after the first file is written
+    val err = FailingFileSystem.armed(spark, 2)(intercept[java.io.IOException](commit("v2")))
+    assert(err.getMessage.contains("injected create failure"), err)
+    assert(FailingFileSystem.creates.get == 2, "one file was written before the failure")
+    assert(TableManifest.latest(f, local).get == v1, "a failed write publishes nothing")
+    assert(onDisk == gen1, s"the file written before the failure is deleted: ${onDisk -- gen1}")
+    assert(served == Seq("v1", "v1"))
+    val v2 = FailingFileSystem.armed(spark, 0)(commit("v3")).get
+    assert(v2.version == 2 && served == Seq("v3", "v3"))
+    assert(onDisk == gen1 ++ v2.partitions.values.flatten, "v1 is retained, v3 is live")
+  }
+
   test("snapshot memo: a store deleted and recreated at the same path " +
       "serves the NEW content, not the memoized old snapshot") {
     import spark.implicits._
     val base = tmp()
     val table = s"$base/records"
-    def write(tag: String, pulses: Seq[Long]): Unit =
-      PulseWriter.writePulsePartition(
-        pulses.map(p => (p, "0", tag)).toDF("pulse_number", "jet_id", "payload"),
-        "records", base, pulses = Some(pulses))
+    def write(tag: String, pulses: Seq[Long]): Unit = {
+      commitFrame(pulses.map(p => (p, "0", tag)).toDF("pulse_number", "jet_id", "payload"),
+        table)
+      ()
+    }
     write("old-store", Seq(65546L, 65556L))
     // prime the (path → snapshot) memo
     assert(TableManifest.readTable(spark, table).get.count() == 2)
@@ -214,10 +239,57 @@ class TableManifestSpec extends SparkSpec {
       "None for a table with no manifest") {
     import spark.implicits._
     val base = tmp()
-    PulseWriter.writePulsePartition(
-      Seq((65546L, "0", "x")).toDF("pulse_number", "jet_id", "payload"),
-      "records", base, pulses = Some(Seq(65546L)))
+    commitFrame(Seq((65546L, "0", "x")).toDF("pulse_number", "jet_id", "payload"),
+      s"$base/records")
     assert(TableManifest.versionToken(spark, s"$base/records").contains("m1"))
     assert(TableManifest.versionToken(spark, s"$base/nope").isEmpty)
+  }
+}
+
+/** The local file system mounted under `failing://`, whose `n`th create
+  * of a parquet data file throws — a disk that fails part-way through a
+  * commit. Arm it with [[FailingFileSystem.armed]].
+  */
+final class FailingFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  import org.apache.hadoop.fs.Path
+  import org.apache.hadoop.fs.permission.FsPermission
+  import org.apache.hadoop.util.Progressable
+
+  override def getUri: java.net.URI = java.net.URI.create("failing:///")
+  override def getScheme: String = "failing"
+
+  private def check(f: Path): Unit =
+    if (f.getName.endsWith(".parquet") &&
+        FailingFileSystem.creates.incrementAndGet() == FailingFileSystem.failAt.get)
+      throw new java.io.IOException(s"injected create failure: $f")
+
+  override def create(f: Path, overwrite: Boolean, bufferSize: Int, replication: Short,
+      blockSize: Long, progress: Progressable): org.apache.hadoop.fs.FSDataOutputStream = {
+    check(f); super.create(f, overwrite, bufferSize, replication, blockSize, progress)
+  }
+
+  override def create(f: Path, permission: FsPermission, overwrite: Boolean, bufferSize: Int,
+      replication: Short, blockSize: Long,
+      progress: Progressable): org.apache.hadoop.fs.FSDataOutputStream = {
+    check(f); super.create(f, permission, overwrite, bufferSize, replication, blockSize, progress)
+  }
+}
+
+object FailingFileSystem {
+  val creates = new java.util.concurrent.atomic.AtomicInteger
+  val failAt = new java.util.concurrent.atomic.AtomicInteger
+
+  /** `local` (an absolute local path) under the `failing://` scheme. */
+  def path(local: String): String = s"failing://$local"
+
+  /** Run `body` with `failing://` mounted and its `n`th data-file create
+    * throwing (0: none throws); `creates` counts them.
+    */
+  def armed[T](spark: org.apache.spark.sql.SparkSession, n: Int)(body: => T): T = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.failing.impl", classOf[FailingFileSystem].getName)
+    creates.set(0)
+    failAt.set(n)
+    try body finally failAt.set(0)
   }
 }

@@ -51,8 +51,8 @@ class PulseFeedSpec extends SparkSpec {
     // backfill: canonicalize -> chain sort -> order -> partition commit
     val q = PulseFeed.ingestStream(spark, landing, wire.schema, (batch, _) =>
         if (!batch.isEmpty) {
-          val staged = graft.ingest.Spine(batch)
-          graft.ingest.PulseWriter.writePulsePartition(staged, "records", store)
+          commitFrame(graft.ingest.Spine(batch), s"$store/records")
+          ()
         })
       .option("checkpointLocation", ckpt)
       .start()
