@@ -38,9 +38,21 @@ object ExporterServe {
       if (recs.columns.contains("prototype_reference")) recs
       else recs.withColumn("prototype_reference", lit(null).cast("binary"))
     }
+    // A call runs on a pool thread that one of grpc's netty event loops
+    // made, and a thread inherits Spark's job group from the thread that
+    // made it. Those event loops are shared by every gRPC client and
+    // server in the JVM and are started by whichever thread first
+    // registers a channel on them (an ingest daemon's fetch, say), so
+    // the exporter's poll jobs would be attributed to that thread's
+    // group. Each call re-applies the bootstrapping thread's group.
+    val sc = spark.sparkContext
+    val group = Option(sc.getLocalProperty("spark.jobGroup.id"))
+    val description = sc.getLocalProperty("spark.job.description")
+    val interrupt = "true" == sc.getLocalProperty("spark.job.interruptOnCancel")
     graft.streaming.GrpcPulseExporter.start(
       () => graft.model.Domain.servedPulses(spark, sfDir), () => records(),
-      port, pulsePeriodMs)
+      port, pulsePeriodMs,
+      () => group.fold(sc.clearJobGroup())(sc.setJobGroup(_, description, interrupt)))
   }
 
   def main(args: Array[String]): Unit = {

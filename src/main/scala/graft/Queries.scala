@@ -12,9 +12,11 @@ import graft.operators.{Pagination, Predicates, PulseChain}
   * derived from `events`), plus analytics anchors (TPC-H shapes) and the
   * training-pipeline operators (dedup / similarity / text / multimodal).
   *
-  * Each entry in [[catalog]] has a matching ANSI-SQL oracle in [[oracle]]
-  * (DuckDB-runnable, same parquet tables) unless the operator is not
-  * SQL-expressible (UDF hashes, typed flatMapGroups) — those are rows-only.
+  * Each entry in [[catalog]] has a matching ANSI-SQL oracle (DuckDB-
+  * runnable, same parquet tables) unless the operator is not
+  * SQL-expressible (UDF hashes, typed flatMapGroups) — those are
+  * rows-only. [[oracle]] holds the static entries; [[oracleFor]] adds the
+  * generated replays whose literals come from the corpus.
   *
   * Numeric discipline for oracle hash-equality:
   *  - money aggregates: exact DECIMAL(18,2) sums, cast to DOUBLE at the end
@@ -498,10 +500,11 @@ object Queries {
   // n-gram→minhash scale hand-off advisory (the r15 verdict's task 3):
   // SCALE.md says "use dd_minhash at this scale" about the i=1 collision
   // term that keeps dd_ngram_jaccard at 13.2× per decade at 5M docs —
-  // these knobs make the query itself SAY it when it applies. Checked
-  // once per dataset dir per JVM; corpora under MinDocs skip even the
-  // doc count's follow-up (the gate SFs and sf1 — 50k docs — pay one
-  // metadata-cheap count and nothing else). Above it, one extra
+  // these knobs make the query itself SAY it when it applies. Checked on
+  // every construction against the document count the parquet footers
+  // hold (metadata only, no job); corpora under MinDocs stop there (the
+  // gate SFs and sf1 — 50k docs — pay that footer read and nothing
+  // else). Above it, one extra
   // map-side-combined aggregate over the capped shingle stream measures
   // the TRUE candidate-pair count Σ C(df,2); more than PairsPerDoc
   // candidates per document means the collision term (not the near-dup
@@ -515,8 +518,6 @@ object Queries {
   // 500k, fires at 5M.
   val NgramAdvisoryMinDocs = 200000L
   val NgramAdvisoryPairsPerDoc = 2.0
-  private val ngramAdvisedDirs =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
   /** Measure-and-log form of the advisory — also the spec entry point
     * (public: a pipeline owner deciding between the exact and MinHash
@@ -612,10 +613,10 @@ object Queries {
     // existing exchange and the join-backs touch only candidate pairs.
     // No broadcast hint: sizes is one row per document and grows with the
     // corpus — AQE picks broadcast exactly while it actually fits.
-    // once per dir per JVM: the scale hand-off advisory (see above). The
-    // doc count is metadata-cheap; the candidate-pair measurement only
-    // runs past MinDocs, so the oracle-gated SFs pay ~nothing.
-    if (ngramAdvisedDirs.add(dir)) ngramScaleAdvisory(capped, docs.count())
+    // the scale hand-off advisory (see above): the footer doc count
+    // runs no job, and the candidate-pair measurement only runs past
+    // MinDocs, so the oracle-gated SFs pay ~nothing.
+    ngramScaleAdvisory(capped, Domain.footerRows(docs))
     val sizes = capped.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
     val agged = capped.as("a").join(capped.as("b"),
         col("a.sh") === col("b.sh") && col("a.doc_id") < col("b.doc_id"))
@@ -977,9 +978,9 @@ object Queries {
     * the catalog row IS the 100 TB path (a fixed width saturates its
     * 2^bits buckets and goes quadratic past the corpus it was sized for;
     * measured 26× for a 10× step at sf1 before this wiring). The sizes
-    * the query ran with are captured per dataset dir for the replay
-    * oracle, which computes nothing: it replays exactly the captured
-    * (bits, tables) with the kernel's own plane weights.
+    * the query ran with come from [[embLshSizes]], which the replay
+    * oracle calls too: it replays the same (bits, tables) with the
+    * kernel's own plane weights.
     */
   // LSH parameters — named once, interpolated into query bodies and the
   // generated replay oracles. The threshold and recall target are the
@@ -998,28 +999,24 @@ object Queries {
   val AnnLshK = 10
   val AnnLshMaxProbes = 16
 
+  /** (n, bits, tables) of dd_embed_lsh's banding on `dir`: n is the
+    * corpus row count read from the parquet footers of the embeddings
+    * relation's files (metadata only, no Spark job), and the signature
+    * geometry is the deterministic corpus-sized choice. The query and
+    * [[oracleFor]] both call this, so the replay interpolates the sizes
+    * the query ran with.
+    */
+  def embLshSizes(spark: SparkSession, dir: String): (Long, Int, Int) = {
+    val n = math.max(1L, Domain.footerRows(Domain.embeddings(spark, dir)))
+    val bits = graft.vector.CosineDedup.bitsFor(n, EmbLshThreshold, EmbLshTargetRecall, dim = 64)
+    (n, bits, graft.vector.CosineDedup.tablesFor(EmbLshThreshold, bits, EmbLshTargetRecall))
+  }
+
   val ddEmbedLsh: Q = (s, dir) => {
-    val emb = Domain.embeddings(s, dir)
-    // One count job sizes the signature geometry PER DATASET DIR — the
-    // capture registry doubles as the memo, so only the first
-    // construction for a dir pays it (corpus-sized plan constants can't
-    // be lazy: bits/tables are literals in the banding expression). The
-    // count is deterministic in the dir, so capture-then-replay equals
-    // recompute. Like the IVF/kmeans captures, this runs at
-    // DataFrame-construction time and keys the whole oracle registry to
-    // this dir — the registry's same-dir-per-dump contract (see the
-    // capture-registry note above) already covers that.
-    val n: Long = Option(embCorpusRowsByDir.get(dir)).map(_.longValue()).getOrElse {
-      val c = math.max(1L, emb.count())
-      embCorpusRowsByDir.put(dir, c)
-      c
-    }
-    val (bits, tables) = Option(embLshSizesByDir.get(dir)).getOrElse {
-      val b = graft.vector.CosineDedup.bitsFor(n, EmbLshThreshold, EmbLshTargetRecall, dim = 64)
-      (b, graft.vector.CosineDedup.tablesFor(EmbLshThreshold, b, EmbLshTargetRecall))
-    }
-    captureEmbLsh(dir, bits, tables)
-    graft.vector.CosineDedup.lshPairsSized(emb, dim = 64,
+    // corpus-sized plan constants can't be lazy: bits/tables are
+    // literals in the banding expression
+    val (n, bits, tables) = embLshSizes(s, dir)
+    graft.vector.CosineDedup.lshPairsSized(Domain.embeddings(s, dir), dim = 64,
         threshold = EmbLshThreshold, bits = bits, tables = tables,
         expectedBandedRows = Some(n * tables))
       .orderBy(col("a_id"), col("b_id"))
@@ -1036,105 +1033,11 @@ object Queries {
   val AnnIvfKnnK = 3
   val AnnIvfKnnProbe = 8
 
-  // ---- replay-oracle capture registry ----
-  // Captures (IVF/kmeans centroids, LSH probe lists) are keyed by DATASET
-  // DIR, and the generated-oracle accessors read only the most recently
-  // captured dir's entries: a JVM that runs catalog queries against two
-  // datasets can never dump one dataset's literals into the other's
-  // oracle_sql.json — an uncaptured family is absent (rows-only), never
-  // stale-wrong. Values are float32-exact through the parquet round-trip,
-  // so the replay sees the same literals whether the index was just built
-  // or read back.
-  @volatile private var captureDir: String = ""
-  private val ivfCentsByDir =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Seq[Float]]]()
-  private val kmeansCentsByDir =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Seq[Float]]]()
-  private val lshProbesByDir =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[Long]]()
-  private val embLshSizesByDir =
-    new java.util.concurrent.ConcurrentHashMap[String, (Int, Int)]()
-  private def ivfCents: Option[Array[Seq[Float]]] = Option(ivfCentsByDir.get(captureDir))
-  private def kmeansCents: Option[Array[Seq[Float]]] = Option(kmeansCentsByDir.get(captureDir))
-  private def lshProbes: Option[Seq[Long]] = Option(lshProbesByDir.get(captureDir))
-  private def embLshSizes: Option[(Int, Int)] = Option(embLshSizesByDir.get(captureDir))
-  private def captureIvf(dir: String, cs: Array[Seq[Float]]): Unit = {
-    ivfCentsByDir.put(dir, cs); captureDir = dir
-  }
-  private def captureLsh(dir: String, probes: Seq[Long]): Unit = {
-    lshProbesByDir.put(dir, probes); captureDir = dir
-  }
-  private def captureEmbLsh(dir: String, bits: Int, tables: Int): Unit = {
-    embLshSizesByDir.put(dir, (bits, tables)); captureDir = dir
-  }
-  /** Eligible-embedding count per dir (the sizing count dd_embed_lsh
-    * already pays once) — reused to derive the banding join's reducer
-    * width from DATA SIZE rather than a fixed core multiple.
-    */
-  private val embCorpusRowsByDir =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
-  // The dir-keyed registries/memos above (captured k-means centroids,
-  // LSH sizes/corpus count, the once-per-dir ngram advisory) serve
-  // values derived from a dataset generation; they evict on the same
-  // writer-rewrote-the-path signal every other derived cache rides
-  // (AnnIndex.centroidCache / DriftAdapters discipline) — without this a
-  // re-ingested corpus's ORACLE would replay the previous generation's
-  // centroid literals and the LSH geometry would stay sized to the old
-  // corpus for the JVM's lifetime. Both subtree directions evict
-  // (ADVICE r17): an invalidation UNDER the dir (a table rewrite) and an
-  // invalidation of an ANCESTOR of the dir (a wipe-and-rebuild harness
-  // invalidating the root above its dataset dirs) each stale the memo.
-  // Registered at object init, which precedes the first memoized entry.
-  graft.sources.RelationCache.onInvalidate { p =>
-    if (p == null) {
-      kmeansCentsByDir.clear(); embLshSizesByDir.clear()
-      embCorpusRowsByDir.clear(); ngramAdvisedDirs.clear()
-    } else {
-      def underOrOver(dir: String): Boolean = {
-        def slashed(x: String) = if (x.endsWith("/")) x else x + "/"
-        p == dir || p.startsWith(slashed(dir)) || dir.startsWith(slashed(p))
-      }
-      val pred: java.util.function.Predicate[String] = underOrOver(_)
-      kmeansCentsByDir.keySet().removeIf(pred)
-      embLshSizesByDir.keySet().removeIf(pred)
-      embCorpusRowsByDir.keySet().removeIf(pred)
-      ngramAdvisedDirs.removeIf(pred)
-    }
-  }
-
-  /** Test window into the dir-keyed registries (DirMemoEvictionSpec pins
-    * the invalidation eviction): presence of (k-means centroid capture,
-    * LSH sizes, corpus count) for `dir`.
-    */
-  private[graft] def dirMemoSnapshot(dir: String): (Boolean, Boolean, Boolean) =
-    (kmeansCentsByDir.containsKey(dir),
-      embLshSizesByDir.containsKey(dir), embCorpusRowsByDir.containsKey(dir))
-
-  /** Test-visible read of the captured centroid ARRAY INSTANCE for `dir`
-    * — TimingActionSpec pins the action_rev-3 de-gaming with it: two
-    * constructions of emb_kmeans must register two DISTINCT instances
-    * (reference inequality proves the Lloyd scans re-ran; a memo would
-    * hand back the same array).
-    */
-  private[graft] def capturedKmeansInstance(dir: String): Option[Array[Seq[Float]]] =
-    Option(kmeansCentsByDir.get(dir))
-
-  /** Test-visible read of the captured dd_embed_lsh geometry for `dir` —
-    * RecallInvariantsSpec asserts the oracle's plane-literal count
-    * against THIS (the sizes the query actually ran with) instead of
-    * re-deriving bits/tables or grepping SQL formatting, so a future
-    * DOUBLE[] literal elsewhere in the oracle cannot silently skew the
-    * pin (ADVICE r15).
-    */
-  private[graft] def capturedEmbLshSizes(dir: String): Option[(Int, Int)] =
-    Option(embLshSizesByDir.get(dir))
-
   val annIvf: Q = (s, dir) => {
     val emb = Domain.embeddings(s, dir)
     val q = queryVec(s, emb, dir)
     val path = graft.vector.AnnIndex.ivfPath(dir)
-    captureIvf(dir, graft.vector.AnnIndex.ensureIvf(emb, path))
+    graft.vector.AnnIndex.ensureIvf(emb, path)
     // nProbe=6 of 16 cells: measured recall@10 ≈ 0.8 reading ~a third of
     // the corpus on this testdata (neighbor cosines are weak, 0.28-0.37,
     // so harder pruning costs recall — see RecallInvariantsSpec).
@@ -1404,29 +1307,19 @@ object Queries {
   val SemDedupProbe = 2
   val SemDedupThreshold = 0.45
 
-  /** Refined centroids of the embeddings corpus, captured per execution.
-    * The xxhash64-ordered seed sample and the Lloyd scans cannot be
-    * re-derived in DuckDB, but the RESULT can be replayed exactly: the
-    * kernels fold ascending in double ([[graft.vector.expressions.VectorKernels]]),
-    * so `SUM(v * c ORDER BY i)` over these literals reproduces every dot
-    * bit-for-bit. Verify dumps oracle_sql.json only after all queries ran,
-    * so the capture is populated there; when unset (kmeans never ran or
-    * failed) the dynamic oracle entries are simply omitted → rows-only.
+  /** Refined centroids of the embeddings corpus. The xxhash64-ordered
+    * seed sample and the Lloyd scans cannot be re-derived in DuckDB, but
+    * the RESULT can be replayed exactly: the kernels fold ascending in
+    * double ([[graft.vector.expressions.VectorKernels]]), so
+    * `list_dot_product` over these literals reproduces every dot
+    * bit-for-bit. The queries and [[oracleFor]] each compute them; the
+    * result is deterministic in the corpus, so the oracle's literals are
+    * the ones the queries ran with. Every construction pays the seeded
+    * sample and the Lloyd scans in full: they ARE the work the
+    * clustering rows measure (action_rev 3).
     */
-  private def capturedCentroids(emb: DataFrame, dir: String): Array[Seq[Float]] = {
-    // ALWAYS recomputed: the seeded sample + 2 Lloyd scans ARE the work
-    // the clustering rows claim to measure, so every construction pays
-    // them in full. r17 let the capture registry double as a per-dir
-    // memo (populated untimed by an index pre-build), which moved the
-    // clustering out of emb_kmeans/dd_semdedup*'s timed region — the
-    // r17 verdict flagged that as bench accounting, not optimization
-    // (action_rev 3 reverts it). The registry below is WRITE-only from
-    // here: it exists so the replay oracle dumps the exact centroid
-    // literals the queries ran with, never to skip the computation.
-    val cs = graft.vector.Clustering.centroids(emb, KmeansK, KmeansIters)
-    kmeansCentsByDir.put(dir, cs); captureDir = dir
-    cs
-  }
+  private def kmeansCentroids(emb: DataFrame): Array[Seq[Float]] =
+    graft.vector.Clustering.centroids(emb, KmeansK, KmeansIters)
 
   /** Spherical k-means cluster assignment over the embedding corpus
     * (seeded sample + 2 Lloyd refinements; argmax replayed exactly by the
@@ -1434,7 +1327,7 @@ object Queries {
     */
   val embKmeans: Q = (s, dir) => {
     val emb = Domain.embeddings(s, dir)
-    graft.vector.Clustering.assignTo(emb, capturedCentroids(emb, dir))
+    graft.vector.Clustering.assignTo(emb, kmeansCentroids(emb))
       .orderBy(col("vec_id"))
   }
 
@@ -1444,7 +1337,7 @@ object Queries {
     */
   val ddSemdedup: Q = (s, dir) => {
     val emb = Domain.embeddings(s, dir)
-    graft.vector.Clustering.semdedupPairsWith(emb, capturedCentroids(emb, dir),
+    graft.vector.Clustering.semdedupPairsWith(emb, kmeansCentroids(emb),
         dim = 64, threshold = SemDedupThreshold, p = SemDedupProbe)
       .withColumn("cosine", round(col("cosine"), 6))
       .orderBy(col("a_id"), col("b_id"))
@@ -1467,12 +1360,11 @@ object Queries {
   val SemDedupMaxCell = 64
   val SemDedupSplitProbe = 3
   val ddSemdedupFixed: Q = (s, dir) => {
-    // coarse centroids through the capture ([[capturedCentroids]]) so the
-    // replay oracle sees the exact literals; computed fresh per
-    // construction (action_rev 3 — the Lloyd scans are timed work)
+    // coarse centroids computed fresh per construction (action_rev 3 —
+    // the Lloyd scans are timed work)
     val emb = Domain.embeddings(s, dir)
     graft.vector.Clustering.semdedupPairsFixedWith(emb,
-        capturedCentroids(emb, dir),
+        kmeansCentroids(emb),
         dim = 64, threshold = SemDedupThreshold, maxCell = SemDedupMaxCell,
         k = KmeansK, p = SemDedupProbe, softP = SemDedupSplitProbe)
       .withColumn("cosine", round(col("cosine"), 6))
@@ -1489,12 +1381,12 @@ object Queries {
     * vector. Near-dup pairs → connected components (standing artifact,
     * [[graft.operators.Components]]) → keep the minimum id per semantic
     * cluster; singletons keep themselves. Oracled exactly: the pair
-    * replay (captured centroid literals) feeds the same recursive-CTE
+    * replay (centroid literals) feeds the same recursive-CTE
     * reachability the dd_clusters oracle uses.
     */
   /** The semdedup components artifact, built by the first query that
     * touches it. Pair construction (incl. the centroid-seeding driver
-    * jobs inside capturedCentroids) is deferred into ensureComponents'
+    * jobs inside kmeansCentroids) is deferred into ensureComponents'
     * by-name param — the warm path reads the artifact without running a
     * single seeding job.
     */
@@ -1502,7 +1394,7 @@ object Queries {
     val emb = Domain.embeddings(s, dir)
     graft.operators.Components.ensureComponents(s,
       graft.vector.Clustering.semdedupPairsWith(emb,
-        capturedCentroids(emb, dir), dim = 64, threshold = SemDedupThreshold,
+        kmeansCentroids(emb), dim = 64, threshold = SemDedupThreshold,
         p = SemDedupProbe),
       "a_id", "b_id",
       graft.vector.AnnIndex.indexRoot(dir) + s"/semdedup-clusters-$semdedupParamsTag")
@@ -1525,6 +1417,14 @@ object Queries {
     graft.text.Dedup.simhashPairs(t(s, dir, "documents"), radius = SimhashRadius)
       .orderBy(col("a_id"), col("b_id"))
 
+  /** ann_lsh's margin-ranked probe buckets for query vector `q` — the
+    * same call [[graft.vector.AnnIndex.lshTopK]] makes. The heap
+    * expansion is driver-side and deterministic, so the replay oracle's
+    * bucket list is exactly the prune the query ran.
+    */
+  private def annLshProbes(q: Seq[Float]): Seq[Long] =
+    graft.vector.Similarity.marginProbeBuckets(q, AnnLshBits, maxProbes = AnnLshMaxProbes)
+
   val annLsh: Q = (s, dir) => {
     val emb = Domain.embeddings(s, dir)
     val q = queryVec(s, emb, dir)
@@ -1532,10 +1432,6 @@ object Queries {
     // corpus. On this testdata's weak-signal neighbors that buys ~0.6
     // recall@10 — hyperplane LSH cannot reach 0.8 here without giving up
     // pruning (measured: 50% read → 0.7); ann_ivf is the ≥0.8 path.
-    // margin-ranked probe buckets: the heap expansion is driver-side and
-    // deterministic, so capturing the bucket list replays the prune exactly
-    captureLsh(dir, graft.vector.Similarity.marginProbeBuckets(
-      q, AnnLshBits, maxProbes = AnnLshMaxProbes))
     val path = graft.vector.AnnIndex.lshPath(dir, bits = AnnLshBits, dim = q.length)
     graft.vector.AnnIndex.ensureLsh(emb, path, dim = q.length, bits = AnnLshBits)
     graft.vector.AnnIndex.lshTopK(s, path, q, AnnLshK, bits = AnnLshBits,
@@ -1554,7 +1450,7 @@ object Queries {
   val annIvfKnn: Q = (s, dir) => {
     val emb = Domain.embeddings(s, dir)
     val path = graft.vector.AnnIndex.ivfPath(dir)
-    captureIvf(dir, graft.vector.AnnIndex.ensureIvf(emb, path))
+    graft.vector.AnnIndex.ensureIvf(emb, path)
     graft.vector.AnnIndex.ivfKnnJoin(s, path,
         emb.filter(col("vec_id") < 10L).select(col("vec_id").as("query_id"), col("embedding")),
         k = AnnIvfKnnK, dim = 64, nProbe = AnnIvfKnnProbe,
@@ -1767,13 +1663,26 @@ object Queries {
       |              ELSE CAST(NULL AS VARCHAR) END AS second_prev_hash
       |  FROM drops0)""".stripMargin
 
-  /** Static + generated oracle entries. The centroid-literal entries exist
-    * only once a kmeans-family query has executed in this JVM (Verify's
-    * run order guarantees that before the dump); absent → rows-only, the
-    * pre-round-5 behavior.
+  /** Every oracle entry for the corpus at `dir`: the static entries plus
+    * the generated families, whose literals (k-means and IVF centroids,
+    * the LSH geometry and probe list) this computes from the corpus with
+    * the same functions the queries call. A family whose literals throw
+    * is logged and left out, so its queries are checked rows-only.
     */
-  def oracle: Map[String, String] =
-    staticOracle ++ centroidOracle ++ ivfOracle ++ lshOracle
+  def oracleFor(spark: SparkSession, dir: String): Map[String, String] = {
+    def family(name: String)(entries: => Map[String, String]): Map[String, String] =
+      try entries catch { case scala.util.control.NonFatal(e) =>
+        System.err.println(s"[graft] $name oracle left out (rows-only): ${e.getMessage}")
+        Map.empty
+      }
+    def emb = Domain.embeddings(spark, dir)
+    oracle ++
+      family("centroid")(centroidOracle(kmeansCentroids(emb))) ++
+      family("ivf")(ivfOracle(
+        graft.vector.AnnIndex.ensureIvf(emb, graft.vector.AnnIndex.ivfPath(dir)))) ++
+      family("lsh")(lshOracle(embLshSizes(spark, dir),
+        annLshProbes(queryVec(spark, emb, dir))))
+  }
 
   /** Centroids as one DOUBLE[] literal per cell — exact decimal
     * renderings of the float32 values, so the doubles DuckDB parses are
@@ -1809,7 +1718,7 @@ object Queries {
        |    row_number() OVER (PARTITION BY vec_id ORDER BY dot DESC, cell DESC) AS rk
        |  FROM dots)""".stripMargin
 
-  /** DuckDB replay of argmax/cosine against captured centroid literals.
+  /** DuckDB replay of argmax/cosine against the k-means centroid literals `cs`.
     *
     * Exactness argument: the Spark side computes every dot as an ascending
     * double fold over float values (VectorKernels); DuckDB's
@@ -1824,138 +1733,133 @@ object Queries {
     * cell DESC`; [[graft.vector.Ivf.topCells]] reverses an ascending
     * struct sort → same ordering for the soft top-p.
     */
-  private[graft] def centroidOracle: Map[String, String] =
-    kmeansCents.fold(Map.empty[String, String]) { cs =>
-      val assignRanked = affinityPrefix(cs)
-      // soft assignment → co-bucketed pairs → exact cosine, shared by the
-      // pair query and the verdict query's component stage
-      val semPairs =
-        s"""assign AS (SELECT vec_id, cell FROM ranked WHERE rk <= $SemDedupProbe),
-           |pairs AS (
-           |  SELECT DISTINCT a.vec_id AS a_id, b.vec_id AS b_id
-           |  FROM assign a JOIN assign b
-           |    ON a.cell = b.cell AND a.vec_id < b.vec_id),
-           |scored AS (
-           |  SELECT p.a_id, p.b_id,
-           |    CASE WHEN sqrt(list_dot_product(ea.v, ea.v)) * sqrt(list_dot_product(eb.v, eb.v)) = 0
-           |         THEN 0.0
-           |         ELSE list_dot_product(ea.v, eb.v) /
-           |              (sqrt(list_dot_product(ea.v, ea.v)) * sqrt(list_dot_product(eb.v, eb.v))) END AS c
-           |  FROM pairs p
-           |  JOIN ed ea ON ea.vec_id = p.a_id
-           |  JOIN ed eb ON eb.vec_id = p.b_id)""".stripMargin
-      Map(
-        "emb_kmeans" ->
-          s"""$assignRanked
-             |SELECT vec_id, CAST(cell AS INT) AS cluster FROM ranked
-             |WHERE rk = 1 ORDER BY vec_id""".stripMargin,
-        "dd_semdedup" ->
-          s"""$assignRanked,
-             |$semPairs
-             |SELECT a_id, b_id, round(c, 6) AS cosine FROM scored
-             |WHERE c >= $SemDedupThreshold ORDER BY a_id, b_id""".stripMargin,
-        "dd_semdedup_fixed" -> graft.functions.HashReplaySql.fixedSemdedupOracle(
-          centsListsSql(cs), SemDedupMaxCell, SemDedupProbe,
-          SemDedupSplitProbe, softLevels = 1, SemDedupThreshold),
-        "dd_semdedup_verdicts" ->
-          s"""${assignRanked.replaceFirst("^WITH ", "WITH RECURSIVE ")},
-             |$semPairs,
-             |-- MATERIALIZED: the recursive reach loop references edges
-             |-- every iteration, and DuckDB inlines plain CTEs — without
-             |-- the hint each iteration re-evaluates the whole pair
-             |-- pipeline (scored/pd/...), which exhausts memory at 10x
-             |-- the gate SF. The hint is semantics-neutral
-             |sp AS MATERIALIZED (SELECT a_id, b_id FROM scored WHERE c >= $SemDedupThreshold),
-             |edges AS MATERIALIZED (SELECT a_id AS u, b_id AS v FROM sp
-             |          UNION SELECT b_id, a_id FROM sp),
-             |reach AS (
-             |  SELECT u, u AS comp FROM (SELECT DISTINCT u FROM edges)
-             |  UNION
-             |  SELECT g.u, r.comp FROM edges g JOIN reach r ON g.v = r.u),
-             |comp AS (SELECT u, min(comp) AS comp FROM reach GROUP BY u)
-             |SELECT em.vec_id,
-             |  coalesce(cm.comp, em.vec_id) AS cluster_id,
-             |  CAST(CASE WHEN cm.comp IS NULL OR cm.comp = em.vec_id
-             |       THEN 1 ELSE 0 END AS BIGINT) AS keep
-             |FROM (SELECT vec_id FROM embeddings) em
-             |LEFT JOIN comp cm ON cm.u = em.vec_id
-             |ORDER BY em.vec_id""".stripMargin)
-    }
+  private def centroidOracle(cs: Array[Seq[Float]]): Map[String, String] = {
+    val assignRanked = affinityPrefix(cs)
+    // soft assignment → co-bucketed pairs → exact cosine, shared by the
+    // pair query and the verdict query's component stage
+    val semPairs =
+      s"""assign AS (SELECT vec_id, cell FROM ranked WHERE rk <= $SemDedupProbe),
+         |pairs AS (
+         |  SELECT DISTINCT a.vec_id AS a_id, b.vec_id AS b_id
+         |  FROM assign a JOIN assign b
+         |    ON a.cell = b.cell AND a.vec_id < b.vec_id),
+         |scored AS (
+         |  SELECT p.a_id, p.b_id,
+         |    CASE WHEN sqrt(list_dot_product(ea.v, ea.v)) * sqrt(list_dot_product(eb.v, eb.v)) = 0
+         |         THEN 0.0
+         |         ELSE list_dot_product(ea.v, eb.v) /
+         |              (sqrt(list_dot_product(ea.v, ea.v)) * sqrt(list_dot_product(eb.v, eb.v))) END AS c
+         |  FROM pairs p
+         |  JOIN ed ea ON ea.vec_id = p.a_id
+         |  JOIN ed eb ON eb.vec_id = p.b_id)""".stripMargin
+    Map(
+      "emb_kmeans" ->
+        s"""$assignRanked
+           |SELECT vec_id, CAST(cell AS INT) AS cluster FROM ranked
+           |WHERE rk = 1 ORDER BY vec_id""".stripMargin,
+      "dd_semdedup" ->
+        s"""$assignRanked,
+           |$semPairs
+           |SELECT a_id, b_id, round(c, 6) AS cosine FROM scored
+           |WHERE c >= $SemDedupThreshold ORDER BY a_id, b_id""".stripMargin,
+      "dd_semdedup_fixed" -> graft.functions.HashReplaySql.fixedSemdedupOracle(
+        centsListsSql(cs), SemDedupMaxCell, SemDedupProbe,
+        SemDedupSplitProbe, softLevels = 1, SemDedupThreshold),
+      "dd_semdedup_verdicts" ->
+        s"""${assignRanked.replaceFirst("^WITH ", "WITH RECURSIVE ")},
+           |$semPairs,
+           |-- MATERIALIZED: the recursive reach loop references edges
+           |-- every iteration, and DuckDB inlines plain CTEs — without
+           |-- the hint each iteration re-evaluates the whole pair
+           |-- pipeline (scored/pd/...), which exhausts memory at 10x
+           |-- the gate SF. The hint is semantics-neutral
+           |sp AS MATERIALIZED (SELECT a_id, b_id FROM scored WHERE c >= $SemDedupThreshold),
+           |edges AS MATERIALIZED (SELECT a_id AS u, b_id AS v FROM sp
+           |          UNION SELECT b_id, a_id FROM sp),
+           |reach AS (
+           |  SELECT u, u AS comp FROM (SELECT DISTINCT u FROM edges)
+           |  UNION
+           |  SELECT g.u, r.comp FROM edges g JOIN reach r ON g.v = r.u),
+           |comp AS (SELECT u, min(comp) AS comp FROM reach GROUP BY u)
+           |SELECT em.vec_id,
+           |  coalesce(cm.comp, em.vec_id) AS cluster_id,
+           |  CAST(CASE WHEN cm.comp IS NULL OR cm.comp = em.vec_id
+           |       THEN 1 ELSE 0 END AS BIGINT) AS keep
+           |FROM (SELECT vec_id FROM embeddings) em
+           |LEFT JOIN comp cm ON cm.u = em.vec_id
+           |ORDER BY em.vec_id""".stripMargin)
+  }
 
   /** Replay oracles for the persisted-IVF read paths: probe selection
     * (driver-side [[graft.vector.Ivf.cellsByAffinity]] sorts by (-dot,
     * -cell) — same ascending double fold, so `dot DESC, cell DESC` replays
     * it), build-time cell assignment, pruned candidate set, and exact
-    * cosine re-rank, all recomputed from the captured centroid literals.
+    * cosine re-rank, all recomputed from the index's centroid literals `cs`.
     * The raw (unrounded) ann_ivf cosine hash-matches because every double
     * op happens in the same sequence on both engines.
     */
-  private[graft] def ivfOracle: Map[String, String] =
-    ivfCents.fold(Map.empty[String, String]) { cs =>
-      val prefix = affinityPrefix(cs)
-      Map(
-        "ann_ivf" ->
-          s"""$prefix,
-             |q AS (SELECT v AS qv FROM ed WHERE vec_id = 0),
-             |qn AS (SELECT sqrt(list_dot_product(qv, qv)) AS nq FROM q),
-             |qcell AS (
-             |  SELECT c.cell, list_dot_product(q.qv, c.cv) AS dot
-             |  FROM q CROSS JOIN cents c),
-             |probed AS (
-             |  SELECT cell FROM (
-             |    SELECT cell, row_number() OVER (ORDER BY dot DESC, cell DESC) AS rk
-             |    FROM qcell) WHERE rk <= $AnnIvfProbe),
-             |cand AS (
-             |  SELECT r.vec_id FROM ranked r JOIN probed p USING (cell)
-             |  WHERE r.rk = 1 AND r.vec_id <> 0),
-             |scored AS (
-             |  SELECT ed.vec_id,
-             |    list_dot_product(ed.v, q.qv) AS dot,
-             |    sqrt(list_dot_product(ed.v, ed.v)) AS na
-             |  FROM ed JOIN cand ON cand.vec_id = ed.vec_id CROSS JOIN q)
-             |SELECT vec_id,
-             |  CASE WHEN na * qn.nq = 0 THEN 0.0 ELSE dot / (na * qn.nq) END AS cosine
-             |FROM scored, qn ORDER BY cosine DESC, vec_id LIMIT $AnnIvfK""".stripMargin,
-        "ann_ivf_knn" ->
-          s"""$prefix,
-             |qprobe AS (
-             |  SELECT vec_id AS query_id, cell FROM ranked
-             |  WHERE vec_id < 10 AND rk <= $AnnIvfKnnProbe),
-             |corpus AS (
-             |  SELECT vec_id AS neighbor_id, cell FROM ranked
-             |  WHERE rk = 1 AND vec_id >= 10),
-             |cand AS (
-             |  SELECT q.query_id, c.neighbor_id FROM qprobe q JOIN corpus c USING (cell)),
-             |scored AS (
-             |  SELECT cd.query_id, cd.neighbor_id,
-             |    CASE WHEN sqrt(list_dot_product(ea.v, ea.v)) * sqrt(list_dot_product(eb.v, eb.v)) = 0
-             |         THEN 0.0
-             |         ELSE list_dot_product(ea.v, eb.v) /
-             |              (sqrt(list_dot_product(ea.v, ea.v)) * sqrt(list_dot_product(eb.v, eb.v))) END AS c
-             |  FROM cand cd
-             |  JOIN ed ea ON ea.vec_id = cd.query_id
-             |  JOIN ed eb ON eb.vec_id = cd.neighbor_id),
-             |rk AS (
-             |  SELECT query_id, neighbor_id, c,
-             |    CAST(row_number() OVER (
-             |      PARTITION BY query_id ORDER BY c DESC, neighbor_id) AS BIGINT) AS rank
-             |  FROM scored)
-             |SELECT query_id, neighbor_id, round(c, 6) AS cosine, rank
-             |FROM rk WHERE rank <= $AnnIvfKnnK ORDER BY query_id, rank""".stripMargin)
-    }
+  private def ivfOracle(cs: Array[Seq[Float]]): Map[String, String] = {
+    val prefix = affinityPrefix(cs)
+    Map(
+      "ann_ivf" ->
+        s"""$prefix,
+           |q AS (SELECT v AS qv FROM ed WHERE vec_id = 0),
+           |qn AS (SELECT sqrt(list_dot_product(qv, qv)) AS nq FROM q),
+           |qcell AS (
+           |  SELECT c.cell, list_dot_product(q.qv, c.cv) AS dot
+           |  FROM q CROSS JOIN cents c),
+           |probed AS (
+           |  SELECT cell FROM (
+           |    SELECT cell, row_number() OVER (ORDER BY dot DESC, cell DESC) AS rk
+           |    FROM qcell) WHERE rk <= $AnnIvfProbe),
+           |cand AS (
+           |  SELECT r.vec_id FROM ranked r JOIN probed p USING (cell)
+           |  WHERE r.rk = 1 AND r.vec_id <> 0),
+           |scored AS (
+           |  SELECT ed.vec_id,
+           |    list_dot_product(ed.v, q.qv) AS dot,
+           |    sqrt(list_dot_product(ed.v, ed.v)) AS na
+           |  FROM ed JOIN cand ON cand.vec_id = ed.vec_id CROSS JOIN q)
+           |SELECT vec_id,
+           |  CASE WHEN na * qn.nq = 0 THEN 0.0 ELSE dot / (na * qn.nq) END AS cosine
+           |FROM scored, qn ORDER BY cosine DESC, vec_id LIMIT $AnnIvfK""".stripMargin,
+      "ann_ivf_knn" ->
+        s"""$prefix,
+           |qprobe AS (
+           |  SELECT vec_id AS query_id, cell FROM ranked
+           |  WHERE vec_id < 10 AND rk <= $AnnIvfKnnProbe),
+           |corpus AS (
+           |  SELECT vec_id AS neighbor_id, cell FROM ranked
+           |  WHERE rk = 1 AND vec_id >= 10),
+           |cand AS (
+           |  SELECT q.query_id, c.neighbor_id FROM qprobe q JOIN corpus c USING (cell)),
+           |scored AS (
+           |  SELECT cd.query_id, cd.neighbor_id,
+           |    CASE WHEN sqrt(list_dot_product(ea.v, ea.v)) * sqrt(list_dot_product(eb.v, eb.v)) = 0
+           |         THEN 0.0
+           |         ELSE list_dot_product(ea.v, eb.v) /
+           |              (sqrt(list_dot_product(ea.v, ea.v)) * sqrt(list_dot_product(eb.v, eb.v))) END AS c
+           |  FROM cand cd
+           |  JOIN ed ea ON ea.vec_id = cd.query_id
+           |  JOIN ed eb ON eb.vec_id = cd.neighbor_id),
+           |rk AS (
+           |  SELECT query_id, neighbor_id, c,
+           |    CAST(row_number() OVER (
+           |      PARTITION BY query_id ORDER BY c DESC, neighbor_id) AS BIGINT) AS rank
+           |  FROM scored)
+           |SELECT query_id, neighbor_id, round(c, 6) AS cosine, rank
+           |FROM rk WHERE rank <= $AnnIvfKnnK ORDER BY query_id, rank""".stripMargin)
+  }
 
   /** Replay oracles for the hyperplane-LSH paths. dd_embed_lsh replays
-    * the corpus-sized (bits, tables) CAPTURED at query execution — the
-    * sizing is deterministic in the corpus count, so capture-then-replay
-    * equals recompute, without the oracle duplicating the cost model —
-    * with the native kernel's own Rademacher plane weights (±1 exactly
-    * representable; `VectorKernels.planeWeights`); ann_lsh additionally
-    * needs the margin-ranked probe list. Both are absent (rows-only
-    * check) until their query has run against the capture dir.
+    * the corpus-sized (bits, tables) of `sizes` ([[embLshSizes]], the
+    * call the query makes) with the native kernel's own Rademacher plane
+    * weights (±1 exactly representable; `VectorKernels.planeWeights`);
+    * ann_lsh replays the margin-ranked bucket list `probes`.
     * Signature bits compare `dot >= 0` on bit-identical doubles; the bit
     * sum is integer arithmetic.
     */
-  private[graft] def lshOracle: Map[String, String] = {
+  private def lshOracle(sizes: (Long, Int, Int), probes: Seq[Long]): Map[String, String] = {
     // One row per (table, bit) whose plane is a DOUBLE[] literal, flat
     // (table·bits + bit)·dim + j kernel layout. list_dot_product on
     // DOUBLE[] casts accumulates sequentially in double — verified
@@ -1973,8 +1877,8 @@ object Queries {
         }
       }.mkString(",")
     }
-    val embedLshEntry = embLshSizes.map { case (bits, tables) =>
-      "dd_embed_lsh" ->
+    val (_, bits, tables) = sizes
+    val embedLshEntry = "dd_embed_lsh" ->
       s"""WITH planes AS (
          |  SELECT * FROM (VALUES ${kernelPlaneLists(tables, bits, 42L)})
          |  AS t(tbl, bit, pv)),
@@ -2001,7 +1905,6 @@ object Queries {
          |  JOIN ed eb ON eb.vec_id = c.b_id)
          |SELECT a_id, b_id, c AS cosine FROM scored
          |WHERE c >= $EmbLshThreshold ORDER BY a_id, b_id""".stripMargin
-    }
     // the served index's Gaussian plane family, one DOUBLE[] per bit
     // (exact decimal renderings of the float weights)
     def gaussianPlaneLists(bits: Int, seed: Long): String = {
@@ -2010,38 +1913,40 @@ object Queries {
         s"($b,CAST(${p.iterator.map(_.toDouble).mkString("[", ",", "]")} AS DOUBLE[]))"
       }.mkString(",")
     }
-    val annLshEntry = lshProbes.map { probes =>
-      "ann_lsh" ->
-        s"""WITH planes AS (
-           |  SELECT * FROM (VALUES ${gaussianPlaneLists(AnnLshBits, 42L)})
-           |  AS t(bit, pv)),
-           |ed AS (
-           |  SELECT vec_id, CAST(CAST(embedding AS FLOAT[]) AS DOUBLE[]) AS v
-           |  FROM embeddings),
-           |q AS (SELECT v AS qv FROM ed WHERE vec_id = 0),
-           |qn AS (SELECT sqrt(list_dot_product(qv, qv)) AS nq FROM q),
-           |sigs AS (
-           |  SELECT ed.vec_id,
-           |    CAST(SUM(CASE WHEN list_dot_product(ed.v, p.pv) >= 0
-           |                  THEN CAST(1 AS BIGINT) << p.bit
-           |                  ELSE CAST(0 AS BIGINT) END) AS BIGINT) AS sig
-           |  FROM ed CROSS JOIN planes p GROUP BY ed.vec_id),
-           |cand AS (
-           |  SELECT vec_id FROM sigs
-           |  WHERE sig IN (${probes.mkString(",")}) AND vec_id <> 0),
-           |scored AS (
-           |  SELECT ed.vec_id,
-           |    list_dot_product(ed.v, q.qv) AS dot,
-           |    sqrt(list_dot_product(ed.v, ed.v)) AS na
-           |  FROM ed JOIN cand ON cand.vec_id = ed.vec_id CROSS JOIN q)
-           |SELECT vec_id,
-           |  CASE WHEN na * qn.nq = 0 THEN 0.0 ELSE dot / (na * qn.nq) END AS cosine
-           |FROM scored, qn ORDER BY cosine DESC, vec_id LIMIT $AnnLshK""".stripMargin
-    }
-    Map.empty[String, String] ++ embedLshEntry ++ annLshEntry
+    val annLshEntry = "ann_lsh" ->
+      s"""WITH planes AS (
+         |  SELECT * FROM (VALUES ${gaussianPlaneLists(AnnLshBits, 42L)})
+         |  AS t(bit, pv)),
+         |ed AS (
+         |  SELECT vec_id, CAST(CAST(embedding AS FLOAT[]) AS DOUBLE[]) AS v
+         |  FROM embeddings),
+         |q AS (SELECT v AS qv FROM ed WHERE vec_id = 0),
+         |qn AS (SELECT sqrt(list_dot_product(qv, qv)) AS nq FROM q),
+         |sigs AS (
+         |  SELECT ed.vec_id,
+         |    CAST(SUM(CASE WHEN list_dot_product(ed.v, p.pv) >= 0
+         |                  THEN CAST(1 AS BIGINT) << p.bit
+         |                  ELSE CAST(0 AS BIGINT) END) AS BIGINT) AS sig
+         |  FROM ed CROSS JOIN planes p GROUP BY ed.vec_id),
+         |cand AS (
+         |  SELECT vec_id FROM sigs
+         |  WHERE sig IN (${probes.mkString(",")}) AND vec_id <> 0),
+         |scored AS (
+         |  SELECT ed.vec_id,
+         |    list_dot_product(ed.v, q.qv) AS dot,
+         |    sqrt(list_dot_product(ed.v, ed.v)) AS na
+         |  FROM ed JOIN cand ON cand.vec_id = ed.vec_id CROSS JOIN q)
+         |SELECT vec_id,
+         |  CASE WHEN na * qn.nq = 0 THEN 0.0 ELSE dot / (na * qn.nq) END AS cosine
+         |FROM scored, qn ORDER BY cosine DESC, vec_id LIMIT $AnnLshK""".stripMargin
+    Map(embedLshEntry, annLshEntry)
   }
 
-  private[graft] val staticOracle: Map[String, String] = Map(
+  /** The oracle entries that need no literals from the corpus. The
+    * generated families ([[oracleFor]]) are added by Verify when it
+    * writes `oracle_sql.json`.
+    */
+  val oracle: Map[String, String] = Map(
     // full MinHash-LSH replay — token/shingle/signature/band hashes all
     // reproduced bit-exactly via graft.functions.HashReplaySql
     "dd_minhash" -> graft.functions.HashReplaySql.minhashOracle(

@@ -118,13 +118,21 @@ object Sessions {
     }
   }
 
+  /** Entries (files and dirs, the root included) [[dirBytes]] visits at
+    * most. An ingest store gains about two files per pulse, so bytes
+    * alone would not bound the walk over a store of many small files.
+    */
+  val DirWalkMaxEntries = 10000
+
   /** Recursive on-disk byte count of a local data dir, short-circuited
-    * at `stopAt` — the walk is GENUINELY bounded: once the running sum
-    * already saturates the posture clamp there is nothing left to
-    * learn, so a 100 TB store pays for the first few GB of directory
-    * listing, never a full-tree walk. -1 when the path is missing or
-    * unwalkable (callers then keep the scale-safe flat posture). Runs
-    * once at session build, never on a per-query path.
+    * at `stopAt` bytes or [[DirWalkMaxEntries]] entries, whichever comes
+    * first, and then the bytes counted so far — the walk is GENUINELY
+    * bounded: once the running sum already saturates the posture clamp
+    * there is nothing left to learn, so a 100 TB store pays for the
+    * first few GB of directory listing, never a full-tree walk. -1 when
+    * the path is missing or unwalkable (callers then keep the
+    * scale-safe flat posture). Runs once at session build, never on a
+    * per-query path.
     */
   def dirBytes(dir: String, stopAt: Long = Long.MaxValue): Long =
     try {
@@ -135,7 +143,9 @@ object Sessions {
         try {
           val it = s.iterator()
           var sum = 0L
-          while (sum < stopAt && it.hasNext) {
+          var entries = 0
+          while (sum < stopAt && entries < DirWalkMaxEntries && it.hasNext) {
+            entries += 1
             val p = it.next()
             if (java.nio.file.Files.isRegularFile(p))
               sum += (try java.nio.file.Files.size(p) catch { case NonFatal(_) => 0L })

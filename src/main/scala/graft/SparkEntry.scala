@@ -12,9 +12,13 @@ object SparkEntry {
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] = Queries.catalog
 
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted for non-SQL-expressible ops
-    * (seeded hash families, typed flatMapGroups) → rows-only check.
+  /** The static oracle entries: ANSI SQL runnable by DuckDB on the same
+    * parquet tables, for every query whose oracle needs no literals from
+    * the corpus. Omitted for non-SQL-expressible ops (seeded hash
+    * families, typed flatMapGroups) → rows-only check. The generated
+    * entries (centroid, IVF and LSH replays) depend on the corpus; Verify
+    * assembles them with [[Queries.oracleFor]] when it writes
+    * `oracle_sql.json`.
     */
   def oracleSql: Map[String, String] = Queries.oracle
 }

@@ -2,8 +2,9 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import scala.util.control.NonFatal
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json (the static entries and the generated families
+  * [[Queries.oracleFor]] assembles for `sfDir`), for the DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
@@ -35,7 +36,7 @@ object Verify {
     // a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
     def q(s: String): String = graft.api.JsonOut.str(s)
-    val json = SparkEntry.oracleSql
+    val json = Queries.oracleFor(spark, sfDir)
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

@@ -45,6 +45,21 @@ object Domain {
     DriftAdapters.normalize(name, path, graft.sources.RelationCache.parquet(spark, path))
   }
 
+  /** Row count of a [[table]] frame summed from the parquet footers of
+    * its relation's files: metadata reads only, no Spark job. Exact for
+    * an unfiltered table, since every [[DriftAdapters.normalize]] step is
+    * a projection.
+    */
+  def footerRows(df: DataFrame): Long = {
+    val conf = df.sparkSession.sparkContext.hadoopConfiguration
+    df.inputFiles.iterator.map { f =>
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(new java.net.URI(f)), conf))
+      try reader.getRecordCount finally reader.close()
+    }.sum
+  }
+
   /** The event feed with `ts` normalized to LongType epoch NANOS — the
     * representation every downstream view and oracle assumes (`ts DIV
     * PulseNs` etc., DuckDB `epoch_ns(ts)`). Physical-form drift handling

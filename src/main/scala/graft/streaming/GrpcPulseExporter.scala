@@ -54,16 +54,19 @@ object GrpcPulseExporter {
     * startup window would long-poll the schema-stable empty frame for
     * the stream's whole life). Over the immutable corpus the supplier
     * resolves the relation cache, so the per-poll cost is a map lookup.
+    * `onCall` runs on the serving thread before each call's feed loop.
     */
   def service(pulsesFn: () => DataFrame, recordsFn: () => DataFrame,
-      pulsePeriodMs: Long): ServerServiceDefinition =
+      pulsePeriodMs: Long, onCall: () => Unit): ServerServiceDefinition =
     ServerServiceDefinition.builder("exporter.PulseExporter")
       .addMethod(GrpcWire.GetNextPulseMethod,
         ServerCalls.asyncServerStreamingCall(
           new ServerCalls.ServerStreamingMethod[GetNextPulseRequest, GetNextPulseResponse] {
             override def invoke(req: GetNextPulseRequest,
-                obs: StreamObserver[GetNextPulseResponse]): Unit =
+                obs: StreamObserver[GetNextPulseResponse]): Unit = {
+              onCall()
               feed(pulsesFn, recordsFn, pulsePeriodMs, req, obs)
+            }
           }))
       .build()
 
@@ -137,14 +140,14 @@ object GrpcPulseExporter {
     * DataFrame overload serves an immutable snapshot (tests, corpus).
     */
   def start(pulsesFn: () => DataFrame, recordsFn: () => DataFrame,
-      port: Int, pulsePeriodMs: Long): Handle = {
+      port: Int, pulsePeriodMs: Long, onCall: () => Unit): Handle = {
     val pool = Executors.newCachedThreadPool()
     val server = NettyServerBuilder.forPort(port)
       .executor(pool)
       // match the reference transport's 1 GiB message cap
       // (configuration.go:67 MaxTransportMsg) on the serve side too
       .maxInboundMessageSize(1 << 30)
-      .addService(service(pulsesFn, recordsFn, pulsePeriodMs))
+      .addService(service(pulsesFn, recordsFn, pulsePeriodMs, onCall))
       .build()
       .start()
     new Handle(server, pool)
@@ -155,5 +158,5 @@ object GrpcPulseExporter {
     */
   def start(pulses: DataFrame, records: DataFrame, port: Int = 0,
       pulsePeriodMs: Long = 10000L): Handle =
-    start(() => pulses, () => records, port, pulsePeriodMs)
+    start(() => pulses, () => records, port, pulsePeriodMs, () => ())
 }

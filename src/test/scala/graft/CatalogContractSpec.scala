@@ -1,13 +1,12 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-
-/** Driver-contract invariants that need no SparkSession: every oracle key
-  * must name a catalog query (an orphan oracle would make the driver's
-  * DuckDB pass fail on a missing parquet dump), and oracle SQL must stay
-  * single-statement ANSI-ish text the dump layer can JSON-escape.
+/** Driver-contract invariants: every oracle key must name a catalog
+  * query (an orphan oracle would make the driver's DuckDB pass fail on a
+  * missing parquet dump), oracle SQL must stay single-statement ANSI-ish
+  * text the dump layer can JSON-escape, and the oracled set must not
+  * shrink.
   */
-class CatalogContractSpec extends AnyFunSuite {
+class CatalogContractSpec extends SparkSpec {
 
   test("every oracle key has a catalog query") {
     val orphans = Queries.oracle.keySet.diff(Queries.catalog.keySet)
@@ -17,28 +16,16 @@ class CatalogContractSpec extends AnyFunSuite {
   test("oracled coverage stays at the declared level") {
     // rows-only queries are the deliberate exceptions (seeded hash
     // families, approximations); everything else must keep its oracle so
-    // the driver's correctness gate stays strong. emb_kmeans/dd_semdedup
-    // gain a generated centroid-literal oracle once the kmeans family has
-    // executed in this JVM (Verify's order guarantees it; suite order here
-    // doesn't), so they are rows-only exactly while uncaptured;
-    // dd_embed_lsh likewise — its replay interpolates the corpus-sized
-    // (bits, tables) captured at query execution.
-    // snapshot the three generated maps ONCE and derive both sides from
-    // it — reading the volatile capture state twice would flake if a
-    // concurrently running suite executes a kmeans/IVF/LSH query between
-    // the reads
-    val centroid = Queries.centroidOracle
-    val ivf = Queries.ivfOracle
-    val lsh = Queries.lshOracle
-    val oracled = Queries.staticOracle.keySet ++ centroid.keySet ++ ivf.keySet ++ lsh.keySet
+    // the driver's correctness gate stays strong. The generated families
+    // (centroid, IVF and LSH replays) are part of the snapshot Verify
+    // writes, so every catalog query is oracled there.
+    val oracled = Queries.oracleFor(spark, "/root/testdata/sf0.001").keySet
     val rowsOnly = Queries.catalog.keySet.diff(oracled)
-    val declared =
-      (Set("dd_semdedup", "emb_kmeans", "dd_semdedup_verdicts",
-        "dd_semdedup_fixed") -- centroid.keySet) ++
-      (Set("ann_ivf", "ann_ivf_knn") -- ivf.keySet) ++
-      (Set("ann_lsh", "dd_embed_lsh") -- lsh.keySet)
+    val declared = Set.empty[String]
     assert(rowsOnly == declared,
       s"rows-only set drifted: extra=${rowsOnly.diff(declared)} missing=${declared.diff(rowsOnly)}")
+    assert(oracled.subsetOf(Queries.catalog.keySet),
+      s"generated oracle entries without a catalog query: ${oracled.diff(Queries.catalog.keySet)}")
   }
 
   test("oracle SQL contains no statement separators") {

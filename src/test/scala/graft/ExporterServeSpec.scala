@@ -108,4 +108,58 @@ class ExporterServeSpec extends SparkSpec {
     assert(p.contains("PushedFilters") && p.contains("EqualTo(pulse_number"),
       s"recount plan must push the pulse bound to parquet:\n${p.take(2000)}")
   }
+
+  test("a subscriber's poll jobs carry the job group of the thread that " +
+      "bootstrapped the exporter, whichever thread made the gRPC threads") {
+    val id = java.util.UUID.randomUUID().toString
+    val (boot, other) = (s"exporter-boot-$id", s"other-$id")
+    val pollGroups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (js.stageInfos.exists(_.details.contains("GrpcPulseExporter")))
+          pollGroups.add(Option(js.properties)
+            .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse("<none>"))
+    }
+    // a thread in ANOTHER job group starts a gRPC server first, so the
+    // shared netty event loops that later serve the exporter's calls (and
+    // make its pool threads) are not started by the bootstrapping thread
+    def inOther[T](body: => T): T = {
+      var out: Option[T] = None
+      val t = new Thread(() => {
+        spark.sparkContext.setJobGroup(other, "another component")
+        out = Some(body)
+      })
+      t.start(); t.join()
+      out.get
+    }
+    val decoy = inOther(org.sparkproject.connect.grpc.netty.NettyServerBuilder
+      .forPort(0).build().start())
+    spark.sparkContext.setJobGroup(boot, "exporter")
+    val handle = try ExporterServe.bootstrap(spark, dir, port = 0, pulsePeriodMs = 50L)
+      finally spark.sparkContext.clearJobGroup()
+    val ch = GrpcTransport.channel("localhost", handle.port)
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val subscriber = new Thread(() => {
+        spark.sparkContext.setJobGroup(other, "subscriber")
+        try {
+          org.sparkproject.connect.grpc.stub.ClientCalls.blockingServerStreamingCall(
+            ch, GrpcWire.GetNextPulseMethod,
+            org.sparkproject.connect.grpc.CallOptions.DEFAULT,
+            GrpcWire.GetNextPulseRequest(0L)).hasNext
+          ()
+        } catch { case scala.util.control.NonFatal(_) => () } // the channel closes
+      })
+      subscriber.start()
+      val by = System.nanoTime() + 30L * 1000000000L
+      while (pollGroups.size < 3 && System.nanoTime() < by) Thread.sleep(20)
+      assert(pollGroups.size >= 3, "the subscriber's polls ran no Spark job")
+      import scala.jdk.CollectionConverters._
+      assert(pollGroups.asScala.forall(_ == boot),
+        s"poll jobs ran in groups ${pollGroups.asScala.toSet}, not $boot")
+    } finally {
+      spark.sparkContext.removeSparkListener(l)
+      GrpcTransport.close(ch); handle.stop(); decoy.shutdownNow()
+    }
+  }
 }

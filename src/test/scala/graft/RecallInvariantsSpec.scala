@@ -51,26 +51,23 @@ class RecallInvariantsSpec extends SparkSpec {
 
   test("dd_embed_lsh oracle replays exactly the corpus-sized geometry the " +
       "query ran with") {
-    // the catalog row captures (bits, tables) per dataset dir; the
-    // generated replay must interpolate the same sizes — one plane row
-    // per (table, bit), each a dim-64 DOUBLE[] literal
-    Queries.catalog("dd_embed_lsh")(spark, dir).count()
-    // the CAPTURE is the truth about what the query ran with — assert
-    // the derivation against it, then count the oracle's plane rows by
-    // their full (table,bit,CAST([ shape so an unrelated DOUBLE[]
-    // literal added to this oracle later cannot inflate the count
-    // (ADVICE r15)
-    val (bits, tables) = Queries.capturedEmbLshSizes(dir)
-      .getOrElse(fail("dd_embed_lsh ran but captured no (bits, tables)"))
-    val n = spark.read.parquet(s"$dir/embeddings.parquet").count()
+    // the catalog row sizes (bits, tables) with Queries.embLshSizes, and
+    // the generated replay must interpolate the same sizes — one plane
+    // row per (table, bit), each a dim-64 DOUBLE[] literal
+    val (n, bits, tables) = Queries.embLshSizes(spark, dir)
+    assert(n == spark.read.parquet(s"$dir/embeddings.parquet").count(),
+      "the footer corpus size must equal the table's row count")
     assert(bits == graft.vector.CosineDedup.bitsFor(
       n, Queries.EmbLshThreshold, Queries.EmbLshTargetRecall, dim = 64),
-      "captured bits must equal the deterministic corpus-sized choice")
+      "bits must equal the deterministic corpus-sized choice")
     assert(tables == graft.vector.CosineDedup.tablesFor(
       Queries.EmbLshThreshold, bits, Queries.EmbLshTargetRecall),
-      "captured tables must equal the recall-holding choice")
-    val sql = Queries.lshOracle.getOrElse("dd_embed_lsh",
-      fail("dd_embed_lsh oracle absent after the query ran"))
+      "tables must equal the recall-holding choice")
+    // count the oracle's plane rows by their full (table,bit,CAST([ shape
+    // so an unrelated DOUBLE[] literal added to this oracle later cannot
+    // inflate the count (ADVICE r15)
+    val sql = Queries.oracleFor(spark, dir).getOrElse("dd_embed_lsh",
+      fail("dd_embed_lsh oracle absent"))
     val planeRows = "\\(\\d+,\\s*\\d+,\\s*CAST\\(\\[".r.findAllIn(sql).length
     assert(planeRows == tables * bits,
       s"oracle has $planeRows plane rows, query ran ${tables}x$bits")

@@ -63,6 +63,19 @@ class SessionsSpec extends org.scalatest.funsuite.AnyFunSuite {
       assert(Sessions.dirBytes(tiny) == 2048L)
       assert(Sessions.dirBytes(tiny, stopAt = 1L) == 1024L,
         "the walk must stop at the first file once stopAt is reached")
+      // and it stops at DirWalkMaxEntries entries (the root is one), so
+      // a dir of many small files is not walked to the end either
+      val many = java.nio.file.Files.createTempDirectory("sessions-spec-many")
+      try {
+        (0 to Sessions.DirWalkMaxEntries).foreach { i =>
+          java.nio.file.Files.write(many.resolve(s"f$i"), Array[Byte](0))
+        }
+        assert(Sessions.dirBytes(many.toString) == Sessions.DirWalkMaxEntries - 1L,
+          "the walk must stop after DirWalkMaxEntries entries")
+      } finally {
+        java.nio.file.Files.list(many).forEach(f => java.nio.file.Files.delete(f))
+        java.nio.file.Files.delete(many)
+      }
       // 8 x 32 reducers x 64 MB advisory / 4x expansion, +1 to cross it
       assert(Sessions.posturesSaturatedAt("32") == (4L << 30) + 1)
       // the positive codec branch, via a sparse file (logical size is

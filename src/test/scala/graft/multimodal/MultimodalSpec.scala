@@ -205,22 +205,18 @@ class MultimodalSpec extends SparkSpec {
       s"newest kept, oldest evicted: $after")
   }
 
-  test("audio decode stays exact after the hot-reader shortcut warms, and " +
-      "a corrupt payload after it is still contained (r18: the ordered " +
-      "provider walk let SoftMidiAudioFileReader re-scan the synchronized " +
-      "MIDI registry per WAV decode — 0.47 s/task blocked vs 0.027 CPU)") {
+  test("successive WAV decodes stay exact, and a non-audio payload between " +
+      "them throws without changing the next decode") {
     val a = payload("first wav")
     val b = payload("second wav, longer payload")
-    // first decode pays the provider walk and caches the accepting reader
     assert(Multimodal.decodeAudio(Multimodal.encodeWav(a)) ==
       (a.length.toLong, a.map(_ & 0xff).map(_.toLong).sum))
-    // second decode rides the hot reader — identical contract
     assert(Multimodal.decodeAudio(Multimodal.encodeWav(b)) ==
       (b.length.toLong, b.map(_ & 0xff).map(_.toLong).sum))
-    // a non-audio payload after the hot reader is set still walks the
-    // full provider list and throws (contained per-row by callers)
+    // a non-audio payload walks the full provider list and throws
+    // (contained per-row by callers)
     intercept[Exception](Multimodal.decodeAudio(payload("not audio at all")))
-    // and the hot path still works after the rejection
+    // and a WAV after the rejection still decodes exactly
     assert(Multimodal.decodeAudio(Multimodal.encodeWav(a))._1 == a.length.toLong)
   }
 
