@@ -57,8 +57,8 @@ object ExporterServe {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val port = sys.env.getOrElse("SPARK_GRAFT_GRPC_PORT", "8090").toInt
-    val periodMs = sys.env.getOrElse("SPARK_GRAFT_PULSE_PERIOD_MS", "10000").toLong
+    val port = Sessions.envLong("SPARK_GRAFT_GRPC_PORT", 8090L, max = Sessions.MaxPort).toInt
+    val periodMs = Sessions.envLong("SPARK_GRAFT_PULSE_PERIOD_MS", 10000L, min = 1L)
     val spark = Sessions.serviceBuilder(Sessions.cpus(), "graft-exporter-api", Some(sfDir))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -63,19 +63,22 @@ import graft.ingest.{Canonicalize, GrpcTransport, PulseWriter, Resilience, Table
   * restart resumes the cursor, the sequential mark, and every open
   * pulse's jet cover instead of truncating history — and the seed is
   * BOUNDED by the open frontier, not the store's history: each flush
-  * summarizes the complete∧sequential prefix to a `_frontier.json`
-  * cursor, and seeding collects only the frontier buckets (see
-  * [[Daemon.seed]]; the reference's controller likewise registers only
-  * incomplete pulses, `etl/controller/controller.go:124-132`). Writes
-  * are manifested replaces of whole `pulse_bucket` partitions
-  * (a bucket spans [[Config.flushBucketSpan]] pulse numbers at first;
-  * the span is a STORE property persisted in `_frontier.json` and
-  * coarsened by a seed-time re-bucketing migration once history
-  * outgrows [[Config.maxPulseBuckets]] dirs — see [[spanForExtent]]): a
-  * flush replaces only the buckets containing changed pulses — bounded
-  * forever, however long the daemon runs. Every table the daemon
-  * writes is manifested ([[TableManifest]]); a store written before
-  * manifests is not read.
+  * commits, in the same manifest as its rows, a
+  * [[TableManifest.Summary]] of the complete∧sequential prefix (its
+  * high-water mark and the first bucket holding an open pulse), and
+  * seeding collects only the frontier buckets (see [[Daemon.seed]]; the
+  * reference's controller likewise registers only incomplete pulses,
+  * `etl/controller/controller.go:124-132`). Writes are manifested
+  * replaces of whole `pulse_bucket` partitions (a bucket spans
+  * [[Config.flushBucketSpan]] pulse numbers at first; the span is a
+  * STORE property carried by the summary and coarsened by a seed-time
+  * re-bucketing commit once history outgrows [[Config.maxPulseBuckets]]
+  * dirs — see [[spanForExtent]]): a flush replaces only the buckets
+  * containing changed pulses — bounded forever, however long the daemon
+  * runs. The manifest publish is the only crash-safety protocol: data,
+  * summary and layout change together or not at all. Every table the
+  * daemon writes is manifested ([[TableManifest]]); a store written
+  * before manifests is not read.
   *
   * 100 TB shape: the per-pulse record set is bounded by the pulse
   * cadence (the reference holds it in one goroutine's memory the same
@@ -120,8 +123,8 @@ object Ingest {
     * bucket rewrite is the dirty-bucket flush unit, and even the 10×
     * span holds ≤ 100k pulses ≈ a few MB of rows per bucket. Bulk
     * builders size the span from the extent they are about to write;
-    * the daemon adopts the span persisted in `_frontier.json` and
-    * re-buckets at seed when history has outgrown it (see
+    * the daemon adopts the span its pulses manifest's summary carries
+    * and re-buckets at seed when history has outgrown it (see
     * [[Daemon.seed]]).
     */
   def spanForExtent(lo: Long, hi: Long, base: Long = 100000L,
@@ -179,21 +182,13 @@ object Ingest {
     private val missed = new Resilience.MissedDataManager(cfg.reloadTtlMs)
     private val writeLock = new Object
     private var threads = Seq.empty[Thread]
-    // the (seq_pulse, frontier_bucket) summary currently ON DISK — the
-    // invariant the bounded seed depends on is that the persisted bucket
-    // never exceeds the true min open bucket of the persisted DATA, so a
-    // flush about to land an open pulse BELOW the recorded bucket (a gap
-    // backfill) must LOWER the summary before the data write (see
-    // [[flushTo]]); writes happen under `writeLock`, the seed reads it
-    // single-threaded before the loops start
-    @volatile private var summarized: Option[(Long, Long)] = None
-    // the span the ON-DISK pulse_bucket= dirs were written with — a
-    // STORE property, not a config constant: every dirty-bucket flush
-    // must address the same dirs the data lives in, so the span rides
-    // `_frontier.json` and changes only through the staged full-rewrite
-    // migration in [[seed]] (re-bucketing when history outgrows
-    // cfg.maxPulseBuckets). A store whose summary is lost recovers its
-    // span from the manifest's bucket dirs (see [[seed]]).
+    // the span the COMMITTED pulse_bucket= partitions were written with —
+    // a STORE property, not a config constant: every dirty-bucket flush
+    // must address the same partitions the data lives in, so the span
+    // rides the manifest's summary and changes only through the
+    // re-bucketing commit in [[seed]] (when history outgrows
+    // cfg.maxPulseBuckets). A manifest without a summary (written before
+    // summaries existed) recovers the span from its bucket dirs.
     @volatile private var bucketSpan: Long = cfg.flushBucketSpan
 
     // ---- observability (the spec's and main's read surface) ------------
@@ -237,28 +232,37 @@ object Ingest {
       * sequential mark is the max persisted sequential pulse, and the
       * cursor starts past the newest known pulse.
       *
-      * Bounded, not O(history): each flush leaves a `_frontier.json`
-      * summary beside the data (the complete∧sequential PREFIX collapsed
-      * to its high-water cursor plus the first bucket holding an open
-      * pulse), so seeding collects only the frontier buckets — open
-      * pulses plus the handful of closed rows sharing their buckets —
-      * never the closed history (the reference's controller likewise
-      * holds only the incomplete set in its register,
+      * Bounded, not O(history): every flush commits a
+      * [[TableManifest.Summary]] in the same manifest as its rows (the
+      * complete∧sequential PREFIX collapsed to its high-water mark plus
+      * the first bucket holding an open pulse), so seeding collects only
+      * the frontier buckets — open pulses plus the handful of closed rows
+      * sharing their buckets — never the closed history (the reference's
+      * controller likewise holds only the incomplete set in its register,
       * `etl/controller/controller.go:124-132`). The closed prefix is
       * never needed in memory: completeness/sequence are prefix
-      * properties, so every not-closed pulse on disk sits at or above
-      * the summarized frontier bucket, and the flush path only ever
-      * rewrites buckets whose pulses are in the register (dirty ⊆
+      * properties, so every not-closed pulse a manifest names sits at or
+      * above that manifest's frontier bucket, and the flush path only
+      * ever rewrites buckets whose pulses are in the register (dirty ⊆
       * entries, and the seed collects frontier buckets WHOLE, so a
-      * bucket rewrite can never drop closed siblings). The persisted
-      * summary is kept ≤ the data's true frontier at EVERY instant:
-      * raises land strictly after the data commit, and a flush about to
-      * land a gap-backfilled pulse BELOW the recorded bucket lowers the
-      * summary first (see [[flushTo]]) — so any crash leaves a summary
-      * that at worst reads a superset, and the seed re-derives the true
-      * marks from the rows. No summary (lost in [[writeFrontier]]'s
-      * crash window) falls back to the full read plus span recovery; a
-      * pulses table with no committed manifest seeds nothing.
+      * bucket rewrite can never drop closed siblings). The summary is
+      * taken from the same register state as the rows it is published
+      * with, so a crash at any instant leaves a committed version whose
+      * summary describes its own rows. A manifest without a summary
+      * (written before summaries existed) falls back to the full read
+      * plus span recovery; a pulses table with no committed manifest
+      * seeds nothing.
+      *
+      * Re-bucketing: once the committed layout holds more than
+      * [[Config.maxPulseBuckets]] bucket dirs, the seed reads the whole
+      * dimension and rewrites it at the extent-sized span as ONE commit
+      * into the live table that drops every other partition. The fine
+      * files become tombstones under [[TableManifest.RetentionMs]] like
+      * any superseded file, so a read planned before the re-layout keeps
+      * its files, and the manifest version keeps counting up. A crash
+      * before that publish leaves the fine layout committed and the
+      * coarse files unnamed; the next start deletes them as orphans and
+      * re-runs the re-bucketing.
       */
     private def seed(): Unit = {
       // existence through the same Hadoop filesystem the reads/writes
@@ -267,53 +271,41 @@ object Ingest {
       // persisted buckets from an empty register
       val pulsesPath = new org.apache.hadoop.fs.Path(s"$basePath/pulses")
       val fs = pulsesPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      // Recover an interrupted re-bucketing migration FIRST (the swap at
-      // the bottom of this method): the migration stages the re-bucketed
-      // table to this sibling before touching the original, so a leftover
-      // sibling pins which crash window we died in. The sibling's own
-      // committed manifest (published only once the staged copy is
-      // COMPLETE) is the disambiguator — the original path's existence is
-      // NOT, because a crash mid recursive delete leaves a
-      // PARTIALLY-destroyed original behind, and re-migrating from that
-      // would lose rows for good:
-      //   sibling committed → it is a complete copy of the register as
-      //     staged; whatever state the original is in (intact, partially
-      //     deleted, or gone), finish the swap from the sibling;
-      //   sibling uncommitted → the write itself crashed, the original
-      //     is untouched truth — drop the partial sibling and let the
-      //     span check below redo the migration.
-      val migrating = new org.apache.hadoop.fs.Path(s"$basePath/pulses_migrating")
-      if (fs.exists(migrating)) {
-        if (TableManifest.latest(fs, migrating.toString).isDefined)
-          swapIn(fs, migrating, pulsesPath)
-        else fs.delete(migrating, true)
-      }
+      // an older build re-bucketed through a staged sibling table that it
+      // swapped in by delete-then-rename; one left behind may hold the
+      // only copy of the dimension, so seeding without it could lose rows
+      val staged = new org.apache.hadoop.fs.Path(s"${pulsesPath}_migrating")
+      if (fs.exists(staged))
+        throw new IllegalStateException(s"$staged was left by an interrupted " +
+          s"re-bucketing of an older build: if its _manifests/ holds a " +
+          s"committed manifest it is the complete pulses table, so replace " +
+          s"$pulsesPath with it; otherwise delete it. Then restart.")
       // files of a commit that died before its publish: no manifest names
       // them, and nothing writes to the store until this method returns
       Seq("records", "jet_drops", "pulses").foreach { t =>
         val n = TableManifest.deleteOrphans(fs, s"$basePath/$t")
         if (n > 0) System.err.println(s"[ingest] deleted $n uncommitted files from $t")
       }
+      val snap = TableManifest.latest(fs, pulsesPath.toString)
       // a table with no committed manifest has seeded nothing
       val pulsesDf = TableManifest.readTable(spark, pulsesPath.toString) match {
         case Some(df) => df
         case None => return
       }
-      val summary = readFrontier(fs, pulsesPath)
-      summarized = summary.map(s => (s._1, s._2))
-      // adopt the span the on-disk dirs were written with BEFORE any
+      val summary = snap.flatMap(_.summary)
+      // adopt the span the committed dirs were written with BEFORE any
       // bucket arithmetic below
-      summary.foreach(s => bucketSpan = s._3)
+      summary.foreach(s => bucketSpan = s.span)
       // has the dimension outgrown its span? One cheap driver-side count
       // of the CURRENT bucket dirs (the manifest's partitions), once per
       // start. Past cfg.maxPulseBuckets the store re-buckets at the
-      // extent-sized span via the staged full rewrite below — the
+      // extent-sized span (the re-bucketing commit below) — the
       // measured serving-scale remedy (500 dirs → 50 at 5M pulses,
       // fast-warm 283 → 209 ms) as write-side default, no env knob.
       // Growth between restarts is bounded by cadence (outgrowing 64
       // base-span buckets takes ~74 days of 10 s pulses), so seed-time
       // is the right cadence for the rewrite.
-      val bucketDirVals: Set[Long] = TableManifest.latest(fs, pulsesPath.toString)
+      val bucketDirVals: Set[Long] = snap
         .map(_.partitions.keysIterator
           .flatMap(_.stripPrefix("pulse_bucket=").toLongOption).toSet)
         .getOrElse(Set.empty)
@@ -322,18 +314,18 @@ object Ingest {
       // snapshot manifest says which files are current — a raw directory
       // read here would double-count superseded buckets
       val bounded = summary match {
-        case Some((_, frontierBucket, _)) if !needCoarsen =>
+        case Some(s) if !needCoarsen =>
           // frontier buckets only, partition-pruned; the bucket partition
           // column reads back as its directory-inferred type (IntegerType
           // when the values fit), so the probe literal must match it for
           // pruning to stay eligible
           val lit0: Any =
             if (pulsesDf.schema("pulse_bucket").dataType ==
-                org.apache.spark.sql.types.IntegerType) frontierBucket.toInt
-            else frontierBucket
+                org.apache.spark.sql.types.IntegerType) s.frontierBucket.toInt
+            else s.frontierBucket
           pulsesDf.filter(col("pulse_bucket") >= lit(lit0))
-        // no summary OR a re-bucketing migration (which must stage the
-        // WHOLE dimension): full read
+        // no summary OR a re-bucketing (which must rewrite the WHOLE
+        // dimension): full read
         case _ => pulsesDf
       }
       val rows = bounded.collect()
@@ -353,16 +345,16 @@ object Ingest {
           if (!(e.complete && e.sequential)) open += p
         }
       }
-      // Span RECOVERY when the summary is lost (writeFrontier's tiny
-      // delete→rename window, or a hand-pruned store): the span is a
-      // store property, and flushing a coarsened store at the config
-      // base span would append fine-span sibling dirs that the manifest
-      // then serves ALONGSIDE the live coarse partitions (duplicate
-      // rows), while the next summary would speak fine units and make
-      // the bounded seed prune every coarse dir. A lost summary forces
-      // the full read above (`bounded` = whole table), so the register
-      // holds every pulse and the true span is recoverable from the
-      // data: the on-disk dir values are exactly {p / span}, and among
+      // Span RECOVERY when the manifest has no summary (a pulses table
+      // written before summaries existed): the span is a store property,
+      // and flushing a coarsened store at the config base span would
+      // add fine-span sibling dirs that the manifest then serves
+      // ALONGSIDE the live coarse partitions (duplicate rows), while the
+      // next summary would speak fine units and make the bounded seed
+      // prune every coarse dir. No summary forces the full read above
+      // (`bounded` = whole table), so the register holds every pulse and
+      // the true span is recoverable from the committed layout: its
+      // dir values are exactly {p / span}, and among
       // base×10^k candidates only the true span reproduces that set (a
       // finer candidate maps some pulse outside the dirs, a coarser one
       // leaves some dir value unreachable). No match (corrupt layout)
@@ -375,11 +367,11 @@ object Ingest {
           if (buckets(s) == bucketDirVals) {
             if (s != bucketSpan)
               System.err.println(s"[ingest] recovered pulses bucket span $s " +
-                s"from the on-disk layout (frontier summary absent)")
+                s"from the committed layout (manifest summary absent)")
             bucketSpan = s
           } else
             System.err.println(s"[ingest] could not infer the pulses bucket " +
-              s"span from ${bucketDirVals.size} on-disk dirs; keeping the " +
+              s"span from ${bucketDirVals.size} committed dirs; keeping the " +
               s"config span ${cfg.flushBucketSpan}")
         }
       }
@@ -436,10 +428,10 @@ object Ingest {
         }
       }
       lock.synchronized {
-        // the summary's marks are lower bounds (stale-safe: written after
-        // the flush they describe); anything that moved since is in the
-        // collected frontier rows, so the max over both is exact
-        val summarySeq = summary.map(_._1)
+        // the summary's mark is a lower bound (taken at flush staging);
+        // anything that moved since is in the collected frontier rows, so
+        // the max over both is exact
+        val summarySeq = summary.map(_.seqPulse)
         seqPulse = (entries.collect { case (p, e) if e.sequential => p } ++
           summarySeq).maxOption.getOrElse(fromPulse - cfg.pulseDelta)
         cursorNow = entries.keysIterator.maxOption
@@ -447,36 +439,20 @@ object Ingest {
       }
       if (needCoarsen) {
         System.err.println(s"[ingest] pulses dimension outgrew its bucket " +
-          s"span (> ${cfg.maxPulseBuckets} dirs) — re-bucketing at the " +
-          s"extent-sized span via the staged migration")
+          s"span (> ${cfg.maxPulseBuckets} dirs); re-bucketing at the " +
+          s"extent-sized span in one manifest commit")
         lock.synchronized {
           if (entries.nonEmpty)
             bucketSpan = spanForExtent(entries.firstKey, entries.lastKey,
               cfg.flushBucketSpan, cfg.maxPulseBuckets)
         }
-        // Rewrite IMMEDIATELY (threads are not running yet) and CRASH-SAFE:
-        // stage the full re-bucketed table to the sibling path through the
-        // same manifested flush the live table uses, then swap. A
-        // persisted copy of the dimension exists at every instant — the
-        // original is deleted only after the sibling's manifest published
-        // (a delete-first rewrite would make the in-memory register the
-        // only copy for the whole write; a crash there would lose the
-        // chain/flag metadata for good once the exporter has pruned
-        // history). The recovery block at the top of this method closes
-        // both crash windows of the swap itself.
-        lock.synchronized { dirty ++= entries.keysIterator }
-        flushTo(migrating.toString)
-        swapIn(fs, migrating, pulsesPath)
-        // `summarized` is already correct here: the staged flushTo's
-        // post-commit raise wrote `_frontier.json` (in the NEW span
-        // units — bucketSpan was updated before the call) into the
-        // sibling and set `summarized` to it, and the rename carried
-        // the file along. Clearing it would disable the pre-write
-        // lowering guard for the first post-migration flush — exactly
-        // the gap-backfill crash window that guard exists to close.
+        // rewrite IMMEDIATELY (threads are not running yet): the register
+        // holds the whole dimension, and the commit either publishes the
+        // coarse layout with its summary or leaves the fine one intact
+        flush(relayout = true)
       }
-      // Full-read EVICTION: both the re-bucketing migration and the
-      // summary-loss span recovery read the WHOLE dimension, and neither
+      // Full-read EVICTION: both the re-bucketing and the no-summary
+      // span recovery read the WHOLE dimension, and neither
       // may leave it resident (the register's contract is
       // open-frontier-bounded memory; a 5M-pulse history would hold ~5M
       // entries forever). Evict entries strictly below the frontier
@@ -490,20 +466,6 @@ object Ingest {
               .foreach(entries.remove)
           }
         }
-    }
-
-    /** Replace the live pulses table with a staged sibling whose manifest
-      * has committed: drop whatever is left of the original, rename the
-      * sibling into place, and drop every relation cached against the
-      * live path (the swapped-in table restarts its manifest numbering,
-      * so a version-keyed entry could otherwise match a dead file list).
-      */
-    private def swapIn(fs: org.apache.hadoop.fs.FileSystem,
-        staged: org.apache.hadoop.fs.Path, live: org.apache.hadoop.fs.Path): Unit = {
-      if (fs.exists(live)) fs.delete(live, true)
-      if (!fs.rename(staged, live))
-        throw new java.io.IOException(s"pulses migration rename failed: $staged -> $live")
-      graft.sources.RelationCache.invalidate(live.toString)
     }
 
     // ---- commit ---------------------------------------------------------
@@ -856,34 +818,32 @@ object Ingest {
     /** Persist changed pulses — the reference's pulses table with its
       * maintained flags (`CompletePulse` / `SequencePulse`,
       * `etl/storage/storage.go`). Incremental: only the `pulse_bucket`
-      * partitions containing dirty pulses are replaced (one manifested
-      * commit, no Spark job), so flush cost is bounded by the change
-      * frontier, never by the table's accumulated history.
+      * partitions containing dirty pulses are replaced, in one manifested
+      * commit (no Spark job) that also carries the restart summary, so
+      * flush cost is bounded by the change frontier, never by the
+      * table's accumulated history. With `relayout` (the seed's
+      * re-bucketing) every known pulse is staged at the current span and
+      * the commit drops every partition it does not write.
       */
-    def flush(): Unit = flushTo(s"$basePath/pulses")
-
-    /** [[flush]]'s body, parameterized on the target directory so the
-      * seed-time re-bucketing migration can stage the same manifested,
-      * bucketed form to a sibling path before swapping it in.
-      */
-    private def flushTo(target: String): Unit = {
+    private def flush(relayout: Boolean = false): Unit = {
       // stage under the register lock, CLEARING dirty at stage time: an
       // entry that changes mid-write re-enters the (now empty) dirty set
       // and survives for the next flush instead of being lost to a
       // staged-then-cleared race
-      val staged: Option[(Seq[Row], Set[Long], (Long, Long))] = lock.synchronized {
+      val staged: Option[(Seq[Row], Set[Long], TableManifest.Summary)] = lock.synchronized {
+        if (relayout) dirty ++= entries.keysIterator
         if (dirty.isEmpty) None
         else {
-          // frontier summary for the bounded restart seed: the sequential
+          // restart summary for the bounded seed: the sequential
           // high-water mark plus the first bucket holding an open pulse
           // (no open pulse → the tail bucket, so a fully-closed store
-          // still seeds its chain tail). Computed BEFORE the close-out
-          // that follows this flush, so the recorded bucket only ever
-          // points at or below the true frontier — stale-low is safe,
-          // the seed just reads a superset.
-          val frontierBucket = open.headOption.getOrElse(entries.lastKey) /
-            bucketSpan
-          val frontier = (seqPulse, frontierBucket)
+          // still seeds its chain tail), taken from the same register
+          // state as the rows it is committed with. Computed BEFORE the
+          // close-out that follows this flush, so the recorded bucket
+          // only ever points at or below the true frontier — stale-low is
+          // safe, the seed just reads a superset.
+          val summary = TableManifest.Summary(seqPulse,
+            open.headOption.getOrElse(entries.lastKey) / bucketSpan, bucketSpan)
           val dirtyBuckets = dirty.map(_ / bucketSpan).toSet
           // next link: the key successor, when it points back at us — an
           // O(log n) probe per staged row instead of an O(history) index
@@ -903,50 +863,20 @@ object Ingest {
           }
           val flushed = dirty.toSet
           dirty.clear()
-          Some((rows, flushed, frontier))
+          Some((rows, flushed, summary))
         }
       }
-      staged.foreach { case (rows, flushed, frontier) =>
+      staged.foreach { case (rows, flushed, summary) =>
         try writeLock.synchronized {
-          // LOWER the on-disk summary BEFORE the data write when this
-          // flush lands a pulse below the recorded frontier (a gap
-          // backfill): a crash between the data commit and the post-data
-          // summary write would otherwise leave a summary pointing ABOVE
-          // an on-disk open pulse, and the bounded restart seed would
-          // never load it — the sequencer would stall forever once the
-          // exporter has pruned that pulse. The lowered summary keeps
-          // the last PERSISTED seq mark (the current one may be ahead of
-          // what is on disk until this data write lands); raising — the
-          // common case — stays strictly post-data-commit. A pre-write
-          // failure aborts the flush (dirty re-marks below), because
-          // proceeding would open exactly the window the pre-write
-          // closes. On the migration's staging target the lowering writes
-          // only into the sibling.
-          summarized.filter(s => frontier._2 < s._2).foreach { s =>
-            val lowered = (math.min(s._1, frontier._1), frontier._2)
-            writeFrontier(spark, target, lowered._1, lowered._2)
-            summarized = Some(lowered)
-          }
           // MANIFESTED replace of exactly the dirty buckets, written from
           // the staged rows by the same writer the records/jet_drops
-          // commits use (TableManifest.writeRows: no Spark job), so a
-          // serving read racing this flush always resolves a committed
-          // file set
-          TableManifest.writeRows(spark, target, "pulse_bucket",
-            graft.model.Schemas.pulses, rows).foreach(s => manifests += ("pulses" -> s))
-          // summary raise AFTER the data commit: a crash in between
-          // leaves the previous (lower — see the pre-write above) summary,
-          // never one tighter than the data. A raise failure is non-fatal:
-          // the next flush retries, and an old summary only costs seed
-          // read amplification.
-          try {
-            writeFrontier(spark, target, frontier._1, frontier._2)
-            summarized = Some(frontier)
-          } catch {
-            case NonFatal(e) =>
-              System.err.println(s"[ingest] frontier summary write failed " +
-                s"(seed falls back to a wider read): $e")
-          }
+          // commits use (TableManifest.writeRows: no Spark job), with the
+          // summary in the same publish: a serving read racing this flush
+          // always resolves a committed file set, and a restart always
+          // reads a summary that describes the rows committed with it
+          TableManifest.writeRows(spark, s"$basePath/pulses", "pulse_bucket",
+            graft.model.Schemas.pulses, rows, summary = Some(summary), dropOthers = relayout)
+            .foreach(s => manifests += ("pulses" -> s))
         } catch {
           case e @ (_: InterruptedException | NonFatal(_)) =>
             // failed or interrupted write: nothing persisted — re-mark
@@ -955,51 +885,6 @@ object Ingest {
             throw e
         }
       }
-    }
-
-    /** Atomic-enough summary write (`_frontier.json`, never a data file
-      * of the manifest): stage to a dot-tmp sibling, then rename over. A crash in
-      * the tiny delete+rename window leaves no summary at all — the seed
-      * falls back to the full read, never to a torn summary (the JSON is
-      * also length-checked by the shape of [[readFrontier]]'s regex).
-      */
-    private def writeFrontier(spark: SparkSession, target: String,
-        seq: Long, frontierBucket: Long): Unit = {
-      val dir = new org.apache.hadoop.fs.Path(target)
-      val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val tmp = new org.apache.hadoop.fs.Path(dir, "._frontier.json.tmp")
-      val dst = new org.apache.hadoop.fs.Path(dir, "_frontier.json")
-      val out = fs.create(tmp, true)
-      // the span rides the summary (see `bucketSpan`): bucket numbers in
-      // this JSON and in the pulse_bucket= dirs are meaningless without
-      // the span that derived them
-      try out.write(
-        s"""{"seq_pulse":$seq,"frontier_bucket":$frontierBucket,"span":$bucketSpan}"""
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-      if (fs.exists(dst)) fs.delete(dst, false)
-      if (!fs.rename(tmp, dst))
-        throw new java.io.IOException(s"frontier summary rename failed: $dst")
-    }
-
-    /** Parse the flush-time frontier summary as (seq_pulse,
-      * frontier_bucket, span); any absence or damage, a missing `span`
-      * included, reads as None (→ full-seed fallback plus span recovery).
-      */
-    private def readFrontier(fs: org.apache.hadoop.fs.FileSystem,
-        pulsesPath: org.apache.hadoop.fs.Path): Option[(Long, Long, Long)] = {
-      val f = new org.apache.hadoop.fs.Path(pulsesPath, "_frontier.json")
-      if (!fs.exists(f)) None
-      else try {
-        val in = fs.open(f)
-        val text = try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
-          finally in.close()
-        val re = """\{"seq_pulse":(-?\d+),"frontier_bucket":(-?\d+),"span":(\d+)\}""".r
-        text.trim match {
-          case re(seq, bucket, span) => Some((seq.toLong, bucket.toLong, span.toLong))
-          case _ => None
-        }
-      } catch { case NonFatal(_) => None }
     }
 
     // ---- lifecycle ------------------------------------------------------
@@ -1101,10 +986,9 @@ object Ingest {
 
   def main(args: Array[String]): Unit = {
     val host = sys.env.getOrElse("SPARK_GRAFT_EXPORTER_HOST", "localhost")
-    val port = sys.env.getOrElse("SPARK_GRAFT_EXPORTER_PORT", "8090").toInt
+    val port = Sessions.envLong("SPARK_GRAFT_EXPORTER_PORT", 8090L, max = Sessions.MaxPort).toInt
     val base = sys.env.getOrElse("SPARK_GRAFT_BASE_PATH", "/tmp/graft-ingest")
-    val from = sys.env.getOrElse("SPARK_GRAFT_FROM_PULSE",
-      (Canonicalize.MinTimePulse + 10L).toString).toLong
+    val from = Sessions.envLong("SPARK_GRAFT_FROM_PULSE", Canonicalize.MinTimePulse + 10L)
     val spark = Sessions.serviceBuilder(Sessions.cpus(), "graft-ingest", Some(base)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val handle = bootstrap(spark, base, host, port, from)
@@ -1112,7 +996,7 @@ object Ingest {
     // (pprof_router.go:30); here the port is explicit so sandboxed
     // side-by-side daemons don't collide — 0 picks an ephemeral port
     val ops = opsListener(handle.daemon,
-      sys.env.getOrElse("SPARK_GRAFT_OPS_PORT", "8000").toInt)
+      Sessions.envLong("SPARK_GRAFT_OPS_PORT", 8000L, max = Sessions.MaxPort).toInt)
     println(s"""{"metric":"ingesting","exporter":"$host:$port","base":"$base","from":$from""" +
       s""","ops_port":${ops.getAddress.getPort}}""")
     sys.addShutdownHook { ops.stop(0); handle.stop(); spark.stop() }

@@ -128,7 +128,7 @@ object Serve {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val port = sys.env.getOrElse("SPARK_GRAFT_HTTP_PORT", "8080").toInt
+    val port = Sessions.envLong("SPARK_GRAFT_HTTP_PORT", 8080L, max = Sessions.MaxPort).toInt
     val spark = Sessions.serviceBuilder(Sessions.cpus(), "graft-api", Some(sfDir)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val handle = bootstrap(spark, sfDir, port)

@@ -30,18 +30,29 @@ object Sessions {
   /** The core count every main runs at: `SPARK_GRAFT_CPUS` when set,
     * otherwise the processors this JVM sees, so by default a local
     * session starts no more task threads (and no more than 8× as many
-    * AQE partitions) than the host has cores. A set value that is not a
-    * positive integer is rejected here, naming the variable, rather
-    * than misread further down.
+    * AQE partitions) than the host has cores.
     */
   def cpus(env: Map[String, String] = sys.env): String =
-    env.get("SPARK_GRAFT_CPUS").map(_.trim).filter(_.nonEmpty) match {
+    envLong("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors,
+      min = 1L, max = Int.MaxValue, env).toString
+
+  /** The integer setting `name` of `env`, `default` when it is unset or
+    * blank. A set value that is not an integer in [`min`, `max`] is
+    * rejected here, naming the variable, rather than misread further
+    * down — the one reader for every numeric variable the mains take.
+    */
+  def envLong(name: String, default: Long, min: Long = 0L, max: Long = Long.MaxValue,
+      env: Map[String, String] = sys.env): Long =
+    env.get(name).map(_.trim).filter(_.nonEmpty) match {
       case Some(v) =>
-        require(v.toIntOption.exists(_ > 0),
-          s"SPARK_GRAFT_CPUS must be a positive integer, got '$v'")
-        v
-      case None => Runtime.getRuntime.availableProcessors.toString
+        v.toLongOption.filter(n => n >= min && n <= max).getOrElse(
+          throw new IllegalArgumentException(
+            s"$name must be an integer in [$min, $max], got '$v'"))
+      case None => default
     }
+
+  /** The largest TCP port number, the bound of every port variable. */
+  val MaxPort: Long = 65535L
 
   /** (key, required value) pairs — order matters only for error messages. */
   val DriftConfs: Seq[(String, String)] = Seq(

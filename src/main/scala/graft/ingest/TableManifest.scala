@@ -5,6 +5,7 @@ import java.util.UUID
 import scala.collection.mutable
 import scala.util.control.NonFatal
 
+import com.fasterxml.jackson.annotation.JsonInclude
 import com.fasterxml.jackson.databind.{DeserializationFeature, ObjectMapper,
   PropertyNamingStrategies, SerializationFeature}
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
@@ -48,6 +49,14 @@ import org.apache.spark.sql.types.StructType
   *    resolving a manifest and opening the files it names. Disk overhead
   *    is bounded by what the writer supersedes in one window.
   *
+  * A commit can also carry the writer's own metadata in the same atomic
+  * publish as its rows — the pulses table's restart [[Summary]] — and
+  * can re-lay a table out whole (`dropOthers`: the partitions it does
+  * not rewrite leave the map, their files tombstoned like any
+  * superseded generation). A crash before the publish leaves the old
+  * version, summary included, intact; there is no second file to keep
+  * in step with the data, and the version numbering never restarts.
+  *
   * Contract: ONE writer per table (the daemon serializes commits and
   * flushes under its write lock; the reference likewise has a single
   * ETL writer per store). Readers are unlimited and lock-free.
@@ -86,11 +95,20 @@ object TableManifest {
     */
   final case class Tombstone(file: String, supersededMs: Long)
 
+  /** The pulses table's restart summary, committed in the same publish
+    * as the rows it describes: the sequential high-water mark, the first
+    * `pulse_bucket` holding a pulse that is not complete and sequential
+    * (the tail bucket when none is open), and the bucket span the
+    * table's partitions are laid out at.
+    */
+  final case class Summary(seqPulse: Long, frontierBucket: Long, span: Long)
+
   /** One committed table version: partition dir name → data file names
-    * (relative), plus the superseded files still awaiting deletion.
+    * (relative), the superseded files still awaiting deletion, and the
+    * writer's summary, if it committed one.
     */
   final case class Snapshot(version: Long, partitions: Map[String, Seq[String]],
-      tombstones: Seq[Tombstone]) {
+      tombstones: Seq[Tombstone], summary: Option[Summary] = None) {
     def files(tablePath: String): Seq[String] =
       partitions.toSeq.sortBy(_._1).flatMap { case (part, fs) =>
         fs.sorted.map(f => s"$tablePath/$part/$f")
@@ -172,7 +190,11 @@ object TableManifest {
     * it (the files this commit just wrote); `superseded` maps the same
     * keys to the files present in those directories BEFORE the write
     * (the writer's own pre-write listing — previous generation plus any
-    * crash orphans). Steps, in crash-safe order:
+    * crash orphans). With `dropOthers`, every partition `replaced` does
+    * not name leaves the map too, its files tombstoned like a replaced
+    * generation (a whole-table re-layout). `summary` is the new
+    * version's own; it is not carried forward from the previous one.
+    * Steps, in crash-safe order:
     *
     *  1. resolve the previous snapshot (an empty one for a table's
     *     first commit — files a crashed earlier first commit left in
@@ -196,7 +218,9 @@ object TableManifest {
   def commit(spark: SparkSession, tablePath: String,
       replaced: Map[String, Seq[String]],
       superseded: Map[String, Seq[String]],
-      now: Long = System.currentTimeMillis()): Snapshot = {
+      now: Long = System.currentTimeMillis(),
+      summary: Option[Summary] = None,
+      dropOthers: Boolean = false): Snapshot = {
     val table = new Path(tablePath)
     val fs = table.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val prev = latest(fs, tablePath).getOrElse(Snapshot(0L, Map.empty, Seq.empty))
@@ -206,18 +230,18 @@ object TableManifest {
       catch { case _: java.io.FileNotFoundException => () }
     }
     val named = prev.tombstones.iterator.map(_.file).toSet
-    val dataFiles = replaced.keysIterator.flatMap { k =>
-      val keep = replaced(k).toSet
-      (superseded.getOrElse(k, Seq.empty) ++ prev.partitions.getOrElse(k, Seq.empty))
-        .filterNot(keep).map(f => s"$k/$f")
-    }
+    val parts = ((if (dropOthers) Map.empty[String, Seq[String]] else prev.partitions) ++ replaced)
+      .filter(_._2.nonEmpty)
+    def paths(m: Map[String, Seq[String]]) =
+      m.iterator.flatMap { case (k, names) => names.map(n => s"$k/$n") }
+    val live = paths(parts).toSet
+    val dataFiles = (paths(prev.partitions) ++ paths(superseded)).filterNot(live)
     val manifests = versionStatuses(fs, table).collect {
       case (v, st) if v <= prev.version => s"_manifests/${st.getPath.getName}"
     }
     val fresh = (dataFiles ++ manifests).filterNot(named).toSeq.distinct.sorted
       .map(Tombstone(_, now))
-    val parts = (prev.partitions ++ replaced).filter(_._2.nonEmpty)
-    val next = Snapshot(prev.version + 1, parts, pending ++ fresh)
+    val next = Snapshot(prev.version + 1, parts, pending ++ fresh, summary)
     val mdir = manifestsDir(table)
     fs.mkdirs(mdir)
     val tmp = new Path(mdir, s".v${next.version}.json.tmp")
@@ -241,7 +265,8 @@ object TableManifest {
     * replaces exactly the partitions the rows fall in, with each one's
     * pre-write listing as the new version's tombstones. A partition with
     * no rows keeps its manifest entry untouched (the zero-row-reload
-    * contract); no rows at all writes and publishes nothing (None).
+    * contract), unless `dropOthers` drops it (see [[commit]], which also
+    * takes `summary`); no rows at all writes and publishes nothing (None).
     *
     * Each partition gets ONE file, `part-00000-<uuid>.c000<ext>`, holding
     * its rows in the order given, written in the calling thread by
@@ -261,7 +286,9 @@ object TableManifest {
     */
   def writeRows(spark: SparkSession, tablePath: String, partCol: String,
       schema: StructType, rows: Seq[Row],
-      now: => Long = System.currentTimeMillis()): Option[Snapshot] =
+      now: => Long = System.currentTimeMillis(),
+      summary: Option[Summary] = None,
+      dropOthers: Boolean = false): Option[Snapshot] =
     if (rows.isEmpty) None
     else {
       val p = schema.fieldIndex(partCol)
@@ -297,7 +324,8 @@ object TableManifest {
           }
           throw e
       }
-      Some(commit(spark, tablePath, groups.keys.map(_ -> Seq(name)).toMap, before, now))
+      Some(commit(spark, tablePath, groups.keys.map(_ -> Seq(name)).toMap, before, now,
+        summary, dropOthers))
     }
 
   /** Delete the data files of `tablePath` that the newest manifest
@@ -378,15 +406,22 @@ object TableManifest {
 
   // ---- wire format ---------------------------------------------------------
 
-  /** Snake-case JSON with sorted keys; a missing or null field fails the
-    * read instead of defaulting.
+  /** Snake-case JSON with sorted keys; an absent summary is left out. A
+    * missing or null field fails the read instead of defaulting.
     */
   private val json = new ObjectMapper()
     .registerModule(DefaultScalaModule)
+    .setDefaultPropertyInclusion(JsonInclude.Include.NON_ABSENT)
     .setPropertyNamingStrategy(PropertyNamingStrategies.SNAKE_CASE)
     .enable(SerializationFeature.ORDER_MAP_ENTRIES_BY_KEYS)
     .enable(DeserializationFeature.FAIL_ON_MISSING_CREATOR_PROPERTIES)
     .enable(DeserializationFeature.FAIL_ON_NULL_CREATOR_PROPERTIES)
+
+  /** The manifest shape with no summary: every table but a summarizing
+    * pulses table, and a pulses table written before summaries existed.
+    */
+  private final case class NoSummary(version: Long,
+      partitions: Map[String, Seq[String]], tombstones: Seq[Tombstone])
 
   /** The manifest shape before tombstones carried their commit time. */
   private final case class BareTombstones(version: Long,
@@ -394,18 +429,18 @@ object TableManifest {
 
   private[ingest] def render(s: Snapshot): String = json.writeValueAsString(s)
 
-  /** Parse [[render]]'s output, or the earlier bare-name shape, whose
-    * tombstones read as superseded at `bareMs` (the manifest file's
-    * mtime, so an existing store upgrades on its next commit). Any other
-    * shape reads None (and [[latest]] then fails loud).
+  /** Parse [[render]]'s output (with or without a summary), or the
+    * earlier bare-name shape, whose tombstones read as superseded at
+    * `bareMs` (the manifest file's mtime, so an existing store upgrades
+    * on its next commit). Any other shape reads None (and [[latest]]
+    * then fails loud).
     */
-  private[ingest] def parse(text: String, bareMs: Long): Option[Snapshot] =
-    try Some(json.readValue(text, classOf[Snapshot]))
-    catch {
-      case NonFatal(_) =>
-        try {
-          val b = json.readValue(text, classOf[BareTombstones])
-          Some(Snapshot(b.version, b.partitions, b.tombstones.map(Tombstone(_, bareMs))))
-        } catch { case NonFatal(_) => None }
-    }
+  private[ingest] def parse(text: String, bareMs: Long): Option[Snapshot] = {
+    def as[T](shape: Class[T]): Option[T] =
+      try Some(json.readValue(text, shape)) catch { case NonFatal(_) => None }
+    as(classOf[Snapshot])
+      .orElse(as(classOf[NoSummary]).map(n => Snapshot(n.version, n.partitions, n.tombstones)))
+      .orElse(as(classOf[BareTombstones]).map(b =>
+        Snapshot(b.version, b.partitions, b.tombstones.map(Tombstone(_, bareMs)))))
+  }
 }

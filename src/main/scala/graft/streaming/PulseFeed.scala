@@ -1,44 +1,18 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
-/** ST1/ST5 — streaming ingest & the exporter feed.
+/** ST5 — the exporter feed's query body.
   *
-  * The reference's extractor emits whole-pulse bundles through bounded
-  * channels (ST1, `etl/extractor/platform_impl.go:225-322`) and the
-  * exporter-api long-polls for the next complete pulse (ST5,
-  * `etl/exporter/pulse_exporter_server.go:20-51`).
-  *
-  * Spark mapping: micro-batch == pulse. Ingest is `readStream` over the
-  * landing directory (or a driver loop calling `ingestBatch` per pulse with
-  * `Trigger.AvailableNow` semantics); the feed is a streaming query over
-  * the pulses table filtered to newly-complete pulses matching the
-  * prototype filter (J1+A5 join re-expressed as a stream-static join).
+  * The exporter-api long-polls for the next complete pulse (ST5,
+  * `etl/exporter/pulse_exporter_server.go:20-51`). Spark mapping: the
+  * feed is a query over the pulses table filtered to newly-complete
+  * pulses matching the prototype filter (J1+A5 join re-expressed as a
+  * broadcast join). Ingest (ST1) has one driver, [[graft.Ingest]]'s
+  * daemon.
   */
 object PulseFeed {
-
-  /** ST1 — streaming read of wire records landing as parquet, one pulse per
-    * micro-batch (maxFilesPerTrigger=1 when the writer lands one file per
-    * pulse). `foreachBatch` hands each pulse to the idempotent batch path
-    * (Canonicalize → ChainSort → PulseWriter), so streaming and backfill
-    * share one code path and one commit protocol.
-    */
-  def ingestStream(
-      spark: SparkSession,
-      landingDir: String,
-      schema: org.apache.spark.sql.types.StructType,
-      onPulse: (DataFrame, Long) => Unit
-  ): DataStreamWriter[org.apache.spark.sql.Row] = {
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(landingDir)
-      .writeStream
-      .trigger(Trigger.ProcessingTime("10 seconds")) // pulse cadence
-      .foreachBatch { (batch: DataFrame, id: Long) => onPulse(batch, id) }
-  }
 
   /** ST5 — the next complete pulse after `from` whose records match any of
     * the prototype references (J1 join + A5 recount,

@@ -111,6 +111,26 @@ class SessionsSpec extends org.scalatest.funsuite.AnyFunSuite {
     assert(bad.getMessage.contains("SPARK_GRAFT_CPUS"), bad.getMessage)
   }
 
+  test("numeric env settings: unset takes the default, a malformed value fails by name") {
+    assert(Sessions.envLong("SPARK_GRAFT_HTTP_PORT", 8080L, max = Sessions.MaxPort,
+      env = Map.empty) == 8080L)
+    assert(Sessions.envLong("SPARK_GRAFT_HTTP_PORT", 8080L, max = Sessions.MaxPort,
+      env = Map("SPARK_GRAFT_HTTP_PORT" -> " ")) == 8080L, "blank reads as unset")
+    assert(Sessions.envLong("SPARK_GRAFT_FROM_PULSE", 1L,
+      env = Map("SPARK_GRAFT_FROM_PULSE" -> " 65546 ")) == 65546L)
+    Seq(
+      ("SPARK_GRAFT_EXPORTER_PORT", "80x", Sessions.MaxPort),
+      ("SPARK_GRAFT_OPS_PORT", "70000", Sessions.MaxPort),
+      ("SPARK_GRAFT_GRPC_PORT", "-1", Sessions.MaxPort),
+      ("SPARK_GRAFT_FROM_PULSE", "65546.5", Long.MaxValue),
+      ("SPARK_GRAFT_PULSE_PERIOD_MS", "99999999999999999999", Long.MaxValue)
+    ).foreach { case (name, v, max) =>
+      val e = intercept[IllegalArgumentException](
+        Sessions.envLong(name, 0L, max = max, env = Map(name -> v)))
+      assert(e.getMessage.contains(name) && e.getMessage.contains(v), e.getMessage)
+    }
+  }
+
   test("serviceConfPairs (what serviceBuilder applies) covers drift + service + parallelism") {
     val m = Sessions.serviceConfPairs("32").toMap
     Sessions.DriftConfs.foreach { case (k, v) =>

@@ -69,21 +69,22 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   /** Commit pulses-dimension rows the way the daemon's flush does:
     * [[graft.model.Schemas.pulses]] rows bucketed by `span`, published
-    * by one [[graft.ingest.TableManifest.writeRows]]. A bucket commit
-    * REPLACES the bucket, so `rows` must hold every row of each bucket
-    * it touches — a fixture that adds a pulse passes the bucket's
-    * earlier rows again.
+    * by one [[graft.ingest.TableManifest.writeRows]] together with
+    * `summary` (None commits a manifest with no restart summary, which
+    * a daemon start reads in full). A bucket commit REPLACES the bucket,
+    * so `rows` must hold every row of each bucket it touches — a fixture
+    * that adds a pulse passes the bucket's earlier rows again.
     */
   def writeStorePulses(base: String, rows: Seq[StorePulse],
       span: Long = graft.Ingest.Config().flushBucketSpan,
-      table: String = "pulses"): Unit = {
+      summary: Option[graft.ingest.TableManifest.Summary] = None): Unit = {
     val data = rows.map { r =>
       org.apache.spark.sql.Row(r.pulse, r.prev, r.next, r.complete, r.sequential,
         r.jetDropAmount, r.recordAmount, r.resultAmount,
         r.pulse - graft.ingest.Canonicalize.MinTimePulse, r.pulse / span)
     }
-    graft.ingest.TableManifest.writeRows(spark, s"$base/$table", "pulse_bucket",
-      graft.model.Schemas.pulses, data)
+    graft.ingest.TableManifest.writeRows(spark, s"$base/pulses", "pulse_bucket",
+      graft.model.Schemas.pulses, data, summary = summary)
     ()
   }
 }

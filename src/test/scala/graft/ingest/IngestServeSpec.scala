@@ -40,6 +40,10 @@ class IngestServeSpec extends SparkSpec {
     cond
   }
 
+  private def pulsesSnapshot(base: String): Option[TableManifest.Snapshot] =
+    TableManifest.latest(new org.apache.hadoop.fs.Path(s"$base/pulses")
+      .getFileSystem(spark.sparkContext.hadoopConfiguration), s"$base/pulses")
+
   test("daemon follows the feed over the wire, survives an exporter kill+restart, " +
       "and converges all three tables to complete+sequential") {
     val base = java.nio.file.Files.createTempDirectory("graft-daemon").toString
@@ -343,12 +347,13 @@ class IngestServeSpec extends SparkSpec {
     val h1 = Ingest.bootstrap(spark, base, "localhost", s1.getPort, start, cfg)
     try assert(await()(h1.daemon.sequentialPulse == start + (nLife1 - 1) * delta))
     finally { h1.stop(); s1.shutdownNow(); s1.awaitTermination(5, TimeUnit.SECONDS) }
-    def bucketDirs() = new java.io.File(s"$base/pulses").listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("pulse_bucket="))
-      .map(_.getName).sorted
+    // the committed layout: a re-bucketing keeps the superseded fine
+    // files on disk for the retention window, so the directory listing
+    // is not the layout
+    def bucketDirs() = pulsesSnapshot(base).toSeq.flatMap(_.partitions.keys).sorted
     assert(bucketDirs().length == nLife1, s"fixture needs $nLife1 fine dirs: ${bucketDirs().toSeq}")
 
-    // life 2: seed detects 8 > 4 dirs → staged re-bucket at
+    // life 2: seed detects 8 > 4 dirs → one re-bucketing commit at
     // spanForExtent (10 → 100 here), then the daemon extends the feed
     val s2 = bindOn(0, new ReplayExporter(wire))
     val h2 = Ingest.bootstrap(spark, base, "localhost", s2.getPort, start, cfg)
@@ -357,11 +362,9 @@ class IngestServeSpec extends SparkSpec {
         cfg.flushBucketSpan, cfg.maxPulseBuckets)
       val coarseDirs = (start / expectedSpan to
         (start + (nTotal - 1) * delta) / expectedSpan).map(b => s"pulse_bucket=$b")
-      // the migration staged a MANIFESTED table: the swapped-in dimension
-      // is served from its own snapshot before any flush of this life
-      val migratedSnap = TableManifest.latest(
-        new org.apache.hadoop.fs.Path(s"$base/pulses")
-          .getFileSystem(spark.sparkContext.hadoopConfiguration), s"$base/pulses")
+      // the re-bucketing is a manifest commit: the coarse dimension is
+      // served from its own snapshot before any flush of this life
+      val migratedSnap = pulsesSnapshot(base)
       assert(migratedSnap.exists(_.partitions.keySet == coarseDirs.toSet),
         s"the re-bucketed table must commit its coarse dirs: $migratedSnap")
       assert(await()(h2.daemon.sequentialPulse == start + (nTotal - 1) * delta),
@@ -371,15 +374,14 @@ class IngestServeSpec extends SparkSpec {
         s"re-bucketing must coarsen the layout: ${dirs.toSeq}")
       assert(dirs.toSeq == coarseDirs,
         s"post-restart flushes must land in the SAME coarse dirs: ${dirs.toSeq}")
-      // the persisted summary carries the new span (the next restart's
+      // the committed summary carries the new span (the next restart's
       // flushes must keep addressing these dirs)
-      val frontier = java.nio.file.Files.readString(
-        java.nio.file.Paths.get(s"$base/pulses/_frontier.json"))
-      assert(frontier.contains(s""""span":$expectedSpan"""),
-        s"frontier must persist the adopted span: $frontier")
+      val summary = pulsesSnapshot(base).flatMap(_.summary)
+      assert(summary.exists(_.span == expectedSpan),
+        s"the manifest must carry the adopted span: $summary")
       // the re-bucketing full read was evicted back to the frontier
       assert(h2.daemon.ingestedCount < nLife1,
-        s"closed history must not stay resident after the migration: " +
+        s"closed history must not stay resident after the re-bucketing: " +
           s"${h2.daemon.ingestedCount} entries")
     } finally {
       h2.stop(); s2.shutdownNow(); s2.awaitTermination(5, TimeUnit.SECONDS)
@@ -393,16 +395,22 @@ class IngestServeSpec extends SparkSpec {
     val pns = pulses.map(_.getAs[Long]("pulse_number"))
     assert(pns.toSeq == (0 until nTotal).map(start + _ * delta))
 
-    // ---- life 3: the summary is LOST (writeFrontier's delete→rename
-    // crash window). The seed must RECOVER the coarse span from the
-    // on-disk layout — a restart that fell back to the config base span
-    // would flush fine-span sibling dirs next to the live coarse
-    // partitions (duplicate rows) and record a fine-units frontier that
-    // makes the next bounded seed prune every coarse dir.
-    val frontierFile = java.nio.file.Paths.get(s"$base/pulses/_frontier.json")
+    // ---- life 3: the newest manifest has NO summary (the shape a
+    // pulses table written before summaries existed has). The seed must
+    // RECOVER the coarse span from the committed layout — a restart that
+    // fell back to the config base span would flush fine-span sibling
+    // dirs next to the live coarse partitions (duplicate rows) and
+    // record a fine-units frontier that makes the next bounded seed
+    // prune every coarse dir.
     val expectedSpan2 = Ingest.spanForExtent(start, start + (nLife1 - 1) * delta,
       cfg.flushBucketSpan, cfg.maxPulseBuckets)
-    java.nio.file.Files.delete(frontierFile)
+    val newest = pulsesSnapshot(base).get
+    val manifest = new org.apache.hadoop.fs.Path(
+      f"$base/pulses/_manifests/v${newest.version}%019d.json")
+    val out = manifest.getFileSystem(spark.sparkContext.hadoopConfiguration).create(manifest, true)
+    try out.write(TableManifest.render(newest.copy(summary = None)).getBytes("UTF-8"))
+    finally out.close()
+    assert(pulsesSnapshot(base).exists(_.summary.isEmpty), "fixture needs a summary-less manifest")
     val nTotal3 = 12
     val wire3 = Fixtures.multiPulseBatches(spark, nTotal3, recordsPerPulse = 6,
       startPulse = start)
@@ -420,12 +428,11 @@ class IngestServeSpec extends SparkSpec {
           dirs.length <= cfg.maxPulseBuckets,
         s"flushes after summary loss must keep addressing the coarse dirs: ${dirs.toSeq}")
       // the recovery full read must not stay resident either (the same
-      // open-frontier contract the re-bucketing migration honors)
+      // open-frontier contract the re-bucketing honors)
       assert(h3.daemon.ingestedCount < nLife1,
         s"summary-loss recovery left closed history resident: " +
           s"${h3.daemon.ingestedCount} entries")
-      assert(java.nio.file.Files.readString(frontierFile)
-        .contains(s""""span":$expectedSpan2"""),
+      assert(pulsesSnapshot(base).flatMap(_.summary).exists(_.span == expectedSpan2),
         "the recovered span must be re-persisted by the next flush")
     } finally {
       h3.stop(); s3.shutdownNow(); s3.awaitTermination(5, TimeUnit.SECONDS)
@@ -436,81 +443,105 @@ class IngestServeSpec extends SparkSpec {
     assert(pulses3.map(_.getAs[Long]("pulse_number")).distinct.length == nTotal3)
   }
 
-  test("an interrupted re-bucketing migration recovers from either crash window on the next start") {
+  test("a re-bucketing that died before its publish is redone at the next start") {
     val wire = Fixtures.multiPulseBatches(spark, nPulses = 2, recordsPerPulse = 6,
       startPulse = start)
     // span 10 = one pulse per bucket; re-bucket past 1 dir, so the two
-    // pulses' fine layout (2 dirs) migrates to the coarse span (1 dir)
+    // pulses' fine layout (2 dirs) re-buckets to the coarse span (1 dir)
     val cfg = fastCfg.copy(flushBucketSpan = 10L, maxPulseBuckets = 1)
     val coarse = Ingest.spanForExtent(start, start + delta,
       cfg.flushBucketSpan, cfg.maxPulseBuckets)
     val pulseRows = Seq(
       StorePulse(start, start - delta, start + delta, true, true, 2, 6L),
       StorePulse(start + delta, start, start + 2 * delta, true, true, 2, 6L))
-    def manifestDirs(base: String) = TableManifest.latest(
-      new org.apache.hadoop.fs.Path(s"$base/pulses")
-        .getFileSystem(spark.sparkContext.hadoopConfiguration), s"$base/pulses")
-      .map(_.partitions.keySet)
-
-    // ---- window 2: original already deleted, rename pending — the
-    // sibling holds a COMMITTED manifest of the complete re-bucketed copy
-    // and seed must finish the swap (without this the dimension would
-    // read as absent and the next flush would seed from an empty register)
-    val base2 = java.nio.file.Files.createTempDirectory("graft-migrate-w2").toString
+    val base = java.nio.file.Files.createTempDirectory("graft-rebucket-crash").toString
     (0 until 2).foreach { i =>
-      PulseWriter.commitPulse(wire.filter(col("pulse_number") === start + i * delta), base2)
+      PulseWriter.commitPulse(wire.filter(col("pulse_number") === start + i * delta), base)
     }
-    writeStorePulses(base2, pulseRows, span = coarse, table = "pulses_migrating")
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$base2/pulses_migrating/_frontier.json"),
-      s"""{"seq_pulse":${start + delta},"frontier_bucket":${(start + delta) / coarse},"span":$coarse}"""
-        .getBytes("UTF-8"))
-    // no $base2/pulses at all — the exact on-disk state of a crash
-    // between the original's delete and the sibling's rename
-    val s2 = bindOn(0, new ReplayExporter(wire))
-    val h2 = Ingest.bootstrap(spark, base2, "localhost", s2.getPort, start, cfg)
-    try {
-      assert(!new java.io.File(s"$base2/pulses_migrating").exists(),
-        "recovery must consume the staged sibling")
-      assert(manifestDirs(base2).contains(Set(s"pulse_bucket=${start / coarse}")))
-      val rec = storeTable(base2, "pulses").orderBy("pulse_number").collect()
-      assert(rec.length == 2)
-      assert(rec.forall(_.getAs[Boolean]("is_sequential")))
-      assert(rec.map(_.getAs[Long]("record_amount")).toSeq == Seq(6L, 6L))
-      // the recovered dimension SEEDED the register: both pulses known,
-      // cursor resumed past them, nothing re-fetched
-      assert(h2.daemon.ingestedCount == 2)
-      assert(h2.daemon.cursor == start + 2 * delta)
-    } finally {
-      h2.stop(); s2.shutdownNow(); s2.awaitTermination(5, TimeUnit.SECONDS)
-    }
+    writeStorePulses(base, pulseRows, span = cfg.flushBucketSpan)
+    assert(pulsesSnapshot(base).exists(_.partitions.size == 2), "fixture needs 2 fine dirs")
+    // the on-disk state of a re-bucketing that wrote its coarse file into
+    // the live table and died before publishing the manifest naming it
+    val coarseDir = s"pulse_bucket=${start / coarse}"
+    val scratch = java.nio.file.Files.createTempDirectory("graft-rebucket-staged").toString
+    writeStorePulses(scratch, pulseRows, span = coarse)
+    val written = pulsesSnapshot(scratch).get.partitions(coarseDir).head
+    val orphan = java.nio.file.Paths.get(s"$base/pulses/$coarseDir/$written")
+    java.nio.file.Files.createDirectories(orphan.getParent)
+    java.nio.file.Files.copy(java.nio.file.Paths.get(s"$scratch/pulses/$coarseDir/$written"), orphan)
 
-    // ---- window 1: crash DURING the sibling write — data files but no
-    // manifest; the fine-span original is still the truth, so seed must
-    // drop the partial sibling and redo the migration from it
-    val base1 = java.nio.file.Files.createTempDirectory("graft-migrate-w1").toString
-    (0 until 2).foreach { i =>
-      PulseWriter.commitPulse(wire.filter(col("pulse_number") === start + i * delta), base1)
-    }
-    writeStorePulses(base1, pulseRows, span = cfg.flushBucketSpan)
-    assert(manifestDirs(base1).exists(_.size == 2), "fixture needs 2 fine dirs")
-    val partial = new java.io.File(s"$base1/pulses_migrating/pulse_bucket=${start / coarse}")
-    assert(partial.mkdirs())
-    java.nio.file.Files.write(partial.toPath.resolve("part-00000.parquet"),
-      Array[Byte](0x50, 0x41, 0x52)) // truncated mid-write
     val s1 = bindOn(0, new ReplayExporter(wire))
-    val h1 = Ingest.bootstrap(spark, base1, "localhost", s1.getPort, start, cfg)
+    val h1 = Ingest.bootstrap(spark, base, "localhost", s1.getPort, start, cfg)
     try {
-      assert(!new java.io.File(s"$base1/pulses_migrating").exists(),
-        "a partial sibling next to an intact original must be discarded")
-      assert(manifestDirs(base1).contains(Set(s"pulse_bucket=${start / coarse}")),
-        s"the re-migration must commit the coarse layout: ${manifestDirs(base1)}")
-      val rec = storeTable(base1, "pulses").orderBy("pulse_number").collect()
-      assert(rec.length == 2)
+      assert(!java.nio.file.Files.exists(orphan),
+        "the start must delete the unpublished re-bucketing's file")
+      val snap = pulsesSnapshot(base)
+      assert(snap.exists(_.partitions.keySet == Set(coarseDir)),
+        s"the re-run must commit the coarse layout: $snap")
+      assert(!snap.exists(_.partitions(coarseDir).contains(written)))
+      assert(snap.flatMap(_.summary).exists(_.span == coarse), s"summary: $snap")
+      val rec = storeTable(base, "pulses").orderBy("pulse_number").collect()
+      assert(rec.map(_.getAs[Long]("pulse_number")).toSeq == Seq(start, start + delta))
+      assert(rec.forall(r => r.getAs[Boolean]("is_complete") && r.getAs[Boolean]("is_sequential")))
       assert(rec.map(_.getAs[Long]("record_amount")).toSeq == Seq(6L, 6L))
+      // the re-bucketed dimension SEEDED the register: both pulses known,
+      // cursor resumed past them, nothing re-fetched
+      assert(h1.daemon.ingestedCount == 2)
+      assert(h1.daemon.cursor == start + 2 * delta)
     } finally {
       h1.stop(); s1.shutdownNow(); s1.awaitTermination(5, TimeUnit.SECONDS)
     }
+  }
+
+  test("re-bucketing commits a newer pulses version; reads resolved before it stay whole") {
+    // span 10 = one pulse per bucket; re-bucket past 1 dir
+    val cfg = fastCfg.copy(flushBucketSpan = 10L, maxPulseBuckets = 1)
+    val base = java.nio.file.Files.createTempDirectory("graft-rebucket-retain").toString
+    val rows = (0 until 3).map { i =>
+      val p = start + i * delta
+      StorePulse(p, p - delta, p + delta, true, true, 0, 0L)
+    }
+    writeStorePulses(base, rows.take(2), span = cfg.flushBucketSpan)
+    writeStorePulses(base, rows.drop(2), span = cfg.flushBucketSpan)
+    val before = pulsesSnapshot(base).get
+    assert(before.version == 2 && before.partitions.size == 3, s"fixture: $before")
+    val resolved = storeTable(base, "pulses")
+    val headOnly = new Transport.RecordStream {
+      def export(pulse: Long, recordNumber: Int, count: Int): Iterator[Transport.Frame] =
+        throw new Transport.PulseNotFound(pulse)
+    }
+    val d = new Ingest.Daemon(spark, base, headOnly, start, cfg).start()
+    val after = try pulsesSnapshot(base).get finally d.stop()
+    // the re-bucketing is the next version of the SAME manifest sequence,
+    // so no version-keyed cache can mistake it for an older one
+    assert(after.version > before.version, s"$before -> $after")
+    val coarse = Ingest.spanForExtent(start, start + 2 * delta,
+      cfg.flushBucketSpan, cfg.maxPulseBuckets)
+    assert(after.partitions.keySet == Set(s"pulse_bucket=${start / coarse}"),
+      s"coarse layout expected: $after")
+    // the fine files are tombstones under retention, so the frame
+    // resolved before the re-bucketing still reads every row
+    val fine = before.partitions.toSeq.flatMap { case (k, fs) => fs.map(f => s"$k/$f") }
+    assert(fine.toSet.subsetOf(after.tombstones.map(_.file).toSet),
+      s"tombstones: ${after.tombstones}")
+    assert(resolved.collect().map(_.getAs[Long]("pulse_number")).sorted.toSeq ==
+      rows.map(_.pulse))
+  }
+
+  test("a staged pulses sibling left by an older build fails the start, naming it") {
+    val base = java.nio.file.Files.createTempDirectory("graft-rebucket-sibling").toString
+    writeStorePulses(base, Seq(StorePulse(start, start - delta, start + delta, true, true, 0, 0L)))
+    val sibling = new java.io.File(s"$base/pulses_migrating")
+    assert(sibling.mkdirs())
+    val headOnly = new Transport.RecordStream {
+      def export(pulse: Long, recordNumber: Int, count: Int): Iterator[Transport.Frame] =
+        throw new Transport.PulseNotFound(pulse)
+    }
+    val d = new Ingest.Daemon(spark, base, headOnly, start, fastCfg)
+    val e = intercept[IllegalStateException](d.start())
+    assert(e.getMessage.contains(s"$base/pulses_migrating"), e.getMessage)
+    assert(d.ingestedCount == 0, "nothing may seed beside the sibling")
+    assert(sibling.exists(), "the start must not touch the sibling")
   }
 
   test("restart resume at a historical hole: the follower probes forward past " +
@@ -961,21 +992,24 @@ class IngestServeSpec extends SparkSpec {
   test("restart seed is bounded by the open frontier, not the store's history: " +
       "500 closed pulses + 3 open seed only the frontier buckets") {
     // the register only NEEDS the open frontier + chain tail: the closed
-    // complete∧sequential prefix is summarized to the _frontier.json
-    // cursor each flush, so a decade of history must not be collected
+    // complete∧sequential prefix is summarized in the pulses manifest
+    // each flush, so a decade of history must not be collected
     // onto the driver at every restart (the reference's controller also
     // registers only incomplete pulses, controller.go:124-132)
     val base = java.nio.file.Files.createTempDirectory("graft-daemon-longhist").toString
     val span = 100L // 10 pulses per bucket at delta=10
     val nClosed = 500
     val openIdx = 500 to 502
+    // a STALE summary: points a couple of pulses LOW — the seed must read
+    // the superset and re-derive the true marks from the rows
     writeStorePulses(base, (0 until nClosed).map { i =>
       val p = start + i * delta
       StorePulse(p, p - delta, p + delta, true, true, 2, 8L, 2L)
     } ++ openIdx.map { i =>
       val p = start + i * delta
       StorePulse(p, p - delta, p + delta, false, false, 2, 8L, 2L)
-    }, span = span)
+    }, span = span, summary = Some(TableManifest.Summary(start + 497 * delta,
+      (start + 498 * delta) / span, span)))
     // records/drops exist for the OPEN pulses (their covers reload from
     // the drops partitions); the closed prefix needs no fact partitions
     // for this test — nothing may read it
@@ -985,13 +1019,6 @@ class IngestServeSpec extends SparkSpec {
       PulseWriter.commitPulse(
         wire.filter(col("pulse_number") === start + i * delta), base)
     }
-    // a STALE summary (crash between a flush and its summary write):
-    // points a couple of pulses LOW — the seed must read the superset
-    // and re-derive the true marks from the rows
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$base/pulses/_frontier.json"),
-      s"""{"seq_pulse":${start + 497 * delta},"frontier_bucket":${(start + 498 * delta) / span},"span":$span}"""
-        .getBytes("UTF-8"))
 
     // count input rows of the SEED's OWN jobs only: the shared test
     // session may run other suites' jobs concurrently, so the listener
@@ -1046,9 +1073,8 @@ class IngestServeSpec extends SparkSpec {
     val after = storeTable(base, "pulses")
     assert(after.count() == (nClosed + openIdx.size).toLong)
     assert(after.filter(col("is_sequential")).count() == (nClosed + openIdx.size).toLong)
-    val summary = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"$base/pulses/_frontier.json")), "UTF-8")
-    assert(summary.contains(s""""seq_pulse":${start + 502 * delta}"""), summary)
+    val summary = pulsesSnapshot(base).flatMap(_.summary)
+    assert(summary.exists(_.seqPulse == start + 502 * delta), s"summary: $summary")
   }
 
   test("the daemon persists per-pulse result counters") {
@@ -1176,15 +1202,13 @@ class IngestServeSpec extends SparkSpec {
     } finally d2.stop()
   }
 
-  test("a gap-backfill flush LOWERS the frontier summary before the data write: " +
-      "the on-disk summary never points above an on-disk open pulse") {
-    // the crash-window defense: if the summary could stay above a newly
-    // landed below-frontier pulse until the post-data raise, a crash in
-    // between would make the bounded seed skip that pulse forever. The
-    // poller samples both the summary and the pulse's bucket directory;
-    // at the first instant the backfilled bucket exists on disk, the
-    // summary must already point at or below it (the pre-write runs
-    // hundreds of ms before the Spark write commits).
+  test("gap backfill: no pulses manifest's frontier bucket is above an open row it names") {
+    // the invariant the bounded seed depends on: a seed from ANY committed
+    // version reads every pulse that version holds open. A gap backfill
+    // lands an open pulse BELOW the frontier a previous flush recorded,
+    // so the flush landing it must commit a lowered summary with it. The
+    // backfilled pulse arrives with half its cover first, so it is still
+    // open in the version that lands it; its TTL reload then heals it.
     val base = java.nio.file.Files.createTempDirectory("graft-daemon-backfill").toString
     val span = 10L // every pulse its own bucket at delta=10
     val cfg = fastCfg.copy(flushBucketSpan = span, reloadTtlMs = 300L,
@@ -1195,62 +1219,63 @@ class IngestServeSpec extends SparkSpec {
     val wire = Fixtures.multiPulseBatches(spark, nPulses = 3, recordsPerPulse = 8,
       startPulse = start)
     val full = new ReplayExporter(wire)
-    val halfP2 = new ReplayExporter(wire.filter(
-      col("pulse_number") =!= p2 || col("jet_id") === "0"))
+    val half = new ReplayExporter(wire.filter(
+      !col("pulse_number").isin(p1, p2) || col("jet_id") === "0"))
     @volatile var releaseGap = false
+    @volatile var healP1 = false
     val gated = new Transport.RecordStream {
       def export(pulse: Long, recordNumber: Int, count: Int): Iterator[Transport.Frame] =
         pulse match {
           case `p1` if !releaseGap => throw new Transport.PulseNotFound(pulse)
-          case `p2` => halfP2.export(pulse, recordNumber, count) // never completes
+          case `p1` if !healP1 => half.export(pulse, recordNumber, count)
+          case `p2` => half.export(pulse, recordNumber, count) // never completes
           case _ => full.export(pulse, recordNumber, count)
         }
     }
-    def summaryBucket(): Option[Long] = {
-      val f = java.nio.file.Paths.get(s"$base/pulses/_frontier.json")
-      if (!java.nio.file.Files.exists(f)) None
-      else """"frontier_bucket":(-?\d+)""".r
-        .findFirstMatchIn(new String(java.nio.file.Files.readAllBytes(f), "UTF-8"))
-        .map(_.group(1).toLong)
-    }
-    val p1Dir = java.nio.file.Paths.get(s"$base/pulses/pulse_bucket=${p1 / span}")
-    @volatile var violation: String = null
-    @volatile var sawP1Dir = false
-    val poller = new Thread(() => {
-      while (violation == null && !sawP1Dir) {
-        if (java.nio.file.Files.exists(p1Dir)) {
-          sawP1Dir = true
-          val sb = summaryBucket()
-          if (!sb.exists(_ <= p1 / span))
-            violation = s"p1's bucket landed while the summary points at $sb"
-        }
-        Thread.sleep(2)
-      }
-    }, "frontier-poller")
+    def summaryBucket(): Option[Long] =
+      pulsesSnapshot(base).flatMap(_.summary).map(_.frontierBucket)
     val daemon = new Ingest.Daemon(spark, base, gated, start, cfg).start()
     try {
-      // p0 closes; the probe finds p2 (half cover, stays open); the first
-      // flush records the frontier at p2's bucket with p1 unknown
+      // p0 closes; the probe finds p2 (half cover, stays open); a flush
+      // records the frontier at p2's bucket with p1 unknown
       assert(await()(daemon.snapshot.contains(p2) &&
         summaryBucket().contains(p2 / span)),
         s"fixture never reached the high-frontier state: known=" +
           s"${daemon.snapshot.keySet}, summary=${summaryBucket()}")
-      poller.start()
       // release the gap: the stalled sequencer re-requests p1, whose
-      // commit backfills BELOW the recorded frontier
+      // half-cover commit backfills BELOW the recorded frontier
       releaseGap = true
-      assert(await()(sawP1Dir), "the backfilled pulse never reached disk")
-      poller.join(5000)
-      assert(violation == null, String.valueOf(violation))
+      assert(await()(pulsesSnapshot(base).exists(_.partitions.contains(
+        s"pulse_bucket=${p1 / span}"))), "the backfilled pulse never reached a manifest")
+      healP1 = true
       // the backfill then chains and sequences normally (p2 stays open on
       // its half cover; the summary tracks whatever the frontier is now)
       assert(await()(daemon.sequentialPulse == p1),
         s"backfilled pulse never sequenced: ${daemon.snapshot}")
       assert(summaryBucket().exists(_ <= p2 / span), s"summary=${summaryBucket()}")
-    } finally {
-      if (poller.isAlive) { sawP1Dir = true; poller.join(2000) }
-      daemon.stop()
+    } finally daemon.stop()
+    // every retained version (all of this run's are inside the retention
+    // window, and each one's files outlive it): its summary's bucket is
+    // at or below the bucket of every not-closed row it names
+    val table = s"$base/pulses"
+    val versions = new java.io.File(s"$table/_manifests").listFiles()
+      .filter(_.getName.matches("v\\d+\\.json")).sortBy(_.getName).toSeq
+      .map(f => TableManifest.parse(
+        new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"), f.lastModified).get)
+    val p1Open = versions.filter { v =>
+      val open = spark.read.option("basePath", table).parquet(v.files(table): _*)
+        .filter(!(col("is_complete") && col("is_sequential")))
+        .select("pulse_number").collect().map(_.getLong(0))
+      val fb = v.summary.map(_.frontierBucket)
+      assert(fb.nonEmpty, s"v${v.version} carries no summary")
+      open.foreach(p => assert(fb.get <= p / span,
+        s"v${v.version}: frontier bucket ${fb.get} above open pulse $p"))
+      open.contains(p1)
     }
+    assert(p1Open.nonEmpty, "no version names the backfilled pulse open")
+    assert(versions.exists(v => v.summary.exists(_.frontierBucket == p2 / span) &&
+      !v.partitions.contains(s"pulse_bucket=${p1 / span}")),
+      "no version recorded the high frontier before the backfill")
   }
 
   test("loop-failure tracing: the FIRST failure of each loop prints immediately, " +

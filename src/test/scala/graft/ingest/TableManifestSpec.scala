@@ -23,13 +23,26 @@ class TableManifestSpec extends SparkSpec {
   }
 
   test("render/parse round trip and damage handling") {
-    import TableManifest.{Snapshot, Tombstone, parse, render}
+    import TableManifest.{Snapshot, Summary, Tombstone, parse, render}
     val parts = Map("pulse_number=65546" -> Seq("part-a.parquet", "part-b.parquet"),
       "pulse_number=65556" -> Seq("part-c.parquet"))
     val snap = Snapshot(7L, parts, Seq(
       Tombstone("_manifests/v0000000000000000006.json", 1700000000123L),
       Tombstone("pulse_number=65546/part-old.parquet", 1700000000123L)))
     assert(parse(render(snap), 0L).contains(snap))
+    val summarized = snap.copy(summary = Some(Summary(65546L, 655L, 100L)))
+    assert(render(summarized).contains(""""summary":{"""), render(summarized))
+    assert(parse(render(summarized), 0L).contains(summarized))
+    // the shape before manifests carried a summary (every table but the
+    // daemon's pulses table still has it): the summary reads absent
+    val noSummary =
+      """{"partitions":{"pulse_number=65546":["part-a.parquet","part-b.parquet"],""" +
+      """"pulse_number=65556":["part-c.parquet"]},"tombstones":[""" +
+      """{"file":"_manifests/v0000000000000000006.json","superseded_ms":1700000000123},""" +
+      """{"file":"pulse_number=65546/part-old.parquet","superseded_ms":1700000000123}],""" +
+      """"version":7}"""
+    assert(!render(snap).contains("summary"), "an absent summary is left out of the JSON")
+    assert(parse(noSummary, 0L).contains(snap))
     // the shape before tombstones carried their time: bare names, read as
     // superseded at the manifest file's mtime
     val bare =
@@ -42,6 +55,8 @@ class TableManifestSpec extends SparkSpec {
     assert(parse("""{"partitions":{}}""", 0L).isEmpty)
     assert(parse("""{"version":1,"partitions":{},"tombstones":[{"file":"x"}]}""", 0L).isEmpty,
       "a tombstone without its time reads None")
+    assert(parse("""{"version":1,"partitions":{},"tombstones":[],"summary":{"span":1}}""",
+      0L).isEmpty, "a summary missing a field reads None")
   }
 
   test("commit lifecycle under retention: a superseded file and an old " +
@@ -89,6 +104,34 @@ class TableManifestSpec extends SparkSpec {
     assert(!last.tombstones.exists(t => t.supersededMs == superseded),
       s"deleted files leave the tombstone list: ${last.tombstones}")
     assert(TableManifest.readTable(spark, table).get.count() == 2)
+  }
+
+  test("a dropOthers commit keeps only the partitions it writes; a summary " +
+      "is not carried forward") {
+    import spark.implicits._
+    val table = s"${tmp()}/pulses"
+    val f = fs(table)
+    val t0 = 1700000000000L
+    val summary = TableManifest.Summary(65556L, 6555L, 10L)
+    def rows(pulses: Seq[Long]) =
+      pulses.map(p => (p, "0", "x")).toDF("pulse_number", "jet_id", "payload").collect().toSeq
+    val schema = Seq((0L, "", "")).toDF("pulse_number", "jet_id", "payload").schema
+    TableManifest.writeRows(spark, table, "pulse_number", schema, rows(Seq(65546L, 65556L)),
+      t0, summary = Some(summary))
+    val s1 = TableManifest.latest(f, table).get
+    assert(s1.summary.contains(summary))
+    val gen1 = s1.partitions.toSeq.flatMap { case (k, fs) => fs.map(n => s"$k/$n") }
+    TableManifest.writeRows(spark, table, "pulse_number", schema, rows(Seq(65566L)),
+      t0 + 1000L, dropOthers = true)
+    val s2 = TableManifest.latest(f, table).get
+    assert(s2.version == 2 && s2.partitions.keySet == Set("pulse_number=65566"), s"$s2")
+    assert(gen1.toSet.subsetOf(s2.tombstones.map(_.file).toSet),
+      s"dropped partitions' files must be tombstoned: ${s2.tombstones}")
+    assert(s2.summary.isEmpty, "a commit without a summary must not inherit one")
+    // retention keeps the dropped files on disk for readers of v1
+    gen1.foreach(rel => assert(f.exists(new org.apache.hadoop.fs.Path(s"$table/$rel")), rel))
+    assert(storeTable(table.stripSuffix("/pulses"), "pulses")
+      .select("pulse_number").as[Long].collect().toSeq == Seq(65566L))
   }
 
   test("readTable: manifested reads serve exactly the current snapshot " +
