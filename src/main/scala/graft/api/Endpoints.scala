@@ -2,7 +2,7 @@ package graft.api
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.model.Domain
+import graft.model.{Domain, StoreViews}
 import graft.functions.{Codecs, JetFunctions}
 import graft.operators.{Pagination, Predicates, PulseChain}
 
@@ -30,6 +30,15 @@ object Endpoints {
   private def recordsView(spark: SparkSession, dir: String) = Domain.servedRecords(spark, dir)
   private def dropsView(spark: SparkSession, dir: String) = Domain.servedJetDrops(spark, dir)
   private def pulsesView(spark: SparkSession, dir: String) = Domain.servedPulses(spark, dir)
+
+  // The four pulse-keyed routes (/pulses/{pulse}, /pulses/{pulse}/jet-drops,
+  // /jet-drops/{id}, /jet-drops/{id}/records) serve an ingest store from
+  // driver reads of the partitions their key names (StoreViews.*Of) and
+  // page those rows in the driver, so they run no Spark job; over the
+  // corpus they stay Spark plans. Each layout has exactly one path.
+  private def pageCarried(store: Boolean)
+      : (DataFrame, Seq[org.apache.spark.sql.Column], Int, Int) => DataFrame =
+    if (store) Pagination.pageRowsWithTotalCarried else Pagination.pageWithTotalCarried
 
   /** GET /pulses — list with recomputed chain links, newest first, plus
     * the `{total}` count of the filtered set. Timestamp bounds are unix
@@ -191,14 +200,18 @@ object Endpoints {
     * points here (`updateNextPulse`, first match in pulse order, else
     * -1) and `prev` is the stored prev only if that pulse actually
     * exists (`updatePrevPulse`, else -1). Both answered by the
-    * driver-held chain index; the pruned row fetch is the request's only
-    * Spark job.
+    * driver-held chain index. On a store the row comes from the pulse's
+    * one `pulse_bucket` partition read in the driver
+    * ([[StoreViews.pulsesOf]]) and the request runs no Spark job; on the
+    * corpus the pruned row fetch is its only job.
     */
   def pulse(spark: SparkSession, dir: String, pulseNumber: Long): DataFrame = {
-    val p = pulsesView(spark, dir)
+    val p =
+      if (StoreViews.isStore(spark, dir)) StoreViews.pulsesOf(spark, dir, pulseNumber)
+      else pulsesView(spark, dir)
     val row = p.filter(col("pulse_number") === pulseNumber).limit(1)
-    // both repair probes answer from the driver-held chain index — the
-    // row fetch is the request's ONLY Spark job
+    // both repair probes answer from the driver-held chain index, with no
+    // Spark job
     val chain = Domain.pulseChainIndex(spark, dir)
     chain.storedPrev(pulseNumber) match {
       case None => row // pulse absent; the caller 404s on the empty frame
@@ -214,15 +227,22 @@ object Endpoints {
   /** GET /pulses/{pulse}/jet-drops — drops of one pulse, jet-id cursor.
     * Paged with the carried-total sentinel ([[Pagination.pageWithTotalCarried]])
     * like every offset-capable list endpoint: an offset past the end
-    * still answers the true filtered total in the same single pass.
+    * still answers the true filtered total in the same single pass. On a
+    * store the drops come from the pulse's one `pulse_number` partition
+    * read in the driver ([[StoreViews.jetDropsOf]]), the cursor filters
+    * them there, and the count and page cut run on those rows
+    * ([[Pagination.pageRowsWithTotalCarried]]): no Spark job runs.
     */
   def jetDropsByPulse(spark: SparkSession, dir: String, pulseNumber: Long,
       fromJetId: Option[String] = None, page: PageParams = PageParams()): DataFrame = {
-    val d = dropsView(spark, dir)
+    val store = StoreViews.isStore(spark, dir)
+    val d =
+      if (store) StoreViews.jetDropsOf(spark, dir, Seq(pulseNumber))
+      else dropsView(spark, dir)
     val filtered = d.filter(col("pulse_number") === pulseNumber)
     val cursored = fromJetId.fold(filtered)(j => filtered.filter(col("jet_id") >= j))
     Mappers.jetDropToApi(
-      Pagination.pageWithTotalCarried(cursored, Seq(col("jet_id").asc), page.limit, page.offset))
+      pageCarried(store)(cursored, Seq(col("jet_id").asc), page.limit, page.offset))
   }
 
   /** API link element: `server.NextPrevJetDrop` rendered by
@@ -240,8 +260,12 @@ object Endpoints {
     * (`models.Siblings()`, `etl/models/models.go:57-64`). Note this
     * differs from the by-jet-id LIST endpoint, which links by drop
     * hashes — the reference ships both semantics and so do we. The two
-    * chain questions answer from the driver-held index; the row fetch
-    * and the sibling-drop collect are the request's only Spark jobs.
+    * chain questions answer from the driver-held index. On a store the
+    * drop and its sibling drops come from one jet_drops snapshot, read in
+    * the driver from the partitions of the drop's pulse, its stored prev
+    * and its next pulse ([[StoreViews.jetDropsOf]]), and the request runs
+    * no Spark job; on the corpus the row fetch and the sibling-drop
+    * collect are its only jobs.
     */
   def jetDropById(spark: SparkSession, dir: String, jetDropId: String): Option[DataFrame] =
     Codecs.parseJetDropId(jetDropId).map { case (jet, pulse) =>
@@ -255,7 +279,13 @@ object Endpoints {
     */
   private def jetDropByKey(spark: SparkSession, dir: String,
       jet: String, pulse: Long): DataFrame = {
-      val d = dropsView(spark, dir)
+      val d =
+        if (StoreViews.isStore(spark, dir)) {
+          val chain = Domain.pulseChainIndex(spark, dir)
+          val linked = chain.storedPrev(pulse).toSeq
+            .flatMap(prev => prev +: chain.nextByPrev(pulse).toSeq)
+          StoreViews.jetDropsOf(spark, dir, pulse +: linked)
+        } else dropsView(spark, dir)
       val rowQuery = d.filter(col("pulse_number") === pulse && col("jet_id") === jet).limit(1)
       // existence gates the neighbor job: a 404 (absent drop) must cost
       // exactly the point fetch, and the collected row is returned as a
@@ -299,19 +329,23 @@ object Endpoints {
   /** GET /jet-drops/{jet_drop_id}/records — records of one drop, keyset.
     * `recordType` narrows to one of request/result/state
     * (`api/handlers.go:108-118`); validation of the enum is the HTTP
-    * frame's job, like the reference's.
+    * frame's job, like the reference's. On a store the records come from
+    * the drop's one `pulse_number` partition read in the driver
+    * ([[StoreViews.recordsOf]]); the jet, type and cursor filters, the
+    * count and the page cut run on those rows, and no Spark job runs.
     */
   def jetDropRecords(spark: SparkSession, dir: String, jetDropId: String,
       fromIndex: Option[String] = None, page: PageParams = PageParams(),
       recordType: Option[String] = None): Option[DataFrame] =
     Codecs.parseJetDropId(jetDropId).map { case (jet, pulse) =>
-      val r = recordsView(spark, dir)
+      val store = StoreViews.isStore(spark, dir)
+      val r = if (store) StoreViews.recordsOf(spark, dir, pulse) else recordsView(spark, dir)
       val base = r.filter(col("pulse_number") === pulse && col("jet_id") === jet)
       val typed = recordType.fold(base)(t => base.filter(col("type") === t))
       val cursored = parsedCursor(fromIndex).fold(typed) { case (p, o) =>
         typed.filter(Predicates.keysetFrom(col("pulse_number"), col("order"), p, o, asc = true))
       }
-      Pagination.pageWithTotalCarried(cursored,
+      pageCarried(store)(cursored,
         Seq(col("pulse_number").asc, col("order").asc, col("reference").asc),
         page.limit, page.offset)
     }

@@ -37,9 +37,15 @@ import graft.functions.Codecs
   * lookups.
   *
   * Serialization is driver-side string building over the ≤1000-row page
-  * (validation bounds it) — the API boundary, not a distributed op. The
-  * query itself stays a Catalyst plan end to end; `.collect()` happens
-  * here and nowhere deeper.
+  * (validation bounds it) — the API boundary, not a distributed op.
+  * `.collect()` happens here. Over the corpus, and for the list routes
+  * over a store, the query is a Catalyst plan end to end. Over an ingest
+  * store the four pulse-keyed routes (`/pulses/{pulse}`,
+  * `/pulses/{pulse}/jet-drops`, `/jet-drops/{id}`,
+  * `/jet-drops/{id}/records`) read the partitions their key names in the
+  * driver and page those rows there ([[Endpoints]]); the presentation
+  * below folds over that local relation, so those answers run no Spark
+  * job.
   */
 object HttpApi {
 
@@ -142,10 +148,17 @@ object HttpApi {
     // URI.getPath is ALREADY percent-decoded — a second URLDecoder pass
     // would double-decode %25-escapes, turn literal '+' into a space,
     // and throw (→ 500) on a once-decoded value containing a stray '%'.
-    // The query side below decodes from getRawQuery, which is raw.
-    val segs = ex.getRequestURI.getPath.stripPrefix("/api/v1").split("/")
-      .filter(_.nonEmpty).toList
-    val q = parseQuery(Option(ex.getRequestURI.getRawQuery))
+    // The query side decodes from getRawQuery, which is raw.
+    respond(spark, dir, ex.getRequestURI.getPath, Option(ex.getRequestURI.getRawQuery))
+  }
+
+  /** A GET's (status, body) from its decoded path and raw query string,
+    * computed in the calling thread: the whole answer below the listener.
+    */
+  private[api] def respond(spark: SparkSession, dir: String, path: String,
+      rawQuery: Option[String]): (Int, String) = {
+    val segs = path.stripPrefix("/api/v1").split("/").filter(_.nonEmpty).toList
+    val q = parseQuery(rawQuery)
     segs match {
       case "pulses" :: Nil                       => pulsesList(spark, dir, q)
       case "pulses" :: p :: Nil                  => pulsePoint(spark, dir, p)
@@ -306,7 +319,7 @@ object HttpApi {
     * The marker-less branch serves the limit-only by-jet-id endpoint,
     * where an empty page can only mean a zero total.
     */
-  private def envelope(rows: Array[Row]): String = {
+  private[api] def envelope(rows: Array[Row]): String = {
     val marker = graft.operators.Pagination.PageRowMarker
     if (rows.nonEmpty && rows.head.schema.fieldNames.contains(marker))
       JsonOut.pageEnvelope(rows.filter(_.getAs[Boolean](marker)), totalOf(rows))
@@ -544,7 +557,7 @@ object HttpApi {
     * internal and never served (the index carries the order). The
     * domain's own payload analogs (event_type, value) stay.
     */
-  private def withIndex(df: DataFrame): DataFrame = df
+  private[api] def withIndex(df: DataFrame): DataFrame = df
     .withColumn("index", Codecs.indexString(col("pulse_number"), col("order")))
     .withColumn("jet_drop_id", Codecs.jetDropIdString(col("jet_id"), col("pulse_number")))
     .withColumnRenamed("ts_sec", "timestamp")
@@ -582,11 +595,11 @@ object HttpApi {
     * the reference passes `[]server.NextPrevJetDrop{}` for both sides
     * (`api/handlers.go:446-449`).
     */
-  private def presentEmptyLinks(df: DataFrame): DataFrame = df
+  private[api] def presentEmptyLinks(df: DataFrame): DataFrame = df
     .withColumn("prev_jet_drop_id", lit(Array.empty[String]))
     .withColumn("next_jet_drop_id", lit(Array.empty[String]))
 
-  private def presentPulses(df: DataFrame): DataFrame = df
+  private[api] def presentPulses(df: DataFrame): DataFrame = df
     .withColumn("prev_pulse_number",
       when(col("prev_pulse_number") === -1L, lit(null).cast("long"))
         .otherwise(col("prev_pulse_number")))

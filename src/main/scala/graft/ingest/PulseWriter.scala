@@ -2,7 +2,7 @@ package graft.ingest
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
-import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.StructType
 
 /** S3/S4/ST4/W7 — idempotent per-pulse commit.
   *
@@ -47,9 +47,9 @@ object PulseWriter {
     val spark = wire.sparkSession
     val (schema, records) = Spine.rows(wire)
     val Seq(pulse, jet, ts) = Seq("pulse_number", "jet_id", "timestamp").map(schema.fieldIndex)
-    val dropSchema = StructType(Seq(schema(pulse), schema(jet),
-      StructField("record_amount", IntegerType, nullable = false),
-      StructField("timestamp", LongType)))
+    // the stored drop shape, its key columns typed as the spine types them
+    val dropSchema = StructType(
+      Seq(schema(pulse), schema(jet)) ++ graft.model.Schemas.jetDrops.fields.drop(2))
     val drops = records.groupBy(r => (r.getLong(pulse), r.getString(jet))).toSeq.sortBy(_._1)
       .map { case ((p, j), rs) =>
         new GenericRowWithSchema(Array(p, j, rs.size, rs.map(_.getLong(ts)).min), dropSchema): Row

@@ -1,5 +1,6 @@
 package graft.ingest
 
+import java.io.FileNotFoundException
 import java.util.UUID
 
 import scala.collection.mutable
@@ -10,13 +11,16 @@ import com.fasterxml.jackson.databind.{DeserializationFeature, ObjectMapper,
   PropertyNamingStrategies, SerializationFeature}
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.paths.SparkPath
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.encoders.{ExpressionEncoder, RowEncoder}
+import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Per-commit snapshot manifests for the store's partitioned tables —
   * the snapshot-isolation layer the reference gets for free from
@@ -124,16 +128,20 @@ object TableManifest {
     * `_manifests/` (empty when the table has none).
     */
   private def versionStatuses(fs: FileSystem, table: Path)
-      : Iterator[(Long, org.apache.hadoop.fs.FileStatus)] = {
-    val dir = manifestsDir(table)
-    if (!fs.exists(dir)) Iterator.empty
-    else fs.listStatus(dir).iterator.flatMap { st =>
+      : Iterator[(Long, FileStatus)] =
+    listOrEmpty(fs, manifestsDir(table)).iterator.flatMap { st =>
       st.getPath.getName match {
         case VersionRe(v) => Some((v.toLong, st))
         case _ => None
       }
     }
-  }
+
+  /** One `listStatus` of `dir`, empty when it does not exist: a single FS
+    * call where an `exists` probe first would make two.
+    */
+  private def listOrEmpty(fs: FileSystem, dir: Path): Array[FileStatus] =
+    try fs.listStatus(dir)
+    catch { case _: FileNotFoundException => Array.empty }
 
   /** The newest committed snapshot. Absence (no `_manifests/`) means
     * nothing is committed; a PRESENT but unreadable newest manifest
@@ -202,7 +210,8 @@ object TableManifest {
     *     those in the partitions this commit touches are tombstoned
     *     through `superseded`);
     *  2. physically delete the previous snapshot's tombstones that were
-    *     superseded more than [[RetentionMs]] before `now`;
+    *     superseded more than [[RetentionMs]] before `now`, and the
+    *     directory of a partition no longer in the map once it is empty;
     *  3. write version v+1 (tmp + rename) with the merged partition map
     *     and, as its tombstones, the still-pending ones plus everything
     *     superseded now: the replaced partitions' previous files and
@@ -235,6 +244,14 @@ object TableManifest {
     def paths(m: Map[String, Seq[String]]) =
       m.iterator.flatMap { case (k, names) => names.map(n => s"$k/$n") }
     val live = paths(parts).toSet
+    // a partition dir that left the map an earlier commit goes once its
+    // last tombstone is deleted; the delete is non-recursive, so a dir
+    // still holding any file (a crash orphan) stays
+    expired.iterator.map(_.file).filterNot(_.startsWith("_manifests/"))
+      .map(_.takeWhile(_ != '/')).toSet
+      .filterNot(k => parts.contains(k) || prev.partitions.contains(k) ||
+        pending.exists(_.file.startsWith(s"$k/")))
+      .foreach(deleteIfEmpty(fs, table, _))
     val dataFiles = (paths(prev.partitions) ++ paths(superseded)).filterNot(live)
     val manifests = versionStatuses(fs, table).collect {
       case (v, st) if v <= prev.version => s"_manifests/${st.getPath.getName}"
@@ -298,10 +315,7 @@ object TableManifest {
         require(!r.isNullAt(p), s"null $partCol in a row for $tablePath")
         s"$partCol=${r.get(p)}"
       }
-      // the session conf over the context's Hadoop conf, as Spark's
-      // `SessionState.newHadoopConf` builds it for a DataFrameWriter
-      val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
-      spark.conf.getAll.foreach { case (k, v) => conf.set(k, v) }
+      val conf = sessionHadoopConf(spark)
       val job = Job.getInstance(conf)
       val factory = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, dataSchema)
       val ctx = new TaskAttemptContextImpl(job.getConfiguration,
@@ -328,10 +342,20 @@ object TableManifest {
         summary, dropOthers))
     }
 
+  /** The session conf over the context's Hadoop conf, as Spark's
+    * `SessionState.newHadoopConf` builds it for a DataFrameWriter or a scan.
+    */
+  private def sessionHadoopConf(spark: SparkSession): Configuration = {
+    val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
+    spark.conf.getAll.foreach { case (k, v) => conf.set(k, v) }
+    conf
+  }
+
   /** Delete the data files of `tablePath` that the newest manifest
     * neither lists nor holds as a pending tombstone — what a commit that
     * died between its file writes and its publish leaves behind, in
-    * partitions no later commit touched. Every file an older retained
+    * partitions no later commit touched — and then the dirs this empties
+    * of partitions out of the map. Every file an older retained
     * manifest names is one of the two, since tombstones carry forward
     * until deleted. Needs no age check, but it must run while no write to
     * the table is in flight (the daemon runs it at start, before its
@@ -355,21 +379,28 @@ object TableManifest {
         }
         .filterNot(named).toSeq
       orphans.foreach(rel => fs.delete(new Path(table, rel), false))
+      orphans.map(_.takeWhile(_ != '/')).distinct
+        .filterNot(k => named.exists(_.startsWith(s"$k/")))
+        .foreach(deleteIfEmpty(fs, table, _))
       orphans.length
     }
   }
+
+  /** Delete the partition dir `partition` of `table` if it is empty: the
+    * delete is non-recursive, so a dir still holding a file stays.
+    */
+  private def deleteIfEmpty(fs: FileSystem, table: Path, partition: String): Unit =
+    try { fs.delete(new Path(table, partition), false); () }
+    catch { case _: java.io.IOException => () }
 
   /** The data files currently in `tablePath/partition` — the writer's
     * pre-write listing of a partition it replaces, and the orphan sweep's.
     */
   def listPartitionFiles(fs: FileSystem, tablePath: String,
-      partition: String): Set[String] = {
-    val dir = new Path(s"$tablePath/$partition")
-    if (!fs.exists(dir)) Set.empty
-    else fs.listStatus(dir).iterator.collect {
+      partition: String): Set[String] =
+    listOrEmpty(fs, new Path(s"$tablePath/$partition")).iterator.collect {
       case st if st.isFile && isDataFile(st.getPath.getName) => st.getPath.getName
     }.toSet
-  }
 
   private def isDataFile(name: String): Boolean =
     !name.startsWith("_") && !name.startsWith(".") && name.endsWith(".parquet")
@@ -386,14 +417,69 @@ object TableManifest {
     * their schema-stable empty): data files without a manifest are a
     * first commit that never published, and are never served.
     */
-  def readTable(spark: SparkSession, tablePath: String): Option[DataFrame] = {
-    val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    latest(fs, tablePath).filter(_.partitions.nonEmpty).map { snap =>
+  def readTable(spark: SparkSession, tablePath: String): Option[DataFrame] =
+    snapshot(spark, tablePath).filter(_.partitions.nonEmpty).map { snap =>
       graft.sources.RelationCache.versionedParquet(spark, tablePath, snap.version) {
         spark.read.option("basePath", tablePath).parquet(snap.files(tablePath): _*)
       }
     }
+
+  /** The newest committed snapshot of `tablePath` ([[latest]] on the
+    * session's file system).
+    */
+  def snapshot(spark: SparkSession, tablePath: String): Option[Snapshot] =
+    latest(new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration),
+      tablePath)
+
+  /** THE driver reader, the read twin of [[writeRows]]: the rows of the
+    * `partitions` named (dir names, `partCol=value`) as `snap` lists their
+    * files — a partition `snap` does not list reads no rows — as a frame
+    * over driver-held rows (a `LocalRelation`). A row holds `columns` of
+    * the stored `dataSchema` (the table's schema minus `partCol`), read as
+    * nullable like any Spark file scan reads them, then `partCol` as a
+    * long.
+    *
+    * Each file is read in the calling thread by Spark's own parquet
+    * reader (`ParquetFileFormat.buildReaderWithPartitionValues`, row
+    * mode), with the session conf a scan would use, and only the columns
+    * asked for are decoded. No Spark job runs, no directory is listed,
+    * and no footer is read for schema inference: the manifest names the
+    * files and the caller knows the schema. Projections and filters over
+    * the frame fold into its local relation, so collecting them runs no
+    * job either. Nothing read is cached; the reader itself is built once
+    * per (context, table schema, columns), because each build broadcasts
+    * the Hadoop conf.
+    */
+  def readRows(spark: SparkSession, tablePath: String, snap: Snapshot,
+      partitions: Iterable[String], partCol: String, dataSchema: StructType,
+      columns: Seq[String]): DataFrame = {
+    val data = StructType(dataSchema.map(_.copy(nullable = true)))
+    val read = readers.computeIfAbsent(
+      (spark.sparkContext.applicationId, partCol, data, columns), _ =>
+        new ParquetFileFormat().buildReaderWithPartitionValues(spark, data,
+          StructType(Seq(StructField(partCol, LongType, nullable = false))),
+          StructType(columns.map(data(_))), Nil,
+          Map(FileFormat.OPTION_RETURNING_BATCH -> "false"), sessionHadoopConf(spark)))
+    val rows = partitions.iterator.distinct.flatMap { k =>
+      val value = InternalRow(k.stripPrefix(s"$partCol=").toLong)
+      // one split spanning the whole file: the reader takes the file's
+      // length from the file system when it opens the footer
+      snap.partitions.getOrElse(k, Nil).sorted.iterator.map(f =>
+        PartitionedFile(value, SparkPath.fromPath(new Path(s"$tablePath/$k/$f")),
+          0L, Long.MaxValue))
+    }.flatMap { file =>
+      // row mode reuses one row per batch: copy each, and close the file
+      // even when a read fails part way
+      val it = read(file)
+      try it.map(_.copy()).toVector
+      finally it match { case c: java.io.Closeable => c.close(); case _ => () }
+    }.toVector
+    GraftColumnBridge.localDataFrame(spark,
+      StructType(columns.map(data(_)) :+ StructField(partCol, LongType, nullable = false)), rows)
   }
+
+  private val readers = new java.util.concurrent.ConcurrentHashMap[
+    (String, String, StructType, Seq[String]), PartitionedFile => Iterator[InternalRow]]()
 
   /** A change token for cache keys: the manifest version (one `_manifests/`
     * listing, no recursive walk), None for a table with no manifest.

@@ -314,6 +314,16 @@ object Domain {
     }
   }
 
+  object PulseChainIndex {
+    /** The index over (pulse_number, stored prev_pulse_number) pairs. */
+    def apply(pairs: Array[(Long, Long)]): PulseChainIndex = {
+      val byPulse = pairs.sortBy(_._1)
+      val byPrev = pairs.sortBy(p => (p._2, p._1))
+      new PulseChainIndex(byPulse.map(_._1), byPulse.map(_._2),
+        byPrev.map(_._2), byPrev.map(_._1))
+    }
+  }
+
   private val chainCache =
     new java.util.concurrent.ConcurrentHashMap[String, PulseChainIndex]()
   private val storeChainCache =
@@ -366,15 +376,16 @@ object Domain {
   private def storePulsesVersion(spark: SparkSession, dir: String): String =
     graft.ingest.TableManifest.versionToken(spark, s"$dir/pulses").getOrElse("absent")
 
-  private def buildChainIndex(spark: SparkSession, dir: String): PulseChainIndex = {
-    val pairs = servedPulses(spark, dir)
-      .select(col("pulse_number"), col("prev_pulse_number")).collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
-    val byPulse = pairs.sortBy(_._1)
-    val byPrev = pairs.sortBy(p => (p._2, p._1))
-    new PulseChainIndex(byPulse.map(_._1), byPulse.map(_._2),
-      byPrev.map(_._2), byPrev.map(_._1))
-  }
+  /** A store's index reads its live pulses files in the driver
+    * ([[StoreViews.pulseLinks]]), so the first request after a flush runs
+    * no Spark job either; the immutable corpus spine is collected once.
+    */
+  private def buildChainIndex(spark: SparkSession, dir: String): PulseChainIndex =
+    PulseChainIndex(
+      if (StoreViews.isStore(spark, dir)) StoreViews.pulseLinks(spark, dir)
+      else servedPulses(spark, dir)
+        .select(col("pulse_number"), col("prev_pulse_number")).collect()
+        .map(r => (r.getLong(0), r.getLong(1))))
 
   /** Register the three domain tables as temp views (plus the library's
     * native SQL functions), so SQL-first users query `records`,

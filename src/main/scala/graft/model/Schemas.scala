@@ -51,6 +51,19 @@ object Schemas {
     StructField("timestamp", LongType, nullable = false)
   ))
 
+  /** `jet_drops` — one row per (pulse, jet) as a pulse commit writes it:
+    * the drop's record count and its earliest record timestamp (the two
+    * key columns take their nullability from the committed records).
+    * reference: `etl/models/models.go:46-55` (hashes are derived at
+    * serving time).
+    */
+  val jetDrops: StructType = StructType(Seq(
+    StructField("pulse_number", LongType, nullable = false),
+    StructField("jet_id", StringType, nullable = false),
+    StructField("record_amount", IntegerType, nullable = false),
+    StructField("timestamp", LongType)
+  ))
+
   /** Wire-level input record (pre-canonicalization), mirroring
     * `exporter.Record` as consumed at `etl/transformer/transformer.go:207-292`.
     */

@@ -36,21 +36,30 @@ import org.apache.spark.sql.functions._
   *    page lists a handful of directories instead of scanning anything.
   *
   * Isolation contract: reads resolve through the store's COMMIT
-  * MANIFESTS ([[graft.ingest.TableManifest]]) — each request plans over
-  * the explicit file set some committed version defined, superseded
-  * files stay on disk for the manifest's retention window, and a read
-  * racing a hot-pulse rewrite therefore always serves a committed page: no
+  * MANIFESTS ([[graft.ingest.TableManifest]]) — each request reads the
+  * explicit file set some committed version defined, superseded files
+  * stay on disk for the manifest's retention window, and a read racing a
+  * hot-pulse rewrite therefore always serves a committed page: no
   * lost-file 500s, no torn or silently-short pages (StoreServeSpec's
-  * racing-rewrite test pins ZERO failures; the reference gets the same
+  * racing-rewrite tests pin ZERO failures; the reference gets the same
   * guarantee from Postgres MVCC, `etl/dbconn/connection.go:13-22`).
-  * The resolved relations are cached per manifest VERSION — an
-  * unchanged store pays ONE bounded `_manifests/` dir listing + one
-  * small JSON read per table per request (the change signal; the
-  * Postgres analog is snapshot acquisition) and zero DATA-directory
-  * listings or schema probes, and staleness is structurally impossible
-  * because the version moves with every commit. A table with no
-  * committed manifest serves as empty; a store written before manifests
-  * is not read.
+  * Every request pays ONE `_manifests/` listing per table it reads (the
+  * change signal; the Postgres analog is snapshot acquisition; the
+  * parsed manifest is memoized by version) and no data-directory
+  * listing or schema probe. Two read shapes share the serving programs:
+  *
+  *  - the Spark views ([[records]], [[jetDrops]], [[pulses]]) plan over
+  *    the snapshot's file list, their relations cached per manifest
+  *    VERSION, so staleness is structurally impossible;
+  *  - the pulse-keyed reads ([[recordsOf]], [[jetDropsOf]],
+  *    [[pulsesOf]], [[pulseLinks]]) resolve one snapshot per table and
+  *    read only the partitions their key names, in the driver, as a
+  *    local relation: the reference's indexed `WHERE pulse_number = ?`
+  *    (`etl/storage/storage.go:475-494`) with no Spark job and nothing
+  *    cached but the manifest.
+  *
+  * A table with no committed manifest serves as empty; a store written
+  * before manifests is not read.
   */
 object StoreViews {
 
@@ -151,18 +160,20 @@ object StoreViews {
     */
   def records(spark: SparkSession, dir: String): DataFrame =
     graft.ingest.TableManifest.readTable(spark, s"$dir/records")
-      .fold(emptyFrame(spark, RecordsServingSchema))(_.select(
-        refKey(col("reference")).as("reference"),
-        col("type"),
-        refKey(col("object_reference")).as("object_reference"),
-        refKey(col("prototype_reference")).as("prototype_reference"),
-        refKey(col("prev_record_reference")).as("prev_record_reference"),
-        col("payload"),
-        col("hash"),
-        col("jet_id"),
-        col("pulse_number").cast("long").as("pulse_number"),
-        col("order"),
-        col("timestamp").as("ts_sec")))
+      .fold(emptyFrame(spark, RecordsServingSchema))(servingRecords)
+
+  private def servingRecords(raw: DataFrame): DataFrame = raw.select(
+    refKey(col("reference")).as("reference"),
+    col("type"),
+    refKey(col("object_reference")).as("object_reference"),
+    refKey(col("prototype_reference")).as("prototype_reference"),
+    refKey(col("prev_record_reference")).as("prev_record_reference"),
+    col("payload"),
+    col("hash"),
+    col("jet_id"),
+    col("pulse_number").cast("long").as("pulse_number"),
+    col("order"),
+    col("timestamp").as("ts_sec"))
 
   /** The jet_drops dimension with the serving hash convention derived
     * over the pulses chain (broadcast — one row per pulse).
@@ -177,32 +188,109 @@ object StoreViews {
           col("timestamp"))
         val chain = pulses(spark, dir)
           .select(col("pulse_number").as("pn"), col("prev_pulse_number").as("prev_pn"))
-        drops.join(broadcast(chain), col("pulse_number") === col("pn"), "left")
-          .withColumn("hash", md5(concat_ws(":", col("jet_id"), col("pulse_number"))))
-          .withColumn("first_prev_hash",
-            when(col("prev_pn").isNull, lit(null).cast("string"))
-              .otherwise(md5(concat_ws(":", col("jet_id"), col("prev_pn")))))
-          .withColumn("second_prev_hash", lit(null).cast("string"))
-          .drop("pn", "prev_pn")
+        withDropHashes(drops.join(broadcast(chain), col("pulse_number") === col("pn"), "left")
+          .drop("pn"))
       }
+
+  /** The drop hashes over drop rows carrying their pulse's stored prev as
+    * `prev_pn` (null when the pulse is not in the pulses table), which
+    * leaves the output.
+    */
+  private def withDropHashes(drops: DataFrame): DataFrame = drops
+    .withColumn("hash", md5(concat_ws(":", col("jet_id"), col("pulse_number"))))
+    .withColumn("first_prev_hash",
+      when(col("prev_pn").isNull, lit(null).cast("string"))
+        .otherwise(md5(concat_ws(":", col("jet_id"), col("prev_pn")))))
+    .withColumn("second_prev_hash", lit(null).cast("string"))
+    .drop("prev_pn")
 
   /** The daemon-maintained pulses dimension in the serving shape (the
     * bucket partition column is a flush concern, never served).
     */
   def pulses(spark: SparkSession, dir: String): DataFrame =
     graft.ingest.TableManifest.readTable(spark, s"$dir/pulses")
-      .fold(emptyFrame(spark, PulsesServingSchema)) { raw =>
-      raw.select(
-        col("pulse_number").cast("long").as("pulse_number"),
-        col("prev_pulse_number"),
-        col("next_pulse_number"),
-        col("is_complete"),
-        col("is_sequential"),
-        col("timestamp"),
-        col("jet_drop_amount").cast("long").as("jet_drop_amount"),
-        col("record_amount"),
-        // the per-type counter the gap/status views consume — the corpus
-        // spine carries it too, so the SERVED schema is layout-stable
-        col("result_amount"))
+      .fold(emptyFrame(spark, PulsesServingSchema))(servingPulses)
+
+  private def servingPulses(raw: DataFrame): DataFrame = raw.select(
+    col("pulse_number").cast("long").as("pulse_number"),
+    col("prev_pulse_number"),
+    col("next_pulse_number"),
+    col("is_complete"),
+    col("is_sequential"),
+    col("timestamp"),
+    col("jet_drop_amount").cast("long").as("jet_drop_amount"),
+    col("record_amount"),
+    // the per-type counter the gap/status views consume — the corpus
+    // spine carries it too, so the SERVED schema is layout-stable
+    col("result_amount"))
+
+  // ---- driver reads for the pulse-keyed routes ----------------------------
+  //
+  // Each resolves ONE snapshot of its table and reads only the partitions
+  // the key names, in the driver ([[graft.ingest.TableManifest.readRows]]);
+  // the serving programs above then run over the local relation, which
+  // the optimizer folds, so no Spark job runs. A table with no manifest
+  // reads as no rows in the same serving shape.
+
+  // the stored columns the serving programs read: all but the partition
+  // column and the records' unserved raw_data
+  private val RecordColumns =
+    Schemas.records.fieldNames.toSeq.filterNot(Set("raw_data", "pulse_number"))
+  private val PulseColumns = Schemas.pulses.fieldNames.toSeq.filterNot(_ == "pulse_bucket")
+
+  private def stored(spark: SparkSession, dir: String, table: String,
+      schema: org.apache.spark.sql.types.StructType, partCol: String, columns: Seq[String])(
+      partitions: graft.ingest.TableManifest.Snapshot => Iterable[String]): DataFrame = {
+    val path = s"$dir/$table"
+    val snap = graft.ingest.TableManifest.snapshot(spark, path)
+      .getOrElse(graft.ingest.TableManifest.Snapshot(0L, Map.empty, Nil))
+    graft.ingest.TableManifest.readRows(spark, path, snap, partitions(snap), partCol,
+      org.apache.spark.sql.types.StructType(schema.filterNot(_.name == partCol)), columns)
+  }
+
+  /** The records of one pulse in [[records]]' serving shape, read from its
+    * one `pulse_number` partition in the driver.
+    */
+  def recordsOf(spark: SparkSession, dir: String, pulse: Long): DataFrame =
+    servingRecords(stored(spark, dir, "records", Schemas.records, "pulse_number",
+      RecordColumns)(_ => Seq(s"pulse_number=$pulse")))
+
+  /** The drops of `pulses` in [[jetDrops]]' serving shape, from one
+    * jet_drops snapshot read in the driver. Each pulse's stored prev, which
+    * the hashes need, comes from the driver-held chain index
+    * ([[Domain.pulseChainIndex]]) that the pulses table's version keys.
+    */
+  def jetDropsOf(spark: SparkSession, dir: String, pulses: Seq[Long]): DataFrame = {
+    val chain = Domain.pulseChainIndex(spark, dir)
+    val prevPn = pulses.distinct.foldLeft(lit(null).cast("long")) { (other, p) =>
+      chain.storedPrev(p).fold(other)(prev => when(col("pulse_number") === p, lit(prev))
+        .otherwise(other))
     }
+    val raw = stored(spark, dir, "jet_drops", Schemas.jetDrops, "pulse_number",
+      Seq("jet_id", "record_amount", "timestamp"))(_ => pulses.map(p => s"pulse_number=$p"))
+    withDropHashes(raw.select(
+      col("pulse_number"),
+      col("jet_id"),
+      col("record_amount"),
+      col("timestamp"),
+      prevPn.as("prev_pn")))
+  }
+
+  /** The pulses-table rows that can hold `pulse`, in [[pulses]]' serving
+    * shape, read in the driver: its `pulse_bucket` partition at the span
+    * the manifest's summary records, or, in a table whose manifest has no
+    * summary (written before summaries existed), every live partition.
+    */
+  def pulsesOf(spark: SparkSession, dir: String, pulse: Long): DataFrame =
+    servingPulses(stored(spark, dir, "pulses", Schemas.pulses, "pulse_bucket", PulseColumns) {
+      snap => snap.summary.fold(snap.partitions.keys)(s => Seq(s"pulse_bucket=${pulse / s.span}"))
+    })
+
+  /** Every live pulse's (pulse_number, stored prev_pulse_number), read in
+    * the driver: the chain index's rebuild input.
+    */
+  def pulseLinks(spark: SparkSession, dir: String): Array[(Long, Long)] =
+    stored(spark, dir, "pulses", Schemas.pulses, "pulse_bucket",
+      Seq("pulse_number", "prev_pulse_number"))(_.partitions.keys)
+      .collect().map(r => (r.getLong(0), r.getLong(1)))
 }

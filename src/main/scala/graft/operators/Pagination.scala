@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BooleanType, LongType, StructField, StructType}
 
 /** List-endpoint pagination (W5, A3).
   *
@@ -79,5 +81,33 @@ object Pagination {
       .withColumn(PageRowMarker, coalesce(col(PageRowMarker), lit(false)))
       .select(pageCols.map(col) ++ Seq(col("total"), col(PageRowMarker)): _*)
       .orderBy(sort: _*)
+  }
+
+  /** [[pageWithTotalCarried]] over driver-held rows: `df` must be a frame
+    * whose optimized plan is a local relation (a driver read under
+    * projections and filters), and the count, the sort, the offset/limit
+    * cut and the carried-total sentinel run on its rows in the driver,
+    * with Catalyst's own ordering for `sort`. The answer has
+    * [[pageWithTotalCarried]]'s exact rows and schema (page columns
+    * nullable, then `total` and [[PageRowMarker]]) as a local relation
+    * again, so presenting and collecting it runs no Spark job. Any other
+    * input fails: the caller has no second path.
+    */
+  def pageRowsWithTotalCarried(df: DataFrame, sort: Seq[Column], limit: Int,
+      offset: Int = 0): DataFrame = {
+    require(!df.columns.contains("total") && !df.columns.contains(PageRowMarker),
+      s"pageRowsWithTotalCarried input must not carry reserved columns 'total'/'$PageRowMarker'")
+    val (rows, ordering) = GraftColumnBridge.localRows(df, sort).getOrElse(
+      throw new IllegalArgumentException(
+        s"pageRowsWithTotalCarried needs driver-held rows:\n${df.queryExecution.optimizedPlan}"))
+    val total = rows.length.toLong
+    val page = rows.sorted(ordering).drop(offset).take(limit)
+    val out =
+      if (page.isEmpty) Seq(InternalRow.fromSeq(Seq.fill(df.schema.length)(null) :+ total :+ false))
+      else page.map(r => InternalRow.fromSeq(r.toSeq(df.schema) :+ total :+ true))
+    GraftColumnBridge.localDataFrame(df.sparkSession, StructType(
+      df.schema.fields.map(_.copy(nullable = true)) ++ Seq(
+        StructField("total", LongType, nullable = false),
+        StructField(PageRowMarker, BooleanType, nullable = false))), out)
   }
 }

@@ -1,0 +1,298 @@
+package graft.api
+
+import java.util.concurrent.TimeUnit
+
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions._
+
+import graft.{Ingest, SparkSpec}
+import graft.functions.{Codecs, JetFunctions}
+import graft.gen.Fixtures
+import graft.ingest.{GrpcTransport, PulseWriter, ReplayExporter, TableManifest}
+import graft.model.{Domain, StoreViews}
+import graft.operators.{Pagination, Predicates, PulseChain}
+
+/** The pulse-keyed routes over an ingest store (`/pulses/{pulse}`,
+  * `/pulses/{pulse}/jet-drops`, `/jet-drops/{id}`, `/jet-drops/{id}/records`)
+  * read the partitions their key names in the driver and run no Spark job.
+  * The oracle below is the Spark plan each of them ran before that: every
+  * body the routes answer must equal, byte for byte, the body HttpApi
+  * renders from the oracle's frame.
+  */
+class StoreRouteEquivalenceSpec extends SparkSpec {
+
+  private val start = Fixtures.GenesisPulse + Fixtures.PulseDelta
+  private val delta = Fixtures.PulseDelta
+  private val perPulse = 12
+  private val jets = Seq("0", "10", "11", "1")
+
+  private def pulseAt(i: Int) = start + i * delta
+
+  private def wire(nPulses: Int) =
+    Fixtures.multiPulseBatches(spark, nPulses, perPulse, jets, startPulse = start)
+
+  /** Version B of a pulse: one record fewer and different payload bytes,
+    * so both the drops page and the records page tell the versions apart.
+    */
+  private def versionB(w: DataFrame) =
+    w.filter(col("record_number") =!= 0L)
+      .withColumn("memory", concat(col("memory"), lit(Array[Byte](0x42))))
+
+  private def tmp(tag: String) = java.nio.file.Files.createTempDirectory(tag).toString
+
+  // ---- the oracle: the Spark plans of the routes before the driver reads --
+
+  private object Oracle {
+    private def chain(dir: String) = Domain.PulseChainIndex(
+      StoreViews.pulses(spark, dir).select(col("pulse_number"), col("prev_pulse_number"))
+        .collect().map(r => (r.getLong(0), r.getLong(1))))
+
+    def pulse(dir: String, pulseNumber: Long): DataFrame = {
+      val row = StoreViews.pulses(spark, dir).filter(col("pulse_number") === pulseNumber).limit(1)
+      val c = chain(dir)
+      c.storedPrev(pulseNumber) match {
+        case None => row
+        case Some(storedPrev) =>
+          row
+            .withColumn("next_pulse_number", lit(c.nextByPrev(pulseNumber).getOrElse(PulseChain.Unknown)))
+            .withColumn("prev_pulse_number", lit(if (c.exists(storedPrev)) storedPrev else PulseChain.Unknown))
+      }
+    }
+
+    def jetDropsByPulse(dir: String, pulseNumber: Long, fromJetId: Option[String],
+        limit: Int, offset: Int): DataFrame = {
+      val filtered = StoreViews.jetDrops(spark, dir).filter(col("pulse_number") === pulseNumber)
+      val cursored = fromJetId.fold(filtered)(j => filtered.filter(col("jet_id") >= j))
+      Mappers.jetDropToApi(
+        Pagination.pageWithTotalCarried(cursored, Seq(col("jet_id").asc), limit, offset))
+    }
+
+    def jetDrop(dir: String, jet: String, pulse: Long): DataFrame = {
+      val d = StoreViews.jetDrops(spark, dir)
+      val rowQuery = d.filter(col("pulse_number") === pulse && col("jet_id") === jet).limit(1)
+      val rows = rowQuery.collect()
+      if (rows.isEmpty)
+        Mappers.jetDropToApi(spark.createDataFrame(
+          java.util.Collections.emptyList[Row](), rowQuery.schema))
+      else {
+        val c = chain(dir)
+        val (prevLinks, nextLinks) = c.storedPrev(pulse) match {
+          case None => (Seq.empty[Endpoints.JetDropLink], Seq.empty[Endpoints.JetDropLink])
+          case Some(storedPrev) =>
+            val nextPulse = c.nextByPrev(pulse).getOrElse(PulseChain.Unknown)
+            val neighbors = d
+              .filter((col("pulse_number") === nextPulse || col("pulse_number") === storedPrev) &&
+                col("jet_id").isin(JetFunctions.jetLinkCandidates(jet): _*))
+              .select(col("pulse_number"), col("jet_id")).collect()
+              .map { r =>
+                val (pn, j) = (r.getLong(0), r.getString(1))
+                (pn, Endpoints.JetDropLink(s"${if (j.isEmpty) "*" else j}:$pn",
+                  if (j.isEmpty) "*" else j, pn))
+              }
+            (neighbors.collect { case (pn, l) if pn == storedPrev => l }.sortBy(_.jet_drop_id).toSeq,
+              neighbors.collect { case (pn, l) if pn == nextPulse && nextPulse != PulseChain.Unknown => l }
+                .sortBy(_.jet_drop_id).toSeq)
+        }
+        Mappers.jetDropToApi(spark.createDataFrame(java.util.Arrays.asList(rows: _*), rowQuery.schema)
+          .withColumn("prev_jet_drop_id", typedLit(prevLinks))
+          .withColumn("next_jet_drop_id", typedLit(nextLinks)))
+      }
+    }
+
+    def jetDropRecords(dir: String, jet: String, pulse: Long, fromIndex: Option[String],
+        limit: Int, offset: Int, recordType: Option[String]): DataFrame = {
+      val base = StoreViews.records(spark, dir)
+        .filter(col("pulse_number") === pulse && col("jet_id") === jet)
+      val typed = recordType.fold(base)(t => base.filter(col("type") === t))
+      val cursored = fromIndex.map(s => Codecs.parseIndex(s).get).fold(typed) { case (p, o) =>
+        typed.filter(Predicates.keysetFrom(col("pulse_number"), col("order"), p, o, asc = true))
+      }
+      Pagination.pageWithTotalCarried(cursored,
+        Seq(col("pulse_number").asc, col("order").asc, col("reference").asc), limit, offset)
+    }
+
+    /** The body HttpApi renders from the oracle's frame for a VALID
+      * request to one of the four routes.
+      */
+    def respond(dir: String, path: String, q: Map[String, String]): (Int, String) = {
+      def point(df: DataFrame) = {
+        val rows = df.collect()
+        if (rows.isEmpty) (404, "{}") else (200, JsonOut.obj(rows.head))
+      }
+      val limit = q.get("limit").fold(Pagination.DefaultLimit)(_.toInt)
+      val offset = q.get("offset").fold(0)(_.toInt)
+      path.split("/").filter(_.nonEmpty).toList match {
+        case "pulses" :: p :: Nil => point(HttpApi.presentPulses(pulse(dir, p.toLong)))
+        case "pulses" :: p :: "jet-drops" :: Nil =>
+          val fromJet = q.get("from_jet_drop_id").map(s => Codecs.parseJetDropId(s).get._1)
+          (200, HttpApi.envelope(HttpApi.presentEmptyLinks(
+            jetDropsByPulse(dir, p.toLong, fromJet, limit, offset)).collect()))
+        case "jet-drops" :: id :: Nil =>
+          val (jet, p) = Codecs.parseJetDropId(id).get
+          point(jetDrop(dir, jet, p))
+        case "jet-drops" :: id :: "records" :: Nil =>
+          val (jet, p) = Codecs.parseJetDropId(id).get
+          (200, HttpApi.envelope(HttpApi.withIndex(jetDropRecords(dir, jet, p,
+            q.get("from_index"), limit, offset, q.get("type"))).collect()))
+        case other => fail(s"not an oracled route: $other")
+      }
+    }
+  }
+
+  // ---- the comparison -----------------------------------------------------
+
+  /** Every request shape the four routes take, over pulse `p`. */
+  private def requests(p: Long): Seq[(String, Map[String, String])] = {
+    val dropIds = (jets :+ "01").map(j => s"$j:$p")
+    Seq(s"/pulses/$p" -> Map.empty[String, String]) ++
+      Seq(Map.empty[String, String], Map("limit" -> "1"), Map("limit" -> "2", "offset" -> "1"),
+        Map("offset" -> "100"), Map("from_jet_drop_id" -> s"10:$p"),
+        Map("from_jet_drop_id" -> s"1:$p", "limit" -> "1", "offset" -> "1"))
+        .map(s"/pulses/$p/jet-drops" -> _) ++
+      dropIds.map(id => s"/jet-drops/$id" -> Map.empty[String, String]) ++
+      Seq(Map.empty[String, String], Map("limit" -> "2", "offset" -> "1"), Map("offset" -> "1000"),
+        Map("from_index" -> s"$p:3"), Map("type" -> "state"), Map("type" -> "request"),
+        Map("type" -> "state", "from_index" -> s"$p:5", "limit" -> "1"))
+        .flatMap(q => Seq(s"/jet-drops/0:$p/records" -> q, s"/jet-drops/10:$p/records" -> q))
+  }
+
+  private def query(q: Map[String, String]) =
+    if (q.isEmpty) None else Some(q.toSeq.sorted.map { case (k, v) => s"$k=$v" }.mkString("&"))
+
+  /** Every request over `pulses` answers the oracle's status and body. */
+  private def assertEquivalent(dir: String, pulses: Seq[Long]): Unit =
+    for (p <- pulses; (path, q) <- requests(p)) {
+      val got = HttpApi.respond(spark, dir, s"/api/v1$path", query(q))
+      val want = Oracle.respond(dir, path, q)
+      assert(got == want, s"$path?${query(q).getOrElse("")} over $dir:\n" +
+        s" driver=${got._1} ${got._2.take(600)}\n oracle=${want._1} ${want._2.take(600)}")
+    }
+
+  private def pulseRows(ps: Seq[Int], n: Int) = ps.map { i =>
+    val p = pulseAt(i)
+    StorePulse(p, p - delta, p + delta, true, i < n - 1, jets.size, perPulse.toLong)
+  }
+
+  test("a direct-commit store answers the four routes byte-identically to their " +
+      "Spark plans: unknown, committed-unflushed, flushed, first and re-committed pulses") {
+    val w = wire(4)
+    val dirs = Seq(tmp("graft-routes-summary"), tmp("graft-routes-nosummary"))
+    dirs.foreach { dir =>
+      (0 until 4).foreach(i => PulseWriter.commitPulse(
+        w.filter(col("pulse_number") === pulseAt(i)), dir))
+      // pulse 1 re-committed as version B
+      PulseWriter.commitPulse(versionB(w.filter(col("pulse_number") === pulseAt(1))), dir)
+    }
+    // pulses 0-2 flushed, pulse 3 committed but not flushed; one table
+    // at a span of 10 (one pulse per bucket) with its summary, one as a
+    // store written before summaries existed (every live file read)
+    writeStorePulses(dirs(0), pulseRows(0 until 3, 3), span = 10L,
+      summary = Some(TableManifest.Summary(pulseAt(1), pulseAt(2) / 10, 10L)))
+    writeStorePulses(dirs(1), pulseRows(0 until 3, 3))
+    assert(TableManifest.snapshot(spark, s"${dirs(0)}/pulses").get.partitions.size == 3)
+    assert(TableManifest.snapshot(spark, s"${dirs(1)}/pulses").get.summary.isEmpty)
+    dirs.foreach(dir => assertEquivalent(dir, (-1 to 4).map(pulseAt)))
+    // spot semantics: the re-committed pulse serves version B
+    val (s, body) = HttpApi.respond(spark, dirs(0), s"/api/v1/jet-drops/0:${pulseAt(1)}/records",
+      Some("limit=100"))
+    assert(s == 200 && body.startsWith(s"""{"total":${perPulse / jets.size - 1},"""), body.take(200))
+  }
+
+  test("a store with no manifest for a table answers like the Spark plans' empty frames") {
+    val fresh = tmp("graft-routes-fresh")
+    assertEquivalent(fresh, Seq(start))
+    // records and drops committed, no pulses table yet
+    val unflushed = tmp("graft-routes-unflushed")
+    PulseWriter.commitPulse(wire(2), unflushed)
+    assert(TableManifest.snapshot(spark, s"$unflushed/pulses").isEmpty)
+    assertEquivalent(unflushed, Seq(start, pulseAt(1), pulseAt(2)))
+  }
+
+  test("a daemon-written store answers the four routes byte-identically to their Spark plans") {
+    val nPulses = 3
+    val w = wire(nPulses)
+    val base = tmp("graft-routes-daemon")
+    val server = org.sparkproject.connect.grpc.netty.NettyServerBuilder.forPort(0)
+      .addService(GrpcTransport.recordService(new ReplayExporter(w))).build().start()
+    val handle = Ingest.bootstrap(spark, base, "localhost", server.getPort, start,
+      Ingest.Config(pulsePeriodMs = 150L, sequentialPeriodMs = 50L,
+        headPauseMs = 100L, errorPauseMs = 100L, batchSize = 7, fetchBackoffMs = 5L))
+    try {
+      val last = pulseAt(nPulses - 1)
+      val t0 = System.nanoTime()
+      while (handle.daemon.sequentialPulse != last && (System.nanoTime() - t0) / 1e9 < 60)
+        Thread.sleep(50)
+      assert(handle.daemon.sequentialPulse == last, s"daemon never converged: ${handle.daemon.snapshot}")
+    } finally {
+      handle.stop()
+      server.shutdownNow(); server.awaitTermination(5, TimeUnit.SECONDS)
+    }
+    assert(TableManifest.snapshot(spark, s"$base/pulses").get.summary.nonEmpty)
+    assertEquivalent(base, (-1 to nPulses).map(pulseAt))
+  }
+
+  test("the four routes run no Spark job on an ingest store: warm, on the first " +
+      "read after a commit, and on the first read after a pulses flush") {
+    val dir = tmp("graft-routes-jobs")
+    val w = wire(3)
+    (0 until 2).foreach(i => PulseWriter.commitPulse(
+      w.filter(col("pulse_number") === pulseAt(i)), dir))
+    writeStorePulses(dir, pulseRows(0 until 2, 2), span = 10L,
+      summary = Some(TableManifest.Summary(start, pulseAt(1) / 10, 10L)))
+    val p = pulseAt(1)
+    val routes = Seq(s"/pulses/$p" -> None, s"/pulses/$p/jet-drops" -> Some("limit=2&offset=1"),
+      s"/jet-drops/10:$p" -> None, s"/jet-drops/0:$p/records" -> Some("from_index=1:1"))
+    def jobs(path: String, q: Option[String]): Int = jobsDuring {
+      val (s, body) = HttpApi.respond(spark, dir, s"/api/v1$path", q)
+      assert(s == 200, s"$path: $s ${body.take(200)}")
+    }
+    routes.foreach { case (path, q) =>
+      HttpApi.respond(spark, dir, s"/api/v1$path", q)
+      assert(jobs(path, q) == 0, s"warm $path")
+    }
+    // the pin sees jobs where they run: the same route's Spark plan
+    val (path, q) = routes(1)
+    assert(jobsDuring(Oracle.respond(dir, path, q.toSeq.flatMap(_.split("&"))
+      .map(_.split("=")).map(kv => kv(0) -> kv(1)).toMap)) > 0)
+    routes.zipWithIndex.foreach { case ((path, q), i) =>
+      val version = if (i % 2 == 0) versionB(w) else w
+      PulseWriter.commitPulse(version.filter(col("pulse_number") === p), dir)
+      assert(jobs(path, q) == 0, s"first read of $path after a commit")
+    }
+    routes.zipWithIndex.foreach { case ((path, q), i) =>
+      writeStorePulses(dir, pulseRows(0 until 2 + i % 2, 3), span = 10L,
+        summary = Some(TableManifest.Summary(start, pulseAt(1) / 10, 10L)))
+      assert(jobs(path, q) == 0, s"first read of $path after a pulses flush")
+    }
+  }
+
+  test("the chain index a store rebuilds in the driver answers like the Spark " +
+      "collect, and a rebuild after a flush runs no job") {
+    val dir = tmp("graft-routes-chain")
+    PulseWriter.commitPulse(wire(1), dir)
+    // a chain with a gap, a broken link and a stored prev that no pulse has
+    val rows = Seq(0, 1, 2, 4, 5, 7).map { i =>
+      val p = pulseAt(i)
+      val prev = if (i == 4) pulseAt(3) else if (i == 7) pulseAt(5) else p - delta
+      StorePulse(p, prev, p + delta, true, true, jets.size, perPulse.toLong)
+    }
+    writeStorePulses(dir, rows.take(3), span = 20L)
+    Domain.pulseChainIndex(spark, dir)
+    writeStorePulses(dir, rows, span = 20L)
+    var idx: Domain.PulseChainIndex = null
+    assert(jobsDuring { idx = Domain.pulseChainIndex(spark, dir) } == 0,
+      "a rebuild after a flush runs no Spark job")
+    val spark0 = Domain.PulseChainIndex(StoreViews.pulses(spark, dir)
+      .select(col("pulse_number"), col("prev_pulse_number")).collect()
+      .map(r => (r.getLong(0), r.getLong(1))))
+    assert(idx.size == rows.size && spark0.size == rows.size)
+    (-2 to 9).map(pulseAt).foreach { p =>
+      assert(idx.storedPrev(p) == spark0.storedPrev(p), s"storedPrev($p)")
+      assert(idx.nextByPrev(p) == spark0.nextByPrev(p), s"nextByPrev($p)")
+    }
+    for (gte <- Seq(None, Some(pulseAt(2))); lte <- Seq(None, Some(pulseAt(5)));
+         asc <- Seq(true, false); offset <- Seq(0, 1, 5); limit <- Seq(1, 2, 20))
+      assert(idx.pageSlice(gte, lte, asc, offset, limit).toSeq ==
+        spark0.pageSlice(gte, lte, asc, offset, limit).toSeq, s"pageSlice($gte, $lte, $asc, $offset, $limit)")
+  }
+}

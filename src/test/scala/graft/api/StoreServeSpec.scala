@@ -302,6 +302,68 @@ class StoreServeSpec extends SparkSpec {
     } finally h.stop()
   }
 
+  test("a pulse's drops page and a drop's records page, read in the driver " +
+      "while that pulse is re-committed, ALWAYS answer 200 with one committed " +
+      "version's body") {
+    val base = java.nio.file.Files.createTempDirectory("graft-serve-race-driver").toString
+    val wireA = Fixtures.multiPulseBatches(spark, 2, perPulse, startPulse = start)
+    // version B: one record fewer (the drop's count moves) and different
+    // payload bytes, so a page mixing the versions is detectable on both
+    val wireB = wireA.filter(col("record_number") =!= 0L)
+      .withColumn("memory", concat(col("memory"), lit(Array[Byte](0x42))))
+    (0 until 2).foreach { i =>
+      PulseWriter.commitPulse(wireA.filter(col("pulse_number") === start + i * delta), base)
+    }
+    writeStorePulses(base, (0 until 2).map { i =>
+      val p = start + i * delta
+      StorePulse(p, p - delta, p + delta, true, true, 2, perPulse.toLong)
+    })
+    val hot = start + delta
+    def commit(w: org.apache.spark.sql.DataFrame): Unit = {
+      PulseWriter.commitPulse(w.filter(col("pulse_number") === hot), base); ()
+    }
+    val paths = Seq(s"/pulses/$hot/jet-drops", s"/jet-drops/0:$hot/records")
+    val h = HttpApi.start(spark, base, port = 0, poolSize = 4)
+    try {
+      def bodies() = paths.map { path =>
+        val (s, b) = get(h.port, path); assert(s == 200, s"$path: $s ${b.take(200)}"); b
+      }
+      val bodiesA = bodies()
+      commit(wireB)
+      val bodiesB = bodies()
+      paths.indices.foreach(i => assert(bodiesA(i) != bodiesB(i),
+        s"${paths(i)}: versions must be distinguishable for the race to be observable"))
+
+      @volatile var writing = true
+      val writerFailure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+      val writer = new Thread(() => {
+        try (0 until 14).foreach(i => commit(if (i % 2 == 0) wireA else wireB))
+        catch { case t: Throwable => writerFailure.set(t) }
+        finally writing = false
+      }, "race-driver-writer")
+      val torn = new java.util.concurrent.atomic.AtomicReference[String]()
+      val served = new java.util.concurrent.atomic.AtomicLongArray(paths.length)
+      val readers = paths.indices.flatMap(i => (0 until 2).map(r => new Thread(() => {
+        val cl = HttpClient.newHttpClient()
+        while (writing && torn.get == null) {
+          val resp = cl.send(HttpRequest.newBuilder(
+            URI.create(s"http://localhost:${h.port}/api/v1${paths(i)}")).GET().build(),
+            HttpResponse.BodyHandlers.ofString())
+          (resp.statusCode(), resp.body()) match {
+            case (200, b) if b == bodiesA(i) || b == bodiesB(i) => served.incrementAndGet(i)
+            case (s, b) => torn.compareAndSet(null, s"${paths(i)} status=$s body=${b.take(400)}")
+          }
+        }
+      }, s"race-driver-reader-$i-$r")))
+      writer.start(); readers.foreach(_.start())
+      writer.join(120000); readers.foreach(_.join(10000))
+      assert(writerFailure.get == null, s"writer died: ${writerFailure.get}")
+      assert(torn.get == null, s"an answer that is no committed version's page: ${torn.get}")
+      paths.indices.foreach(i =>
+        assert(served.get(i) > 0, s"${paths(i)} never served during the race"))
+    } finally h.stop()
+  }
+
   test("GET /pulses racing a manifested pulses-dimension reflush ALWAYS " +
       "serves a committed page — the index fast path under dim churn, " +
       "zero 500s, while superseded manifests and files are retained") {

@@ -134,6 +134,32 @@ class TableManifestSpec extends SparkSpec {
       .select("pulse_number").as[Long].collect().toSeq == Seq(65566L))
   }
 
+  test("a dropped partition's directory is deleted with its last tombstone; " +
+      "one still holding a file stays until the orphan sweep empties it") {
+    import spark.implicits._
+    val table = s"${tmp()}/pulses"
+    val f = fs(table)
+    val t0 = 1700000000000L
+    def dir(p: Long) = new org.apache.hadoop.fs.Path(s"$table/pulse_number=$p")
+    val (dropped, stray, kept) = (65546L, 65556L, 65566L)
+    commitAt(table, Seq(dropped, stray, kept), "v1", t0)
+    // a file no manifest names, in a partition about to leave the map
+    f.create(new org.apache.hadoop.fs.Path(dir(stray), "part-stray.parquet")).close()
+    val schema = Seq((0L, "", "")).toDF("pulse_number", "jet_id", "payload").schema
+    TableManifest.writeRows(spark, table, "pulse_number", schema,
+      Seq(org.apache.spark.sql.Row(kept, "0", "v2")), t0 + 1000L, dropOthers = true)
+    assert(Seq(dropped, stray, kept).forall(p => f.exists(dir(p))),
+      "retention keeps the dropped partitions' files, so their dirs too")
+    commitAt(table, Seq(kept), "past", t0 + 1000L + TableManifest.RetentionMs + 1L)
+    assert(!f.exists(dir(dropped)), "an emptied dropped partition's dir is deleted")
+    assert(f.exists(dir(stray)), "a dir still holding a file stays")
+    assert(f.exists(dir(kept)), "a live partition's dir stays")
+    assert(TableManifest.deleteOrphans(f, table) == 1, "the sweep deletes the stray file")
+    assert(!f.exists(dir(stray)), "and the dir it emptied")
+    assert(f.exists(dir(kept)) && TableManifest.deleteOrphans(f, table) == 0)
+    assert(TableManifest.readTable(spark, table).get.count() == 1)
+  }
+
   test("readTable: manifested reads serve exactly the current snapshot " +
       "(no superseded duplicates) with partition pruning intact") {
     import spark.implicits._
