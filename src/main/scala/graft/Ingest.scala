@@ -4,9 +4,9 @@ import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{Row, SparkSession}
-import org.apache.spark.sql.functions._
 
 import graft.functions.JetFunctions
+import graft.model.Schemas
 import graft.ingest.{Canonicalize, GrpcTransport, PulseWriter, Resilience, TableManifest, Transport}
 
 /** The ingest daemon binary — the reference's FIRST binary, the
@@ -228,9 +228,11 @@ object Ingest {
     /** Rebuild the register from the persisted artifacts so a restarted
       * daemon RESUMES instead of truncating: pulse rows give prev/flags/
       * counters, the still-open pulses' jet covers reload from the
-      * drops table (partition-pruned to exactly those pulses), the
-      * sequential mark is the max persisted sequential pulse, and the
-      * cursor starts past the newest known pulse.
+      * drops table (exactly those pulses' partitions), the sequential
+      * mark is the max persisted sequential pulse, and the cursor starts
+      * past the newest known pulse. Both reads take the files the
+      * committed manifests name and read them in the driver
+      * ([[TableManifest.readRows]]), so a start runs no Spark job.
       *
       * Bounded, not O(history): every flush commits a
       * [[TableManifest.Summary]] in the same manifest as its rows (the
@@ -286,13 +288,12 @@ object Ingest {
         val n = TableManifest.deleteOrphans(fs, s"$basePath/$t")
         if (n > 0) System.err.println(s"[ingest] deleted $n uncommitted files from $t")
       }
-      val snap = TableManifest.latest(fs, pulsesPath.toString)
       // a table with no committed manifest has seeded nothing
-      val pulsesDf = TableManifest.readTable(spark, pulsesPath.toString) match {
-        case Some(df) => df
-        case None => return
+      val snap = TableManifest.latest(fs, pulsesPath.toString) match {
+        case Some(s) if s.partitions.nonEmpty => s
+        case _ => return
       }
-      val summary = snap.flatMap(_.summary)
+      val summary = snap.summary
       // adopt the span the committed dirs were written with BEFORE any
       // bucket arithmetic below
       summary.foreach(s => bucketSpan = s.span)
@@ -305,30 +306,20 @@ object Ingest {
       // Growth between restarts is bounded by cadence (outgrowing 64
       // base-span buckets takes ~74 days of 10 s pulses), so seed-time
       // is the right cadence for the rewrite.
-      val bucketDirVals: Set[Long] = snap
-        .map(_.partitions.keysIterator
-          .flatMap(_.stripPrefix("pulse_bucket=").toLongOption).toSet)
-        .getOrElse(Set.empty)
+      def bucketOf(dir: String) = dir.stripPrefix("pulse_bucket=").toLongOption
+      val bucketDirVals: Set[Long] = snap.partitions.keysIterator.flatMap(bucketOf).toSet
       val needCoarsen = bucketDirVals.size > cfg.maxPulseBuckets
-      // manifest-aware: a steady-state flush appends generations and the
-      // snapshot manifest says which files are current — a raw directory
-      // read here would double-count superseded buckets
-      val bounded = summary match {
+      // the frontier buckets only, read in the driver from the manifest's
+      // files; no summary OR a re-bucketing (which must rewrite the WHOLE
+      // dimension) reads every bucket
+      val seeded = summary match {
         case Some(s) if !needCoarsen =>
-          // frontier buckets only, partition-pruned; the bucket partition
-          // column reads back as its directory-inferred type (IntegerType
-          // when the values fit), so the probe literal must match it for
-          // pruning to stay eligible
-          val lit0: Any =
-            if (pulsesDf.schema("pulse_bucket").dataType ==
-                org.apache.spark.sql.types.IntegerType) s.frontierBucket.toInt
-            else s.frontierBucket
-          pulsesDf.filter(col("pulse_bucket") >= lit(lit0))
-        // no summary OR a re-bucketing (which must rewrite the WHOLE
-        // dimension): full read
-        case _ => pulsesDf
+          snap.partitions.keys.filter(bucketOf(_).exists(_ >= s.frontierBucket))
+        case _ => snap.partitions.keys
       }
-      val rows = bounded.collect()
+      val rows = TableManifest.readRows(spark, pulsesPath.toString, snap, seeded,
+        "pulse_bucket", Schemas.pulses,
+        Schemas.pulses.fieldNames.toSeq.filterNot(_ == "pulse_bucket")).collect()
       lock.synchronized {
         rows.foreach { r =>
           val p = r.getAs[Long]("pulse_number")
@@ -376,31 +367,18 @@ object Ingest {
         }
       }
       val openSnap = lock.synchronized(open.toVector)
-      // the drops read goes through the manifest-aware reader: None
-      // covers BOTH the no-directory case and a store whose only
-      // committed pulses were empty (a jet_drops dir with no manifest —
-      // schema inference on it would throw, turning every restart into
-      // a crash loop), and the committed file set is resolved instead
-      // of a raw listing
-      val dropsRead =
+      // the open pulses' drops partitions, read in the driver from the
+      // committed jet_drops snapshot (none committed: nothing to read),
+      // so this read is bounded by the open frontier however large the
+      // history is
+      val dropsSnap =
         if (openSnap.isEmpty) None
-        else TableManifest.readTable(spark, s"$basePath/jet_drops")
-      dropsRead.foreach { drops =>
-        // pulse-partition pruning keeps this read bounded by the open
-        // frontier however large the history is. pulse_number comes back
-        // as a PARTITION column here — Spark re-infers its type from the
-        // directory names (IntegerType when the values fit) — so the
-        // probe literals match the inferred type (pruning stays eligible)
-        // and the collect reads through an explicit long cast.
-        val lits: Seq[Any] =
-          if (drops.schema("pulse_number").dataType ==
-              org.apache.spark.sql.types.IntegerType) openSnap.map(_.toInt)
-          else openSnap
-        val jets = drops
-          .filter(col("pulse_number").isin(lits: _*))
-          .select(col("pulse_number").cast("long"), col("jet_id"),
-            col("record_amount")).collect()
-          .groupBy(_.getLong(0))
+        else TableManifest.latest(fs, s"$basePath/jet_drops")
+      dropsSnap.foreach { drops =>
+        val jets = TableManifest.readRows(spark, s"$basePath/jet_drops", drops,
+          openSnap.map(p => s"pulse_number=$p"), "pulse_number", Schemas.jetDrops,
+          Seq("jet_id", "record_amount")).collect()
+          .groupBy(_.getLong(2))
         lock.synchronized {
           jets.foreach { case (p, rs) =>
             // the drops table is the truth for an open pulse: refresh the
@@ -412,8 +390,8 @@ object Ingest {
             // after such a revert would re-seal the pulse complete via
             // its (still on-disk) cover while serving record_amount=0
             entries.get(p).foreach { e =>
-              val cover = rs.map(_.getString(1)).toSet
-              val records = rs.map(_.getInt(2).toLong).sum
+              val cover = rs.map(_.getString(0)).toSet
+              val records = rs.map(_.getInt(1).toLong).sum
               entries.update(p, e.copy(jets = cover, jetDropAmount = cover.size,
                 recordAmount = records))
               // a restored counter that CONTRADICTS the persisted row
@@ -482,7 +460,7 @@ object Ingest {
       val t0 = System.nanoTime()
       val dropRows = writeLock.synchronized {
         val c = PulseWriter.commitPulse(
-          spark.createDataFrame(rows.asJava, graft.model.Schemas.wireRecords), basePath)
+          spark.createDataFrame(rows.asJava, Schemas.wireRecords), basePath)
         manifests ++= c.manifests
         c.drops
       }
@@ -875,7 +853,7 @@ object Ingest {
           // always resolves a committed file set, and a restart always
           // reads a summary that describes the rows committed with it
           TableManifest.writeRows(spark, s"$basePath/pulses", "pulse_bucket",
-            graft.model.Schemas.pulses, rows, summary = Some(summary), dropOthers = relayout)
+            Schemas.pulses, rows, summary = Some(summary), dropOthers = relayout)
             .foreach(s => manifests += ("pulses" -> s))
         } catch {
           case e @ (_: InterruptedException | NonFatal(_)) =>

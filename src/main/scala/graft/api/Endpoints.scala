@@ -1,7 +1,9 @@
 package graft.api
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BooleanType, LongType, StringType, StructField, StructType}
 import graft.model.{Domain, StoreViews}
 import graft.functions.{Codecs, JetFunctions}
 import graft.operators.{Pagination, Predicates, PulseChain}
@@ -31,15 +33,6 @@ object Endpoints {
   private def dropsView(spark: SparkSession, dir: String) = Domain.servedJetDrops(spark, dir)
   private def pulsesView(spark: SparkSession, dir: String) = Domain.servedPulses(spark, dir)
 
-  // The four pulse-keyed routes (/pulses/{pulse}, /pulses/{pulse}/jet-drops,
-  // /jet-drops/{id}, /jet-drops/{id}/records) serve an ingest store from
-  // driver reads of the partitions their key names (StoreViews.*Of) and
-  // page those rows in the driver, so they run no Spark job; over the
-  // corpus they stay Spark plans. Each layout has exactly one path.
-  private def pageCarried(store: Boolean)
-      : (DataFrame, Seq[org.apache.spark.sql.Column], Int, Int) => DataFrame =
-    if (store) Pagination.pageRowsWithTotalCarried else Pagination.pageWithTotalCarried
-
   /** GET /pulses — list with recomputed chain links, newest first, plus
     * the `{total}` count of the filtered set. Timestamp bounds are unix
     * seconds (`filterByTimestamp`, `etl/storage/storage.go:210-218`).
@@ -49,107 +42,76 @@ object Endpoints {
     * true successor (the pulse whose stored prev points at it), the
     * oldest row its true predecessor — both may sit outside the filter.
     *
-    * Pulse-bounded pages (no timestamp filter — the hot home-page shape)
-    * serve from the DRIVER-HELD chain index: `total` and the page's
-    * exact pulse numbers are positions in its sorted array
+    * Pages with no timestamp bound (the hot home-page shape) serve from
+    * the DRIVER-HELD chain index: `total` and the page's exact pulse
+    * numbers are positions in its sorted array
     * ([[Domain.PulseChainIndex.countInRange]]/[[Domain.PulseChainIndex.pageSlice]]),
-    * so the request costs one tight `pulse_number BETWEEN` row fetch —
-    * O(page) via row-group stats — instead of a full scan-sort-count of
-    * the dimension, which grows with pulse HISTORY (one row per 10 s ≈
-    * 3 M rows/year; the serving scale curve in SCALE.md measured the
-    * scan path doubling from 50k → 500k pulses while this path is flat). The fast
-    * path is accepted only when the fetched rows' pulse numbers equal
-    * the index slice BY VALUE (a racing commit between the two
-    * resolutions — including a same-cardinality replace — falls back to
-    * the scan path); timestamp-filtered pages always take the scan path
-    * (the index holds pulse numbers only).
+    * so the request fetches only the page's rows instead of a full
+    * scan-sort-count of the dimension, which grows with pulse HISTORY
+    * (one row per 10 s ≈ 3 M rows/year; the serving scale curve in
+    * SCALE.md measured the scan path doubling from 50k → 500k pulses
+    * while this path is flat). Over a store those rows are read in the
+    * driver from the slice's `pulse_bucket` partitions of the index's
+    * own pulses snapshot ([[StoreViews.pulsesOf]]), so they ARE the
+    * slice and no Spark job runs; over the immutable corpus spine the
+    * fetch is one `pulse_number BETWEEN` job. Timestamp-bounded pages
+    * scan the view in one Spark plan (the index holds pulse numbers only).
     */
   def pulses(spark: SparkSession, dir: String, page: PageParams = PageParams(),
       fromPulse: Option[Long] = None, toPulse: Option[Long] = None,
       fromTimestamp: Option[Long] = None, toTimestamp: Option[Long] = None,
       asc: Boolean = false): DataFrame = {
-    if (fromTimestamp.isEmpty && toTimestamp.isEmpty) {
-      // the index BEFORE the view: a rebuild is a Spark job of its own,
-      // and a view resolved ahead of it would have to outlive that job as
-      // well before its fetch runs, eating into the retention window that
-      // keeps the files the view planned
-      val chain = Domain.pulseChainIndex(spark, dir)
-      val p = pulsesView(spark, dir)
-      val total = chain.countInRange(fromPulse, toPulse)
-      val slice = chain.pageSlice(fromPulse, toPulse, asc, page.offset, page.limit)
-      // the slow path's post-join shape: page columns nullable (the
-      // sentinel row carries nulls there), then total + marker
-      val schema = org.apache.spark.sql.types.StructType(
-        p.schema.fields.map(_.copy(nullable = true)) ++ Seq(
-          org.apache.spark.sql.types.StructField("total",
-            org.apache.spark.sql.types.LongType, nullable = false),
-          org.apache.spark.sql.types.StructField(Pagination.PageRowMarker,
-            org.apache.spark.sql.types.BooleanType, nullable = false)))
-      val fetched: Array[org.apache.spark.sql.Row] =
-        if (slice.isEmpty) Array.empty
-        else p.filter(col("pulse_number").between(slice.head, slice.last)).collect()
-      // accept the fast path only when the fetched rows are EXACTLY the
-      // index's slice by value, not just by count: a same-cardinality
-      // add+remove reflush between the two resolutions (the daemon's
-      // normal flush replaces a pulse in place) must not serve a page
-      // whose membership disagrees with the index that produced `total`
-      // and the cut — ≤1000 longs, negligible vs the fetch itself
-      val fetchedPulses =
-        if (slice.isEmpty) Array.empty[Long]
-        else {
-          val pnIdx = p.schema.fieldIndex("pulse_number")
-          fetched.map(_.getLong(pnIdx)).sorted
-        }
-      if (slice.isEmpty || java.util.Arrays.equals(fetchedPulses, slice.sorted.toArray)) {
-        val out: Array[org.apache.spark.sql.Row] =
-          if (fetched.isEmpty)
-            Array(new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
-              p.schema.fields.map(_ => null: Any) ++ Array[Any](total, false), schema))
-          else {
-            val paged = fetched.map(r =>
-              new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
-                (r.toSeq ++ Seq[Any](total, true)).toArray, schema)
-                : org.apache.spark.sql.Row)
-            val repaired = repairAndPatchPage(spark, dir, paged)
-            val pnIdx = schema.fieldIndex("pulse_number")
-            if (asc) repaired.sortBy(_.getLong(pnIdx))
-            else repaired.sortBy(-_.getLong(pnIdx))
-          }
-        return spark.createDataFrame(java.util.Arrays.asList(out: _*), schema)
+    lazy val chain = Domain.pulseChainIndex(spark, dir)
+    val (rows, schema) =
+      if (fromTimestamp.isEmpty && toTimestamp.isEmpty) {
+        val slice = chain.pageSlice(fromPulse, toPulse, asc, page.offset, page.limit)
+        val p =
+          if (StoreViews.isStore(spark, dir)) StoreViews.pulsesOf(spark, dir, chain, slice)
+          else pulsesView(spark, dir)
+        val total = chain.countInRange(fromPulse, toPulse)
+        // the scan path's post-join shape: page columns nullable (the
+        // sentinel row carries nulls there), then total + marker
+        val schema = StructType(p.schema.fields.map(_.copy(nullable = true)) ++ Seq(
+          StructField("total", LongType, nullable = false),
+          StructField(Pagination.PageRowMarker, BooleanType, nullable = false)))
+        val fetched =
+          if (slice.isEmpty) Array.empty[Row]
+          else p.filter(col("pulse_number").between(slice.head, slice.last)).collect()
+        val rows =
+          if (fetched.isEmpty) Array[Row](new GenericRowWithSchema(
+            p.schema.fields.map(_ => null: Any) ++ Array[Any](total, false), schema))
+          else fetched.map(r => new GenericRowWithSchema((r.toSeq ++ Seq(total, true)).toArray,
+            schema): Row)
+        (rows, schema)
+      } else {
+        val filtered = pulsesView(spark, dir)
+          .filter(Predicates.range(col("pulse_number"), gte = fromPulse, lte = toPulse))
+          .filter(Predicates.range(col("timestamp"), gte = fromTimestamp, lte = toTimestamp))
+        // Cut the page and attach the filtered total in ONE plan whose
+        // total survives an empty page (Pagination.pageWithTotalCarried:
+        // an offset past the end yields a marker-false sentinel row
+        // carrying the true count, so the out-of-range corner costs the
+        // same single pass as an in-range page). Default order is the
+        // reference's newest-first; `sort_by=pulse_number_asc` flips it
+        // (storage.go:310-314).
+        val pageSort = if (asc) col("pulse_number").asc else col("pulse_number").desc
+        val pageQuery = Pagination.pageWithTotalCarried(filtered,
+          Seq(pageSort), page.limit, page.offset)
+        (pageQuery.collect(), pageQuery.schema)
       }
-      // fall through: the index slice and the fetch disagreed (a commit
-      // landed in between) — the scan path below resolves one snapshot
-    }
-    val p = pulsesView(spark, dir)
-    val filtered = p
-      .filter(Predicates.range(col("pulse_number"), gte = fromPulse, lte = toPulse))
-      .filter(Predicates.range(col("timestamp"), gte = fromTimestamp, lte = toTimestamp))
-    // Cut the page and attach the filtered total in ONE plan whose total
-    // survives an empty page (Pagination.pageWithTotalCarried: an offset
-    // past the end yields a marker-false sentinel row carrying the true
-    // count, so the out-of-range corner costs the same single pass as an
-    // in-range page — no second filtered-count probe). Default order is
-    // the reference's newest-first; `sort_by=pulse_number_asc` flips it
-    // (storage.go:310-314).
-    val pageSort = if (asc) col("pulse_number").asc else col("pulse_number").desc
-    val pageQuery = Pagination.pageWithTotalCarried(filtered,
-      Seq(pageSort), page.limit, page.offset)
-    // Materialize the ≤1000-row page ONCE; the J3 within-page chain
-    // repair and the J2 edge patch are then pure driver-side row rewrites
-    // of the collected page — exactly the reference's per-page loop
-    // (storage.go:326-379) — so a pulses page costs exactly one scan.
-    val rows = pageQuery.collect()
-    val (pageRows, sentinel) =
-      rows.partition(_.getAs[Boolean](Pagination.PageRowMarker))
+    // the ≤1000-row page is materialized ONCE; the J3 within-page chain
+    // repair and the J2 edge patch are then driver-side row rewrites of
+    // it — exactly the reference's per-page loop (storage.go:326-379)
+    val (pageRows, sentinel) = rows.partition(_.getAs[Boolean](Pagination.PageRowMarker))
     val out =
       if (pageRows.isEmpty) sentinel // total-only: the envelope reads `total`
       else {
-        val repaired = repairAndPatchPage(spark, dir, pageRows)
-        val pnIdx = pageQuery.schema.fieldIndex("pulse_number")
+        val repaired = repairAndPatchPage(chain, pageRows)
+        val pnIdx = schema.fieldIndex("pulse_number")
         if (asc) repaired.sortBy(_.getLong(pnIdx))
         else repaired.sortBy(-_.getLong(pnIdx))
       }
-    spark.createDataFrame(java.util.Arrays.asList(out: _*), pageQuery.schema)
+    spark.createDataFrame(java.util.Arrays.asList(out: _*), schema)
   }
 
   /** J3 within-page chain repair + J2 page-edge patching as one bounded
@@ -161,11 +123,10 @@ object Endpoints {
     * stored prev points back. The edge lookups — the newest row's
     * successor (the pulse whose stored prev points at it) and the oldest
     * row's stored prev, existence-checked — answer from the driver-held
-    * chain index with ZERO Spark jobs, so a pulses page costs exactly
-    * one distributed pass however it paginates.
+    * chain index with ZERO Spark jobs.
     */
-  private def repairAndPatchPage(spark: SparkSession, dir: String,
-      rows: Array[org.apache.spark.sql.Row]): Array[org.apache.spark.sql.Row] = {
+  private def repairAndPatchPage(chain: Domain.PulseChainIndex,
+      rows: Array[Row]): Array[Row] = {
     val schema = rows.head.schema
     val nextIdx = schema.fieldIndex("next_pulse_number")
     val prevIdx = schema.fieldIndex("prev_pulse_number")
@@ -174,7 +135,6 @@ object Endpoints {
     val pn = asc.map(_.getLong(pnIdx))
     val storedPrev = asc.map(_.getLong(prevIdx))
     val n = asc.length
-    val chain = Domain.pulseChainIndex(spark, dir)
     // page edges (J2): successor of the newest row = the pulse whose
     // stored prev points at it; predecessor of the oldest = its stored
     // prev, only if that pulse exists (GetPulse semantics)
@@ -190,7 +150,7 @@ object Endpoints {
       val vals = asc(i).toSeq.toArray
       vals(prevIdx) = prev
       vals(nextIdx) = next
-      new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(vals, schema)
+      new GenericRowWithSchema(vals, schema)
     }
   }
 
@@ -201,18 +161,16 @@ object Endpoints {
     * -1) and `prev` is the stored prev only if that pulse actually
     * exists (`updatePrevPulse`, else -1). Both answered by the
     * driver-held chain index. On a store the row comes from the pulse's
-    * one `pulse_bucket` partition read in the driver
-    * ([[StoreViews.pulsesOf]]) and the request runs no Spark job; on the
-    * corpus the pruned row fetch is its only job.
+    * one `pulse_bucket` partition of the index's own pulses snapshot,
+    * read in the driver ([[StoreViews.pulsesOf]]), and the request runs
+    * no Spark job; on the corpus the pruned row fetch is its only job.
     */
   def pulse(spark: SparkSession, dir: String, pulseNumber: Long): DataFrame = {
+    val chain = Domain.pulseChainIndex(spark, dir)
     val p =
-      if (StoreViews.isStore(spark, dir)) StoreViews.pulsesOf(spark, dir, pulseNumber)
+      if (StoreViews.isStore(spark, dir)) StoreViews.pulsesOf(spark, dir, chain, Seq(pulseNumber))
       else pulsesView(spark, dir)
     val row = p.filter(col("pulse_number") === pulseNumber).limit(1)
-    // both repair probes answer from the driver-held chain index, with no
-    // Spark job
-    val chain = Domain.pulseChainIndex(spark, dir)
     chain.storedPrev(pulseNumber) match {
       case None => row // pulse absent; the caller 404s on the empty frame
       case Some(storedPrev) =>
@@ -230,19 +188,19 @@ object Endpoints {
     * still answers the true filtered total in the same single pass. On a
     * store the drops come from the pulse's one `pulse_number` partition
     * read in the driver ([[StoreViews.jetDropsOf]]), the cursor filters
-    * them there, and the count and page cut run on those rows
-    * ([[Pagination.pageRowsWithTotalCarried]]): no Spark job runs.
+    * them there, and the count and page cut run on those rows: no Spark
+    * job runs.
     */
   def jetDropsByPulse(spark: SparkSession, dir: String, pulseNumber: Long,
       fromJetId: Option[String] = None, page: PageParams = PageParams()): DataFrame = {
-    val store = StoreViews.isStore(spark, dir)
     val d =
-      if (store) StoreViews.jetDropsOf(spark, dir, Seq(pulseNumber))
+      if (StoreViews.isStore(spark, dir))
+        StoreViews.jetDropsOf(spark, dir, Domain.pulseChainIndex(spark, dir), Seq(pulseNumber))
       else dropsView(spark, dir)
     val filtered = d.filter(col("pulse_number") === pulseNumber)
     val cursored = fromJetId.fold(filtered)(j => filtered.filter(col("jet_id") >= j))
     Mappers.jetDropToApi(
-      pageCarried(store)(cursored, Seq(col("jet_id").asc), page.limit, page.offset))
+      Pagination.pageWithTotalCarried(cursored, Seq(col("jet_id").asc), page.limit, page.offset))
   }
 
   /** API link element: `server.NextPrevJetDrop` rendered by
@@ -279,51 +237,50 @@ object Endpoints {
     */
   private def jetDropByKey(spark: SparkSession, dir: String,
       jet: String, pulse: Long): DataFrame = {
-      val d =
-        if (StoreViews.isStore(spark, dir)) {
-          val chain = Domain.pulseChainIndex(spark, dir)
-          val linked = chain.storedPrev(pulse).toSeq
-            .flatMap(prev => prev +: chain.nextByPrev(pulse).toSeq)
-          StoreViews.jetDropsOf(spark, dir, pulse +: linked)
-        } else dropsView(spark, dir)
-      val rowQuery = d.filter(col("pulse_number") === pulse && col("jet_id") === jet).limit(1)
-      // existence gates the neighbor job: a 404 (absent drop) must cost
-      // exactly the point fetch, and the collected row is returned as a
-      // LocalRelation so the caller's collect re-runs nothing
-      val rows = rowQuery.collect()
-      if (rows.isEmpty)
-        Mappers.jetDropToApi(spark.createDataFrame(
-          java.util.Collections.emptyList[org.apache.spark.sql.Row](), rowQuery.schema))
-      else {
-        // both point queries the reference makes (the stored prev and the
-        // updateNextPulse successor probe) answer from the driver-held
-        // chain index — zero extra Spark jobs
-        val chain = Domain.pulseChainIndex(spark, dir)
-        val (prevLinks, nextLinks) =
-          chain.storedPrev(pulse) match {
-            case None => (Seq.empty[JetDropLink], Seq.empty[JetDropLink])
-            case Some(storedPrev) =>
-              val nextPulse = chain.nextByPrev(pulse).getOrElse(PulseChain.Unknown)
-              val siblings = JetFunctions.jetLinkCandidates(jet)
-              val neighbors = d
-                .filter((col("pulse_number") === nextPulse || col("pulse_number") === storedPrev) &&
-                  col("jet_id").isin(siblings: _*))
-                .select(col("pulse_number"), col("jet_id")).collect()
-                .map { r =>
-                  val (pn, j) = (r.getLong(0), r.getString(1))
-                  (pn, JetDropLink(s"${if (j.isEmpty) "*" else j}:$pn",
-                    if (j.isEmpty) "*" else j, pn))
-                }
-              (neighbors.collect { case (pn, l) if pn == storedPrev => l }
-                 .sortBy(_.jet_drop_id).toSeq,
-               neighbors.collect { case (pn, l) if pn == nextPulse && nextPulse != PulseChain.Unknown => l }
-                 .sortBy(_.jet_drop_id).toSeq)
-          }
-        Mappers.jetDropToApi(spark.createDataFrame(
-          java.util.Arrays.asList(rows: _*), rowQuery.schema)
-          .withColumn("prev_jet_drop_id", typedLit(prevLinks))
-          .withColumn("next_jet_drop_id", typedLit(nextLinks)))
-      }
+    // both point queries the reference makes (the stored prev and the
+    // updateNextPulse successor probe) answer from the driver-held chain
+    // index, resolved once — zero extra Spark jobs
+    lazy val chain = Domain.pulseChainIndex(spark, dir)
+    val d =
+      if (StoreViews.isStore(spark, dir)) {
+        val linked = chain.storedPrev(pulse).toSeq
+          .flatMap(prev => prev +: chain.nextByPrev(pulse).toSeq)
+        StoreViews.jetDropsOf(spark, dir, chain, pulse +: linked)
+      } else dropsView(spark, dir)
+    val rowQuery = d.filter(col("pulse_number") === pulse && col("jet_id") === jet).limit(1)
+    // existence gates the neighbor job: a 404 (absent drop) must cost
+    // exactly the point fetch, and the collected row is returned as a
+    // LocalRelation so the caller's collect re-runs nothing
+    val rows = rowQuery.collect()
+    if (rows.isEmpty)
+      Mappers.jetDropToApi(spark.createDataFrame(
+        java.util.Collections.emptyList[Row](), rowQuery.schema))
+    else {
+      val (prevLinks, nextLinks) =
+        chain.storedPrev(pulse) match {
+          case None => (Seq.empty[JetDropLink], Seq.empty[JetDropLink])
+          case Some(storedPrev) =>
+            val nextPulse = chain.nextByPrev(pulse).getOrElse(PulseChain.Unknown)
+            val siblings = JetFunctions.jetLinkCandidates(jet)
+            val neighbors = d
+              .filter((col("pulse_number") === nextPulse || col("pulse_number") === storedPrev) &&
+                col("jet_id").isin(siblings: _*))
+              .select(col("pulse_number"), col("jet_id")).collect()
+              .map { r =>
+                val (pn, j) = (r.getLong(0), r.getString(1))
+                (pn, JetDropLink(s"${if (j.isEmpty) "*" else j}:$pn",
+                  if (j.isEmpty) "*" else j, pn))
+              }
+            (neighbors.collect { case (pn, l) if pn == storedPrev => l }
+               .sortBy(_.jet_drop_id).toSeq,
+             neighbors.collect { case (pn, l) if pn == nextPulse && nextPulse != PulseChain.Unknown => l }
+               .sortBy(_.jet_drop_id).toSeq)
+        }
+      Mappers.jetDropToApi(spark.createDataFrame(
+        java.util.Arrays.asList(rows: _*), rowQuery.schema)
+        .withColumn("prev_jet_drop_id", typedLit(prevLinks))
+        .withColumn("next_jet_drop_id", typedLit(nextLinks)))
+    }
   }
 
   /** GET /jet-drops/{jet_drop_id}/records — records of one drop, keyset.
@@ -338,14 +295,15 @@ object Endpoints {
       fromIndex: Option[String] = None, page: PageParams = PageParams(),
       recordType: Option[String] = None): Option[DataFrame] =
     Codecs.parseJetDropId(jetDropId).map { case (jet, pulse) =>
-      val store = StoreViews.isStore(spark, dir)
-      val r = if (store) StoreViews.recordsOf(spark, dir, pulse) else recordsView(spark, dir)
+      val r =
+        if (StoreViews.isStore(spark, dir)) StoreViews.recordsOf(spark, dir, pulse)
+        else recordsView(spark, dir)
       val base = r.filter(col("pulse_number") === pulse && col("jet_id") === jet)
       val typed = recordType.fold(base)(t => base.filter(col("type") === t))
       val cursored = parsedCursor(fromIndex).fold(typed) { case (p, o) =>
         typed.filter(Predicates.keysetFrom(col("pulse_number"), col("order"), p, o, asc = true))
       }
-      pageCarried(store)(cursored,
+      Pagination.pageWithTotalCarried(cursored,
         Seq(col("pulse_number").asc, col("order").asc, col("reference").asc),
         page.limit, page.offset)
     }
@@ -384,7 +342,7 @@ object Endpoints {
       // data-dependent schema would break any consumer unioning pages or
       // selecting link columns across requests
       if (pageRows.isEmpty)
-        spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+        spark.createDataFrame(java.util.Collections.emptyList[Row](),
           linkedSchema(pageQuery.schema))
       else {
         // The linkable set mirrors the reference exactly (handlers.go:
@@ -427,13 +385,13 @@ object Endpoints {
           .groupBy(_._3).map { case (k, g) => k -> g.map(_._1) }
         val idsByHash = neighbors.filter(_._2 != null)
           .groupBy(_._2).map { case (k, g) => k -> g.map(_._1) }
-        val linked: Array[org.apache.spark.sql.Row] = pageRows.map { r =>
+        val linked: Array[Row] = pageRows.map { r =>
           val nextIds = idsByPrevHash.getOrElse(r.getString(hI), Array.empty[String])
             .sorted.mkString(",")
           val prevIds = Seq(r.getString(fpI), r.getString(spI)).filter(_ != null).distinct
             .flatMap(h => idsByHash.getOrElse(h, Array.empty[String]))
             .sorted.mkString(",")
-          new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
+          new GenericRowWithSchema(
             r.toSeq.toArray :+ (nextIds: Any) :+ (prevIds: Any), linkedSchema(sch))
         }
         spark.createDataFrame(java.util.Arrays.asList(linked: _*), linkedSchema(sch))
@@ -442,12 +400,9 @@ object Endpoints {
     Mappers.jetDropToApi(out)
   }
 
-  private def linkedSchema(page: org.apache.spark.sql.types.StructType) =
-    org.apache.spark.sql.types.StructType(page.fields ++ Seq(
-      org.apache.spark.sql.types.StructField("next_ids",
-        org.apache.spark.sql.types.StringType, nullable = false),
-      org.apache.spark.sql.types.StructField("prev_ids",
-        org.apache.spark.sql.types.StringType, nullable = false)))
+  private def linkedSchema(page: StructType) = StructType(page.fields ++ Seq(
+    StructField("next_ids", StringType, nullable = false),
+    StructField("prev_ids", StringType, nullable = false)))
 
   /** GET /lifeline/{object_ref}/records — the object lifeline. Timestamp
     * bounds are unix seconds against the record's `ts_sec`, the analog of

@@ -38,14 +38,14 @@ import graft.functions.Codecs
   *
   * Serialization is driver-side string building over the ≤1000-row page
   * (validation bounds it) — the API boundary, not a distributed op.
-  * `.collect()` happens here. Over the corpus, and for the list routes
-  * over a store, the query is a Catalyst plan end to end. Over an ingest
-  * store the four pulse-keyed routes (`/pulses/{pulse}`,
+  * `.collect()` happens here. Over the corpus, and for the other list
+  * routes over a store, the query is a Catalyst plan end to end. Over an
+  * ingest store the four pulse-keyed routes (`/pulses/{pulse}`,
   * `/pulses/{pulse}/jet-drops`, `/jet-drops/{id}`,
-  * `/jet-drops/{id}/records`) read the partitions their key names in the
-  * driver and page those rows there ([[Endpoints]]); the presentation
-  * below folds over that local relation, so those answers run no Spark
-  * job.
+  * `/jet-drops/{id}/records`) and `/pulses` pages with no timestamp
+  * bound read the partitions their keys name in the driver and page
+  * those rows there ([[Endpoints]]); the presentation below folds over
+  * that local relation, so those answers run no Spark job.
   */
 object HttpApi {
 

@@ -70,9 +70,9 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * file names, not stats), and replaces the per-query recursive
   * directory listing — the layer that collapses first on an object
   * store at 100 TB. A deployment outgrowing one JSON object per table
-  * shards the partition map by bucket range; the read path is already
-  * indirected through [[readTable]], so that change lands here, not in
-  * the serving layer.
+  * shards the partition map by bucket range; the read paths are already
+  * indirected through [[readTable]] and [[readRows]], so that change
+  * lands here, not in the serving layer.
   *
   * Every store table is manifested: a table with no committed manifest
   * holds no committed data, whatever files its directory holds (a first
@@ -435,9 +435,8 @@ object TableManifest {
     * `partitions` named (dir names, `partCol=value`) as `snap` lists their
     * files — a partition `snap` does not list reads no rows — as a frame
     * over driver-held rows (a `LocalRelation`). A row holds `columns` of
-    * the stored `dataSchema` (the table's schema minus `partCol`), read as
-    * nullable like any Spark file scan reads them, then `partCol` as a
-    * long.
+    * the table's stored `schema`, read as nullable like any Spark file
+    * scan reads them, then `partCol` as a long.
     *
     * Each file is read in the calling thread by Spark's own parquet
     * reader (`ParquetFileFormat.buildReaderWithPartitionValues`, row
@@ -451,9 +450,9 @@ object TableManifest {
     * the Hadoop conf.
     */
   def readRows(spark: SparkSession, tablePath: String, snap: Snapshot,
-      partitions: Iterable[String], partCol: String, dataSchema: StructType,
+      partitions: Iterable[String], partCol: String, schema: StructType,
       columns: Seq[String]): DataFrame = {
-    val data = StructType(dataSchema.map(_.copy(nullable = true)))
+    val data = StructType(schema.filterNot(_.name == partCol).map(_.copy(nullable = true)))
     val read = readers.computeIfAbsent(
       (spark.sparkContext.applicationId, partCol, data, columns), _ =>
         new ParquetFileFormat().buildReaderWithPartitionValues(spark, data,
@@ -480,15 +479,6 @@ object TableManifest {
 
   private val readers = new java.util.concurrent.ConcurrentHashMap[
     (String, String, StructType, Seq[String]), PartitionedFile => Iterator[InternalRow]]()
-
-  /** A change token for cache keys: the manifest version (one `_manifests/`
-    * listing, no recursive walk), None for a table with no manifest.
-    */
-  def versionToken(spark: SparkSession, tablePath: String): Option[String] = {
-    val table = new Path(tablePath)
-    val fs = table.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    versionStatuses(fs, table).map(_._1).maxOption.map(v => s"m$v")
-  }
 
   // ---- wire format ---------------------------------------------------------
 

@@ -242,12 +242,15 @@ object Domain {
     * ZERO Spark jobs. The chain dimension grows with wall-clock time, not
     * data volume (one row per 10s pulse ≈ 3M rows/year ≈ 50 MB/decade as
     * two long arrays), so holding it on the driver is scale-safe where
-    * caching any fact-derived structure would not be. Keyed by the
-    * fingerprinted spine path, so a regenerated corpus rebuilds the index
-    * exactly when it rebuilds the artifact.
+    * caching any fact-derived structure would not be. Over a store,
+    * `pulses` is the pulses-table snapshot the index was built from (None
+    * on the corpus, and for a store with no pulses manifest): the routes
+    * read every pulses row they serve through it, so rows and index are
+    * one version.
     */
   final class PulseChainIndex(byPulse: Array[Long], prevOfPulse: Array[Long],
-      byPrev: Array[Long], pulseOfPrev: Array[Long]) {
+      byPrev: Array[Long], pulseOfPrev: Array[Long],
+      val pulses: Option[graft.ingest.TableManifest.Snapshot] = None) {
     def size: Int = byPulse.length
     def exists(pn: Long): Boolean = java.util.Arrays.binarySearch(byPulse, pn) >= 0
     def storedPrev(pn: Long): Option[Long] = {
@@ -316,40 +319,45 @@ object Domain {
 
   object PulseChainIndex {
     /** The index over (pulse_number, stored prev_pulse_number) pairs. */
-    def apply(pairs: Array[(Long, Long)]): PulseChainIndex = {
+    def apply(pairs: Array[(Long, Long)],
+        pulses: Option[graft.ingest.TableManifest.Snapshot] = None): PulseChainIndex = {
       val byPulse = pairs.sortBy(_._1)
       val byPrev = pairs.sortBy(p => (p._2, p._1))
       new PulseChainIndex(byPulse.map(_._1), byPulse.map(_._2),
-        byPrev.map(_._2), byPrev.map(_._1))
+        byPrev.map(_._2), byPrev.map(_._1), pulses)
     }
   }
 
   private val chainCache =
     new java.util.concurrent.ConcurrentHashMap[String, PulseChainIndex]()
   private val storeChainCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, PulseChainIndex)]()
+    new java.util.concurrent.ConcurrentHashMap[String, PulseChainIndex]()
 
+  /** The chain index of `dir`. An ingest store is LIVE (the daemon
+    * flushes its pulses table between requests), so its index is cached
+    * with the pulses snapshot it was built from and rebuilt, from that
+    * snapshot's files read in the driver ([[StoreViews.pulseLinks]]),
+    * whenever the newest snapshot differs: each call costs one
+    * `_manifests/` listing (the parse is memoized) and never a Spark job.
+    * A request calls this ONCE and reads the pulses rows it serves from
+    * the index's own snapshot. The corpus spine is immutable, so its
+    * index is collected once per fingerprinted spine path (a regenerated
+    * corpus rebuilds it with the artifact).
+    */
   def pulseChainIndex(spark: SparkSession, dir: String): PulseChainIndex =
-    // an ingest store is LIVE (the daemon appends pulses between
-    // requests), so its chain index caches against the pulses table's
-    // manifest VERSION (every flush publishes a new one) and rebuilds
-    // only when it moves: a plain cached copy would patch page links
-    // against a stale chain, while a rebuild per request is an
-    // O(pulse-history) Spark collect per HTTP hit. The version probe is
-    // one driver-side listing of the table's `_manifests/` dir — FS
-    // metadata only, no job. The fingerprinted testdata spine is
-    // immutable → cached.
     if (StoreViews.isStore(spark, dir)) {
-      val v = storePulsesVersion(spark, dir)
+      val snap = graft.ingest.TableManifest.snapshot(spark, s"$dir/pulses")
       val cached = storeChainCache.get(dir)
-      if (cached != null && cached._1 == v) cached._2
+      if (cached != null && cached.pulses == snap) cached
       else {
-        val idx = buildChainIndex(spark, dir)
-        storeChainCache.put(dir, (v, idx))
+        val idx = PulseChainIndex(StoreViews.pulseLinks(spark, dir, snap), snap)
+        storeChainCache.put(dir, idx)
         idx
       }
     }
-    else chainCache.computeIfAbsent(spineRoot(dir), _ => buildChainIndex(spark, dir))
+    else chainCache.computeIfAbsent(spineRoot(dir), _ => PulseChainIndex(
+      servedPulses(spark, dir).select(col("pulse_number"), col("prev_pulse_number"))
+        .collect().map(r => (r.getLong(0), r.getLong(1)))))
 
   /** A decoded 36-byte wire/base58 reference to the serving key space of
     * `dir`: an ingest store keys every reference as xxhash64 of the
@@ -366,26 +374,6 @@ object Domain {
         Seq(org.apache.spark.sql.catalyst.expressions.Literal(ref)), 42L)
         .eval(null).asInstanceOf[Long]
     else java.nio.ByteBuffer.wrap(ref.takeRight(8)).getLong
-
-  /** Change token for the store's pulses dimension — the rebuild trigger
-    * for the live chain index above: its commit-manifest version (one
-    * tiny-dir listing, bumped by every flush —
-    * [[graft.ingest.TableManifest]]), "absent" before the first flush.
-    * Never a Spark job.
-    */
-  private def storePulsesVersion(spark: SparkSession, dir: String): String =
-    graft.ingest.TableManifest.versionToken(spark, s"$dir/pulses").getOrElse("absent")
-
-  /** A store's index reads its live pulses files in the driver
-    * ([[StoreViews.pulseLinks]]), so the first request after a flush runs
-    * no Spark job either; the immutable corpus spine is collected once.
-    */
-  private def buildChainIndex(spark: SparkSession, dir: String): PulseChainIndex =
-    PulseChainIndex(
-      if (StoreViews.isStore(spark, dir)) StoreViews.pulseLinks(spark, dir)
-      else servedPulses(spark, dir)
-        .select(col("pulse_number"), col("prev_pulse_number")).collect()
-        .map(r => (r.getLong(0), r.getLong(1))))
 
   /** Register the three domain tables as temp views (plus the library's
     * native SQL functions), so SQL-first users query `records`,

@@ -80,19 +80,3 @@ object Schemas {
     StructField("pulse_number", LongType, nullable = false)
   ))
 }
-
-/** Canonical record produced by ingest canonicalization (P1). */
-final case class CanonicalRecord(
-    reference: Array[Byte],
-    recType: String,
-    objectReference: Array[Byte],
-    prototypeReference: Array[Byte],
-    payload: Array[Byte],
-    prevRecordReference: Array[Byte],
-    hash: Array[Byte],
-    rawData: Array[Byte],
-    jetId: String,
-    pulseNumber: Long,
-    orderHint: Long,
-    timestamp: Long
-)

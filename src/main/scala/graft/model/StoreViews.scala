@@ -3,6 +3,8 @@ package graft.model
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.ingest.TableManifest
+
 /** Serving views over an INGEST-WRITTEN store — the records/ jet_drops/
   * pulses/ layout the [[graft.Ingest]] daemon and
   * [[graft.ingest.PulseWriter]] maintain — so the HTTP API serves the
@@ -36,27 +38,31 @@ import org.apache.spark.sql.functions._
   *    page lists a handful of directories instead of scanning anything.
   *
   * Isolation contract: reads resolve through the store's COMMIT
-  * MANIFESTS ([[graft.ingest.TableManifest]]) — each request reads the
-  * explicit file set some committed version defined, superseded files
-  * stay on disk for the manifest's retention window, and a read racing a
-  * hot-pulse rewrite therefore always serves a committed page: no
-  * lost-file 500s, no torn or silently-short pages (StoreServeSpec's
-  * racing-rewrite tests pin ZERO failures; the reference gets the same
-  * guarantee from Postgres MVCC, `etl/dbconn/connection.go:13-22`).
-  * Every request pays ONE `_manifests/` listing per table it reads (the
-  * change signal; the Postgres analog is snapshot acquisition; the
-  * parsed manifest is memoized by version) and no data-directory
-  * listing or schema probe. Two read shapes share the serving programs:
+  * MANIFESTS ([[TableManifest]]) — each request reads the explicit file
+  * set some committed version defined, superseded files stay on disk for
+  * the manifest's retention window, and a read racing a hot-pulse
+  * rewrite therefore always serves a committed page: no lost-file 500s,
+  * no torn or silently-short pages (StoreServeSpec's racing-rewrite
+  * tests pin ZERO failures; the reference gets the same guarantee from
+  * Postgres MVCC, `etl/dbconn/connection.go:13-22`). A manifest is
+  * resolved by one `_manifests/` listing (the change signal; the
+  * Postgres analog is snapshot acquisition; the parsed manifest is
+  * memoized by version), with no data-directory listing or schema
+  * probe. Two read shapes share the serving programs:
   *
   *  - the Spark views ([[records]], [[jetDrops]], [[pulses]]) plan over
   *    the snapshot's file list, their relations cached per manifest
   *    VERSION, so staleness is structurally impossible;
   *  - the pulse-keyed reads ([[recordsOf]], [[jetDropsOf]],
-  *    [[pulsesOf]], [[pulseLinks]]) resolve one snapshot per table and
-  *    read only the partitions their key names, in the driver, as a
-  *    local relation: the reference's indexed `WHERE pulse_number = ?`
-  *    (`etl/storage/storage.go:475-494`) with no Spark job and nothing
-  *    cached but the manifest.
+  *    [[pulsesOf]], [[pulseLinks]]) read only the partitions their key
+  *    names, in the driver, as a local relation: the reference's indexed
+  *    `WHERE pulse_number = ?` (`etl/storage/storage.go:475-494`) with no
+  *    Spark job and nothing cached but the manifest. The routes built on
+  *    them (`/pulses` without timestamp bounds, `/pulses/{pulse}`,
+  *    `/pulses/{pulse}/jet-drops`, `/jet-drops/{id}`,
+  *    `/jet-drops/{id}/records`) pay ONE `_manifests/` listing per table
+  *    they read: the pulses table's is the chain index's
+  *    ([[Domain.pulseChainIndex]]), whose snapshot they read from.
   *
   * A table with no committed manifest serves as empty; a store written
   * before manifests is not read.
@@ -159,7 +165,7 @@ object StoreViews {
     * failing schema inference (same for the two views below).
     */
   def records(spark: SparkSession, dir: String): DataFrame =
-    graft.ingest.TableManifest.readTable(spark, s"$dir/records")
+    TableManifest.readTable(spark, s"$dir/records")
       .fold(emptyFrame(spark, RecordsServingSchema))(servingRecords)
 
   private def servingRecords(raw: DataFrame): DataFrame = raw.select(
@@ -179,7 +185,7 @@ object StoreViews {
     * over the pulses chain (broadcast — one row per pulse).
     */
   def jetDrops(spark: SparkSession, dir: String): DataFrame =
-    graft.ingest.TableManifest.readTable(spark, s"$dir/jet_drops")
+    TableManifest.readTable(spark, s"$dir/jet_drops")
       .fold(emptyFrame(spark, DropsServingSchema)) { raw =>
         val drops = raw.select(
           col("pulse_number").cast("long").as("pulse_number"),
@@ -208,7 +214,7 @@ object StoreViews {
     * bucket partition column is a flush concern, never served).
     */
   def pulses(spark: SparkSession, dir: String): DataFrame =
-    graft.ingest.TableManifest.readTable(spark, s"$dir/pulses")
+    TableManifest.readTable(spark, s"$dir/pulses")
       .fold(emptyFrame(spark, PulsesServingSchema))(servingPulses)
 
   private def servingPulses(raw: DataFrame): DataFrame = raw.select(
@@ -226,11 +232,13 @@ object StoreViews {
 
   // ---- driver reads for the pulse-keyed routes ----------------------------
   //
-  // Each resolves ONE snapshot of its table and reads only the partitions
-  // the key names, in the driver ([[graft.ingest.TableManifest.readRows]]);
-  // the serving programs above then run over the local relation, which
-  // the optimizer folds, so no Spark job runs. A table with no manifest
-  // reads as no rows in the same serving shape.
+  // Each reads only the partitions the key names from ONE snapshot of its
+  // table, in the driver ([[TableManifest.readRows]]); the serving programs
+  // above then run over the local relation, which the optimizer folds, so
+  // no Spark job runs. The pulses snapshot is the chain index's own
+  // ([[Domain.PulseChainIndex.pulses]]), so the pulses rows and drop hashes
+  // a request serves agree with the links the index answers. A table with
+  // no manifest reads as no rows in the same serving shape.
 
   // the stored columns the serving programs read: all but the partition
   // column and the records' unserved raw_data
@@ -239,35 +247,33 @@ object StoreViews {
   private val PulseColumns = Schemas.pulses.fieldNames.toSeq.filterNot(_ == "pulse_bucket")
 
   private def stored(spark: SparkSession, dir: String, table: String,
-      schema: org.apache.spark.sql.types.StructType, partCol: String, columns: Seq[String])(
-      partitions: graft.ingest.TableManifest.Snapshot => Iterable[String]): DataFrame = {
-    val path = s"$dir/$table"
-    val snap = graft.ingest.TableManifest.snapshot(spark, path)
-      .getOrElse(graft.ingest.TableManifest.Snapshot(0L, Map.empty, Nil))
-    graft.ingest.TableManifest.readRows(spark, path, snap, partitions(snap), partCol,
-      org.apache.spark.sql.types.StructType(schema.filterNot(_.name == partCol)), columns)
+      snap: Option[TableManifest.Snapshot], schema: org.apache.spark.sql.types.StructType,
+      partCol: String, columns: Seq[String])(
+      partitions: TableManifest.Snapshot => Iterable[String]): DataFrame = {
+    val s = snap.getOrElse(TableManifest.Snapshot(0L, Map.empty, Nil))
+    TableManifest.readRows(spark, s"$dir/$table", s, partitions(s), partCol, schema, columns)
   }
 
   /** The records of one pulse in [[records]]' serving shape, read from its
     * one `pulse_number` partition in the driver.
     */
   def recordsOf(spark: SparkSession, dir: String, pulse: Long): DataFrame =
-    servingRecords(stored(spark, dir, "records", Schemas.records, "pulse_number",
-      RecordColumns)(_ => Seq(s"pulse_number=$pulse")))
+    servingRecords(stored(spark, dir, "records", TableManifest.snapshot(spark, s"$dir/records"),
+      Schemas.records, "pulse_number", RecordColumns)(_ => Seq(s"pulse_number=$pulse")))
 
   /** The drops of `pulses` in [[jetDrops]]' serving shape, from one
     * jet_drops snapshot read in the driver. Each pulse's stored prev, which
-    * the hashes need, comes from the driver-held chain index
-    * ([[Domain.pulseChainIndex]]) that the pulses table's version keys.
+    * the hashes need, comes from `chain`.
     */
-  def jetDropsOf(spark: SparkSession, dir: String, pulses: Seq[Long]): DataFrame = {
-    val chain = Domain.pulseChainIndex(spark, dir)
+  def jetDropsOf(spark: SparkSession, dir: String, chain: Domain.PulseChainIndex,
+      pulses: Seq[Long]): DataFrame = {
     val prevPn = pulses.distinct.foldLeft(lit(null).cast("long")) { (other, p) =>
       chain.storedPrev(p).fold(other)(prev => when(col("pulse_number") === p, lit(prev))
         .otherwise(other))
     }
-    val raw = stored(spark, dir, "jet_drops", Schemas.jetDrops, "pulse_number",
-      Seq("jet_id", "record_amount", "timestamp"))(_ => pulses.map(p => s"pulse_number=$p"))
+    val raw = stored(spark, dir, "jet_drops", TableManifest.snapshot(spark, s"$dir/jet_drops"),
+      Schemas.jetDrops, "pulse_number", Seq("jet_id", "record_amount", "timestamp"))(
+      _ => pulses.map(p => s"pulse_number=$p"))
     withDropHashes(raw.select(
       col("pulse_number"),
       col("jet_id"),
@@ -276,21 +282,25 @@ object StoreViews {
       prevPn.as("prev_pn")))
   }
 
-  /** The pulses-table rows that can hold `pulse`, in [[pulses]]' serving
-    * shape, read in the driver: its `pulse_bucket` partition at the span
-    * the manifest's summary records, or, in a table whose manifest has no
-    * summary (written before summaries existed), every live partition.
+  /** The rows of `chain`'s pulses snapshot that can hold `pulses`, in
+    * [[pulses]]' serving shape, read in the driver: their `pulse_bucket`
+    * partitions at the span the manifest's summary records, or, in a
+    * table whose manifest has no summary (written before summaries
+    * existed), every live partition.
     */
-  def pulsesOf(spark: SparkSession, dir: String, pulse: Long): DataFrame =
-    servingPulses(stored(spark, dir, "pulses", Schemas.pulses, "pulse_bucket", PulseColumns) {
-      snap => snap.summary.fold(snap.partitions.keys)(s => Seq(s"pulse_bucket=${pulse / s.span}"))
+  def pulsesOf(spark: SparkSession, dir: String, chain: Domain.PulseChainIndex,
+      pulses: Seq[Long]): DataFrame =
+    servingPulses(stored(spark, dir, "pulses", chain.pulses, Schemas.pulses, "pulse_bucket",
+      PulseColumns) { snap =>
+      snap.summary.fold(snap.partitions.keys)(s => pulses.map(p => s"pulse_bucket=${p / s.span}"))
     })
 
-  /** Every live pulse's (pulse_number, stored prev_pulse_number), read in
-    * the driver: the chain index's rebuild input.
+  /** Every live pulse's (pulse_number, stored prev_pulse_number) in the
+    * pulses snapshot `snap`, read in the driver: the chain index's input.
     */
-  def pulseLinks(spark: SparkSession, dir: String): Array[(Long, Long)] =
-    stored(spark, dir, "pulses", Schemas.pulses, "pulse_bucket",
+  def pulseLinks(spark: SparkSession, dir: String,
+      snap: Option[TableManifest.Snapshot]): Array[(Long, Long)] =
+    stored(spark, dir, "pulses", snap, Schemas.pulses, "pulse_bucket",
       Seq("pulse_number", "prev_pulse_number"))(_.partitions.keys)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
 }

@@ -67,6 +67,10 @@ object Pagination {
     * marker-true rows and read `total` from any row, sentinel included,
     * so an out-of-range page costs the same single pass as an in-range
     * one (no second filtered-count probe).
+    *
+    * A `df` over driver-held rows (its optimized plan a local relation:
+    * a driver read under projections and filters) is paged in the driver
+    * instead, with the same rows and schema and no Spark job.
     */
   def pageWithTotalCarried(df: DataFrame, sort: Seq[Column], limit: Int, offset: Int = 0): DataFrame = {
     // the two attached columns are resolved by bare name after the join —
@@ -74,32 +78,24 @@ object Pagination {
     // plan time; fail loud at the call site instead
     require(!df.columns.contains("total") && !df.columns.contains(PageRowMarker),
       s"pageWithTotalCarried input must not carry reserved columns 'total'/'$PageRowMarker'")
-    val total = df.agg(count(lit(1)).as("total"))
-    val p = page(df, sort, limit, offset).withColumn(PageRowMarker, lit(true))
-    val pageCols = p.columns.filterNot(_ == PageRowMarker)
-    total.join(broadcast(p), lit(true), "left")
-      .withColumn(PageRowMarker, coalesce(col(PageRowMarker), lit(false)))
-      .select(pageCols.map(col) ++ Seq(col("total"), col(PageRowMarker)): _*)
-      .orderBy(sort: _*)
+    GraftColumnBridge.localRows(df, sort).fold {
+      val total = df.agg(count(lit(1)).as("total"))
+      val p = page(df, sort, limit, offset).withColumn(PageRowMarker, lit(true))
+      val pageCols = p.columns.filterNot(_ == PageRowMarker)
+      total.join(broadcast(p), lit(true), "left")
+        .withColumn(PageRowMarker, coalesce(col(PageRowMarker), lit(false)))
+        .select(pageCols.map(col) ++ Seq(col("total"), col(PageRowMarker)): _*)
+        .orderBy(sort: _*)
+    } { case (rows, ordering) => pageRowsWithTotalCarried(df, rows, ordering, limit, offset) }
   }
 
-  /** [[pageWithTotalCarried]] over driver-held rows: `df` must be a frame
-    * whose optimized plan is a local relation (a driver read under
-    * projections and filters), and the count, the sort, the offset/limit
-    * cut and the carried-total sentinel run on its rows in the driver,
-    * with Catalyst's own ordering for `sort`. The answer has
-    * [[pageWithTotalCarried]]'s exact rows and schema (page columns
-    * nullable, then `total` and [[PageRowMarker]]) as a local relation
-    * again, so presenting and collecting it runs no Spark job. Any other
-    * input fails: the caller has no second path.
+  /** [[pageWithTotalCarried]]'s driver form over `rows`, the rows of `df`:
+    * the count, the sort by `ordering` (Catalyst's own for the page's
+    * sort), the offset/limit cut and the carried-total sentinel, as a
+    * local relation again, so presenting and collecting it runs no job.
     */
-  def pageRowsWithTotalCarried(df: DataFrame, sort: Seq[Column], limit: Int,
-      offset: Int = 0): DataFrame = {
-    require(!df.columns.contains("total") && !df.columns.contains(PageRowMarker),
-      s"pageRowsWithTotalCarried input must not carry reserved columns 'total'/'$PageRowMarker'")
-    val (rows, ordering) = GraftColumnBridge.localRows(df, sort).getOrElse(
-      throw new IllegalArgumentException(
-        s"pageRowsWithTotalCarried needs driver-held rows:\n${df.queryExecution.optimizedPlan}"))
+  private def pageRowsWithTotalCarried(df: DataFrame, rows: Seq[InternalRow],
+      ordering: Ordering[InternalRow], limit: Int, offset: Int): DataFrame = {
     val total = rows.length.toLong
     val page = rows.sorted(ordering).drop(offset).take(limit)
     val out =

@@ -36,15 +36,6 @@ object Sketches {
   private val Two63 = 9.223372036854775808e18 // exactly 2^63 in double
   private val Two64 = 1.8446744073709551616e19 // exactly 2^64 in double
 
-  /** Scala-side KMV estimate over the sorted k-smallest sign-flipped
-    * hashes — the same arithmetic in the same order as the Column form in
-    * [[eventSketch]], so a streaming state fold
-    * ([[graft.streaming.SketchStream]]) lands on identical estimates.
-    */
-  def kmvEstimate(sortedU: Array[Long], k: Int): Double =
-    if (sortedU.length < k) sortedU.length.toDouble
-    else (k - 1).toDouble / ((sortedU(k - 1).toDouble + Two63) / Two64)
-
   /** Per-`group` KMV distinct estimate of `key` plus interpolated
     * percentiles of `value` over a deterministic bottom-`kSample` row
     * sample (sampled by hash of `sampleId`). Output: (group,

@@ -49,7 +49,10 @@ object GraftColumnBridge {
       Ordering[org.apache.spark.sql.catalyst.InternalRow])] = {
     import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Sort}
     val ds = df.asInstanceOf[classic.Dataset[Row]]
-    ds.queryExecution.optimizedPlan match {
+    // the analyzed plan is already there; optimize only a plan over local
+    // relations alone, the only kind that can fold into one
+    if (!ds.queryExecution.analyzed.collectLeaves().forall(_.isInstanceOf[LocalRelation])) None
+    else ds.queryExecution.optimizedPlan match {
       case LocalRelation(_, data, false, _) =>
         ds.orderBy(sort: _*).queryExecution.analyzed match {
           case Sort(order, true, child, _) if child.output.length == df.schema.length =>

@@ -5,7 +5,7 @@ import java.util.concurrent.TimeUnit
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
-import graft.{Ingest, SparkSpec}
+import graft.{CountingFileSystem, Ingest, SparkSpec}
 import graft.functions.{Codecs, JetFunctions}
 import graft.gen.Fixtures
 import graft.ingest.{GrpcTransport, PulseWriter, ReplayExporter, TableManifest}
@@ -14,10 +14,11 @@ import graft.operators.{Pagination, Predicates, PulseChain}
 
 /** The pulse-keyed routes over an ingest store (`/pulses/{pulse}`,
   * `/pulses/{pulse}/jet-drops`, `/jet-drops/{id}`, `/jet-drops/{id}/records`)
-  * read the partitions their key names in the driver and run no Spark job.
-  * The oracle below is the Spark plan each of them ran before that: every
-  * body the routes answer must equal, byte for byte, the body HttpApi
-  * renders from the oracle's frame.
+  * and `/pulses` pages with no timestamp bound read the partitions their
+  * keys name in the driver and run no Spark job. The oracle below is the
+  * Spark plan each of them ran before that: every body the routes answer
+  * must equal, byte for byte, the body HttpApi renders from the oracle's
+  * frame.
   */
 class StoreRouteEquivalenceSpec extends SparkSpec {
 
@@ -57,6 +58,40 @@ class StoreRouteEquivalenceSpec extends SparkSpec {
             .withColumn("next_pulse_number", lit(c.nextByPrev(pulseNumber).getOrElse(PulseChain.Unknown)))
             .withColumn("prev_pulse_number", lit(if (c.exists(storedPrev)) storedPrev else PulseChain.Unknown))
       }
+    }
+
+    /** The scan path: one plan cuts the page and carries the total, then
+      * the page's links are repaired in the driver against the chain.
+      */
+    def pulses(dir: String, gte: Option[Long], lte: Option[Long], asc: Boolean,
+        limit: Int, offset: Int): DataFrame = {
+      val filtered = StoreViews.pulses(spark, dir)
+        .filter(Predicates.range(col("pulse_number"), gte = gte, lte = lte))
+      val pageSort = if (asc) col("pulse_number").asc else col("pulse_number").desc
+      val pageQuery = Pagination.pageWithTotalCarried(filtered, Seq(pageSort), limit, offset)
+      val (pageRows, sentinel) =
+        pageQuery.collect().partition(_.getAs[Boolean](Pagination.PageRowMarker))
+      val out = if (pageRows.isEmpty) sentinel else {
+        val c = chain(dir)
+        val sch = pageQuery.schema
+        val (pnI, prevI, nextI) = (sch.fieldIndex("pulse_number"),
+          sch.fieldIndex("prev_pulse_number"), sch.fieldIndex("next_pulse_number"))
+        val page = pageRows.sortBy(_.getLong(pnI))
+        val pn = page.map(_.getLong(pnI))
+        val repaired = page.indices.toArray.map { i =>
+          val vals = page(i).toSeq.toArray
+          vals(prevI) =
+            if (i > 0) { if (page(i).getLong(prevI) == pn(i - 1)) pn(i - 1) else PulseChain.Unknown }
+            else c.storedPrev(pn(0)).filter(c.exists).getOrElse(PulseChain.Unknown)
+          vals(nextI) =
+            if (i < pn.length - 1) {
+              if (page(i + 1).getLong(prevI) == pn(i)) pn(i + 1) else PulseChain.Unknown
+            } else c.nextByPrev(pn.last).getOrElse(PulseChain.Unknown)
+          Row.fromSeq(vals.toSeq)
+        }
+        if (asc) repaired else repaired.reverse
+      }
+      spark.createDataFrame(java.util.Arrays.asList(out: _*), pageQuery.schema)
     }
 
     def jetDropsByPulse(dir: String, pulseNumber: Long, fromJetId: Option[String],
@@ -122,6 +157,11 @@ class StoreRouteEquivalenceSpec extends SparkSpec {
       val limit = q.get("limit").fold(Pagination.DefaultLimit)(_.toInt)
       val offset = q.get("offset").fold(0)(_.toInt)
       path.split("/").filter(_.nonEmpty).toList match {
+        case "pulses" :: Nil =>
+          def pn(k: String) = q.get(k).map(_.toLong)
+          val lte = Seq(pn("from_pulse_number"), pn("pulse_number_lte")).flatten.reduceOption(_ min _)
+          (200, HttpApi.envelope(HttpApi.presentPulses(pulses(dir, pn("pulse_number_gte"), lte,
+            q.get("sort_by").contains("pulse_number_asc"), limit, offset)).collect()))
         case "pulses" :: p :: Nil => point(HttpApi.presentPulses(pulse(dir, p.toLong)))
         case "pulses" :: p :: "jet-drops" :: Nil =>
           val fromJet = q.get("from_jet_drop_id").map(s => Codecs.parseJetDropId(s).get._1)
@@ -156,12 +196,30 @@ class StoreRouteEquivalenceSpec extends SparkSpec {
         .flatMap(q => Seq(s"/jet-drops/0:$p/records" -> q, s"/jet-drops/10:$p/records" -> q))
   }
 
+  /** Every `/pulses` page shape with no timestamp bound, over a store
+    * whose pulses run from `pulseAt(0)`.
+    */
+  private val pulsesRequests: Seq[(String, Map[String, String])] = {
+    val asc = Map("sort_by" -> "pulse_number_asc")
+    val bounds = Map("pulse_number_gte" -> pulseAt(1).toString,
+      "pulse_number_lte" -> pulseAt(2).toString)
+    Seq(Map.empty[String, String], asc, Map("limit" -> "2", "offset" -> "1"),
+      asc ++ Map("limit" -> "2", "offset" -> "1"), Map("offset" -> "100"),
+      asc ++ Map("offset" -> "100"), bounds, asc ++ bounds ++ Map("limit" -> "1"),
+      bounds ++ Map("offset" -> "1"), Map("from_pulse_number" -> pulseAt(1).toString),
+      Map("pulse_number_gte" -> pulseAt(10).toString),
+      Map("pulse_number_gte" -> pulseAt(2).toString, "pulse_number_lte" -> pulseAt(1).toString))
+      .map("/pulses" -> _)
+  }
+
   private def query(q: Map[String, String]) =
     if (q.isEmpty) None else Some(q.toSeq.sorted.map { case (k, v) => s"$k=$v" }.mkString("&"))
 
-  /** Every request over `pulses` answers the oracle's status and body. */
+  /** Every request over `pulses`, and every `/pulses` page, answers the
+    * oracle's status and body.
+    */
   private def assertEquivalent(dir: String, pulses: Seq[Long]): Unit =
-    for (p <- pulses; (path, q) <- requests(p)) {
+    for ((path, q) <- pulsesRequests ++ pulses.flatMap(requests)) {
       val got = HttpApi.respond(spark, dir, s"/api/v1$path", query(q))
       val want = Oracle.respond(dir, path, q)
       assert(got == want, s"$path?${query(q).getOrElse("")} over $dir:\n" +
@@ -263,6 +321,68 @@ class StoreRouteEquivalenceSpec extends SparkSpec {
       writeStorePulses(dir, pulseRows(0 until 2 + i % 2, 3), span = 10L,
         summary = Some(TableManifest.Summary(start, pulseAt(1) / 10, 10L)))
       assert(jobs(path, q) == 0, s"first read of $path after a pulses flush")
+    }
+  }
+
+  test("a /pulses page with no timestamp bound runs no Spark job on an ingest store: " +
+      "warm, on the first read after a commit, and on the first read after a pulses flush") {
+    val dir = tmp("graft-routes-pulses-jobs")
+    val w = wire(3)
+    PulseWriter.commitPulse(w.filter(col("pulse_number") === start), dir)
+    def flush(n: Int) = writeStorePulses(dir, pulseRows(0 until n, 3), span = 10L,
+      summary = Some(TableManifest.Summary(start, pulseAt(n - 1) / 10, 10L)))
+    flush(2)
+    val pages = Seq(None, Some(s"pulse_number_lte=${pulseAt(1)}&limit=1&sort_by=pulse_number_asc"),
+      Some("offset=100"))
+    def jobs(q: Option[String]): Int = jobsDuring {
+      val (s, body) = HttpApi.respond(spark, dir, "/api/v1/pulses", q)
+      assert(s == 200, s"$q: $s ${body.take(200)}")
+    }
+    pages.foreach { q =>
+      HttpApi.respond(spark, dir, "/api/v1/pulses", q)
+      assert(jobs(q) == 0, s"warm $q")
+    }
+    // the pin sees jobs where they run: a timestamp-bounded page scans
+    assert(jobs(Some("timestamp_gte=0")) > 0)
+    pages.zipWithIndex.foreach { case (q, i) =>
+      PulseWriter.commitPulse(w.filter(col("pulse_number") === pulseAt(1 + i % 2)), dir)
+      assert(jobs(q) == 0, s"first read of $q after a commit")
+    }
+    pages.zipWithIndex.foreach { case (q, i) =>
+      flush(2 + i % 2)
+      assert(jobs(q) == 0, s"first read of $q after a pulses flush")
+    }
+  }
+
+  test("one request to /pulses, /pulses/{pulse} or /jet-drops/{id} lists the pulses " +
+      "manifests once, warm and on the first read after a pulses flush") {
+    val local = tmp("graft-routes-listings")
+    PulseWriter.commitPulse(wire(3), local)
+    def flush(n: Int) = writeStorePulses(local, pulseRows(0 until n, 3), span = 10L,
+      summary = Some(TableManifest.Summary(start, pulseAt(n - 1) / 10, 10L)))
+    flush(2)
+    CountingFileSystem.mount(spark)
+    val dir = CountingFileSystem.path(local)
+    val p = pulseAt(1)
+    val routes = Seq("/pulses" -> None, "/pulses" -> Some(s"pulse_number_gte=$p&limit=1"),
+      s"/pulses/$p" -> None, s"/jet-drops/10:$p" -> None)
+    def assertOneListing(path: String, q: Option[String], when: String): Unit = {
+      var got: (Int, String) = null
+      val (listed, _) = CountingFileSystem.during {
+        got = HttpApi.respond(spark, dir, s"/api/v1$path", q)
+      }
+      assert(got == HttpApi.respond(spark, local, s"/api/v1$path", q), s"$when $path")
+      assert(listed.count(_ == s"$local/pulses/_manifests") == 1, s"$when $path: $listed")
+      assert(listed.forall(_.endsWith("/_manifests")) && listed.distinct == listed,
+        s"$when $path lists one manifests dir per table and nothing else: $listed")
+    }
+    routes.foreach { case (path, q) =>
+      HttpApi.respond(spark, dir, s"/api/v1$path", q)
+      assertOneListing(path, q, "warm")
+    }
+    routes.zipWithIndex.foreach { case ((path, q), i) =>
+      flush(2 + i % 2)
+      assertOneListing(path, q, "first read after a flush:")
     }
   }
 

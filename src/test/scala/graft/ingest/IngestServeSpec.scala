@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.sparkproject.connect.grpc.Server
 import org.sparkproject.connect.grpc.netty.NettyServerBuilder
 
-import graft.{Ingest, SparkSpec}
+import graft.{CountingFileSystem, Ingest, SparkSpec}
 import graft.gen.Fixtures
 
 /** The ingest daemon (`graft.Ingest`, the `cmd/block-explorer/main.go`
@@ -1020,47 +1020,42 @@ class IngestServeSpec extends SparkSpec {
         wire.filter(col("pulse_number") === start + i * delta), base)
     }
 
-    // count input rows of the SEED's OWN jobs only: the shared test
-    // session may run other suites' jobs concurrently, so the listener
-    // filters to the job group set on the seeding thread (seed() runs
-    // synchronously inside start(), inheriting the group)
-    val recordsRead = new java.util.concurrent.atomic.AtomicLong()
-    val groupId = s"seed-pin-${System.nanoTime()}"
-    val groupStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (j.properties != null &&
-            groupId == j.properties.getProperty("spark.jobGroup.id"))
-          j.stageIds.foreach(groupStages.add(_))
-      override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (t.taskMetrics != null && groupStages.contains(t.stageId))
-          recordsRead.addAndGet(t.taskMetrics.inputMetrics.recordsRead)
-    }
+    // the seed reads in the driver: count the data files it opens through
+    // a counting file system, and the Spark jobs the start runs
     val headOnly = new Transport.RecordStream {
       def export(pulse: Long, recordNumber: Int, count: Int): Iterator[Transport.Frame] =
         throw new Transport.PulseNotFound(pulse)
     }
-    spark.sparkContext.addSparkListener(listener)
-    val daemon = try {
-      spark.sparkContext.setJobGroup(groupId, "seed read pin", false)
-      val d = try new Ingest.Daemon(spark, base, headOnly, start,
-        fastCfg.copy(flushBucketSpan = span)).start()
-      finally spark.sparkContext.clearJobGroup()
-      Thread.sleep(500) // let the async listener bus drain the seed jobs
-      d
-    } finally spark.sparkContext.removeSparkListener(listener)
+    CountingFileSystem.mount(spark)
+    var daemon: Ingest.Daemon = null
+    var jobs = -1
+    val (_, opened) = CountingFileSystem.during {
+      jobs = jobsDuring {
+        daemon = new Ingest.Daemon(spark, CountingFileSystem.path(base), headOnly, start,
+          fastCfg.copy(flushBucketSpan = span)).start()
+      }
+    }
     try {
-      // THE PIN: the seed collected the frontier buckets only — the open
-      // pulses plus the handful of closed rows sharing their bucket —
-      // and its Spark jobs read rows in that order of magnitude, not 503
+      assert(jobs == 0, s"a daemon start ran $jobs Spark jobs")
+      // THE PIN: the seed opened the pulses files of the frontier buckets
+      // and the open pulses' drops files, never a closed bucket's
+      val frontier = (start + 498 * delta) / span
+      def partitionsOpened(table: String, partCol: String) = opened.collect {
+        case f if f.startsWith(s"$base/$table/$partCol=") =>
+          f.stripPrefix(s"$base/$table/$partCol=").takeWhile(_ != '/').toLong
+      }.toSet
+      val buckets = partitionsOpened("pulses", "pulse_bucket")
+      assert(buckets.nonEmpty && buckets.forall(_ >= frontier),
+        s"the seed opened pulses files outside the frontier buckets (>= $frontier): $opened")
+      assert(partitionsOpened("jet_drops", "pulse_number") == openIdx.map(start + _ * delta).toSet,
+        s"the seed opened drops files outside the open pulses: $opened")
+      // the register holds the frontier bucket's pulses, not 503
       assert(daemon.ingestedCount <= 20,
         s"seed collected ${daemon.ingestedCount} entries — O(history), not O(frontier)")
       assert(daemon.ingestedCount >= openIdx.size)
-      assert(recordsRead.get() <= 100L,
-        s"seed read ${recordsRead.get()} rows — the closed prefix leaked into the scan")
       // stale summary re-derived: the seed starts at the TRUE mark (499),
       // never the summary's stale 497 (≥, because the live sequencer may
-      // already have advanced past it during the listener-drain sleep)
+      // already have advanced past it while the job count settled)
       assert(daemon.sequentialPulse >= start + 499 * delta)
       assert(daemon.cursor == start + 503 * delta)
       // the open pulses heal from their drops partitions and sequence

@@ -303,16 +303,6 @@ class TableManifestSpec extends SparkSpec {
     assert(TableManifest.latest(f, table).get.partitions.keySet ==
       Set("pulse_number=65546", "pulse_number=65566", "pulse_number=65576"))
   }
-
-  test("versionToken answers the manifest version for manifested tables, " +
-      "None for a table with no manifest") {
-    import spark.implicits._
-    val base = tmp()
-    commitFrame(Seq((65546L, "0", "x")).toDF("pulse_number", "jet_id", "payload"),
-      s"$base/records")
-    assert(TableManifest.versionToken(spark, s"$base/records").contains("m1"))
-    assert(TableManifest.versionToken(spark, s"$base/nope").isEmpty)
-  }
 }
 
 /** The local file system mounted under `failing://`, whose `n`th create
