@@ -1,6 +1,5 @@
 package graft
 
-import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{Row, SparkSession}
@@ -26,18 +25,28 @@ import graft.ingest.{Canonicalize, GrpcTransport, PulseWriter, Resilience, Table
   * 1200 s):
   *
   *  - '''follower''' (the extractor's continuous pull,
-  *    `etl/extractor/platform_impl.go:151-222`): fetch the pulse at the
-  *    cursor through [[Transport.fetchPulse]] (portioned stream, resume
-  *    cursor, end-of-pulse marker), commit it through the shared
-  *    [[PulseWriter.commitPulse]] (driver-side spine + manifested
-  *    partition replace, no Spark job), then advance by the exporter's
-  *    iterate-from hint. `NOT_FOUND` means the head is reached — sleep half a pulse
-  *    and re-ask (the reference's
-  *    `ContinuousPulseRetrievingHalfPulseSeconds`). A transport failure
-  *    that outlives the in-fetch reopen budget leaves the cursor where
-  *    it is and retries after a pause, so an exporter restart loses
-  *    nothing: the managed channel reconnects and the portion protocol
-  *    resumes at the record cursor.
+  *    `etl/extractor/platform_impl.go:151-222`), two stages on two
+  *    threads, like the reference's extractor → transformer → processor
+  *    pipeline (`etl/processor/processor.go:59-95`). The follower thread
+  *    fetches the pulse at the cursor through [[Transport.fetchPulse]]
+  *    (portioned stream, resume cursor, end-of-pulse marker) and
+  *    prepares it in the driver ([[PulseWriter.prepare]]: canonicalize,
+  *    chain-sort, number, drop rows; no Spark). It hands the pulse to the
+  *    writer thread, which writes it ([[PulseWriter.write]]: manifested
+  *    partition replace, no Spark job) and registers it, and meanwhile
+  *    moves its cursor by the exporter's iterate-from hint and fetches
+  *    the next pulse. At most one write is in flight and the follower
+  *    holds at most one prepared pulse: it waits for the previous write
+  *    before handing over, so commits land in fetch order. `cursor` is
+  *    thus the next pulse to FETCH, one pulse ahead of the committed
+  *    state while a write is in flight. A failed write drops the prepared
+  *    pulse and rewinds the cursor to the failed one. `NOT_FOUND` means
+  *    the head is reached — sleep half a pulse and re-ask (the
+  *    reference's `ContinuousPulseRetrievingHalfPulseSeconds`). A
+  *    transport failure that outlives the in-fetch reopen budget leaves
+  *    the cursor where it is and retries after a pause, so an exporter
+  *    restart loses nothing: the managed channel reconnects and the
+  *    portion protocol resumes at the record cursor.
   *  - '''maintainer''' (`pulseMaintainer`, every PulsePeriod): walk the
   *    OPEN set of the driver-held pulse register (the reference's
   *    `jetDropRegister` — populated at commit time for free from the
@@ -84,7 +93,9 @@ import graft.ingest.{Canonicalize, GrpcTransport, PulseWriter, Resilience, Table
   * cadence (the reference holds it in one goroutine's memory the same
   * way), so the spine chain-sorts it in the driver and the commit is
   * one single-file manifested replace per table, written from the
-  * driver without a Spark job. Driver memory holds one
+  * driver without a Spark job. The follower holds at most two pulses'
+  * rows at once: the one being written and the one prepared next.
+  * Driver memory holds one
   * [[PulseEntry]] per pulse seeded or ingested THIS run (~tens of
   * bytes each — bounded by the open frontier plus the run's own feed,
   * never by a decade of persisted history), and per-tick scanning and
@@ -152,6 +163,15 @@ object Ingest {
       complete: Boolean,
       sequential: Boolean)
 
+  /** A fetched pulse ready to write: its [[PulseWriter.prepare]]d rows
+    * and its count of "result" records, the per-type presence counter the
+    * pulses row persists for the status/gap views (the corpus spine
+    * materializes the same column, Domain.pulses). "result" is the wire
+    * union's own tag (Canonicalize F9 maps it 1:1), counted over the wire
+    * rows.
+    */
+  private final case class Ready(pulse: Long, prepared: PulseWriter.Prepared, results: Long)
+
   /** The long-running daemon over any [[Transport.RecordStream]] — the
     * live gRPC wire in production ([[bootstrap]]), the replay harness in
     * specs and the bench. Callers own `start()`/`stop()`.
@@ -182,6 +202,10 @@ object Ingest {
     private val missed = new Resilience.MissedDataManager(cfg.reloadTtlMs)
     private val writeLock = new Object
     private var threads = Seq.empty[Thread]
+    // the follower's writes run here, one at a time (see followLoop); its
+    // one thread is created with the first write
+    private var writer: java.util.concurrent.ExecutorService = _
+    @volatile private var writerThread: Option[Thread] = None
     // the span the COMMITTED pulse_bucket= partitions were written with —
     // a STORE property, not a config constant: every dirty-bucket flush
     // must address the same partitions the data lives in, so the span
@@ -193,14 +217,24 @@ object Ingest {
 
     // ---- observability (the spec's and main's read surface) ------------
 
+    /** The next pulse the follower fetches: one pulse past the committed
+      * state while a write is in flight, so wait for a commit on
+      * [[ingestedCount]] or [[lastManifests]], never on this.
+      */
     def cursor: Long = cursorNow
     def sequentialPulse: Long = seqPulse
     def snapshot: Map[Long, PulseEntry] = lock.synchronized(entries.toMap)
     def ingestedCount: Int = lock.synchronized(entries.size)
     private val commits = new java.util.concurrent.atomic.AtomicLong
     private val commitMs = new java.util.concurrent.atomic.AtomicLong
-    /** `(pulse commits, their summed wall milliseconds)` since start. */
+    private val fetchMs = new java.util.concurrent.atomic.AtomicLong
+    private val prepareMs = new java.util.concurrent.atomic.AtomicLong
+    /** `(pulse commits, their summed write wall milliseconds)` since start. */
     def commitStats: (Long, Long) = (commits.get, commitMs.get)
+    /** `(summed fetch, summed prepare)` wall milliseconds since start: every
+      * fetch, head polls and reloads included, and every prepared pulse.
+      */
+    def stageMs: (Long, Long) = (fetchMs.get, prepareMs.get)
     // table name → the manifest version this daemon last committed to it,
     // as the commit returned it; replaced under `writeLock`
     @volatile private var manifests = Map.empty[String, TableManifest.Snapshot]
@@ -448,32 +482,35 @@ object Ingest {
 
     // ---- commit ---------------------------------------------------------
 
-    /** Shared spine + partition commit, then register the pulse from its
-      * own drop rows. The register entry REPLACES jets/counters (the
-      * partition overwrite replaced the rows on disk — a merged union
-      * could mark a cover complete that the store no longer holds);
-      * `prev` is chain-derived at first sight and kept after, and a
-      * backfilled pulse FIXES UP its successor's stale prev so the chain
-      * stays linked through out-of-order arrival.
-      */
-    private def commit(pulse: Long, rows: Seq[Row]): Unit = {
+    private def timed[T](ms: java.util.concurrent.atomic.AtomicLong)(body: => T): T = {
       val t0 = System.nanoTime()
-      val dropRows = writeLock.synchronized {
-        val c = PulseWriter.commitPulse(
-          spark.createDataFrame(rows.asJava, Schemas.wireRecords), basePath)
-        manifests ++= c.manifests
-        c.drops
-      }
-      commitMs.addAndGet((System.nanoTime() - t0) / 1000000L)
+      try body finally { ms.addAndGet((System.nanoTime() - t0) / 1000000L); () }
+    }
+
+    private def fetch(pulse: Long): Option[Transport.FetchedPulse] = timed(fetchMs)(
+      Transport.fetchPulse(stream, pulse, cfg.batchSize, backoffMs = cfg.fetchBackoffMs))
+
+    private def prepare(pulse: Long, rows: Seq[Row]): Ready = timed(prepareMs)(
+      Ready(pulse, PulseWriter.prepare(rows),
+        rows.count(_.getAs[String]("virtual_type") == "result").toLong))
+
+    /** Write a prepared pulse, then register it from its own drop rows.
+      * The register entry REPLACES jets/counters (the partition overwrite
+      * replaced the rows on disk — a merged union could mark a cover
+      * complete that the store no longer holds); `prev` is chain-derived
+      * at first sight and kept after, and a backfilled pulse FIXES UP its
+      * successor's stale prev so the chain stays linked through
+      * out-of-order arrival.
+      */
+    private def write(ready: Ready): Unit = {
+      val Ready(pulse, prepared, results) = ready
+      timed(commitMs)(writeLock.synchronized {
+        manifests ++= PulseWriter.write(spark, prepared, basePath).manifests
+      })
       commits.incrementAndGet()
       lock.synchronized {
-        val jets = dropRows.map(_.getAs[String]("jet_id")).toSet
-        val amount = dropRows.map(_.getAs[Int]("record_amount").toLong).sum
-        // per-type presence counter, persisted for the status/gap views —
-        // the corpus spine materializes the same column (Domain.pulses);
-        // "result" is the wire union's own tag (Canonicalize F9 maps it
-        // 1:1), counted over the driver-held pulse rows
-        val results = rows.count(_.getAs[String]("virtual_type") == "result").toLong
+        val jets = prepared.drops.map(_.getAs[String]("jet_id")).toSet
+        val amount = prepared.drops.map(_.getAs[Int]("record_amount").toLong).sum
         val prior = entries.get(pulse)
         // prev fallback order: known predecessor → (empty register) the
         // sequencer's start mark, so the FIRST pulse a fresh daemon finds
@@ -532,24 +569,24 @@ object Ingest {
       }
     }
 
-    /** Re-request one pulse (reload path). True when data arrived. */
+    /** Re-request one pulse and commit it inline (reload path). True when
+      * data arrived.
+      */
     private def fetchAndCommit(pulse: Long): Boolean =
-      Transport.fetchPulse(stream, pulse, cfg.batchSize,
-        backoffMs = cfg.fetchBackoffMs) match {
-        case Some(fp) => commit(pulse, fp.rows); true
+      fetch(pulse) match {
+        case Some(fp) => write(prepare(pulse, fp.rows)); true
         case None => false
       }
 
     // ---- follower -------------------------------------------------------
 
-    /** Commit the pulse fetched at `p` and move the cursor to the
-      * exporter's iterate-from hint, or one δ on when the hint does not
-      * advance. A redirect is the exporter's answer for the pulses it
-      * skips, so it registers them as reload-requested: the sequencer's
-      * gap reload does not ask for them again within the TTL.
+    /** Move the cursor past the pulse fetched at `p`: to the exporter's
+      * iterate-from hint, or one δ on when the hint does not advance. A
+      * redirect is the exporter's answer for the pulses it skips, so it
+      * registers them as reload-requested: the sequencer's gap reload does
+      * not ask for them again within the TTL.
       */
-    private def commitAndAdvance(p: Long, fp: Transport.FetchedPulse): Unit = {
-      commit(p, fp.rows)
+    private def advance(p: Long, fp: Transport.FetchedPulse): Unit = {
       if (fp.iterateFrom > p + cfg.pulseDelta)
         missed.addIfNew(p + cfg.pulseDelta, fp.iterateFrom - cfg.pulseDelta)
       cursorNow = if (fp.iterateFrom > p) fp.iterateFrom else p + cfg.pulseDelta
@@ -591,16 +628,17 @@ object Ingest {
       * [[Config.headProbeAfter]] head polls — and the cursor stays put:
       * the head pulse itself is always tried first each iteration, so
       * the probe windows can never skip it.
+      * The hit is committed inline; the caller has no write in flight.
       * Returns true when a pulse was found and committed.
       */
     private def probeForward(fromOffset: Long): Boolean = {
       var i = fromOffset + 1
       while (running && i <= fromOffset + cfg.headProbeSpan) {
         val p = cursorNow + i * cfg.pulseDelta
-        Transport.fetchPulse(stream, p, cfg.batchSize,
-          backoffMs = cfg.fetchBackoffMs) match {
+        fetch(p) match {
           case Some(fp) =>
-            commitAndAdvance(p, fp)
+            write(prepare(p, fp.rows))
+            advance(p, fp)
             return true
           case None => i += 1
         }
@@ -613,17 +651,40 @@ object Ingest {
       var probedTo = 0L // forward offset the hole probe has covered so far
       var sweepEnd = 2L * cfg.headProbeSpan // far sweep restarts (deeper) here
       def probeHit(): Unit = { probedTo = 0L; sweepEnd = 2L * cfg.headProbeSpan }
+      // the pulse on the writer thread and its write; a failed write
+      // rewinds the cursor to its pulse and rethrows, so the catch below
+      // pauses and the next turn refetches it
+      var inFlight: Option[(Long, java.util.concurrent.Future[_])] = None
+      def awaitWrite(): Unit = inFlight.foreach { case (p, w) =>
+        inFlight = None
+        try { w.get(); () } catch {
+          case e: java.util.concurrent.ExecutionException =>
+            cursorNow = p
+            throw e.getCause
+        }
+      }
       while (running) {
         try {
-          Transport.fetchPulse(stream, cursorNow, cfg.batchSize,
-            backoffMs = cfg.fetchBackoffMs) match {
+          val p = cursorNow
+          fetch(p) match {
             case Some(fp) =>
               notFound = 0
               probeHit()
-              commitAndAdvance(cursorNow, fp)
+              val ready = prepare(p, fp.rows)
+              awaitWrite()
+              // stopping: the prepared pulse is dropped unwritten, and the
+              // next start fetches it again (its cursor seeds past the
+              // newest committed pulse)
+              if (running) {
+                inFlight = Some(p -> writer.submit(new Runnable { def run(): Unit = write(ready) }))
+                advance(p, fp)
+              }
             case None =>
-              // head reached (NOT_FOUND): half-pulse pause, same cursor —
-              // unless the streak says this may be a historical hole
+              // head reached (NOT_FOUND): the last handed-over write must
+              // land before the probe commits inline or the loop naps
+              awaitWrite()
+              // half-pulse pause, same cursor — unless the streak says
+              // this may be a historical hole
               notFound += 1
               if (notFound >= cfg.headProbeAfter) {
                 notFound = 0
@@ -660,9 +721,10 @@ object Ingest {
         } catch {
           case _: InterruptedException => return
           case NonFatal(e) =>
-            // exporter down past the reopen budget, or a commit failure:
-            // hold the cursor and retry after a pause — the extractor
-            // retries forever under its controller's cancellation (the
+            // exporter down past the reopen budget, or a commit failure
+            // (the cursor rewound to the failed pulse): retry after a
+            // pause — the extractor retries forever under its
+            // controller's cancellation (the
             // throttled trace keeps a persistent outage visible without
             // flooding at the retry cadence)
             traceLoopFailure("follower", e)
@@ -871,6 +933,12 @@ object Ingest {
       require(threads.isEmpty, "daemon already started")
       seed()
       running = true
+      writer = java.util.concurrent.Executors.newSingleThreadExecutor { r =>
+        val t = new Thread(r, "graft-ingest-writer")
+        t.setDaemon(true)
+        writerThread = Some(t)
+        t
+      }
       threads = Seq(
         new Thread(() => followLoop(), "graft-ingest-follower"),
         new Thread(() => maintainLoop(), "graft-ingest-maintainer"),
@@ -887,6 +955,14 @@ object Ingest {
       threads.foreach(_.join(15000))
       threads.filter(_.isAlive).foreach { t => t.interrupt(); t.join(5000) }
       threads = Seq.empty
+      // the follower's in-flight write finishes (a pulse it prepared but
+      // never handed over is dropped; the next start fetches it again)
+      Option(writer).foreach(_.shutdown()) // null when never started
+      writerThread.foreach { t =>
+        t.join(15000)
+        if (t.isAlive) { t.interrupt(); t.join(5000) }
+      }
+      writerThread = None
       // final maintainer pass so the persisted flags reflect everything
       // committed before shutdown (the graceful-stop flush). A failure
       // here is RECOVERABLE (the next start re-derives flags from the
@@ -917,6 +993,7 @@ object Ingest {
     graft.api.OpsRoutes.metrics(server) { () =>
       val (open, incomplete, dirty) = daemon.frontierStats
       val (commits, commitMs) = daemon.commitStats
+      val (fetchMs, prepareMs) = daemon.stageMs
       val tables = daemon.lastManifests.toSeq.sortBy(_._1)
       def perTable(f: TableManifest.Snapshot => Long) =
         tables.map { case (t, s) => s"""{table="$t"}""" -> f(s) }
@@ -927,8 +1004,11 @@ object Ingest {
         ("gbe_ingest_open_frontier", "gauge", Seq("" -> open.toLong)),
         ("gbe_ingest_incomplete_pulses", "gauge", Seq("" -> incomplete.toLong)),
         ("gbe_ingest_dirty_pulses", "gauge", Seq("" -> dirty.toLong)),
-        // mean commit latency = commit_ms_sum / commits_total
+        // mean write latency = commit_ms_sum / commits_total; fetch and
+        // prepare run beside the writes, on the follower thread
         ("gbe_ingest_commits_total", "counter", Seq("" -> commits)),
+        ("gbe_ingest_fetch_ms_sum", "counter", Seq("" -> fetchMs)),
+        ("gbe_ingest_prepare_ms_sum", "counter", Seq("" -> prepareMs)),
         ("gbe_ingest_commit_ms_sum", "counter", Seq("" -> commitMs)),
         // the last manifest this daemon committed per table: version,
         // files it lists, and superseded files awaiting retention

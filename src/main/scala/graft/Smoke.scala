@@ -1,12 +1,14 @@
 package graft
 
+import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
 import org.apache.spark.sql.functions._
 
 /** End-to-end smoke drive of the library's public surface on the real
   * testdata — the ingest spine (Canonicalize → ChainSort → order
-  * assignment), the status ops, and the training-pipeline operators.
+  * assignment, run in the driver by `PulseWriter.prepare`), the status
+  * ops, and the training-pipeline operators.
   * Run: sbt "runMain graft.Smoke [sfDir]".
   */
 object Smoke {
@@ -40,10 +42,11 @@ object Smoke {
       sha2(col("id").cast("string"), 256).cast("binary").as("raw_data"),
       (lit(65536L) + (col("id") % 3) * 10).as("pulse_number"))
 
-    val canon = ingest.Canonicalize(wire)
-    check("canonicalize rows (drops 1/5)")(canon.count())
+    val wireRows = wire.collect().toSeq
+    check("canonicalize rows (drops 1/5)")(wireRows.flatMap(ingest.Canonicalize(_)).length)
 
-    val withOrder = ingest.Spine(wire)
+    val withOrder = spark.createDataFrame(
+      ingest.PulseWriter.prepare(wireRows).records.asJava, ingest.Spine.schema)
     check("chain-sorted rows")(withOrder.count())
     check("order assigned, max order")(withOrder.agg(max("order")).first().get(0))
 
@@ -104,7 +107,8 @@ object Smoke {
         .map(_.count()).getOrElse(0L)
       s"records=${rows("records")} jet_drops=${rows("jet_drops")}"
     }
-    check("spine end-to-end rows")(ingest.Spine(wireAll).count())
+    check("spine end-to-end rows")(
+      ingest.PulseWriter.prepare(wireAll.collect().toSeq).records.length)
 
     check("event windows (batch mode)")(streaming.EventWindows.typeCounts(
       spark.read.parquet(s"$sfDir/events.parquet")).count())

@@ -55,7 +55,8 @@ object Endpoints {
     * own pulses snapshot ([[StoreViews.pulsesOf]]), so they ARE the
     * slice and no Spark job runs; over the immutable corpus spine the
     * fetch is one `pulse_number BETWEEN` job. Timestamp-bounded pages
-    * scan the view in one Spark plan (the index holds pulse numbers only).
+    * scan the view in one Spark plan (the index holds pulse numbers only);
+    * over a store the view reads the index's own pulses snapshot.
     */
   def pulses(spark: SparkSession, dir: String, page: PageParams = PageParams(),
       fromPulse: Option[Long] = None, toPulse: Option[Long] = None,
@@ -84,7 +85,12 @@ object Endpoints {
             schema): Row)
         (rows, schema)
       } else {
-        val filtered = pulsesView(spark, dir)
+        // over a store, the view of the chain index's own snapshot, so the
+        // edge links patched below come from the version the rows do
+        val view =
+          if (StoreViews.isStore(spark, dir)) StoreViews.pulses(spark, dir, chain.pulses)
+          else pulsesView(spark, dir)
+        val filtered = view
           .filter(Predicates.range(col("pulse_number"), gte = fromPulse, lte = toPulse))
           .filter(Predicates.range(col("timestamp"), gte = fromTimestamp, lte = toTimestamp))
         // Cut the page and attach the filtered total in ONE plan whose
@@ -319,7 +325,12 @@ object Endpoints {
       pulseAsc: Boolean = true, limit: Int = 1000,
       withLinks: Boolean = true): DataFrame = {
     require(Pagination.validLimit(limit), s"limit must be in [1,1000]: $limit")
-    val d = dropsView(spark, dir)
+    lazy val chain = Domain.pulseChainIndex(spark, dir)
+    // over a store, drop hashes from the chain index's own pulses
+    // snapshot, the version the edge pulses below come from
+    val d =
+      if (StoreViews.isStore(spark, dir)) StoreViews.jetDrops(spark, dir, chain.pulses)
+      else dropsView(spark, dir)
     val filtered = d
       .filter(Predicates.range(col("pulse_number"), gte = fromPulse, lte = toPulse))
       .filter(JetFunctions.jetTreePredicate(col("jet_id"), jetPrefix))
@@ -359,7 +370,6 @@ object Endpoints {
         // both edge pulses answer from the driver-held chain index with
         // zero Spark jobs, including GetPulse's existence check on the
         // stored prev (updatePrevPulse semantics)
-        val chain = Domain.pulseChainIndex(spark, dir)
         val prevEdge = chain.storedPrev(lo).filter(_ > 0).filter(chain.exists)
         val nextEdge = chain.nextSavedAfter(hi)
         val edgePulses = prevEdge.toSeq ++ nextEdge.toSeq

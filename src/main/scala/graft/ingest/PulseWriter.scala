@@ -1,6 +1,6 @@
 package graft.ingest
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.types.StructType
 
@@ -18,6 +18,11 @@ import org.apache.spark.sql.types.StructType
   * for the manifest's retention window, so concurrent readers finish
   * against the snapshot they planned.
   *
+  * A commit is two halves: [[prepare]] transforms the wire rows in the
+  * driver with no Spark at all, and [[write]] writes and publishes both
+  * tables. The [[graft.Ingest]] follower prepares the next pulse while
+  * its writer thread writes the previous one.
+  *
   * At 100 TB this is also the right physical layout: pulse-range predicates
   * prune partitions; within a partition rows are sorted by
   * (jet_id, order) so min/max row-group stats make jet and keyset
@@ -25,39 +30,57 @@ import org.apache.spark.sql.types.StructType
   */
 object PulseWriter {
 
-  /** What a pulse commit published: the pulse's drop rows (one per
-    * (pulse, jet)), and the manifest version each table got — none for a
-    * pulse with no records, which writes nothing.
+  /** A pulse made ready to write, in the driver and without Spark: its
+    * [[Spine]] rows and its drop rows, one per (pulse, jet) in the stored
+    * drop shape, carrying the drop's `record_amount` and minimum
+    * `timestamp`. Records keep the spine's (pulse, jet, order) order,
+    * drops are sorted by (pulse, jet).
+    */
+  final case class Prepared(records: Seq[Row], drops: Seq[Row])
+
+  /** What a pulse commit published: the pulse's drop rows, and the
+    * manifest version each table got — none for a pulse with no records,
+    * which writes nothing.
     */
   final case class Committed(drops: Seq[Row], manifests: Map[String, TableManifest.Snapshot])
 
-  /** The two-table pulse commit behind every [[graft.Ingest]] daemon
-    * write (follower, maintainer reload and sequencer gap reload): the
-    * spine → records → jet_drops contract in one place. The [[Spine]]
-    * runs in the driver, and each drop's `record_amount` and minimum
-    * `timestamp` come from its rows there; both tables are then written
-    * from those driver-held rows by [[TableManifest.writeRows]], so a
-    * driver-built wire frame costs no Spark job at all. Records keep the
-    * spine's (pulse, jet, order) order, drops are sorted by (pulse, jet).
-    * The drop rows let daemon-side registers come for free from the
-    * commit itself, like the reference's processor populating the
-    * controller's `jetDropRegister`.
+  /** The stored drop shape, its key columns typed as the spine types them. */
+  private val dropSchema: StructType = StructType(
+    Seq(Spine.schema("pulse_number"), Spine.schema("jet_id")) ++
+      graft.model.Schemas.jetDrops.fields.drop(2))
+
+  /** The transform half of a pulse commit: the pulse's wire rows
+    * ([[graft.model.Schemas.wireRecords]] column order) through the
+    * [[Spine]], and the drop rows grouped from the result. The drop rows
+    * let daemon-side registers come for free from the commit itself, like
+    * the reference's processor populating the controller's
+    * `jetDropRegister`.
     */
-  def commitPulse(wire: DataFrame, basePath: String): Committed = {
-    val spark = wire.sparkSession
-    val (schema, records) = Spine.rows(wire)
-    val Seq(pulse, jet, ts) = Seq("pulse_number", "jet_id", "timestamp").map(schema.fieldIndex)
-    // the stored drop shape, its key columns typed as the spine types them
-    val dropSchema = StructType(
-      Seq(schema(pulse), schema(jet)) ++ graft.model.Schemas.jetDrops.fields.drop(2))
+  def prepare(wire: Seq[Row]): Prepared = {
+    val records = Spine.records(wire)
+    val Seq(pulse, jet, ts) = Seq("pulse_number", "jet_id", "timestamp").map(Spine.schema.fieldIndex)
     val drops = records.groupBy(r => (r.getLong(pulse), r.getString(jet))).toSeq.sortBy(_._1)
       .map { case ((p, j), rs) =>
         new GenericRowWithSchema(Array(p, j, rs.size, rs.map(_.getLong(ts)).min), dropSchema): Row
       }
-    val manifests = Seq("records" -> (schema, records), "jet_drops" -> (dropSchema, drops))
+    Prepared(records, drops)
+  }
+
+  /** The write half behind every [[graft.Ingest]] daemon write (follower,
+    * maintainer reload and sequencer gap reload): records, then
+    * jet_drops, each written from the driver-held rows by
+    * [[TableManifest.writeRows]], so a commit costs no Spark job.
+    */
+  def write(spark: SparkSession, prepared: Prepared, basePath: String): Committed = {
+    val manifests = Seq("records" -> (Spine.schema, prepared.records),
+        "jet_drops" -> (dropSchema, prepared.drops))
       .flatMap { case (table, (s, rows)) =>
         TableManifest.writeRows(spark, s"$basePath/$table", "pulse_number", s, rows).map(table -> _)
       }.toMap
-    Committed(drops, manifests)
+    Committed(prepared.drops, manifests)
   }
+
+  /** [[prepare]] then [[write]] over a wire frame's collected rows. */
+  def commitPulse(wire: DataFrame, basePath: String): Committed =
+    write(wire.sparkSession, prepare(wire.collect().toSeq), basePath)
 }

@@ -16,8 +16,7 @@ import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{DataFrame, GraftColumnBridge, Row, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.encoders.{ExpressionEncoder, RowEncoder}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
@@ -321,7 +320,9 @@ object TableManifest {
       val ctx = new TaskAttemptContextImpl(job.getConfiguration,
         new TaskAttemptID(new TaskID(new JobID("graft", 0), TaskType.MAP, 0), 0))
       val name = s"part-00000-${UUID.randomUUID()}.c000${factory.getFileExtension(ctx)}"
-      val toInternal = ExpressionEncoder(RowEncoder.encoderFor(dataSchema)).createSerializer()
+      // the interpreted converter: an encoder's serializer would generate
+      // and compile code on every call, which costs more than these rows
+      val toInternal = CatalystTypeConverters.createToCatalystConverter(dataSchema)
       val fs = new Path(tablePath).getFileSystem(conf)
       val before = groups.keys.map(k => k -> listPartitionFiles(fs, tablePath, k).toSeq.sorted).toMap
       val written = mutable.ArrayBuffer.empty[Path]
@@ -329,7 +330,8 @@ object TableManifest {
         val file = new Path(s"$tablePath/$k/$name")
         written += file
         val out = factory.newInstance(file.toString, dataSchema, ctx)
-        try rs.foreach(r => out.write(toInternal(Row.fromSeq(keep.map(r.get)))))
+        try rs.foreach(r =>
+          out.write(toInternal(Row.fromSeq(keep.map(r.get))).asInstanceOf[InternalRow]))
         finally out.close()
       } catch {
         case NonFatal(e) =>
@@ -418,9 +420,17 @@ object TableManifest {
     * first commit that never published, and are never served.
     */
   def readTable(spark: SparkSession, tablePath: String): Option[DataFrame] =
-    snapshot(spark, tablePath).filter(_.partitions.nonEmpty).map { snap =>
-      graft.sources.RelationCache.versionedParquet(spark, tablePath, snap.version) {
-        spark.read.option("basePath", tablePath).parquet(snap.files(tablePath): _*)
+    readTable(spark, tablePath, snapshot(spark, tablePath))
+
+  /** [[readTable]] of the snapshot `snap` of `tablePath`: a request that
+    * already resolved the table's snapshot reads that version, with no
+    * second listing that a commit could move in between.
+    */
+  def readTable(spark: SparkSession, tablePath: String,
+      snap: Option[Snapshot]): Option[DataFrame] =
+    snap.filter(_.partitions.nonEmpty).map { s =>
+      graft.sources.RelationCache.versionedParquet(spark, tablePath, s.version) {
+        spark.read.option("basePath", tablePath).parquet(s.files(tablePath): _*)
       }
     }
 

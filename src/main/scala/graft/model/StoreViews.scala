@@ -62,7 +62,10 @@ import graft.ingest.TableManifest
   *    `/pulses/{pulse}/jet-drops`, `/jet-drops/{id}`,
   *    `/jet-drops/{id}/records`) pay ONE `_manifests/` listing per table
   *    they read: the pulses table's is the chain index's
-  *    ([[Domain.pulseChainIndex]]), whose snapshot they read from.
+  *    ([[Domain.pulseChainIndex]]), whose snapshot they read from. The
+  *    two routes still planned over the Spark views (a timestamp-bounded
+  *    `/pulses` page, `/jets/{jet}/jet-drops`) read the pulses view from
+  *    that same snapshot, so they list the pulses manifests once too.
   *
   * A table with no committed manifest serves as empty; a store written
   * before manifests is not read.
@@ -185,6 +188,15 @@ object StoreViews {
     * over the pulses chain (broadcast — one row per pulse).
     */
   def jetDrops(spark: SparkSession, dir: String): DataFrame =
+    jetDrops(spark, dir, TableManifest.snapshot(spark, s"$dir/pulses"))
+
+  /** [[jetDrops]] with the chain taken from the pulses snapshot
+    * `pulsesSnap`: a request holding the chain index's snapshot
+    * ([[Domain.PulseChainIndex.pulses]]) hashes its drops over the same
+    * version its links come from.
+    */
+  def jetDrops(spark: SparkSession, dir: String,
+      pulsesSnap: Option[TableManifest.Snapshot]): DataFrame =
     TableManifest.readTable(spark, s"$dir/jet_drops")
       .fold(emptyFrame(spark, DropsServingSchema)) { raw =>
         val drops = raw.select(
@@ -192,7 +204,7 @@ object StoreViews {
           col("jet_id"),
           col("record_amount"),
           col("timestamp"))
-        val chain = pulses(spark, dir)
+        val chain = pulses(spark, dir, pulsesSnap)
           .select(col("pulse_number").as("pn"), col("prev_pulse_number").as("prev_pn"))
         withDropHashes(drops.join(broadcast(chain), col("pulse_number") === col("pn"), "left")
           .drop("pn"))
@@ -214,7 +226,13 @@ object StoreViews {
     * bucket partition column is a flush concern, never served).
     */
   def pulses(spark: SparkSession, dir: String): DataFrame =
-    TableManifest.readTable(spark, s"$dir/pulses")
+    pulses(spark, dir, TableManifest.snapshot(spark, s"$dir/pulses"))
+
+  /** [[pulses]] of the pulses snapshot `snap` (a request's chain index's,
+    * [[Domain.PulseChainIndex.pulses]]).
+    */
+  def pulses(spark: SparkSession, dir: String, snap: Option[TableManifest.Snapshot]): DataFrame =
+    TableManifest.readTable(spark, s"$dir/pulses", snap)
       .fold(emptyFrame(spark, PulsesServingSchema))(servingPulses)
 
   private def servingPulses(raw: DataFrame): DataFrame = raw.select(

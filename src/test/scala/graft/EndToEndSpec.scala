@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.gen.Fixtures
-import graft.ingest.Spine
 import graft.operators.{Completeness, JetLinkage}
 
 /** The reference's heavy-mock layer re-expressed: generated scenarios run
@@ -13,7 +12,7 @@ class EndToEndSpec extends SparkSpec {
 
   test("lifeline scenario: ingest spine recovers causal order end-to-end") {
     val wire = Fixtures.lifelineWire(spark, "e2e", nPulses = 4, amendsPerPulse = 2)
-    val withOrder = Spine(wire)
+    val withOrder = spineFrame(wire)
 
     // persist as the real layout and read back (S3 partition commit)
     val tmp = java.nio.file.Files.createTempDirectory("graft-e2e").toString
@@ -67,7 +66,7 @@ class EndToEndSpec extends SparkSpec {
 
   test("multi-pulse batches: pagination invariants over bulk ingest") {
     val wire = Fixtures.multiPulseBatches(spark, nPulses = 3, recordsPerPulse = 10)
-    val withOrder = Spine(wire)
+    val withOrder = spineFrame(wire)
     // order is dense 1..N within each (pulse, jet)
     val dense = withOrder.groupBy("pulse_number", "jet_id")
       .agg(count(lit(1)).as("n"), max("order").as("mx"), min("order").as("mn"))

@@ -30,6 +30,15 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     graft.ingest.TableManifest.writeRows(spark, tablePath, partCol, df.schema,
       df.collect().toSeq, now)
 
+  /** The ingest spine of `wire` ([[graft.ingest.PulseWriter.prepare]]'s
+    * records, in [[graft.ingest.Spine.schema]]) as a frame over the
+    * driver-held rows.
+    */
+  def spineFrame(wire: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(
+      graft.ingest.PulseWriter.prepare(wire.collect().toSeq).records: _*),
+      graft.ingest.Spine.schema)
+
   /** Count the Spark jobs `body` submits, including jobs from threads it
     * starts (they inherit the job group). Jobs are tagged with a unique
     * job group so concurrent work from other suites on the shared session

@@ -1,6 +1,8 @@
 package graft.ingest
 
-import java.util.concurrent.TimeUnit
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.functions._
 import org.sparkproject.connect.grpc.Server
@@ -432,7 +434,9 @@ class IngestServeSpec extends SparkSpec {
       assert(h3.daemon.ingestedCount < nLife1,
         s"summary-loss recovery left closed history resident: " +
           s"${h3.daemon.ingestedCount} entries")
-      assert(pulsesSnapshot(base).flatMap(_.summary).exists(_.span == expectedSpan2),
+      // only a maintainer flush writes the summary, and the sequential
+      // mark can pass before the tick that flushes it
+      assert(await()(pulsesSnapshot(base).flatMap(_.summary).exists(_.span == expectedSpan2)),
         "the recovered span must be re-persisted by the next flush")
     } finally {
       h3.stop(); s3.shutdownNow(); s3.awaitTermination(5, TimeUnit.SECONDS)
@@ -710,7 +714,9 @@ class IngestServeSpec extends SparkSpec {
       assert(body.contains(s"gbe_ingest_known_pulses $nPulses"), body)
       assert(body.contains("gbe_ingest_open_frontier"), body)
       assert(body.contains(s"gbe_ingest_commits_total $nPulses"), body)
-      assert(body.contains("# TYPE gbe_ingest_commit_ms_sum counter"), body)
+      // the follower's two stages and the writer's write, timed apart
+      Seq("fetch", "prepare", "commit").foreach(stage =>
+        assert(body.contains(s"# TYPE gbe_ingest_${stage}_ms_sum counter"), body))
       // the last manifest committed per table, as the commits returned it:
       // one records and one jet_drops version per pulse, each listing its
       // pulses' files and tombstoning the manifest it superseded
@@ -865,7 +871,7 @@ class IngestServeSpec extends SparkSpec {
       startPulse = start)
     // the crash window between commitPulse's two commits: the records
     // commit published the pulse, the process died before jet_drops
-    commitFrame(Spine(wire), s"$base/records")
+    commitFrame(spineFrame(wire), s"$base/records")
     assert(TableManifest.readTable(spark, s"$base/jet_drops").isEmpty)
     val daemon = new Ingest.Daemon(spark, base, new ReplayExporter(wire), start, fastCfg).start()
     try assert(await()(daemon.sequentialPulse == start),
@@ -1349,5 +1355,175 @@ class IngestServeSpec extends SparkSpec {
       assert(await()(d3.sequentialPulse == start + delta),
         s"crash-window store never converged: ${d3.snapshot}")
     } finally d3.stop()
+  }
+
+  // ---- the two-stage follower --------------------------------------------
+
+  test("the follower asks for pulse N+1 while pulse N's jet_drops write is blocked") {
+    val local = java.nio.file.Files.createTempDirectory("graft-daemon-overlap").toString
+    val inner = new ReplayExporter(Fixtures.multiPulseBatches(spark, nPulses = 3,
+      recordsPerPulse = 6, startPulse = start))
+    val asked = new CountDownLatch(1)
+    val stream = new Transport.RecordStream {
+      def export(pulse: Long, recordNumber: Int, count: Int): Iterator[Transport.Frame] = {
+        if (pulse == start + delta) asked.countDown()
+        inner.export(pulse, recordNumber, count)
+      }
+    }
+    // pulse N's jet_drops write waits for the request of N+1: a follower
+    // that fetches only after its commit never sends it, and the write
+    // goes on after the 30 s timeout with the overlap recorded missing
+    @volatile var overlapped: Option[Boolean] = None
+    BlockingFileSystem.armed(spark, start) {
+      val seen = asked.await(30, TimeUnit.SECONDS)
+      if (overlapped.isEmpty) overlapped = Some(seen)
+    } {
+      val daemon = new Ingest.Daemon(spark, BlockingFileSystem.path(local), stream, start,
+        fastCfg).start()
+      try assert(await()(daemon.sequentialPulse == start + 2 * delta),
+        s"the daemon never converged: ${daemon.snapshot}")
+      finally daemon.stop()
+    }
+    assert(overlapped.contains(true),
+      s"pulse N+1 was not requested while pulse N's write was blocked: $overlapped")
+    assert(storeTable(local, "records").count() == 18L)
+  }
+
+  test("a failed write rewinds the follower to its pulse: once the failure " +
+      "clears, every pulse is committed exactly once, in order, none skipped") {
+    val local = java.nio.file.Files.createTempDirectory("graft-daemon-rewind").toString
+    val pulses = (0 until 4).map(start + _ * delta)
+    val feed = new ReplayExporter(Fixtures.multiPulseBatches(spark, nPulses = pulses.length,
+      recordsPerPulse = 6, startPulse = start))
+    // data-file creates 1-3 are pulse 0's two files and pulse 1's records;
+    // the 4th, pulse 1's jet_drops, throws while the follower holds pulse 2
+    // prepared. No maintainer tick runs during the feed, so no pulses
+    // flush creates a file in between.
+    val cfg = fastCfg.copy(pulsePeriodMs = 600000L)
+    val daemon = new Ingest.Daemon(spark, FailingFileSystem.path(local), feed, start, cfg)
+    FailingFileSystem.armed(spark, 4) {
+      daemon.start()
+      try assert(await()(daemon.ingestedCount == pulses.length),
+        s"the feed was never committed: ${daemon.snapshot.keySet}")
+      finally daemon.stop()
+    }
+    assert(FailingFileSystem.creates.get > 4, "the failure fired and later writes went on")
+    assert(daemon.commitStats._1 == pulses.length, s"pulse writes: ${daemon.commitStats}")
+    // a jet_drops version is published only by a whole pulse write: the
+    // n-th version adds exactly the n-th pulse
+    val manifests = new java.io.File(s"$local/jet_drops/_manifests").listFiles()
+      .filter(_.getName.matches("v\\d+\\.json")).sortBy(_.getName).toSeq
+      .map(f => TableManifest.parse(
+        new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"), f.lastModified).get)
+    assert(manifests.map(_.partitions.keySet) ==
+      pulses.indices.map(i => pulses.take(i + 1).map(p => s"pulse_number=$p").toSet),
+      s"jet_drops versions: ${manifests.map(_.partitions.keySet.toSeq.sorted)}")
+    assert(feed.probedPulses.count(_ == pulses(1)) >= 2, "the failed pulse was fetched again")
+    assert(feed.probedPulses.count(_ == pulses(2)) >= 2,
+      "the pulse prepared past the failure was dropped and fetched again")
+    pulses.foreach(p => assert(
+      storeTable(local, "records").filter(col("pulse_number") === p).count() == 6L, s"$p"))
+  }
+
+  test("stop() with a prepared, unwritten pulse finishes the write in flight, " +
+      "leaves no ingest thread alive, and the next start commits the dropped pulse") {
+    val local = java.nio.file.Files.createTempDirectory("graft-daemon-stop").toString
+    val (p0, p1) = (start, start + delta)
+    val feed = new ReplayExporter(Fixtures.multiPulseBatches(spark, nPulses = 2,
+      recordsPerPulse = 6, startPulse = start))
+    // counted down once the follower holds pulse 1's end-of-pulse marker
+    val fetched = new CountDownLatch(1)
+    val stream = new Transport.RecordStream {
+      def export(pulse: Long, recordNumber: Int, count: Int): Iterator[Transport.Frame] =
+        feed.export(pulse, recordNumber, count).map { f =>
+          if (pulse == p1 && f.row == null) fetched.countDown()
+          f
+        }
+    }
+    def ingestThreads() = Thread.getAllStackTraces.keySet.asScala
+      .filter(t => t.isAlive && t.getName.startsWith("graft-ingest-")).toSet
+    val before = ingestThreads()
+    val release = new CountDownLatch(1)
+    BlockingFileSystem.armed(spark, p0)(release.await(60, TimeUnit.SECONDS)) {
+      val d1 = new Ingest.Daemon(spark, BlockingFileSystem.path(local), stream, start,
+        fastCfg).start()
+      try {
+        assert(fetched.await(60, TimeUnit.SECONDS),
+          "pulse 1 was never fetched while pulse 0's write was blocked")
+        Thread.sleep(200) // the follower prepares pulse 1 and waits on pulse 0
+        val stopping = new Thread(() => d1.stop())
+        stopping.start()
+        Thread.sleep(200) // stop() waits for the follower
+        release.countDown()
+        stopping.join(60000)
+        assert(!stopping.isAlive, "stop() never returned")
+      } finally { release.countDown(); d1.stop() } // stop() is idempotent
+      assert((ingestThreads() -- before).isEmpty,
+        s"threads outlived stop(): ${(ingestThreads() -- before).map(_.getName)}")
+      assert(d1.snapshot.keySet == Set(p0), s"register: ${d1.snapshot}")
+    }
+    val fs = new org.apache.hadoop.fs.Path(local)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def committed(table: String) =
+      TableManifest.latest(fs, s"$local/$table").toSeq.flatMap(_.partitions.keys).toSet
+    Seq("records", "jet_drops").foreach(t =>
+      assert(committed(t) == Set(s"pulse_number=$p0"), s"$t: ${committed(t)}"))
+    val d2 = new Ingest.Daemon(spark, local, feed, start, fastCfg).start()
+    try assert(await()(d2.lastManifests.get("jet_drops")
+        .exists(_.partitions.contains(s"pulse_number=$p1"))),
+      s"the next start never committed the dropped pulse: ${d2.snapshot}")
+    finally d2.stop()
+    Seq("records", "jet_drops").foreach(t =>
+      assert(committed(t) == Set(p0, p1).map(p => s"pulse_number=$p"), s"$t: ${committed(t)}"))
+  }
+}
+
+/** The local file system mounted under `blocking://`, whose create of a
+  * data file under `jet_drops/pulse_number=<pulse>/` first runs a gate — a
+  * disk that stalls one pulse's drops write. Arm it with
+  * [[BlockingFileSystem.armed]].
+  */
+final class BlockingFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  import org.apache.hadoop.fs.Path
+  import org.apache.hadoop.fs.permission.FsPermission
+  import org.apache.hadoop.util.Progressable
+
+  override def getUri: java.net.URI = java.net.URI.create("blocking:///")
+  override def getScheme: String = "blocking"
+
+  private def check(f: Path): Unit =
+    if (f.getName.endsWith(".parquet") && f.getParent.getParent.getName == "jet_drops" &&
+        f.getParent.getName == s"pulse_number=${BlockingFileSystem.pulse.get}")
+      BlockingFileSystem.gate()
+
+  override def create(f: Path, overwrite: Boolean, bufferSize: Int, replication: Short,
+      blockSize: Long, progress: Progressable): org.apache.hadoop.fs.FSDataOutputStream = {
+    check(f); super.create(f, overwrite, bufferSize, replication, blockSize, progress)
+  }
+
+  override def create(f: Path, permission: FsPermission, overwrite: Boolean, bufferSize: Int,
+      replication: Short, blockSize: Long,
+      progress: Progressable): org.apache.hadoop.fs.FSDataOutputStream = {
+    check(f); super.create(f, permission, overwrite, bufferSize, replication, blockSize, progress)
+  }
+}
+
+object BlockingFileSystem {
+  private val pulse = new java.util.concurrent.atomic.AtomicLong(-1L)
+  @volatile private var gate: () => Unit = () => ()
+
+  /** `local` (an absolute local path) under the `blocking://` scheme. */
+  def path(local: String): String = s"blocking://$local"
+
+  /** Run `body` with `blocking://` mounted and every create of a
+    * `pulseNumber` jet_drops data file running `gateBody` first.
+    */
+  def armed[T](spark: org.apache.spark.sql.SparkSession, pulseNumber: Long)(
+      gateBody: => Unit)(body: => T): T = {
+    spark.sparkContext.hadoopConfiguration.set("fs.blocking.impl",
+      classOf[BlockingFileSystem].getName)
+    gate = () => gateBody
+    pulse.set(pulseNumber)
+    try body finally { pulse.set(-1L); gate = () => () }
   }
 }

@@ -1,7 +1,5 @@
 package graft.ingest
 
-import scala.jdk.CollectionConverters._
-
 import graft.SparkSpec
 import graft.gen.Fixtures
 import org.apache.spark.sql.functions._
@@ -31,7 +29,7 @@ class IngestSpec extends SparkSpec {
   }
 
   test("canonicalize maps union types, drops unsupported, genesis rewrite") {
-    val out = Canonicalize(wire).orderBy("order_hint").collect()
+    val out = wire.collect().toSeq.flatMap(Canonicalize(_)).sortBy(_.getAs[Long]("order_hint"))
     assert(out.length == 4) // unknown_union dropped
     assert(out.map(_.getAs[String]("type")).toSeq ==
       Seq("state", "state", "result", "request"))
@@ -47,7 +45,7 @@ class IngestSpec extends SparkSpec {
   }
 
   test("assignOrder is deterministic and dense per (pulse, jet)") {
-    // W7's order is assigned by Spine: each (pulse, jet) drop is numbered
+    // W7's order is assigned by the spine: each (pulse, jet) drop is numbered
     // densely by chain position, then reference in unsigned byte order
     def b(xs: Int*) = xs.map(_.toByte).toArray
     // drop (70000, "0"): object A chains 0x7f -> 0x01, object B is the one
@@ -59,13 +57,11 @@ class IngestSpec extends SparkSpec {
       (b(0x02), b(0x0c), "1", "activate", null, 70000L),
       (b(0x03), b(0x0c), "0", "activate", null, 70010L))
     def numbered(rs: Seq[(Array[Byte], Array[Byte], String, String, Array[Byte], Long)]) =
-      Spine(spark.createDataFrame(rs.zipWithIndex.map {
+      PulseWriter.prepare(rs.zipWithIndex.map {
         case ((id, obj, jet, tpe, prev, pulse), i) =>
           org.apache.spark.sql.Row(i.toLong, id, obj, jet, tpe, null, null, prev, null, pulse)
-      }.asJava, graft.model.Schemas.wireRecords))
-        .select(col("reference"), col("pulse_number"), col("jet_id"), col("order"))
-        .collect().map(r => (r.getAs[Array[Byte]](0).head & 0xff, r.getLong(1),
-          r.getString(2), r.getInt(3))).toSet
+      }).records.map(r => (r.getAs[Array[Byte]]("reference").head & 0xff,
+        r.getAs[Long]("pulse_number"), r.getAs[String]("jet_id"), r.getAs[Int]("order"))).toSet
     val out = numbered(recs)
     assert(out == Set((0x7f, 70000L, "0", 1), (0x80, 70000L, "0", 2), (0x01, 70000L, "0", 3),
       (0x02, 70000L, "1", 1), (0x03, 70010L, "0", 1)))

@@ -14,9 +14,10 @@ import graft.operators.{ChainNode, ChainSort}
 final case class ChainedOut(key: String, groupKey: String, chainPos: Int)
 
 /** The distributed spine the driver-side [[Spine]] replaced, kept verbatim
-  * as the reference the new spine must reproduce row for row: a
-  * `groupByKey` chain sort, a join back on `hex(reference)`, and a
-  * `row_number` window over (pulse, jet).
+  * as the reference the new spine must reproduce row for row: the Column
+  * canonicalization ([[ColumnCanonicalize]]), a `groupByKey` chain sort, a
+  * join back on `hex(reference)`, and a `row_number` window over
+  * (pulse, jet).
   */
 object DistributedSpine {
 
@@ -54,7 +55,7 @@ object DistributedSpine {
   }
 
   def apply(wire: DataFrame): DataFrame = {
-    val canon = Canonicalize(wire)
+    val canon = ColumnCanonicalize(wire)
     val nodes = canon.select(
       hex(col("reference")).as("key"),
       concat_ws("|", col("pulse_number"), col("jet_id"),
@@ -90,8 +91,12 @@ class SpineEquivalenceSpec extends SparkSpec {
       case v => String.valueOf(v)
     }.mkString("|")).sorted
 
-  private def assertSame(wire: DataFrame): Seq[String] = {
-    val got = Spine(wire)
+  /** The oracle's schema follows its input frame's nullability, so the
+    * wire is rebuilt in [[Schemas.wireRecords]], the daemon's wire shape.
+    */
+  private def assertSame(fixture: DataFrame): Seq[String] = {
+    val wire = spark.createDataFrame(fixture.collect().toSeq.asJava, Schemas.wireRecords)
+    val got = spineFrame(wire)
     val want = DistributedSpine(wire)
     assert(got.schema == want.schema)
     val rows = rowsOf(got)
@@ -154,7 +159,7 @@ class SpineEquivalenceSpec extends SparkSpec {
       // duplicate state key
       ("d1", "dup", "activate", null, P, "0"),
       ("d1", "dup", "amend", null, P, "0")))
-    val rows = Spine(wire).select(decode(col("reference"), "UTF-8"), col("order"))
+    val rows = spineFrame(wire).select(decode(col("reference"), "UTF-8"), col("order"))
       .collect().map(r => r.getString(0) -> r.getInt(1)).toMap
     assert(rows == Map("ok1" -> 1, "ok2" -> 2, "okr" -> 3))
     assertSame(wire)
@@ -166,7 +171,7 @@ class SpineEquivalenceSpec extends SparkSpec {
       ("r", "obj", "incoming_request", null, P, "0"),
       ("r", "obj", "incoming_request", null, P, "0"),
       ("s", "obj", "activate", null, P, "0")))
-    val got = Spine(wire)
+    val got = spineFrame(wire)
     assert(got.count() == 3)
     assert(got.select("order").collect().map(_.getInt(0)).sorted.toSeq == Seq(1, 2, 3))
     // the join on hex(reference) pairs each "r" row with both chain rows

@@ -57,7 +57,7 @@ object DataFrameWriterPath {
 
   def commitPulse(wire: DataFrame, basePath: String): Seq[Row] = {
     val spark = wire.sparkSession
-    val (schema, records) = Spine.rows(wire)
+    val (schema, records) = (Spine.schema, PulseWriter.prepare(wire.collect().toSeq).records)
     val Seq(pulse, jet, ts) = Seq("pulse_number", "jet_id", "timestamp").map(schema.fieldIndex)
     val dropSchema = StructType(Seq(schema(pulse), schema(jet),
       StructField("record_amount", IntegerType, nullable = false),
