@@ -266,7 +266,8 @@ object Ingest {
       * mark is the max persisted sequential pulse, and the cursor starts
       * past the newest known pulse. Both reads take the files the
       * committed manifests name and read them in the driver
-      * ([[TableManifest.readRows]]), so a start runs no Spark job.
+      * ([[TableManifest.readRows]]), so a start runs no Spark job and
+      * builds no Catalyst plan.
       *
       * Bounded, not O(history): every flush commits a
       * [[TableManifest.Summary]] in the same manifest as its rows (the
@@ -351,21 +352,22 @@ object Ingest {
           snap.partitions.keys.filter(bucketOf(_).exists(_ >= s.frontierBucket))
         case _ => snap.partitions.keys
       }
+      val columns = Schemas.pulses.fieldNames.toSeq.filterNot(_ == "pulse_bucket")
+      val at = columns.zipWithIndex.toMap
       val rows = TableManifest.readRows(spark, pulsesPath.toString, snap, seeded,
-        "pulse_bucket", Schemas.pulses,
-        Schemas.pulses.fieldNames.toSeq.filterNot(_ == "pulse_bucket")).collect()
+        "pulse_bucket", Schemas.pulses, columns)
       lock.synchronized {
         rows.foreach { r =>
-          val p = r.getAs[Long]("pulse_number")
+          val p = r.getLong(at("pulse_number"))
           val e = PulseEntry(
-            prev = r.getAs[Long]("prev_pulse_number"),
+            prev = r.getLong(at("prev_pulse_number")),
             jets = Set.empty,
-            jetDropAmount = r.getAs[Int]("jet_drop_amount"),
-            recordAmount = r.getAs[Long]("record_amount"),
-            resultAmount = r.getAs[Long]("result_amount"),
-            timestamp = r.getAs[Long]("timestamp"),
-            complete = r.getAs[Boolean]("is_complete"),
-            sequential = r.getAs[Boolean]("is_sequential"))
+            jetDropAmount = r.getInt(at("jet_drop_amount")),
+            recordAmount = r.getLong(at("record_amount")),
+            resultAmount = r.getLong(at("result_amount")),
+            timestamp = r.getLong(at("timestamp")),
+            complete = r.getBoolean(at("is_complete")),
+            sequential = r.getBoolean(at("is_sequential")))
           entries.update(p, e)
           if (!(e.complete && e.sequential)) open += p
         }
@@ -411,7 +413,7 @@ object Ingest {
       dropsSnap.foreach { drops =>
         val jets = TableManifest.readRows(spark, s"$basePath/jet_drops", drops,
           openSnap.map(p => s"pulse_number=$p"), "pulse_number", Schemas.jetDrops,
-          Seq("jet_id", "record_amount")).collect()
+          Seq("jet_id", "record_amount"))
           .groupBy(_.getLong(2))
         lock.synchronized {
           jets.foreach { case (p, rs) =>
@@ -424,7 +426,7 @@ object Ingest {
             // after such a revert would re-seal the pulse complete via
             // its (still on-disk) cover while serving record_amount=0
             entries.get(p).foreach { e =>
-              val cover = rs.map(_.getString(0)).toSet
+              val cover = rs.map(_.getUTF8String(0).toString).toSet
               val records = rs.map(_.getInt(1).toLong).sum
               entries.update(p, e.copy(jets = cover, jetDropAmount = cover.size,
                 recordAmount = records))

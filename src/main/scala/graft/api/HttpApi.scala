@@ -5,10 +5,10 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.util.concurrent.Executors
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{Row, SparkSession}
 
 import graft.functions.Codecs
+import graft.model.Rows
 
 /** The reference's HTTP frame (`cmd/api/main.go`, generated echo router)
   * over the [[Endpoints]] functions, on the JDK's built-in
@@ -36,16 +36,19 @@ import graft.functions.Codecs
   * scheduling in the session keeps one heavy page from starving point
   * lookups.
   *
-  * Serialization is driver-side string building over the ≤1000-row page
-  * (validation bounds it) — the API boundary, not a distributed op.
-  * `.collect()` happens here. Over the corpus, and for the other list
-  * routes over a store, the query is a Catalyst plan end to end. Over an
-  * ingest store the four pulse-keyed routes (`/pulses/{pulse}`,
-  * `/pulses/{pulse}/jet-drops`, `/jet-drops/{id}`,
-  * `/jet-drops/{id}/records`) and `/pulses` pages with no timestamp
-  * bound read the partitions their keys name in the driver and page
-  * those rows there ([[Endpoints]]); the presentation below folds over
-  * that local relation, so those answers run no Spark job.
+  * Every route answers from driver rows ([[graft.model.Rows]]): the
+  * handlers call the row form of each [[Endpoints]] function, present
+  * the ≤1000-row page (validation bounds it) with [[Mappers]], and render
+  * it with [[JsonOut]] — the API boundary, not a distributed op. Five
+  * routes are row programs end to end: `/pulses` with no timestamp bound,
+  * `/pulses/{pulse}`, `/pulses/{pulse}/jet-drops`, `/jet-drops/{id}` and
+  * `/jet-drops/{id}/records` read their rows (over an ingest store in
+  * the driver, from the partitions their keys name; over the corpus by
+  * one collect) and filter, page, repair and present them in Scala, so
+  * over a store they run no Spark job and build no Catalyst plan. The
+  * others (a timestamp-bounded `/pulses`, `/jets/{jet}/jet-drops`,
+  * lifeline, record search) run their Spark plan up to one collect and
+  * present the collected rows the same way.
   */
 object HttpApi {
 
@@ -301,29 +304,30 @@ object HttpApi {
         .map(graft.model.Domain.refToKey(spark, dir, _)))
   }
 
-  /** The `total` carried by a collected page (0 for an empty page). */
-  private def totalOf(rows: Array[Row]): Long =
-    if (rows.nonEmpty && rows.head.schema.fieldNames.contains("total"))
-      rows.head.getAs[Long]("total")
-    else rows.length.toLong
+  /** The `total` carried by a page (0 for an empty page). */
+  private def totalOf(page: Rows): Long =
+    if (page.rows.nonEmpty && page.schema.fieldNames.contains("total"))
+      page.rows.head.getLong(page.at("total"))
+    else page.rows.length.toLong
 
   /** `{total, result}` with the reference's empty-page contract: the
     * count runs over the same filtered query regardless of the page
     * (`etl/storage/storage.go:229-255`), so an offset past the last row
     * returns the TRUE total with an empty result — not `{"total":0}`.
     * ONE mechanism across every offset-capable list endpoint: pages are
-    * built with [[graft.operators.Pagination.pageWithTotalCarried]],
-    * which carries the count on EVERY row including the empty-page
-    * sentinel (marker false, excluded from the rendered rows), so the
+    * built with [[graft.operators.Pagination.pageWithTotalCarried]] or,
+    * over driver rows, [[graft.operators.Pagination.pageRows]], which
+    * carry the count on EVERY row including the empty-page sentinel
+    * (marker false, excluded from the rendered rows), so the
     * out-of-range corner costs the same single pass as an in-range page.
     * The marker-less branch serves the limit-only by-jet-id endpoint,
     * where an empty page can only mean a zero total.
     */
-  private[api] def envelope(rows: Array[Row]): String = {
+  private[api] def envelope(page: Rows): String = {
     val marker = graft.operators.Pagination.PageRowMarker
-    if (rows.nonEmpty && rows.head.schema.fieldNames.contains(marker))
-      JsonOut.pageEnvelope(rows.filter(_.getAs[Boolean](marker)), totalOf(rows))
-    else JsonOut.pageEnvelope(rows, totalOf(rows))
+    if (page.schema.fieldNames.contains(marker))
+      JsonOut.pageEnvelope(page.rows.filter(_.getBoolean(page.at(marker))), totalOf(page))
+    else JsonOut.pageEnvelope(page.rows, totalOf(page))
   }
 
   // ---- handlers --------------------------------------------------------
@@ -356,18 +360,16 @@ object HttpApi {
     // are integral, so lt v == lte v-1 (filterByPulseNumber, storage.go)
     val lte = Seq(fromPulse, pnLte, pnLt.map(_ - 1)).flatten.reduceOption(_ min _)
     val gte = Seq(pnGte, pnGt.map(_ + 1)).flatten.reduceOption(_ max _)
-    val page = presentPulses(Endpoints.pulses(spark, dir,
+    (200, envelope(Mappers.presentPulses(Endpoints.pulsesRows(spark, dir,
       Endpoints.PageParams(limit, offset),
-      fromPulse = gte, toPulse = lte, fromTimestamp = tsGte, toTimestamp = tsLte, asc = asc))
-    (200, envelope(page.collect()))
+      fromPulse = gte, toPulse = lte, fromTimestamp = tsGte, toTimestamp = tsLte, asc = asc))))
   }
 
   private def pulsePoint(spark: SparkSession, dir: String, p: String): (Int, String) =
     p.toLongOption match {
       case None => badRequest(List(("pulse", "should be integer")))
       case Some(pn) =>
-        val rows = presentPulses(Endpoints.pulse(spark, dir, pn)).collect()
-        if (rows.isEmpty) (404, "{}") else (200, JsonOut.obj(rows.head))
+        point(Mappers.presentPulses(Endpoints.pulseRows(spark, dir, pn)))
     }
 
   /** JetDropsByPulseNumber (handlers.go:404-440). Check order: limit/
@@ -395,9 +397,8 @@ object HttpApi {
     }
     if (failures.nonEmpty) return badRequest(failures, code = "400")
     val pn = pulseNum.get
-    val page = presentEmptyLinks(Endpoints.jetDropsByPulse(spark, dir, pn,
-      fromJetId = fromJet, page = Endpoints.PageParams(limit, offset)))
-    (200, envelope(page.collect()))
+    (200, envelope(Mappers.presentEmptyLinks(Endpoints.jetDropsByPulseRows(spark, dir, pn,
+      fromJetId = fromJet, page = Endpoints.PageParams(limit, offset)))))
   }
 
   /** JetDropByID (handlers.go:45-58): a malformed id fails with reason
@@ -405,13 +406,15 @@ object HttpApi {
     * "invalid")` and the literal "400" code.
     */
   private def dropPoint(spark: SparkSession, dir: String, id: String): (Int, String) =
-    Endpoints.jetDropById(spark, dir, id) match {
+    Endpoints.jetDropByIdRows(spark, dir, id) match {
       case None =>
         badRequest(List(("jet drop id", "invalid: wrong jet drop id format")), code = "400")
-      case Some(df) =>
-        val rows = df.collect()
-        if (rows.isEmpty) (404, "{}") else (200, JsonOut.obj(rows.head))
+      case Some(drop) => point(drop)
     }
+
+  /** A point lookup's answer: its one row, or 404 `{}` when absent. */
+  private def point(found: Rows): (Int, String) =
+    found.rows.headOption.fold((404, "{}"))(r => (200, JsonOut.obj(r)))
 
   private def dropRecords(spark: SparkSession, dir: String, id: String,
       q: Map[String, String]): (Int, String) = {
@@ -429,9 +432,8 @@ object HttpApi {
     if (recordType.exists(t => !Set("request", "result", "state").contains(t)))
       failures :+= (("type", "should be 'request', 'state' or 'result'"))
     if (failures.nonEmpty) return badRequest(failures)
-    val page = withIndex(Endpoints.jetDropRecords(spark, dir, id, fromIndex,
-      Endpoints.PageParams(limit, offset), recordType).get)
-    (200, envelope(page.collect()))
+    (200, envelope(Mappers.withIndex(Endpoints.jetDropRecordsRows(spark, dir, id, fromIndex,
+      Endpoints.PageParams(limit, offset), recordType).get)))
   }
 
   private def dropsByJet(spark: SparkSession, dir: String, jet: String,
@@ -470,11 +472,10 @@ object HttpApi {
     // lt v == lte v-1 (same as pulsesList / storage.go filterByPulseNumber)
     val lte = Seq(pnLte, pnLt.map(_ - 1)).flatten.reduceOption(_ min _)
     val gte = Seq(pnGte, pnGt.map(_ + 1)).flatten.reduceOption(_ max _)
-    val rows = presentDropLinks(Endpoints.jetDropsByJetId(spark, dir, prefix,
-      fromPulse = gte, toPulse = lte, pulseAsc = asc, limit = limit)).collect()
     // limit-only endpoint (no offset): an empty page means the filter
     // matched nothing, so the page's own total is already the truth
-    (200, JsonOut.pageEnvelope(rows, totalOf(rows)))
+    (200, envelope(Mappers.presentDropLinks(Endpoints.jetDropsByJetIdRows(spark, dir, prefix,
+      fromPulse = gte, toPulse = lte, pulseAsc = asc, limit = limit))))
   }
 
   private def lifeline(spark: SparkSession, dir: String, ref: String,
@@ -497,11 +498,10 @@ object HttpApi {
     val (tsGte, f8) = longParam(q, "timestamp_gte")
     val failures = f1 ++ f2 ++ f3 ++ f4 ++ f5 ++ f6 ++ f7 ++ f8
     if (failures.nonEmpty) return badRequest(failures)
-    val page = withIndex(Endpoints.objectLifeline(spark, dir, objectRef.get, asc = asc,
-      fromIndex = fromIndex, fromPulse = pnGt.map(_ + 1), toPulse = pnLt.map(_ - 1),
-      fromTimestamp = tsGte, toTimestamp = tsLte,
-      page = Endpoints.PageParams(limit, offset)))
-    (200, envelope(page.collect()))
+    (200, envelope(Mappers.withIndex(Rows.collect(Endpoints.objectLifeline(spark, dir,
+      objectRef.get, asc = asc, fromIndex = fromIndex, fromPulse = pnGt.map(_ + 1),
+      toPulse = pnLt.map(_ - 1), fromTimestamp = tsGte, toTimestamp = tsLte,
+      page = Endpoints.PageParams(limit, offset))))))
   }
 
   /** Search answers with a typed redirect hint (`{type, meta}`), not the
@@ -549,74 +549,12 @@ object HttpApi {
             field = "description")
       }
     }
-
-  /** Records pages in the API shape (`RecordToAPI`, `api/mappers.go:
-    * 19-55`): the `index` string ("pulse:order" — the `from_index`
-    * cursor token), the containing `jet_drop_id`, and the reference's
-    * field name `timestamp`; the raw `order`/`ts_sec` columns are
-    * internal and never served (the index carries the order). The
-    * domain's own payload analogs (event_type, value) stay.
-    */
-  private[api] def withIndex(df: DataFrame): DataFrame = df
-    .withColumn("index", Codecs.indexString(col("pulse_number"), col("order")))
-    .withColumn("jet_drop_id", Codecs.jetDropIdString(col("jet_id"), col("pulse_number")))
-    .withColumnRenamed("ts_sec", "timestamp")
-    .drop("order")
-
-  /** HTTP presentation of pulse rows: the `-1` unknown-link sentinel the
-    * storage layer (and our oracle-checked DataFrame contract) carries is
-    * an UNSET pointer in the API body — `PulseToAPI` only assigns
-    * prev/next when != -1 (`api/mappers.go:57-74`), and `omitempty` drops
-    * the field. Nulling here lets the omitempty-aware writer do exactly
-    * that, without touching the -1 contract underneath.
-    */
-  /** HTTP presentation of jet-drop link lists: the comma-joined sorted
-    * `jet_drop_id` strings the oracle-checked layer carries
-    * (`JetLinkage.hashLinkIds`) become arrays of NextPrevJetDrop objects
-    * `{jet_drop_id, jet_id, pulse_number}` (`transformPrevNextResp`,
-    * `api/handlers.go:785-792`) under the API's field names. Pure column
-    * algebra over the ≤1000-row page.
-    */
-  private def presentDropLinks(df: DataFrame): DataFrame =
-    if (!df.columns.contains("prev_ids")) df
-    else {
-      def links(c: org.apache.spark.sql.Column) = transform(
-        filter(split(c, ","), x => length(x) > 0),
-        id => struct(
-          id.as("jet_drop_id"),
-          regexp_extract(id, "^(.*):", 1).as("jet_id"),
-          regexp_extract(id, "([+-]?\\d+)$", 1).cast("long").as("pulse_number")))
-      df.withColumn("prev_jet_drop_id", links(col("prev_ids")))
-        .withColumn("next_jet_drop_id", links(col("next_ids")))
-        .drop("prev_ids", "next_ids")
-    }
-
-  /** JetDropsByPulseNumber renders every drop with EMPTY link arrays —
-    * the reference passes `[]server.NextPrevJetDrop{}` for both sides
-    * (`api/handlers.go:446-449`).
-    */
-  private[api] def presentEmptyLinks(df: DataFrame): DataFrame = df
-    .withColumn("prev_jet_drop_id", lit(Array.empty[String]))
-    .withColumn("next_jet_drop_id", lit(Array.empty[String]))
-
-  private[api] def presentPulses(df: DataFrame): DataFrame = df
-    .withColumn("prev_pulse_number",
-      when(col("prev_pulse_number") === -1L, lit(null).cast("long"))
-        .otherwise(col("prev_pulse_number")))
-    .withColumn("next_pulse_number",
-      when(col("next_pulse_number") === -1L, lit(null).cast("long"))
-        .otherwise(col("next_pulse_number")))
-    // PulseToAPI serves exactly {pulse_number, prev/next, is_complete,
-    // jet_drop_amount, record_amount, timestamp}; the sequential flag and
-    // per-type counters are storage-internal (api/mappers.go:57-74)
-    .drop("is_sequential", "result_amount")
 }
 
-/** Minimal JSON rendering for the bounded API pages. The served views
-  * produce only scalars, strings, and string/long arrays (binary columns
-  * are base64'd to strings by [[Mappers]] before this layer), so a
-  * hand-rolled writer is complete — and deterministic, which the spec
-  * relies on.
+/** Minimal JSON rendering for the bounded API pages. The presented rows
+  * hold only scalars, strings, binary (rendered base64), and arrays of
+  * them or of rows, so a hand-rolled writer is complete — and
+  * deterministic, which the spec relies on.
   */
 object JsonOut {
 
@@ -674,6 +612,6 @@ object JsonOut {
     * supplied by the handler (which knows how to recover it when the
     * page itself is empty — see `HttpApi.envelope`).
     */
-  def pageEnvelope(rows: Array[Row], total: Long): String =
+  def pageEnvelope(rows: scala.collection.Seq[Row], total: Long): String =
     rows.iterator.map(obj).mkString(s"""{"total":$total,"result":[""", ",", "]}")
 }

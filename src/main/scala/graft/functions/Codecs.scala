@@ -3,8 +3,9 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Presentation / cursor codecs (F3, F4, F6, F8) as pure column expressions,
-  * plus the base58 reference codec (F7) as Scala functions for the API edge.
+/** Presentation / cursor codecs (F3, F4, F6, F8) as pure column expressions
+  * and, for rows already in the driver, as Scala functions; plus the base58
+  * reference codec (F7) as Scala functions for the API edge.
   */
 object Codecs {
 
@@ -18,6 +19,10 @@ object Codecs {
   def indexString(pulse: Column, order: Column): Column =
     when(pulse.isNull || order.isNull, lit(null).cast("string"))
       .otherwise(concat_ws(":", pulse.cast("string"), order.cast("string")))
+
+  /** [[indexString]] of one row's values: null when either is null. */
+  def index(pulse: Any, order: Any): String =
+    if (pulse == null || order == null) null else s"$pulse:$order"
 
   /** Parse `"P:O"` → (pulse, order); caller validates shape (P7).
     * ParseInt-strict like `storage.CheckIndex` (storage.go:147-163) — no
@@ -43,6 +48,15 @@ object Codecs {
     concat_ws(":",
       when(jetId.isNull || length(jetId) === 0, lit("*")).otherwise(jetId),
       pulse.cast("string"))
+
+  /** [[jetDropIdString]] of one row's values: a null or empty jet is the
+    * root "*", and a null pulse leaves the id without one (`concat_ws`
+    * skips it).
+    */
+  def jetDropId(jetId: String, pulse: Any): String = {
+    val jet = if (jetId == null || jetId.isEmpty) "*" else jetId
+    if (pulse == null) jet else s"$jet:$pulse"
+  }
 
   private val JetDropIdRe = "^(\\*|[0-1]{1,216}):([+-]?\\d+)$".r
 

@@ -15,9 +15,9 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.paths.SparkPath
-import org.apache.spark.sql.{DataFrame, GraftColumnBridge, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.{FileFormat, OutputWriterFactory, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
@@ -314,22 +314,21 @@ object TableManifest {
         require(!r.isNullAt(p), s"null $partCol in a row for $tablePath")
         s"$partCol=${r.get(p)}"
       }
-      val conf = sessionHadoopConf(spark)
-      val job = Job.getInstance(conf)
-      val factory = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, dataSchema)
-      val ctx = new TaskAttemptContextImpl(job.getConfiguration,
-        new TaskAttemptID(new TaskID(new JobID("graft", 0), TaskType.MAP, 0), 0))
-      val name = s"part-00000-${UUID.randomUUID()}.c000${factory.getFileExtension(ctx)}"
+      val session = spark.conf.getAll
+      val w = writers.compute((spark.sparkContext.applicationId, dataSchema), (_, built) =>
+        if (built != null && built.session == session) built
+        else ParquetWriter(spark, session, dataSchema))
+      val name = s"part-00000-${UUID.randomUUID()}.c000${w.extension}"
       // the interpreted converter: an encoder's serializer would generate
       // and compile code on every call, which costs more than these rows
       val toInternal = CatalystTypeConverters.createToCatalystConverter(dataSchema)
-      val fs = new Path(tablePath).getFileSystem(conf)
+      val fs = new Path(tablePath).getFileSystem(w.conf)
       val before = groups.keys.map(k => k -> listPartitionFiles(fs, tablePath, k).toSeq.sorted).toMap
       val written = mutable.ArrayBuffer.empty[Path]
       try groups.foreach { case (k, rs) =>
         val file = new Path(s"$tablePath/$k/$name")
         written += file
-        val out = factory.newInstance(file.toString, dataSchema, ctx)
+        val out = w.factory.newInstance(file.toString, dataSchema, w.ctx)
         try rs.foreach(r =>
           out.write(toInternal(Row.fromSeq(keep.map(r.get))).asInstanceOf[InternalRow]))
         finally out.close()
@@ -344,12 +343,43 @@ object TableManifest {
         summary, dropOthers))
     }
 
+  /** Spark's parquet writer for one data schema under the session conf
+    * `session`, prepared once: the session Hadoop conf, the job
+    * [[writeRows]]' files belong to, the `OutputWriterFactory` and the
+    * task context each file is opened in.
+    */
+  private final case class ParquetWriter(session: Map[String, String], conf: Configuration,
+      factory: OutputWriterFactory, ctx: TaskAttemptContextImpl) {
+    val extension: String = factory.getFileExtension(ctx)
+  }
+
+  private object ParquetWriter {
+    def apply(spark: SparkSession, session: Map[String, String],
+        dataSchema: StructType): ParquetWriter = {
+      val job = Job.getInstance(sessionHadoopConf(spark, session))
+      val factory = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, dataSchema)
+      ParquetWriter(session, job.getConfiguration, factory,
+        new TaskAttemptContextImpl(job.getConfiguration,
+          new TaskAttemptID(new TaskID(new JobID("graft", 0), TaskType.MAP, 0), 0)))
+    }
+  }
+
+  /** The writer [[writeRows]] uses per (context, data schema), like
+    * [[readRows]]' readers, rebuilt only when the session conf it was
+    * prepared under changes (the codec, the timestamp type and the footer
+    * metadata follow the session conf): a build copies the whole Hadoop
+    * conf and prepares a job, which costs more than the rows of a pulse.
+    */
+  private val writers =
+    new java.util.concurrent.ConcurrentHashMap[(String, StructType), ParquetWriter]()
+
   /** The session conf over the context's Hadoop conf, as Spark's
     * `SessionState.newHadoopConf` builds it for a DataFrameWriter or a scan.
     */
-  private def sessionHadoopConf(spark: SparkSession): Configuration = {
+  private def sessionHadoopConf(spark: SparkSession,
+      session: Map[String, String]): Configuration = {
     val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
-    spark.conf.getAll.foreach { case (k, v) => conf.set(k, v) }
+    session.foreach { case (k, v) => conf.set(k, v) }
     conf
   }
 
@@ -443,33 +473,33 @@ object TableManifest {
 
   /** THE driver reader, the read twin of [[writeRows]]: the rows of the
     * `partitions` named (dir names, `partCol=value`) as `snap` lists their
-    * files — a partition `snap` does not list reads no rows — as a frame
-    * over driver-held rows (a `LocalRelation`). A row holds `columns` of
-    * the table's stored `schema`, read as nullable like any Spark file
-    * scan reads them, then `partCol` as a long.
+    * files — a partition `snap` does not list reads no rows — in that
+    * order, each file's rows in file order. A row holds `columns` of the
+    * table's stored `schema`, null where the file holds null, then
+    * `partCol` as a long.
     *
     * Each file is read in the calling thread by Spark's own parquet
     * reader (`ParquetFileFormat.buildReaderWithPartitionValues`, row
     * mode), with the session conf a scan would use, and only the columns
     * asked for are decoded. No Spark job runs, no directory is listed,
-    * and no footer is read for schema inference: the manifest names the
-    * files and the caller knows the schema. Projections and filters over
-    * the frame fold into its local relation, so collecting them runs no
-    * job either. Nothing read is cached; the reader itself is built once
-    * per (context, table schema, columns), because each build broadcasts
-    * the Hadoop conf.
+    * no footer is read for schema inference (the manifest names the
+    * files and the caller knows the schema), and no Catalyst plan is
+    * built: the caller works on the rows themselves. Nothing read is
+    * cached; the reader itself is built once per (context, table schema,
+    * columns), because each build broadcasts the Hadoop conf.
     */
   def readRows(spark: SparkSession, tablePath: String, snap: Snapshot,
       partitions: Iterable[String], partCol: String, schema: StructType,
-      columns: Seq[String]): DataFrame = {
+      columns: Seq[String]): Vector[InternalRow] = {
     val data = StructType(schema.filterNot(_.name == partCol).map(_.copy(nullable = true)))
     val read = readers.computeIfAbsent(
       (spark.sparkContext.applicationId, partCol, data, columns), _ =>
         new ParquetFileFormat().buildReaderWithPartitionValues(spark, data,
           StructType(Seq(StructField(partCol, LongType, nullable = false))),
           StructType(columns.map(data(_))), Nil,
-          Map(FileFormat.OPTION_RETURNING_BATCH -> "false"), sessionHadoopConf(spark)))
-    val rows = partitions.iterator.distinct.flatMap { k =>
+          Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
+          sessionHadoopConf(spark, spark.conf.getAll)))
+    partitions.iterator.distinct.flatMap { k =>
       val value = InternalRow(k.stripPrefix(s"$partCol=").toLong)
       // one split spanning the whole file: the reader takes the file's
       // length from the file system when it opens the footer
@@ -483,8 +513,6 @@ object TableManifest {
       try it.map(_.copy()).toVector
       finally it match { case c: java.io.Closeable => c.close(); case _ => () }
     }.toVector
-    GraftColumnBridge.localDataFrame(spark,
-      StructType(columns.map(data(_)) :+ StructField(partCol, LongType, nullable = false)), rows)
   }
 
   private val readers = new java.util.concurrent.ConcurrentHashMap[

@@ -361,18 +361,14 @@ object Domain {
 
   /** A decoded 36-byte wire/base58 reference to the serving key space of
     * `dir`: an ingest store keys every reference as xxhash64 of the
-    * stored bytes ([[StoreViews]].refKey), hashed here driver-side with
-    * the SAME function (Catalyst's XxHash64, seed 42 — what
-    * `functions.xxhash64` plans); the testdata corpus synthesizes its
+    * stored bytes ([[StoreViews.refKey]], what `functions.xxhash64`
+    * computes with its seed 42); the testdata corpus synthesizes its
     * 36-byte refs FROM the numeric id, whose low 8 bytes invert the
     * synthesis. Without the store branch, base58 lifeline/search lookups
     * over a store could never match anything.
     */
   def refToKey(spark: SparkSession, dir: String, ref: Array[Byte]): Long =
-    if (StoreViews.isStore(spark, dir))
-      org.apache.spark.sql.catalyst.expressions.XxHash64(
-        Seq(org.apache.spark.sql.catalyst.expressions.Literal(ref)), 42L)
-        .eval(null).asInstanceOf[Long]
+    if (StoreViews.isStore(spark, dir)) StoreViews.refKey(ref)
     else java.nio.ByteBuffer.wrap(ref.takeRight(8)).getLong
 
   /** Register the three domain tables as temp views (plus the library's

@@ -1,7 +1,13 @@
 package graft.model
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.commons.codec.digest.DigestUtils
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.unsafe.Platform
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.ingest.TableManifest
 
@@ -48,20 +54,22 @@ import graft.ingest.TableManifest
   * resolved by one `_manifests/` listing (the change signal; the
   * Postgres analog is snapshot acquisition; the parsed manifest is
   * memoized by version), with no data-directory listing or schema
-  * probe. Two read shapes share the serving programs:
+  * probe. Two read shapes compute the same serving columns:
   *
   *  - the Spark views ([[records]], [[jetDrops]], [[pulses]]) plan over
   *    the snapshot's file list, their relations cached per manifest
   *    VERSION, so staleness is structurally impossible;
   *  - the pulse-keyed reads ([[recordsOf]], [[jetDropsOf]],
   *    [[pulsesOf]], [[pulseLinks]]) read only the partitions their key
-  *    names, in the driver, as a local relation: the reference's indexed
+  *    names, in the driver, and return the serving rows themselves
+  *    ([[Rows]]), built in Scala: the reference's indexed
   *    `WHERE pulse_number = ?` (`etl/storage/storage.go:475-494`) with no
-  *    Spark job and nothing cached but the manifest. The routes built on
-  *    them (`/pulses` without timestamp bounds, `/pulses/{pulse}`,
-  *    `/pulses/{pulse}/jet-drops`, `/jet-drops/{id}`,
-  *    `/jet-drops/{id}/records`) pay ONE `_manifests/` listing per table
-  *    they read: the pulses table's is the chain index's
+  *    Spark job, no Catalyst plan and nothing cached but the manifest.
+  *    The routes built on them (`/pulses` without timestamp bounds,
+  *    `/pulses/{pulse}`, `/pulses/{pulse}/jet-drops`, `/jet-drops/{id}`,
+  *    `/jet-drops/{id}/records`) page and present those rows in the
+  *    driver too, and pay ONE `_manifests/` listing per table they read:
+  *    the pulses table's is the chain index's
   *    ([[Domain.pulseChainIndex]]), whose snapshot they read from. The
   *    two routes still planned over the Spark views (a timestamp-bounded
   *    `/pulses` page, `/jets/{jet}/jet-drops`) read the pulses view from
@@ -129,24 +137,25 @@ object StoreViews {
   private def refKey(c: Column): Column =
     when(c.isNull, lit(null).cast("long")).otherwise(xxhash64(c))
 
-  // Canonical serving schemas, for the EMPTY-TABLE branch below: a brand
-  // new store serves `{total:0}` pages from a schema-stable empty frame
-  // until the daemon's first commit/flush lands — the records table is
-  // written at commit time but the pulses dimension only on the first
-  // maintainer flush (up to a pulse period later), and an endpoint must
-  // not 500 in that window.
-  private val RecordsServingSchema = org.apache.spark.sql.types.StructType(Seq(
+  // Canonical serving schemas: the schema of the driver reads' rows, and
+  // of the EMPTY-TABLE branch of the views below: a brand new store
+  // serves `{total:0}` pages from a schema-stable empty frame until the
+  // daemon's first commit/flush lands — the records table is written at
+  // commit time but the pulses dimension only on the first maintainer
+  // flush (up to a pulse period later), and an endpoint must not 500 in
+  // that window.
+  private val RecordsServingSchema = StructType(Seq(
     field("reference", "long"), field("type", "string"),
     field("object_reference", "long"), field("prototype_reference", "long"),
     field("prev_record_reference", "long"), field("payload", "binary"),
     field("hash", "binary"), field("jet_id", "string"),
     field("pulse_number", "long"), field("order", "int"), field("ts_sec", "long")))
-  private val DropsServingSchema = org.apache.spark.sql.types.StructType(Seq(
+  private val DropsServingSchema = StructType(Seq(
     field("pulse_number", "long"), field("jet_id", "string"),
     field("record_amount", "int"), field("timestamp", "long"),
     field("hash", "string"), field("first_prev_hash", "string"),
     field("second_prev_hash", "string")))
-  private val PulsesServingSchema = org.apache.spark.sql.types.StructType(Seq(
+  private val PulsesServingSchema = StructType(Seq(
     field("pulse_number", "long"), field("prev_pulse_number", "long"),
     field("next_pulse_number", "long"), field("is_complete", "boolean"),
     field("is_sequential", "boolean"), field("timestamp", "long"),
@@ -154,11 +163,9 @@ object StoreViews {
     field("result_amount", "long")))
 
   private def field(name: String, t: String) =
-    org.apache.spark.sql.types.StructField(name,
-      org.apache.spark.sql.catalyst.parser.CatalystSqlParser.parseDataType(t))
+    StructField(name, org.apache.spark.sql.catalyst.parser.CatalystSqlParser.parseDataType(t))
 
-  private def emptyFrame(spark: SparkSession,
-      schema: org.apache.spark.sql.types.StructType): DataFrame =
+  private def emptyFrame(spark: SparkSession, schema: StructType): DataFrame =
     spark.createDataFrame(
       java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
 
@@ -251,67 +258,118 @@ object StoreViews {
   // ---- driver reads for the pulse-keyed routes ----------------------------
   //
   // Each reads only the partitions the key names from ONE snapshot of its
-  // table, in the driver ([[TableManifest.readRows]]); the serving programs
-  // above then run over the local relation, which the optimizer folds, so
-  // no Spark job runs. The pulses snapshot is the chain index's own
-  // ([[Domain.PulseChainIndex.pulses]]), so the pulses rows and drop hashes
-  // a request serves agree with the links the index answers. A table with
-  // no manifest reads as no rows in the same serving shape.
+  // table, in the driver ([[TableManifest.readRows]]), and builds the rows
+  // of the serving shape above from them as plain Scala: the same keys,
+  // hashes and casts the Spark views compute, row by row, with no Catalyst
+  // plan and no Spark job. A key narrower than the partition (a drop's jet)
+  // filters the stored rows before anything is hashed. The pulses snapshot
+  // is the chain index's own ([[Domain.PulseChainIndex.pulses]]), so the
+  // pulses rows and drop hashes a request serves agree with the links the
+  // index answers. A table with no manifest reads as no rows.
 
-  // the stored columns the serving programs read: all but the partition
-  // column and the records' unserved raw_data
+  // the stored columns the serving rows are built from: all but the
+  // partition column and the records' unserved raw_data
   private val RecordColumns =
     Schemas.records.fieldNames.toSeq.filterNot(Set("raw_data", "pulse_number"))
   private val PulseColumns = Schemas.pulses.fieldNames.toSeq.filterNot(_ == "pulse_bucket")
+  private val DropColumns = Seq("jet_id", "record_amount", "timestamp")
 
+  /** The rows of `partitions` of `table` as `snap` lists them, read in
+    * the driver: `columns` of the stored `schema`, then `partCol`.
+    */
   private def stored(spark: SparkSession, dir: String, table: String,
-      snap: Option[TableManifest.Snapshot], schema: org.apache.spark.sql.types.StructType,
-      partCol: String, columns: Seq[String])(
-      partitions: TableManifest.Snapshot => Iterable[String]): DataFrame = {
+      snap: Option[TableManifest.Snapshot], schema: StructType, partCol: String,
+      columns: Seq[String])(partitions: TableManifest.Snapshot => Iterable[String])
+      : Vector[InternalRow] = {
     val s = snap.getOrElse(TableManifest.Snapshot(0L, Map.empty, Nil))
     TableManifest.readRows(spark, s"$dir/$table", s, partitions(s), partCol, schema, columns)
   }
 
-  /** The records of one pulse in [[records]]' serving shape, read from its
-    * one `pulse_number` partition in the driver.
+  /** Scala values of `row` in the stored `columns` of `schema`, then the
+    * partition column as a long.
     */
-  def recordsOf(spark: SparkSession, dir: String, pulse: Long): DataFrame =
-    servingRecords(stored(spark, dir, "records", TableManifest.snapshot(spark, s"$dir/records"),
-      Schemas.records, "pulse_number", RecordColumns)(_ => Seq(s"pulse_number=$pulse")))
+  private def toScala(schema: StructType, columns: Seq[String]): InternalRow => Row =
+    CatalystTypeConverters.createToScalaConverter(StructType(
+      columns.map(schema(_)) :+ StructField("partition", LongType)))
+      .asInstanceOf[InternalRow => Row]
 
-  /** The drops of `pulses` in [[jetDrops]]' serving shape, from one
-    * jet_drops snapshot read in the driver. Each pulse's stored prev, which
-    * the hashes need, comes from `chain`.
+  /** The serving key of identity bytes: xxhash64 with seed 42, what
+    * `functions.xxhash64` computes for one binary column (the views'
+    * column `refKey`). Nulls stay null.
     */
-  def jetDropsOf(spark: SparkSession, dir: String, chain: Domain.PulseChainIndex,
-      pulses: Seq[Long]): DataFrame = {
-    val prevPn = pulses.distinct.foldLeft(lit(null).cast("long")) { (other, p) =>
-      chain.storedPrev(p).fold(other)(prev => when(col("pulse_number") === p, lit(prev))
-        .otherwise(other))
-    }
-    val raw = stored(spark, dir, "jet_drops", TableManifest.snapshot(spark, s"$dir/jet_drops"),
-      Schemas.jetDrops, "pulse_number", Seq("jet_id", "record_amount", "timestamp"))(
-      _ => pulses.map(p => s"pulse_number=$p"))
-    withDropHashes(raw.select(
-      col("pulse_number"),
-      col("jet_id"),
-      col("record_amount"),
-      col("timestamp"),
-      prevPn.as("prev_pn")))
+  def refKey(ref: Array[Byte]): java.lang.Long =
+    if (ref == null) null
+    else XXH64.hashUnsafeBytes(ref, Platform.BYTE_ARRAY_OFFSET, ref.length, 42L)
+
+  /** `md5(concat_ws(":", jet, pulse))`, the serving drop hash: a null jet
+    * is skipped like `concat_ws` skips it.
+    */
+  private def dropHash(jet: String, pulse: Long): String =
+    DigestUtils.md5Hex(if (jet == null) pulse.toString else s"$jet:$pulse")
+
+  /** The records of drop (`pulse`, `jet`) in [[records]]' serving shape,
+    * read from the pulse's one `pulse_number` partition in the driver and
+    * filtered by jet before their references are hashed.
+    */
+  def recordsOf(spark: SparkSession, dir: String, pulse: Long, jet: String): Rows = {
+    val jetAt = RecordColumns.indexOf("jet_id")
+    val key = UTF8String.fromString(jet)
+    val toRow = toScala(Schemas.records, RecordColumns)
+    val at = (RecordColumns :+ "pulse_number").zipWithIndex.toMap
+    val rows = stored(spark, dir, "records", TableManifest.snapshot(spark, s"$dir/records"),
+      Schemas.records, "pulse_number", RecordColumns)(_ => Seq(s"pulse_number=$pulse"))
+      .filter(r => !r.isNullAt(jetAt) && r.getUTF8String(jetAt) == key)
+    Rows(RecordsServingSchema, rows.map { raw =>
+      val r = toRow(raw)
+      def ref(c: String) = refKey(r.getAs[Array[Byte]](at(c)))
+      Rows.row(RecordsServingSchema, Seq(ref("reference"), r.get(at("type")),
+        ref("object_reference"), ref("prototype_reference"), ref("prev_record_reference"),
+        r.get(at("payload")), r.get(at("hash")), r.get(at("jet_id")), r.get(at("pulse_number")),
+        r.get(at("order")), r.get(at("timestamp"))))
+    })
   }
 
-  /** The rows of `chain`'s pulses snapshot that can hold `pulses`, in
-    * [[pulses]]' serving shape, read in the driver: their `pulse_bucket`
+  /** The drops of `pulses` in [[jetDrops]]' serving shape, from one
+    * jet_drops snapshot read in the driver; with `jets`, only the drops of
+    * those jets. Each pulse's stored prev, which the hashes need, comes
+    * from `chain`.
+    */
+  def jetDropsOf(spark: SparkSession, dir: String, chain: Domain.PulseChainIndex,
+      pulses: Seq[Long], jets: Option[Set[String]] = None): Rows = {
+    val toRow = toScala(Schemas.jetDrops, DropColumns)
+    val rows = stored(spark, dir, "jet_drops", TableManifest.snapshot(spark, s"$dir/jet_drops"),
+      Schemas.jetDrops, "pulse_number", DropColumns)(_ => pulses.distinct.map(p => s"pulse_number=$p"))
+      .map(toRow).filter(r => jets.forall(js => !r.isNullAt(0) && js(r.getString(0))))
+    Rows(DropsServingSchema, rows.map { r =>
+      val (jet, pulse) = (r.getString(0), r.getLong(3))
+      Rows.row(DropsServingSchema, Seq(pulse, jet, r.get(1), r.get(2), dropHash(jet, pulse),
+        chain.storedPrev(pulse).map(dropHash(jet, _)).orNull, null))
+    })
+  }
+
+  /** The rows of `pulses` in `chain`'s pulses snapshot, in [[pulses]]'
+    * serving shape, read in the driver from their `pulse_bucket`
     * partitions at the span the manifest's summary records, or, in a
     * table whose manifest has no summary (written before summaries
-    * existed), every live partition.
+    * existed), from every live partition.
     */
   def pulsesOf(spark: SparkSession, dir: String, chain: Domain.PulseChainIndex,
-      pulses: Seq[Long]): DataFrame =
-    servingPulses(stored(spark, dir, "pulses", chain.pulses, Schemas.pulses, "pulse_bucket",
+      pulses: Seq[Long]): Rows = {
+    val wanted = pulses.toSet
+    val toRow = toScala(Schemas.pulses, PulseColumns)
+    val at = PulseColumns.zipWithIndex.toMap
+    val rows = stored(spark, dir, "pulses", chain.pulses, Schemas.pulses, "pulse_bucket",
       PulseColumns) { snap =>
       snap.summary.fold(snap.partitions.keys)(s => pulses.map(p => s"pulse_bucket=${p / s.span}"))
+    }.map(toRow).filter(r => !r.isNullAt(0) && wanted(r.getLong(0)))
+    Rows(PulsesServingSchema, rows.map { r =>
+      def v(c: String) = r.get(at(c))
+      Rows.row(PulsesServingSchema, Seq(v("pulse_number"), v("prev_pulse_number"),
+        v("next_pulse_number"), v("is_complete"), v("is_sequential"), v("timestamp"),
+        if (r.isNullAt(at("jet_drop_amount"))) null else r.getInt(at("jet_drop_amount")).toLong,
+        v("record_amount"), v("result_amount")))
     })
+  }
 
   /** Every live pulse's (pulse_number, stored prev_pulse_number) in the
     * pulses snapshot `snap`, read in the driver: the chain index's input.
@@ -320,5 +378,5 @@ object StoreViews {
       snap: Option[TableManifest.Snapshot]): Array[(Long, Long)] =
     stored(spark, dir, "pulses", snap, Schemas.pulses, "pulse_bucket",
       Seq("pulse_number", "prev_pulse_number"))(_.partitions.keys)
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
+      .iterator.map(r => (r.getLong(0), r.getLong(1))).toArray
 }

@@ -1,9 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge}
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BooleanType, LongType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
+
+import graft.model.Rows
 
 /** List-endpoint pagination (W5, A3).
   *
@@ -21,6 +23,11 @@ import org.apache.spark.sql.types.{BooleanType, LongType, StructField, StructTyp
   *    obvious one-pass alternative, `count(*) OVER ()`, funnels the whole
   *    filtered set through a single task: a pulse-range filter can span a
   *    year, so the window form is a scale cliff, not an optimization.
+  *
+  * A route whose rows are already in the driver (the pulse-keyed store
+  * routes, and their corpus twins after one collect) pages them with
+  * [[pageRows]]: the same sort, cut, count and carried-total sentinel as
+  * [[pageWithTotalCarried]], over the rows, with no plan built.
   */
 object Pagination {
 
@@ -66,11 +73,8 @@ object Pagination {
     * keeps the fused one-plan form AND the corner — callers render only
     * marker-true rows and read `total` from any row, sentinel included,
     * so an out-of-range page costs the same single pass as an in-range
-    * one (no second filtered-count probe).
-    *
-    * A `df` over driver-held rows (its optimized plan a local relation:
-    * a driver read under projections and filters) is paged in the driver
-    * instead, with the same rows and schema and no Spark job.
+    * one (no second filtered-count probe). [[pageRows]] is the same cut
+    * over rows already in the driver.
     */
   def pageWithTotalCarried(df: DataFrame, sort: Seq[Column], limit: Int, offset: Int = 0): DataFrame = {
     // the two attached columns are resolved by bare name after the join —
@@ -78,32 +82,63 @@ object Pagination {
     // plan time; fail loud at the call site instead
     require(!df.columns.contains("total") && !df.columns.contains(PageRowMarker),
       s"pageWithTotalCarried input must not carry reserved columns 'total'/'$PageRowMarker'")
-    GraftColumnBridge.localRows(df, sort).fold {
-      val total = df.agg(count(lit(1)).as("total"))
-      val p = page(df, sort, limit, offset).withColumn(PageRowMarker, lit(true))
-      val pageCols = p.columns.filterNot(_ == PageRowMarker)
-      total.join(broadcast(p), lit(true), "left")
-        .withColumn(PageRowMarker, coalesce(col(PageRowMarker), lit(false)))
-        .select(pageCols.map(col) ++ Seq(col("total"), col(PageRowMarker)): _*)
-        .orderBy(sort: _*)
-    } { case (rows, ordering) => pageRowsWithTotalCarried(df, rows, ordering, limit, offset) }
+    val total = df.agg(count(lit(1)).as("total"))
+    val p = page(df, sort, limit, offset).withColumn(PageRowMarker, lit(true))
+    val pageCols = p.columns.filterNot(_ == PageRowMarker)
+    total.join(broadcast(p), lit(true), "left")
+      .withColumn(PageRowMarker, coalesce(col(PageRowMarker), lit(false)))
+      .select(pageCols.map(col) ++ Seq(col("total"), col(PageRowMarker)): _*)
+      .orderBy(sort: _*)
   }
 
-  /** [[pageWithTotalCarried]]'s driver form over `rows`, the rows of `df`:
-    * the count, the sort by `ordering` (Catalyst's own for the page's
-    * sort), the offset/limit cut and the carried-total sentinel, as a
-    * local relation again, so presenting and collecting it runs no job.
+  // ---- the same page over driver rows ------------------------------------
+
+  /** [[pageWithTotalCarried]] over driver-held `rows`: sorted by `order`,
+    * cut at `offset`/`limit` and carrying their count, in the same schema
+    * and with the same sentinel.
     */
-  private def pageRowsWithTotalCarried(df: DataFrame, rows: Seq[InternalRow],
-      ordering: Ordering[InternalRow], limit: Int, offset: Int): DataFrame = {
-    val total = rows.length.toLong
-    val page = rows.sorted(ordering).drop(offset).take(limit)
-    val out =
-      if (page.isEmpty) Seq(InternalRow.fromSeq(Seq.fill(df.schema.length)(null) :+ total :+ false))
-      else page.map(r => InternalRow.fromSeq(r.toSeq(df.schema) :+ total :+ true))
-    GraftColumnBridge.localDataFrame(df.sparkSession, StructType(
-      df.schema.fields.map(_.copy(nullable = true)) ++ Seq(
-        StructField("total", LongType, nullable = false),
-        StructField(PageRowMarker, BooleanType, nullable = false))), out)
+  def pageRows(rows: Rows, order: Ordering[Row], limit: Int, offset: Int = 0): Rows =
+    carried(rows.schema, rows.rows.sorted(order).drop(offset).take(limit), rows.rows.length.toLong)
+
+  /** The carried-total shape of the page rows `page` (of `schema`) of a
+    * filtered set of `total` rows: the page columns made nullable, then
+    * `total` and [[PageRowMarker]] on every row; an empty page is the one
+    * marker-false sentinel row.
+    */
+  def carried(schema: StructType, page: Seq[Row], total: Long): Rows = {
+    val out = StructType(schema.fields.map(_.copy(nullable = true)) ++ Seq(
+      StructField("total", LongType, nullable = false),
+      StructField(PageRowMarker, BooleanType, nullable = false)))
+    if (page.isEmpty) Rows(out, Vector(Rows.row(out, Seq.fill(schema.length)(null) :+ total :+ false)))
+    else Rows(out, page.iterator.map(r => Rows.row(out, r.toSeq :+ total :+ true)).toVector)
+  }
+
+  /** The order `orderBy` gives rows of `schema` by `keys` (column name,
+    * ascending?): ascending puts nulls first, descending last (Spark's
+    * `asc`/`desc`), and strings compare in UTF-8 byte order.
+    */
+  def ordering(schema: StructType, keys: (String, Boolean)*): Ordering[Row] = {
+    val at = keys.map { case (name, asc) => (schema.fieldIndex(name), asc) }
+    (a, b) => at.iterator.map { case (i, asc) =>
+      val c = (a.isNullAt(i), b.isNullAt(i)) match {
+        case (true, true) => 0
+        case (true, false) => -1
+        case (false, true) => 1
+        case _ => compareValues(a.get(i), b.get(i))
+      }
+      if (asc) c else -c
+    }.find(_ != 0).getOrElse(0)
+  }
+
+  /** Spark's string order: UTF-8 byte order. */
+  def compareStrings(a: String, b: String): Int =
+    UTF8String.fromString(a).compareTo(UTF8String.fromString(b))
+
+  private def compareValues(a: Any, b: Any): Int = (a, b) match {
+    case (x: Long, y: Long) => java.lang.Long.compare(x, y)
+    case (x: Int, y: Int) => Integer.compare(x, y)
+    case (x: String, y: String) => compareStrings(x, y)
+    case (x: Boolean, y: Boolean) => java.lang.Boolean.compare(x, y)
+    case _ => throw new IllegalArgumentException(s"no row order for $a and $b")
   }
 }

@@ -364,6 +364,10 @@ class PlanAssertionsSpec extends SparkSpec {
 
   // ---- HTTP endpoint plans (the serving paths) --------------------------
 
+  /** The executed plans of the Dataset actions `body` runs. */
+  private def plansDuring(body: => Unit): String =
+    queriesDuring(body).map(_.executedPlan.toString).mkString("\n")
+
   test("endpoint by-jet-id page: served as a materialized local page; page query pruned") {
     // the linked page is assembled driver-side over the ≤1000 collected
     // rows (the reference's createNextPrevMaps) — the served frame must
@@ -373,11 +377,11 @@ class PlanAssertionsSpec extends SparkSpec {
     assert(p.contains("LocalTableScan"),
       s"linked page must serve from the materialized local rows:\n$p")
     assert(!p.contains("FileScan"), s"no re-scan after materialization:\n$p")
-    // the underlying page query stays a pruned top-k scan: jet prefix
-    // pushed, TakeOrderedAndProject, nested-loop only for the 1-row
-    // total attach (same tolerance as the catalog-wide sweep)
-    val pq = api.Endpoints.jetDropsByJetId(spark, dir, "01", limit = 100,
-      withLinks = false).queryExecution.executedPlan.toString
+    // the page query the route collects stays a pruned top-k scan: jet
+    // prefix pushed, TakeOrderedAndProject, nested-loop only for the
+    // 1-row total attach (same tolerance as the catalog-wide sweep)
+    val pq = plansDuring(api.Endpoints.jetDropsByJetId(spark, dir, "01", limit = 100,
+      withLinks = false))
     assert(pq.contains("TakeOrderedAndProject"), s"page must be top-k, not global sort:\n$pq")
     assert(pq.contains("StringStartsWith(jet_id,01)"), s"jet prefix must be pushed:\n$pq")
     assert(pq.linesIterator.filter(_.contains("BroadcastNestedLoopJoin"))
@@ -390,8 +394,9 @@ class PlanAssertionsSpec extends SparkSpec {
     // PushedFilters lists are toString-truncated, so pin the Filter nodes
     val pn = model.Domain.servedPulses(spark, dir)
       .agg(org.apache.spark.sql.functions.min("pulse_number")).collect().head.getLong(0)
-    val p1 = api.Endpoints.jetDropsByPulse(spark, dir, pn)
-      .queryExecution.executedPlan.toString
+    // the drops of one pulse are paged in the driver: the one collect
+    // the route runs over the corpus is what must filter on the key
+    val p1 = plansDuring(api.Endpoints.jetDropsByPulse(spark, dir, pn))
     assert(s"pulse_number#\\d+L = $pn".r.findFirstIn(p1).nonEmpty &&
       p1.contains(s"EqualTo(pulse_number,$pn"),
       s"drops-by-pulse must push the pulse equality:\n$p1")
@@ -403,7 +408,7 @@ class PlanAssertionsSpec extends SparkSpec {
       s"lifeline pulse bounds must reach the scan filter:\n$p2")
     assert("object_reference#\\d+L = 1\\)".r.findFirstIn(p2).nonEmpty,
       s"lifeline object key must reach the scan filter:\n$p2")
-    val p3 = api.Endpoints.pulse(spark, dir, pn).queryExecution.executedPlan.toString
+    val p3 = plansDuring(api.Endpoints.pulse(spark, dir, pn))
     assert(s"pulse_number#\\d+L = $pn".r.findFirstIn(p3).nonEmpty,
       s"pulse point lookup must filter on its key:\n$p3")
   }

@@ -73,6 +73,44 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     n.get()
   }
 
+  /** The Dataset actions `body` runs on the session — each one's
+    * `QueryExecution`, as a `QueryExecutionListener` sees it — including
+    * actions over local relations, which run no Spark job. Delivery is
+    * async and in order, so a marker action is awaited (deadline-bounded)
+    * before `body`, to drain what earlier work posted, and after it, to
+    * see everything `body` ran. Actions of concurrent work on the shared
+    * session would count too; the specs run one at a time.
+    */
+  def queriesDuring(body: => Unit): Seq[org.apache.spark.sql.execution.QueryExecution] = {
+    import org.apache.spark.sql.execution.QueryExecution
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val l = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
+        seen.add(qe); ()
+      }
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = {
+        seen.add(qe); ()
+      }
+    }
+    def drain(): Unit = {
+      val marker = spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+        org.apache.spark.sql.types.StructType(Nil))
+      marker.collect()
+      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+      while (!seen.contains(marker.queryExecution) && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(seen.remove(marker.queryExecution), "the listener bus never delivered the marker")
+    }
+    spark.listenerManager.register(l)
+    try {
+      drain()
+      seen.clear()
+      body
+      drain()
+      import scala.jdk.CollectionConverters._
+      seen.asScala.toSeq
+    } finally spark.listenerManager.unregister(l)
+  }
+
   type StorePulse = SparkSpec.StorePulse
   val StorePulse = SparkSpec.StorePulse
 

@@ -63,7 +63,8 @@ class SearchMappersSpec extends SparkSpec {
     val drops = Seq(("", 70000L, "h", 5, 999L), ("01", 70010L, "h2", 2, 998L))
       .toDF("jet_id", "pulse_number", "hs", "record_amount", "timestamp")
       .withColumn("hash", encode(col("hs"), "UTF-8"))
-    val out = Mappers.jetDropToApi(drops).orderBy("pulse_number").collect()
+    val out = Mappers.jetDropToApi(graft.model.Rows.collect(drops)).rows
+      .sortBy(_.getAs[Long]("pulse_number"))
     assert(out(0).getAs[String]("jet_drop_id") == "*:70000")
     assert(out(1).getAs[String]("jet_drop_id") == "01:70010")
   }

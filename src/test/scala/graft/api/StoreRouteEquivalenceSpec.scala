@@ -9,18 +9,21 @@ import graft.{CountingFileSystem, Ingest, SparkSpec}
 import graft.functions.{Codecs, JetFunctions}
 import graft.gen.Fixtures
 import graft.ingest.{GrpcTransport, PulseWriter, ReplayExporter, TableManifest}
-import graft.model.{Domain, StoreViews}
+import graft.model.{Domain, Rows, StoreViews}
 import graft.operators.{Pagination, Predicates, PulseChain}
 
-/** The pulse-keyed routes over an ingest store (`/pulses/{pulse}`,
-  * `/pulses/{pulse}/jet-drops`, `/jet-drops/{id}`, `/jet-drops/{id}/records`)
-  * and `/pulses` pages with no timestamp bound read the partitions their
-  * keys name in the driver and run no Spark job. The oracle below is the
-  * Spark plan each of them ran before that: every body the routes answer
-  * must equal, byte for byte, the body HttpApi renders from the oracle's
-  * frame.
+/** The pulse-keyed routes (`/pulses/{pulse}`, `/pulses/{pulse}/jet-drops`,
+  * `/jet-drops/{id}`, `/jet-drops/{id}/records`) and `/pulses` pages with
+  * no timestamp bound are row programs: over an ingest store they read the
+  * partitions their keys name in the driver and run no Spark job and no
+  * Dataset action; over the corpus they collect the key-filtered view
+  * once. The oracle below is the Spark plan each of them ran before that,
+  * presented by the Column mappers the routes used then: every body the
+  * routes answer must equal, byte for byte, the body rendered from the
+  * oracle's frame, on stores and on the corpus.
   */
 class StoreRouteEquivalenceSpec extends SparkSpec {
+  import StoreRouteEquivalenceSpec.JetDropLink
 
   private val start = Fixtures.GenesisPulse + Fixtures.PulseDelta
   private val delta = Fixtures.PulseDelta
@@ -45,11 +48,47 @@ class StoreRouteEquivalenceSpec extends SparkSpec {
 
   private object Oracle {
     private def chain(dir: String) = Domain.PulseChainIndex(
-      StoreViews.pulses(spark, dir).select(col("pulse_number"), col("prev_pulse_number"))
+      Domain.servedPulses(spark, dir).select(col("pulse_number"), col("prev_pulse_number"))
         .collect().map(r => (r.getLong(0), r.getLong(1))))
 
+    // ---- the Column presenters the routes used before they presented rows
+
+    def jetDropToApi(drops: DataFrame): DataFrame = {
+      val links = Seq("prev_ids", "next_ids", "prev_jet_drop_id", "next_jet_drop_id",
+        "total", Pagination.PageRowMarker)
+        .filter(drops.columns.contains).map(col)
+      drops.select(Seq(
+        Codecs.jetDropIdString(col("jet_id"), col("pulse_number")).as("jet_drop_id"),
+        col("jet_id"),
+        col("pulse_number"),
+        base64(col("hash")).as("hash"),
+        col("record_amount"),
+        col("timestamp")) ++ links: _*)
+    }
+
+    def withIndex(df: DataFrame): DataFrame = df
+      .withColumn("index", Codecs.indexString(col("pulse_number"), col("order")))
+      .withColumn("jet_drop_id", Codecs.jetDropIdString(col("jet_id"), col("pulse_number")))
+      .withColumnRenamed("ts_sec", "timestamp")
+      .drop("order")
+
+    def presentEmptyLinks(df: DataFrame): DataFrame = df
+      .withColumn("prev_jet_drop_id", lit(Array.empty[String]))
+      .withColumn("next_jet_drop_id", lit(Array.empty[String]))
+
+    def presentPulses(df: DataFrame): DataFrame = df
+      .withColumn("prev_pulse_number",
+        when(col("prev_pulse_number") === -1L, lit(null).cast("long"))
+          .otherwise(col("prev_pulse_number")))
+      .withColumn("next_pulse_number",
+        when(col("next_pulse_number") === -1L, lit(null).cast("long"))
+          .otherwise(col("next_pulse_number")))
+      .drop("is_sequential", "result_amount")
+
+    // ---- the routes' plans
+
     def pulse(dir: String, pulseNumber: Long): DataFrame = {
-      val row = StoreViews.pulses(spark, dir).filter(col("pulse_number") === pulseNumber).limit(1)
+      val row = Domain.servedPulses(spark, dir).filter(col("pulse_number") === pulseNumber).limit(1)
       val c = chain(dir)
       c.storedPrev(pulseNumber) match {
         case None => row
@@ -65,7 +104,7 @@ class StoreRouteEquivalenceSpec extends SparkSpec {
       */
     def pulses(dir: String, gte: Option[Long], lte: Option[Long], asc: Boolean,
         limit: Int, offset: Int): DataFrame = {
-      val filtered = StoreViews.pulses(spark, dir)
+      val filtered = Domain.servedPulses(spark, dir)
         .filter(Predicates.range(col("pulse_number"), gte = gte, lte = lte))
       val pageSort = if (asc) col("pulse_number").asc else col("pulse_number").desc
       val pageQuery = Pagination.pageWithTotalCarried(filtered, Seq(pageSort), limit, offset)
@@ -96,23 +135,23 @@ class StoreRouteEquivalenceSpec extends SparkSpec {
 
     def jetDropsByPulse(dir: String, pulseNumber: Long, fromJetId: Option[String],
         limit: Int, offset: Int): DataFrame = {
-      val filtered = StoreViews.jetDrops(spark, dir).filter(col("pulse_number") === pulseNumber)
+      val filtered = Domain.servedJetDrops(spark, dir).filter(col("pulse_number") === pulseNumber)
       val cursored = fromJetId.fold(filtered)(j => filtered.filter(col("jet_id") >= j))
-      Mappers.jetDropToApi(
+      jetDropToApi(
         Pagination.pageWithTotalCarried(cursored, Seq(col("jet_id").asc), limit, offset))
     }
 
     def jetDrop(dir: String, jet: String, pulse: Long): DataFrame = {
-      val d = StoreViews.jetDrops(spark, dir)
+      val d = Domain.servedJetDrops(spark, dir)
       val rowQuery = d.filter(col("pulse_number") === pulse && col("jet_id") === jet).limit(1)
       val rows = rowQuery.collect()
       if (rows.isEmpty)
-        Mappers.jetDropToApi(spark.createDataFrame(
+        jetDropToApi(spark.createDataFrame(
           java.util.Collections.emptyList[Row](), rowQuery.schema))
       else {
         val c = chain(dir)
         val (prevLinks, nextLinks) = c.storedPrev(pulse) match {
-          case None => (Seq.empty[Endpoints.JetDropLink], Seq.empty[Endpoints.JetDropLink])
+          case None => (Seq.empty[JetDropLink], Seq.empty[JetDropLink])
           case Some(storedPrev) =>
             val nextPulse = c.nextByPrev(pulse).getOrElse(PulseChain.Unknown)
             val neighbors = d
@@ -121,14 +160,14 @@ class StoreRouteEquivalenceSpec extends SparkSpec {
               .select(col("pulse_number"), col("jet_id")).collect()
               .map { r =>
                 val (pn, j) = (r.getLong(0), r.getString(1))
-                (pn, Endpoints.JetDropLink(s"${if (j.isEmpty) "*" else j}:$pn",
+                (pn, JetDropLink(s"${if (j.isEmpty) "*" else j}:$pn",
                   if (j.isEmpty) "*" else j, pn))
               }
             (neighbors.collect { case (pn, l) if pn == storedPrev => l }.sortBy(_.jet_drop_id).toSeq,
               neighbors.collect { case (pn, l) if pn == nextPulse && nextPulse != PulseChain.Unknown => l }
                 .sortBy(_.jet_drop_id).toSeq)
         }
-        Mappers.jetDropToApi(spark.createDataFrame(java.util.Arrays.asList(rows: _*), rowQuery.schema)
+        jetDropToApi(spark.createDataFrame(java.util.Arrays.asList(rows: _*), rowQuery.schema)
           .withColumn("prev_jet_drop_id", typedLit(prevLinks))
           .withColumn("next_jet_drop_id", typedLit(nextLinks)))
       }
@@ -136,7 +175,7 @@ class StoreRouteEquivalenceSpec extends SparkSpec {
 
     def jetDropRecords(dir: String, jet: String, pulse: Long, fromIndex: Option[String],
         limit: Int, offset: Int, recordType: Option[String]): DataFrame = {
-      val base = StoreViews.records(spark, dir)
+      val base = Domain.servedRecords(spark, dir)
         .filter(col("pulse_number") === pulse && col("jet_id") === jet)
       val typed = recordType.fold(base)(t => base.filter(col("type") === t))
       val cursored = fromIndex.map(s => Codecs.parseIndex(s).get).fold(typed) { case (p, o) =>
@@ -146,34 +185,34 @@ class StoreRouteEquivalenceSpec extends SparkSpec {
         Seq(col("pulse_number").asc, col("order").asc, col("reference").asc), limit, offset)
     }
 
-    /** The body HttpApi renders from the oracle's frame for a VALID
-      * request to one of the four routes.
+    /** The body HttpApi rendered from the oracle's frame for a VALID
+      * request to one of the five routes.
       */
     def respond(dir: String, path: String, q: Map[String, String]): (Int, String) = {
       def point(df: DataFrame) = {
         val rows = df.collect()
         if (rows.isEmpty) (404, "{}") else (200, JsonOut.obj(rows.head))
       }
+      def envelope(df: DataFrame) = (200, HttpApi.envelope(Rows.collect(df)))
       val limit = q.get("limit").fold(Pagination.DefaultLimit)(_.toInt)
       val offset = q.get("offset").fold(0)(_.toInt)
       path.split("/").filter(_.nonEmpty).toList match {
         case "pulses" :: Nil =>
           def pn(k: String) = q.get(k).map(_.toLong)
           val lte = Seq(pn("from_pulse_number"), pn("pulse_number_lte")).flatten.reduceOption(_ min _)
-          (200, HttpApi.envelope(HttpApi.presentPulses(pulses(dir, pn("pulse_number_gte"), lte,
-            q.get("sort_by").contains("pulse_number_asc"), limit, offset)).collect()))
-        case "pulses" :: p :: Nil => point(HttpApi.presentPulses(pulse(dir, p.toLong)))
+          envelope(presentPulses(pulses(dir, pn("pulse_number_gte"), lte,
+            q.get("sort_by").contains("pulse_number_asc"), limit, offset)))
+        case "pulses" :: p :: Nil => point(presentPulses(pulse(dir, p.toLong)))
         case "pulses" :: p :: "jet-drops" :: Nil =>
           val fromJet = q.get("from_jet_drop_id").map(s => Codecs.parseJetDropId(s).get._1)
-          (200, HttpApi.envelope(HttpApi.presentEmptyLinks(
-            jetDropsByPulse(dir, p.toLong, fromJet, limit, offset)).collect()))
+          envelope(presentEmptyLinks(jetDropsByPulse(dir, p.toLong, fromJet, limit, offset)))
         case "jet-drops" :: id :: Nil =>
           val (jet, p) = Codecs.parseJetDropId(id).get
           point(jetDrop(dir, jet, p))
         case "jet-drops" :: id :: "records" :: Nil =>
           val (jet, p) = Codecs.parseJetDropId(id).get
-          (200, HttpApi.envelope(HttpApi.withIndex(jetDropRecords(dir, jet, p,
-            q.get("from_index"), limit, offset, q.get("type"))).collect()))
+          envelope(withIndex(jetDropRecords(dir, jet, p,
+            q.get("from_index"), limit, offset, q.get("type"))))
         case other => fail(s"not an oracled route: $other")
       }
     }
@@ -181,50 +220,59 @@ class StoreRouteEquivalenceSpec extends SparkSpec {
 
   // ---- the comparison -----------------------------------------------------
 
-  /** Every request shape the four routes take, over pulse `p`. */
-  private def requests(p: Long): Seq[(String, Map[String, String])] = {
-    val dropIds = (jets :+ "01").map(j => s"$j:$p")
+  /** Every request shape the four pulse-keyed routes take, over pulse
+    * `p` whose drops are at `dropJets` (in that order, at least two):
+    * point lookups of each drop and of `missingJet`'s absent one, cursors
+    * at the second and last jets, and the records of the first two drops.
+    */
+  private def requests(p: Long, dropJets: Seq[String] = jets,
+      missingJet: String = "01"): Seq[(String, Map[String, String])] = {
+    val dropIds = (dropJets :+ missingJet).map(j => s"${if (j.isEmpty) "*" else j}:$p")
     Seq(s"/pulses/$p" -> Map.empty[String, String]) ++
       Seq(Map.empty[String, String], Map("limit" -> "1"), Map("limit" -> "2", "offset" -> "1"),
-        Map("offset" -> "100"), Map("from_jet_drop_id" -> s"10:$p"),
-        Map("from_jet_drop_id" -> s"1:$p", "limit" -> "1", "offset" -> "1"))
+        Map("offset" -> "100"), Map("from_jet_drop_id" -> dropIds(1)),
+        Map("from_jet_drop_id" -> dropIds(dropJets.length - 1), "limit" -> "1", "offset" -> "1"))
         .map(s"/pulses/$p/jet-drops" -> _) ++
       dropIds.map(id => s"/jet-drops/$id" -> Map.empty[String, String]) ++
       Seq(Map.empty[String, String], Map("limit" -> "2", "offset" -> "1"), Map("offset" -> "1000"),
         Map("from_index" -> s"$p:3"), Map("type" -> "state"), Map("type" -> "request"),
         Map("type" -> "state", "from_index" -> s"$p:5", "limit" -> "1"))
-        .flatMap(q => Seq(s"/jet-drops/0:$p/records" -> q, s"/jet-drops/10:$p/records" -> q))
+        .flatMap(q => dropIds.take(2).map(id => s"/jet-drops/$id/records" -> q))
   }
 
-  /** Every `/pulses` page shape with no timestamp bound, over a store
-    * whose pulses run from `pulseAt(0)`.
+  /** Every `/pulses` page shape with no timestamp bound, bounded by the
+    * pulses `at(1)` < `at(2)` < `at(10)`.
     */
-  private val pulsesRequests: Seq[(String, Map[String, String])] = {
+  private def pulsesRequests(at: Int => Long): Seq[(String, Map[String, String])] = {
     val asc = Map("sort_by" -> "pulse_number_asc")
-    val bounds = Map("pulse_number_gte" -> pulseAt(1).toString,
-      "pulse_number_lte" -> pulseAt(2).toString)
+    val bounds = Map("pulse_number_gte" -> at(1).toString,
+      "pulse_number_lte" -> at(2).toString)
     Seq(Map.empty[String, String], asc, Map("limit" -> "2", "offset" -> "1"),
       asc ++ Map("limit" -> "2", "offset" -> "1"), Map("offset" -> "100"),
       asc ++ Map("offset" -> "100"), bounds, asc ++ bounds ++ Map("limit" -> "1"),
-      bounds ++ Map("offset" -> "1"), Map("from_pulse_number" -> pulseAt(1).toString),
-      Map("pulse_number_gte" -> pulseAt(10).toString),
-      Map("pulse_number_gte" -> pulseAt(2).toString, "pulse_number_lte" -> pulseAt(1).toString))
+      bounds ++ Map("offset" -> "1"), Map("from_pulse_number" -> at(1).toString),
+      Map("pulse_number_gte" -> at(10).toString),
+      Map("pulse_number_gte" -> at(2).toString, "pulse_number_lte" -> at(1).toString))
       .map("/pulses" -> _)
   }
 
   private def query(q: Map[String, String]) =
     if (q.isEmpty) None else Some(q.toSeq.sorted.map { case (k, v) => s"$k=$v" }.mkString("&"))
 
-  /** Every request over `pulses`, and every `/pulses` page, answers the
-    * oracle's status and body.
-    */
-  private def assertEquivalent(dir: String, pulses: Seq[Long]): Unit =
-    for ((path, q) <- pulsesRequests ++ pulses.flatMap(requests)) {
+  /** Every request answers the oracle's status and body over `dir`. */
+  private def assertAnswers(dir: String, reqs: Seq[(String, Map[String, String])]): Unit =
+    for ((path, q) <- reqs) {
       val got = HttpApi.respond(spark, dir, s"/api/v1$path", query(q))
       val want = Oracle.respond(dir, path, q)
       assert(got == want, s"$path?${query(q).getOrElse("")} over $dir:\n" +
         s" driver=${got._1} ${got._2.take(600)}\n oracle=${want._1} ${want._2.take(600)}")
     }
+
+  /** Every request over `pulses` of a store written from [[wire]], and
+    * every `/pulses` page, answers the oracle's status and body.
+    */
+  private def assertEquivalent(dir: String, pulses: Seq[Long]): Unit =
+    assertAnswers(dir, pulsesRequests(pulseAt) ++ pulses.flatMap(requests(_)))
 
   private def pulseRows(ps: Seq[Int], n: Int) = ps.map { i =>
     val p = pulseAt(i)
@@ -287,6 +335,61 @@ class StoreRouteEquivalenceSpec extends SparkSpec {
     }
     assert(TableManifest.snapshot(spark, s"$base/pulses").get.summary.nonEmpty)
     assertEquivalent(base, (-1 to nPulses).map(pulseAt))
+  }
+
+  test("the corpus answers the five routes byte-identically to their Spark plans: " +
+      "an unmerged and a merged pulse, an absent pulse and every /pulses page shape") {
+    val dir = "/root/testdata/sf0.001"
+    val byPulse = Domain.servedJetDrops(spark, dir).select("pulse_number", "jet_id").collect()
+      .groupBy(_.getLong(0)).map { case (p, ds) => p -> ds.map(_.getString(1)).sorted.toSeq }
+    val multi = byPulse.filter(_._2.size >= 2).keys.toSeq.sorted
+    // a merged pulse (every 4th) has depth-2 drops over depth-3 records
+    val picked = Seq(multi.find(_ % 4 != 0), multi.find(_ % 4 == 0)).flatten
+    assert(picked.size == 2, s"the corpus needs a merged and an unmerged multi-drop pulse: $multi")
+    val pulses = Domain.servedPulses(spark, dir).select("pulse_number").collect()
+      .map(_.getLong(0)).sorted
+    assertAnswers(dir, pulsesRequests(pulses(_)) ++
+      picked.flatMap(p => requests(p, byPulse(p), missingJet = "111111")) ++
+      requests(pulses.last + 1000, Seq("000", "001")))
+  }
+
+  test("the five driver-read routes run no Dataset action on an ingest store: warm, " +
+      "on the first read after a commit, and on the first read after a pulses flush") {
+    val dir = tmp("graft-routes-no-actions")
+    val w = wire(3)
+    (0 until 2).foreach(i => PulseWriter.commitPulse(
+      w.filter(col("pulse_number") === pulseAt(i)), dir))
+    def flush(n: Int) = writeStorePulses(dir, pulseRows(0 until n, 3), span = 10L,
+      summary = Some(TableManifest.Summary(start, pulseAt(n - 1) / 10, 10L)))
+    flush(2)
+    val p = pulseAt(1)
+    val routes = Seq("/pulses" -> Some("limit=1&offset=1"), s"/pulses/$p" -> None,
+      s"/pulses/$p/jet-drops" -> Some("limit=2&offset=1"), s"/jet-drops/10:$p" -> None,
+      s"/jet-drops/0:$p/records" -> Some("from_index=1:1"))
+    def actions(path: String, q: Option[String]): Seq[String] = queriesDuring {
+      val (s, body) = HttpApi.respond(spark, dir, s"/api/v1$path", q)
+      assert(s == 200, s"$path: $s ${body.take(200)}")
+    }.map(_.analyzed.toString)
+    routes.foreach { case (path, q) =>
+      HttpApi.respond(spark, dir, s"/api/v1$path", q)
+      val seen = actions(path, q)
+      assert(seen.isEmpty, s"warm $path: $seen")
+    }
+    // the listener sees the actions where they run: the same route's
+    // Spark plan, and its collect over a local relation
+    assert(queriesDuring(Oracle.respond(dir, s"/pulses/$p/jet-drops", Map("limit" -> "2"))).nonEmpty)
+    assert(queriesDuring(Endpoints.jetDropsByPulse(spark, dir, p).collect()).size == 1)
+    routes.zipWithIndex.foreach { case ((path, q), i) =>
+      val version = if (i % 2 == 0) versionB(w) else w
+      PulseWriter.commitPulse(version.filter(col("pulse_number") === p), dir)
+      val seen = actions(path, q)
+      assert(seen.isEmpty, s"first read of $path after a commit: $seen")
+    }
+    routes.zipWithIndex.foreach { case ((path, q), i) =>
+      flush(2 + i % 2)
+      val seen = actions(path, q)
+      assert(seen.isEmpty, s"first read of $path after a pulses flush: $seen")
+    }
   }
 
   test("the four routes run no Spark job on an ingest store: warm, on the first " +
@@ -423,4 +526,12 @@ class StoreRouteEquivalenceSpec extends SparkSpec {
       assert(idx.pageSlice(gte, lte, asc, offset, limit).toSeq ==
         spark0.pageSlice(gte, lte, asc, offset, limit).toSeq, s"pageSlice($gte, $lte, $asc, $offset, $limit)")
   }
+}
+
+object StoreRouteEquivalenceSpec {
+
+  /** The oracle's link element: `server.NextPrevJetDrop` rendered by
+    * `transformPrevNextResp` (`api/handlers.go:785-792`).
+    */
+  final case class JetDropLink(jet_drop_id: String, jet_id: String, pulse_number: Long)
 }
