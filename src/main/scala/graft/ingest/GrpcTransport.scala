@@ -1,14 +1,14 @@
 package graft.ingest
 
-import java.util.concurrent.TimeUnit
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 
 import scala.util.control.NonFatal
 
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
-import org.sparkproject.connect.grpc.{CallOptions, Channel, ManagedChannel, ServerServiceDefinition, Status, StatusRuntimeException}
+import org.sparkproject.connect.grpc.{CallOptions, Channel, ClientCall, ManagedChannel, Metadata, ServerServiceDefinition, Status, StatusRuntimeException}
 import org.sparkproject.connect.grpc.netty.NettyChannelBuilder
-import org.sparkproject.connect.grpc.stub.{ClientCalls, ServerCalls, StreamObserver}
+import org.sparkproject.connect.grpc.stub.{ServerCalls, StreamObserver}
 
 import graft.model.Schemas
 
@@ -31,6 +31,16 @@ import graft.model.Schemas
   *
   * The channel is plaintext HTTP/2 like the reference's exporter
   * connection default (`etl/connection/grpc.go` insecure dial option).
+  *
+  * The client does not use grpc's blocking stub: its iterator requests
+  * one message per `next()`, so every frame of a portion waits for a
+  * caller → event loop → caller round trip. [[GrpcRecordStream]] opens
+  * the `ClientCall` itself with a listener that runs on the transport
+  * thread and only enqueues, and keeps a window of messages requested:
+  * `count + 1` up front (a portion is at most `count` records plus the
+  * end-of-pulse marker), topped back up to a full window whenever half
+  * of it has been consumed. A server that sends more than a portion
+  * still drains, and the queue never holds more than one window.
   */
 object GrpcTransport {
 
@@ -76,23 +86,64 @@ object GrpcTransport {
   /** The [[Transport.RecordStream]] facade over a live channel. */
   final class GrpcRecordStream(channel: Channel) extends Transport.RecordStream {
 
-    override def export(pulse: Long, recordNumber: Int, count: Int): Iterator[Transport.Frame] = {
-      // the call opens lazily on first hasNext — translate() maps status
-      // codes wherever they surface (open or mid-stream)
-      val it =
-        try ClientCalls.blockingServerStreamingCall(
-          channel, GrpcWire.ExportMethod, CallOptions.DEFAULT,
-          GrpcWire.GetRecords(pulse, recordNumber, count))
-        catch translate(pulse)
-      new Iterator[Transport.Frame] {
-        override def hasNext: Boolean =
-          try it.hasNext catch translate(pulse)
-        override def next(): Transport.Frame = {
-          val f = try it.next() catch translate(pulse)
-          Transport.Frame(f.pulseNumber, rowOf(f),
-            if (f.shouldIterateFrom != 0L) Some(f.shouldIterateFrom) else None)
+    override def export(pulse: Long, recordNumber: Int, count: Int): Iterator[Transport.Frame] =
+      new WindowedCall(channel, pulse, recordNumber, count)
+  }
+
+  /** How an Export call ended, as the listener saw it. */
+  private final case class Closed(status: Status, trailers: Metadata)
+
+  /** One Export call read as an iterator: the listener, run on the
+    * transport thread, enqueues each frame and then the close; `next()`
+    * takes them in order and keeps the messages requested at most one
+    * window ahead of what it has taken. A failed close — at open or
+    * mid-stream — goes through [[translate]]; an interrupt while blocked
+    * cancels the call and propagates with the flag set.
+    */
+  private final class WindowedCall(channel: Channel, pulse: Long, recordNumber: Int, count: Int)
+      extends Iterator[Transport.Frame] {
+    // a portion is at most `count` records plus the end-of-pulse marker
+    private val window = (count.toLong + 1).max(1L).min(Int.MaxValue.toLong).toInt
+    private val call = channel.newCall(GrpcWire.ExportMethod,
+      CallOptions.DEFAULT.withExecutor((r: Runnable) => r.run()))
+    private val queue = new LinkedBlockingQueue[AnyRef]()
+    private var head: AnyRef = _
+    private var credit = window
+
+    try {
+      call.start(new ClientCall.Listener[GrpcWire.RecordFrame] {
+        override def onMessage(m: GrpcWire.RecordFrame): Unit = { queue.add(m); () }
+        override def onClose(s: Status, t: Metadata): Unit = { queue.add(Closed(s, t)); () }
+      }, new Metadata())
+      call.sendMessage(GrpcWire.GetRecords(pulse, recordNumber, count))
+      call.halfClose()
+      call.request(window)
+    } catch translate(pulse)
+
+    override def hasNext: Boolean = {
+      if (head == null) head =
+        try queue.take()
+        catch {
+          case ie: InterruptedException =>
+            call.cancel("fetch interrupted", ie)
+            Thread.currentThread().interrupt()
+            throw ie
         }
+      head match {
+        case Closed(s, _) if s.isOk => false
+        case Closed(s, t) => translate(pulse)(s.asRuntimeException(t))
+        case _ => true
       }
+    }
+
+    override def next(): Transport.Frame = {
+      if (!hasNext) throw new NoSuchElementException(s"pulse $pulse: portion ended")
+      val f = head.asInstanceOf[GrpcWire.RecordFrame]
+      head = null
+      credit -= 1
+      if (credit <= window / 2) { call.request(window - credit); credit = window }
+      Transport.Frame(f.pulseNumber, rowOf(f),
+        if (f.shouldIterateFrom != 0L) Some(f.shouldIterateFrom) else None)
     }
   }
 

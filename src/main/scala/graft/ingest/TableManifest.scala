@@ -222,6 +222,11 @@ object TableManifest {
     * invisible orphans, tombstoned by the next commit of the same
     * partitions); a crash after 2 only re-runs deletes the next commit
     * tolerates.
+    *
+    * On a service session's `file:` file system
+    * ([[graft.Sessions.LocalFs]]) the manifest's create, its `.crc` and
+    * a new `_manifests/` directory fork nothing: their permission is set
+    * in-process, so a publish costs metadata I/O only.
     */
   def commit(spark: SparkSession, tablePath: String,
       replaced: Map[String, Seq[String]],
@@ -293,7 +298,10 @@ object TableManifest {
     * kept). No Spark job runs and no output committer stages the
     * files: the rows are already in the driver, the fresh UUID keeps the
     * names unique, and the manifest alone decides visibility. A write
-    * that throws publishes nothing and deletes the files it wrote.
+    * that throws publishes nothing and deletes the files it wrote. On a
+    * service session's `file:` file system ([[graft.Sessions.LocalFs]])
+    * creating a data file, its `.crc` and a new partition directory
+    * forks no `chmod` process.
     *
     * Centralized because list → write → commit IS the snapshot-isolation
     * guarantee — a hand-rolled copy per writer could drift (e.g. one

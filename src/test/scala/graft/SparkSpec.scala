@@ -150,7 +150,8 @@ object SparkSpec {
       .master("local[4]")
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false"))
+      .config("spark.ui.enabled", "false")
+      .config(Sessions.LocalFs._1, Sessions.LocalFs._2))
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s

@@ -1,10 +1,15 @@
 package graft.ingest
 
-import java.util.concurrent.TimeUnit
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+
+import scala.concurrent.{Await, Future}
+import scala.concurrent.ExecutionContext.Implicits.global
+import scala.concurrent.duration._
 
 import org.apache.spark.sql.Row
-import org.sparkproject.connect.grpc.{ManagedChannel, Server}
+import org.sparkproject.connect.grpc.{ManagedChannel, Server, ServerServiceDefinition}
 import org.sparkproject.connect.grpc.netty.NettyServerBuilder
+import org.sparkproject.connect.grpc.stub.{ServerCallStreamObserver, ServerCalls, StreamObserver}
 
 import graft.SparkSpec
 import graft.gen.Fixtures
@@ -28,9 +33,14 @@ class GrpcTransportSpec extends SparkSpec {
 
   /** Run `body` against a live netty server + channel for `stream`. */
   private def overWire[A](stream: Transport.RecordStream)(
+      body: Transport.RecordStream => A): A =
+    overService(GrpcTransport.recordService(stream))(body)
+
+  /** Run `body` against a live netty server + channel for `service`. */
+  private def overService[A](service: ServerServiceDefinition)(
       body: Transport.RecordStream => A): A = {
     val server: Server = NettyServerBuilder.forPort(0)
-      .addService(GrpcTransport.recordService(stream)).build().start()
+      .addService(service).build().start()
     val ch: ManagedChannel = GrpcTransport.channel("localhost", server.getPort)
     try body(new GrpcTransport.GrpcRecordStream(ch))
     finally {
@@ -284,6 +294,59 @@ class GrpcTransportSpec extends SparkSpec {
     }
     assert(fp2.rows.length == 2 && fp2.iterateFrom == redirect,
       "a same-pulse frame with the hint set is a marker, never a stored row")
+  }
+
+  test("a server streaming past the up-front window still delivers every frame, in order") {
+    // the client requests count + 1 messages up front; this server
+    // ignores count and streams the whole pulse in one call, so the
+    // client must top its window up or block after count + 1 frames
+    val wire = Fixtures.multiPulseBatches(spark, nPulses = 1, recordsPerPulse = 40,
+      startPulse = start)
+    val rows = wire.collect().sortBy(_.getAs[Long]("record_number"))
+    val everything = new Transport.RecordStream {
+      def export(pulse: Long, recordNumber: Int, count: Int): Iterator[Transport.Frame] =
+        rows.iterator.drop(recordNumber).map(r => Transport.Frame(start, r))
+    }
+    val got = overWire(everything) { grpc =>
+      Await.result(Future(grpc.export(start, 0, 5).map(_.row.getAs[Long]("record_number"))
+        .toVector), 60.seconds)
+    }
+    assert(got == (0L until 40L), "every frame, in order, none doubled")
+  }
+
+  test("an interrupt during a blocked fetch cancels the server's call and propagates") {
+    val cancelled = new CountDownLatch(1)
+    val opened = new CountDownLatch(1)
+    // a server that opens the call and never sends: the fetch blocks
+    val silent = ServerServiceDefinition.builder("exporter.RecordExporter")
+      .addMethod(GrpcWire.ExportMethod, ServerCalls.asyncServerStreamingCall(
+        new ServerCalls.ServerStreamingMethod[GrpcWire.GetRecords, GrpcWire.RecordFrame] {
+          override def invoke(req: GrpcWire.GetRecords,
+              obs: StreamObserver[GrpcWire.RecordFrame]): Unit = {
+            obs.asInstanceOf[ServerCallStreamObserver[GrpcWire.RecordFrame]]
+              .setOnCancelHandler(() => cancelled.countDown())
+            opened.countDown()
+          }
+        })).build()
+    overService(silent) { grpc =>
+      @volatile var thrown: Exception = null
+      @volatile var flagSet = false
+      val fetcher = new Thread(() =>
+        try { grpc.export(start, 0, 10).hasNext; () }
+        catch {
+          case e: Exception =>
+            thrown = e
+            flagSet = Thread.currentThread().isInterrupted
+        })
+      fetcher.start()
+      assert(opened.await(30, TimeUnit.SECONDS), "the call never reached the server")
+      fetcher.interrupt()
+      fetcher.join(30000)
+      assert(!fetcher.isAlive, "the blocked fetch did not return on interrupt")
+      assert(thrown.isInstanceOf[InterruptedException], s"got $thrown")
+      assert(flagSet, "the interrupt flag must stay set")
+      assert(cancelled.await(30, TimeUnit.SECONDS), "the server never saw the cancel")
+    }
   }
 
   test("the channel survives an exporter restart: next fetch reconnects on the same port") {

@@ -347,6 +347,9 @@ object FailingFileSystem {
   def armed[T](spark: org.apache.spark.sql.SparkSession, n: Int)(body: => T): T = {
     val conf = spark.sparkContext.hadoopConfiguration
     conf.set("fs.failing.impl", classOf[FailingFileSystem].getName)
+    // created here, so a parquet writer prepared before the mount, whose
+    // conf does not name the scheme, finds it in Hadoop's cache
+    org.apache.hadoop.fs.FileSystem.get(java.net.URI.create("failing:///"), conf)
     creates.set(0)
     failAt.set(n)
     try body finally failAt.set(0)
